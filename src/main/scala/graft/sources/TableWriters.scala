@@ -1,10 +1,11 @@
 package graft.sources
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.json4s._
@@ -218,23 +219,6 @@ object TableCommit {
     files.result()
   }
 
-  /** Read back a temp-materialized parquet dir by EXPLICIT file list —
-    * passing the underscore-prefixed dir itself as a read root logs a
-    * spurious "All paths were ignored" WARN on every call (the root IS
-    * still read; the pattern check is cosmetic, but it pollutes every
-    * driver log). An empty materialization still reads: Spark's writer
-    * always leaves one schema-bearing file. */
-  private[sources] def readTmpFiles(spark: SparkSession, tmpDir: String,
-      conf: Configuration): DataFrame = {
-    val p = new Path(tmpDir)
-    val fsys = p.getFileSystem(conf)
-    val files = fsys.listStatus(p).map(_.getPath)
-      .filter(q => q.getName.endsWith(".parquet") &&
-        !q.getName.startsWith("_") && !q.getName.startsWith("."))
-      .map(_.toString).sorted.toIndexedSeq
-    spark.read.parquet(files: _*)
-  }
-
   /** Per-file row counts from the parquet FOOTERS — O(KB) per file, the
     * same stat collection every table-format writer performs at commit. */
   private[sources] def rowCounts(files: Seq[String],
@@ -290,6 +274,140 @@ object TableCommit {
     * loser leaves no orphans behind. */
   private[sources] def cleanup(fs: FileSystem, files: Seq[String]): Unit =
     files.foreach(f => fs.delete(new Path(f), false))
+
+  // ------------------------------------------------ row-level DML core
+  // The MERGE / UPDATE / DELETE planning both formats share. The Delta
+  // and Iceberg back-ends keep only the kill encoding, the placement of
+  // data files, CDC (Delta) and the commit itself.
+
+  /** Directed unless each of `names` is a top-level column of `schema`;
+    * `what` names their role ("MERGE key", "SET column"). */
+  private[sources] def requireColumns(table: String, schema: StructType,
+      what: String, names: Iterable[String]): Unit =
+    names.foreach { n =>
+      if (!schema.fieldNames.contains(n)) throw UnsupportedWrite(
+        s"$table: $what '$n' is not in the table schema")
+    }
+
+  /** A MERGE's input contract: at least one key, each key a table
+    * column, and the source schema equal to the table's. */
+  private[sources] def requireMergeInput(table: String, schema: StructType,
+      source: DataFrame, keys: Seq[String]): Unit = {
+    if (keys.isEmpty) throw UnsupportedWrite(
+      s"$table: MERGE needs at least one key column")
+    requireColumns(table, schema, "MERGE key", keys)
+    if (!sameSchema(schema, source.schema)) throw UnsupportedWrite(
+      s"$table: MERGE source schema ${source.schema.simpleString} != " +
+        s"table schema ${schema.simpleString}")
+  }
+
+  /** The rows of `target`'s shape built from `df` in ONE select: each
+    * column is its `set` expression or itself, cast to its `target`
+    * type. Every SET expression evaluates against the PRE-update row
+    * (SQL UPDATE semantics), so SET a=b, b=a swaps and Map order cannot
+    * matter. The back-end passes the cast targets: the table schema, or
+    * its [[deepNullableType]] where a required-marked schema must not
+    * fail the cast. */
+  private[sources] def images(df: DataFrame, target: StructType,
+      set: Map[String, Column] = Map.empty): DataFrame =
+    df.select(target.fields.toIndexedSeq.map(f =>
+      set.getOrElse(f.name, col(s"`${f.name}`")).cast(f.dataType)
+        .as(f.name)): _*)
+
+  /** Evaluate `rows` ONCE into a temp parquet under the format's
+    * metadata dir `metaDir` (outside every scan root, so a crash's
+    * droppings never read as data) and run `body` over the read-back
+    * and its row count, summed from the parquet FOOTERS without a Spark
+    * job. Guards, kills, images and cdc all derive from that one
+    * evaluation, so they agree even for a non-deterministic plan. The
+    * read-back names its files explicitly: the underscore-prefixed dir
+    * as a read root logs a spurious "All paths were ignored" WARN. An
+    * empty materialization still reads — Spark's writer always leaves
+    * one schema-bearing file. The temp dir is deleted however `body`
+    * ends. */
+  private[sources] def materialize[T](rows: DataFrame, metaDir: String,
+      conf: Configuration)(body: (DataFrame, Long) => T): T = {
+    val tmp = new Path(s"$metaDir/_tmp_dml_${java.util.UUID.randomUUID()}")
+    val fs = tmp.getFileSystem(conf)
+    try {
+      rows.write.mode("overwrite").parquet(tmp.toString)
+      val files = fs.listStatus(tmp).map(_.getPath)
+        .filter(q => q.getName.endsWith(".parquet") &&
+          !q.getName.startsWith("_") && !q.getName.startsWith("."))
+        .map(_.toString).sorted.toIndexedSeq
+      body(rows.sparkSession.read.parquet(files: _*),
+        rowCounts(files, conf).sum)
+    } finally fs.delete(tmp, true)
+  }
+
+  /** Run a row-level write whose `body` records in its buffer every data
+    * file, delete file and manifest it places before the commit: any
+    * throw but [[CommitConflict]] deletes them all (the loser of a commit
+    * race has already cleaned up after itself). */
+  private[sources] def reclaiming[T](fs: FileSystem)(
+      body: mutable.ArrayBuffer[String] => T): T = {
+    val written = mutable.ArrayBuffer.empty[String]
+    try body(written) catch {
+      case c: CommitConflict => throw c
+      case t: Throwable => cleanup(fs, written.toSeq); throw t
+    }
+  }
+
+  /** The frame of every MERGE and UPDATE: [[materialize]] `rows` (the
+    * source cast to the table, or the rows an UPDATE matches), return
+    * `unchanged` (the current version or snapshot) when there are none,
+    * and otherwise run `body` over them, their count and a
+    * [[reclaiming]] buffer. */
+  private[sources] def rowLevelWrite[T](rows: DataFrame, metaDir: String,
+      conf: Configuration, unchanged: T)(
+      body: (DataFrame, Long, mutable.ArrayBuffer[String]) => T): T =
+    materialize(rows, metaDir, conf) { (df, n) =>
+      if (n == 0) unchanged
+      else reclaiming(new Path(metaDir).getFileSystem(conf))(body(df, n, _))
+    }
+
+  /** Directed when two rows of the materialized `src` share a key;
+    * `why` finishes the message. */
+  private[sources] def requireUniqueKeys(table: String, src: DataFrame,
+      keys: Seq[String], why: String): Unit =
+    if (!src.groupBy(keys.map(col): _*).count()
+      .filter(col("count") > 1).isEmpty) throw UnsupportedWrite(
+      s"$table: the MERGE source carries duplicate keys — $why")
+
+  /** The target rows a MERGE replaces: `target` (a row-keyed read)
+    * semi-joined on null-safe key equality with the materialized source
+    * `src`, once the source keys are unique (one target row must not
+    * take two images). ONE aggregation then directs both target-side
+    * duplicates (killing two rows for one image would silently shrink
+    * the table) and more than `maxMatched` matches; a kill that never
+    * collects positions passes Long.MaxValue. */
+  private[sources] def mergeMatches(table: String, src: DataFrame,
+      target: DataFrame, keys: Seq[String], maxMatched: Long): DataFrame = {
+    import org.apache.spark.sql.functions.{max, sum}
+    requireUniqueKeys(table, src, keys, "one target row cannot take two images")
+    val srcKeys = src.select(keys.map(col): _*)
+    val matched = target.join(srcKeys,
+      keys.map(k => target(k) <=> srcKeys(k)).reduce(_ && _), "left_semi")
+    val stats = matched.groupBy(keys.map(col): _*).count()
+      .agg(sum("count"), max("count")).head()
+    val total = if (stats.isNullAt(0)) 0L else stats.getLong(0)
+    if (total > maxMatched) throw UnsupportedWrite(
+      s"$table: MERGE matches $total rows (> $maxMatched) — deletion " +
+        "vectors are for small matched sets")
+    if (!stats.isNullAt(1) && stats.getLong(1) > 1) throw UnsupportedWrite(
+      s"$table: MERGE keys match multiple TARGET rows for one source " +
+        "row — per-key replacement would silently collapse them")
+    matched
+  }
+
+  /** Row positions of a row-keyed frame grouped per file (canonical
+    * path → positions): the driver-side set a deletion-vector kill
+    * consumes, so its callers cap the rows first. */
+  private[sources] def killPositions(keyed: DataFrame)
+      : Seq[(String, Array[Long])] =
+    keyed.groupBy(col("__row_path"))
+      .agg(org.apache.spark.sql.functions.collect_list(col("__row_pos")))
+      .collect().toSeq.map(m => (m.getString(0), m.getSeq[Long](1).toArray))
 
   /** The new fields `next` appends after `prior` — `next` must carry
     * every prior field (names+types, in order) as a prefix and only ADD
@@ -378,61 +496,200 @@ object DeltaWriter {
       (d.offset.map(o => s""""offset":$o,""").getOrElse("")) +
       s""""sizeInBytes":${d.sizeInBytes},"cardinality":${d.cardinality}}"""
 
+  /** The snapshot facts a Delta row-level write starts from (one
+    * replay). Column-mapped targets store PHYSICAL names + field ids in
+    * every data, rewrite and cdc file, at every nesting level — a file
+    * written with logical names would read back all-NULL through the
+    * physical read schema — and key partition dirs and
+    * add.partitionValues physical too. */
+  private final case class RowTarget(table: String, base: String,
+      conf: Configuration, fs: FileSystem, dst: DeltaTable.DeltaState) {
+    val logPath = new Path(s"$base/_delta_log")
+    def version: Long = dst.version
+    def config: Map[String, String] = dst.configuration
+    def partCols: Seq[String] = dst.partitionColumns
+    val schema: StructType =
+      DataType.fromJson(dst.schemaJson).asInstanceOf[StructType]
+    val mapped: Boolean =
+      config.get("delta.columnMapping.mode").exists(_ != "none")
+    val outPartCols: Seq[String] =
+      if (!mapped) partCols
+      else partCols.map(c => DeltaTable.physFieldName(schema(c)))
+    val cdfEnabled: Boolean = config.get("delta.enableChangeDataFeed")
+      .exists(_.equalsIgnoreCase("true"))
+    // rowTracking: a DV re-add carries its file's ids verbatim
+    val trackIds: Option[Map[String, (Long, Long)]] =
+      if (dst.protocol.writerFeatures.contains("rowTracking"))
+        Some(dst.fileRowIds)
+      else None
+    private lazy val fileByKey = dst.files.map(f =>
+      PathUris.canon(DeltaTable.resolveAdd(base, f._1)) -> f).toMap
+    /** The snapshot's add for a canonical row-key path. */
+    def fileOf(key: String): (String, Map[String, String],
+        Option[DeletionVector.Descriptor], Option[String]) =
+      fileByKey.getOrElse(key, throw UnsupportedWrite(
+        s"$table: matched row's file $key is not in the snapshot — " +
+          "path spelling drift"))
+    def physical(df: DataFrame, extra: Seq[String] = Nil): DataFrame =
+      if (!mapped) df else toPhysical(df, schema, extra)
+  }
+
+  private def rowTarget(spark: SparkSession, table: String): RowTarget = {
+    val base = table.stripSuffix("/")
+    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
+    RowTarget(table, base, conf, new Path(base).getFileSystem(conf),
+      DeltaTable.snapshotState(spark, table))
+  }
+
+  /** [[rowTarget]] for a write that changes rows: directed on an
+    * append-only table. The appendOnly FEATURE being supported is not
+    * the same as being enabled — only the table property turns it on
+    * (PROTOCOL.md). */
+  private def mutableTarget(spark: SparkSession, table: String,
+      op: String): RowTarget = {
+    val t = rowTarget(spark, table)
+    if (t.config.get("delta.appendOnly").exists(_.equalsIgnoreCase("true")))
+      throw UnsupportedWrite(
+        s"$table: the table is append-only — $op is forbidden by its " +
+          "own contract")
+    t
+  }
+
+  /** Directed when a STRING partition value of `rows` is '' or the hive
+    * null sentinel: Spark's directory encoding folds both into the null
+    * directory, and Delta data files do not retain partition columns,
+    * so the value would be unrecoverable. `what` says whose rows. */
+  private def requireEncodablePartitions(table: String, schema: StructType,
+      partCols: Seq[String], rows: DataFrame, what: String): Unit = {
+    val strCols = partCols.filter(c => schema(c).dataType == StringType)
+    if (strCols.nonEmpty && !rows.filter(strCols.map(c =>
+      col(c) === "" || col(c) === "__HIVE_DEFAULT_PARTITION__")
+      .reduce(_ || _)).isEmpty) throw UnsupportedWrite(
+      s"$table: $what a string partition value that is '' or the hive " +
+        "null sentinel — the directory encoding cannot represent it " +
+        "distinctly from null")
+  }
+
+  /** The `add` action of a freshly written file; `extra` carries its
+    * row-id and stats fields. Spark's null-partition sentinel directory
+    * becomes the protocol's JSON null. */
+  private def addAction(rel: String, size: Long, ts: Long,
+      dataChange: Boolean, extra: String): String =
+    s"""{"add":{"path":"${pctEncodeRel(rel)}",""" +
+      s""""partitionValues":{${partitionValuesJson(partValues(rel))}},""" +
+      s""""size":$size,"modificationTime":$ts,"dataChange":$dataChange""" +
+      s"""$extra}}"""
+
+  /** The `remove` action retiring a snapshot file, its DV included.
+    * Re-emitted paths pass through jsonEscape: a foreign add whose path
+    * legally carried a quote/backslash must re-encode, not corrupt the
+    * commit line. */
+  private def removeAction(rawPath: String, pv: Map[String, String],
+      oldDv: Option[DeletionVector.Descriptor], ts: Long,
+      dataChange: Boolean): String =
+    s"""{"remove":{"path":"${jsonEscape(rawPath)}",""" +
+      s""""deletionTimestamp":$ts,"dataChange":$dataChange,""" +
+      s""""partitionValues":{${partitionValuesJson(pv)}}""" +
+      oldDv.map(d => s""","deletionVector":${dvJson(d)}""").getOrElse("") +
+      "}}"
+
+  /** Write `out` (physical on a mapped table) as new data files and
+    * build their adds: footer stats over the stored table columns (not
+    * the partition or `bookkeeping` columns), zero-row files dropped,
+    * fresh row ids on a rowTracking table. Placed files go to
+    * `written`; returns (adds, the rowTracking domain line). */
+  private def placeData(t: RowTarget, out: DataFrame, ts: Long,
+      written: mutable.ArrayBuffer[String],
+      bookkeeping: Set[String] = Set.empty, dataChange: Boolean = true)
+      : (Seq[String], Seq[String]) = {
+    val files = writeData(out, t.base, t.outPartCols, "", t.conf)
+    written ++= files.map(_._2)
+    val dataSchema = StructType(out.schema.filterNot(f =>
+      t.outPartCols.contains(f.name) || bookkeeping(f.name)))
+    val (kept, empty) = files.zip(statsFieldsWithCounts(files.map(_._2),
+      dataSchema, t.conf)).partition(_._2._2 > 0)
+    cleanup(t.fs, empty.map(_._1._2))
+    val (rids, domain) = rowTrackingFields(t.table, t.dst.protocol,
+      t.dst.domains, kept.map(_._2._2), t.version + 1)
+    (kept.zip(rids).map { case (((rel, _, size), (st, _)), rid) =>
+      addAction(rel, size, ts, dataChange, rid + st)
+    }, domain)
+  }
+
+  /** Write `cdc` (the table columns + `_change_type`) as `_change_data/`
+    * files, recorded in `written`; returns their cdc actions. */
+  private def cdcActions(t: RowTarget, cdc: DataFrame,
+      written: mutable.ArrayBuffer[String]): Seq[String] = {
+    val files = writeData(t.physical(cdc, extra = Seq("_change_type")),
+      t.base, t.outPartCols, "_change_data", t.conf)
+    written ++= files.map(_._2)
+    files.map { case (rel, _, size) =>
+      s"""{"cdc":{"path":"${pctEncodeRel(rel)}",""" +
+        s""""partitionValues":{${partitionValuesJson(partValues(rel))}},""" +
+        s""""size":$size,"dataChange":false}}"""
+    }
+  }
+
+  /** Place `lines` as commit `version` EXCLUSIVELY. The loser of a
+    * concurrent commit deletes `newFiles` and fails with
+    * [[CommitConflict]]; `op` names what to retry. */
+  private def commitLog(fs: FileSystem, logPath: Path, table: String,
+      version: Long, lines: Seq[String], op: String,
+      newFiles: Seq[String] = Nil): Long = {
+    if (!putText(fs, new Path(logPath, f"$version%020d.json"),
+      lines.mkString("\n"))) {
+      cleanup(fs, newFiles)
+      throw CommitConflict(
+        s"$table: version $version was committed concurrently — " +
+          s"re-read the table and retry the $op")
+    }
+    version
+  }
+
   /** Kill row positions per data file by DELETION VECTOR: one
     * `remove(old state) + add(same file, unioned DV)` pair per touched
     * file — a file whose every live row died is plainly removed.
-    * `matches` rows are (canonical file key, positions); returns the
-    * action lines + the new DV files written (the loser of a commit
-    * race must clean those up). Shared by DELETE and UPDATE. */
-  /** `rowIds`: None on tables without rowTracking; Some(raw path →
-    * (baseRowId, defaultRowCommitVersion)) when the feature is live —
-    * a re-add MUST then carry its file's fields verbatim (fresh ids on
-    * a surviving file would silently change every row's identity), and
-    * a tracked file missing them is directed. */
-  private def dvKillActions(base: String, table: String,
-      fs: FileSystem, conf: Configuration,
-      fileByKey: Map[String, (String, Map[String, String],
-        Option[DeletionVector.Descriptor], Option[String])],
+    * `matches` rows are (canonical file key, positions); the new DV
+    * files go to `written`. Returns the action lines, led by the
+    * protocol upgrade when a DV was written — it rides only on commits
+    * that actually WRITE a deletion vector; one whose every touched file
+    * fully died is plain remove actions and must not lock readers out.
+    * Shared by DELETE, UPDATE and MERGE. On a rowTracking table a re-add
+    * MUST carry its file's baseRowId/defaultRowCommitVersion verbatim
+    * (fresh ids on a surviving file would silently change every row's
+    * identity), and a tracked file missing them is directed. */
+  private def dvKillActions(t: RowTarget,
       matches: Seq[(String, Array[Long])], ts: Long,
-      rowIds: Option[Map[String, (Long, Long)]] = None)
-      : (Seq[String], Seq[String]) = {
-    def resolve(rel: String): String = DeltaTable.resolveAdd(base, rel)
+      written: mutable.ArrayBuffer[String]): Seq[String] = {
     val lines = Seq.newBuilder[String]
     val newDvFiles = Seq.newBuilder[String]
     matches.foreach { case (key, newPos) =>
-      val (rawPath, pv, oldDv, oldStats) = fileByKey.getOrElse(key,
-        throw UnsupportedWrite(
-          s"$table: matched row's file $key is not in the snapshot — " +
-            "path spelling drift"))
-      val ridField = rowIds match {
+      val (rawPath, pv, oldDv, oldStats) = t.fileOf(key)
+      val ridField = t.trackIds match {
         case None => ""
         case Some(m) => m.get(rawPath) match {
           case Some((b, v)) =>
             s""","baseRowId":$b,"defaultRowCommitVersion":$v"""
           case None => throw UnsupportedWrite(
-            s"$table: $rawPath carries no baseRowId on a rowTracking " +
+            s"${t.table}: $rawPath carries no baseRowId on a rowTracking " +
               "table — re-adding it would change its rows' identity")
         }
       }
       val oldPos = oldDv.map(d =>
-        DeletionVector.positions(d, base, TaskConf(conf))).getOrElse(
+        DeletionVector.positions(d, t.base, TaskConf(t.conf))).getOrElse(
         Array.empty[Long])
       val all = (oldPos ++ newPos).distinct.sorted
-      val abs = resolve(rawPath)
-      val fileRows = rowCounts(Seq(abs), conf).head
-      val pvs = partitionValuesJson(pv)
-      val oldDvJson = oldDv.map(d => s""","deletionVector":${dvJson(d)}""")
-        .getOrElse("")
-      lines += s"""{"remove":{"path":"${jsonEscape(rawPath)}",""" +
-        s""""deletionTimestamp":$ts,""" +
-        s""""dataChange":true,"partitionValues":{$pvs}$oldDvJson}}"""
+      val abs = DeltaTable.resolveAdd(t.base, rawPath)
+      val fileRows = rowCounts(Seq(abs), t.conf).head
+      lines += removeAction(rawPath, pv, oldDv, ts, dataChange = true)
       if (all.length < fileRows) {
         // some rows survive: same file re-added under the unioned DV
-        val dvPath = s"$base/deletion_vector_${java.util.UUID.randomUUID()}.bin"
+        val dvPath =
+          s"${t.base}/deletion_vector_${java.util.UUID.randomUUID()}.bin"
         val data = DeletionVector.serialize(all)
-        val (off, size) = DeletionVector.writeFile(dvPath, data, conf)
+        val (off, size) = DeletionVector.writeFile(dvPath, data, t.conf)
         newDvFiles += dvPath
-        val size0 = fs.getFileStatus(new Path(abs)).getLen
+        val size0 = t.fs.getFileStatus(new Path(abs)).getLen
         val nd = DeletionVector.Descriptor("p", dvPath, Some(off), size,
           all.length.toLong)
         // the file's PHYSICAL stats carry over (DV'd rows stay inside
@@ -454,17 +711,39 @@ object DeltaWriter {
         } catch { case _: Exception => s } // unparseable: carry verbatim
         val statsField = oldStats
           .map(s => s""","stats":"${jsonEscape(widen(s))}"""").getOrElse("")
-        // re-emitted paths pass through jsonEscape: a foreign add whose
-        // path legally carried a quote/backslash (JSON-escaped in its
-        // own log, decoded by the replay) must re-encode, not corrupt
-        // the commit line
         lines += s"""{"add":{"path":"${jsonEscape(rawPath)}",""" +
-          s""""partitionValues":{$pvs},""" +
+          s""""partitionValues":{${partitionValuesJson(pv)}},""" +
           s""""size":$size0,"modificationTime":$ts,"dataChange":true,""" +
           s""""deletionVector":${dvJson(nd)}$ridField$statsField}}"""
       } // else: every live row died — the remove alone retires the file
     }
-    (lines.result(), newDvFiles.result())
+    val dvFiles = newDvFiles.result()
+    written ++= dvFiles
+    (if (dvFiles.nonEmpty) dvProtocolUpgrade(t.dst.protocol) else Nil) ++
+      lines.result()
+  }
+
+  /** UPDATE and MERGE from the matched set on: the table's row contracts
+    * and the partition encoding are checked on `images`, which land as
+    * new data files; `matched`'s positions die by deletion vector; and
+    * on a change-data-feed table `cdc` rides along — ONE commit of
+    * operation `op`. `matched` and `images` derive from one
+    * materialization, so the kill, the images and the feed agree. */
+  private def replaceRows(t: RowTarget, op: String, matched: DataFrame,
+      images: DataFrame, cdc: => DataFrame,
+      written: mutable.ArrayBuffer[String]): Long = {
+    enforceConstraints(t.table, t.config, t.dst.schemaJson, Some(images))
+    requireEncodablePartitions(t.table, t.schema, t.partCols, images,
+      s"$op writes")
+    val positions = killPositions(matched)
+    val ts = System.currentTimeMillis()
+    val (adds, domain) = placeData(t, t.physical(images), ts, written)
+    val killLines = dvKillActions(t, positions, ts, written)
+    val cdcLines = if (t.cdfEnabled) cdcActions(t, cdc, written) else Nil
+    commitLog(t.fs, t.logPath, t.table, t.version + 1,
+      Seq(s"""{"commitInfo":{"timestamp":$ts,"operation":"$op"}}""") ++
+        killLines ++ adds ++ cdcLines ++ domain,
+      op.toLowerCase, written.toSeq)
   }
 
   /** Image-writing paths (append/update/merge) direct on tables whose
@@ -785,26 +1064,11 @@ object DeltaWriter {
       if (!schema.fieldNames.contains(c)) throw UnsupportedWrite(
         s"$table: partition column '$c' is not in the schema")
     }
-    // Spark's partition-dir encoding folds "" and the literal sentinel
-    // into the null directory; Delta data files EXCLUDE partition
-    // columns, so the value would be unrecoverable — directed up front
-    // (one extra scan on partitioned string-column appends; best-effort
-    // for non-deterministic plans, which re-evaluate between scans)
-    locally {
-      import org.apache.spark.sql.functions.{col => fcol}
-      val strCols = partCols.filter(c =>
-        schema(c).dataType == org.apache.spark.sql.types.StringType)
-      if (strCols.nonEmpty) {
-        val ambiguous = strCols.map(c =>
-          fcol(c) === "" || fcol(c) === "__HIVE_DEFAULT_PARTITION__")
-          .reduce(_ || _)
-        if (!df.filter(ambiguous).isEmpty) throw UnsupportedWrite(
-          s"$table: a string partition value is '' or the hive null " +
-            "sentinel — the directory encoding cannot represent it " +
-            "distinctly from null, and delta data files do not retain " +
-            "partition columns")
-      }
-    }
+    // directed up front (one extra scan on partitioned string-column
+    // appends; best-effort for non-deterministic plans, which
+    // re-evaluate between scans)
+    requireEncodablePartitions(table, schema, partCols, df,
+      "the append carries")
     // column-mapped tables store PHYSICAL column names (+ parquet field
     // ids, the id-mode resolution key) in their data files; partition
     // dirs and add.partitionValues are keyed physical too — exactly the
@@ -852,11 +1116,7 @@ object DeltaWriter {
       tableProto, tableDomains, sc.map(_._2), version)
     val adds = files.zip(sc).zip(ridFields).map {
       case (((rel, _, size), (st, _)), rid) =>
-        // Spark's null-partition sentinel directory becomes the
-        // protocol's JSON null inside the shared builder
-        val pv = partitionValuesJson(partValues(rel))
-        s"""{"add":{"path":"${pctEncodeRel(rel)}","partitionValues":{$pv},""" +
-          s""""size":$size,"modificationTime":$ts,"dataChange":true$rid$st}}"""
+        addAction(rel, size, ts, dataChange = true, rid + st)
     }
     val head =
       if (version > 0L) {
@@ -897,14 +1157,8 @@ object DeltaWriter {
             s""""configuration":{$cfg},"createdTime":$ts}}""")
       }
     fs.mkdirs(logPath)
-    val dest = new Path(logPath, f"$version%020d.json")
-    if (!putText(fs, dest, (head ++ adds ++ domainLines).mkString("\n"))) {
-      cleanup(fs, files.map(_._2))
-      throw CommitConflict(
-        s"$table: version $version was committed concurrently — " +
-          "re-read the table and retry the append")
-    }
-    version
+    commitLog(fs, logPath, table, version, head ++ adds ++ domainLines,
+      "append", files.map(_._2))
   }
 
   /** Row-level DELETE via DELETION VECTORS — the modern (Databricks-
@@ -942,151 +1196,75 @@ object DeltaWriter {
   def writeDelete(spark: SparkSession, table: String,
       condition: org.apache.spark.sql.Column,
       maxDeletedRows: Long = 10000000L, mode: String = "auto"): Long = {
-    import org.apache.spark.sql.functions.{coalesce, collect_list, lit, not}
+    import org.apache.spark.sql.functions.{coalesce, lit, not}
     if (!Set("auto", "dv", "rewrite")(mode)) throw UnsupportedWrite(
       s"$table: DELETE mode '$mode' (auto, dv, or rewrite)")
-    val base = table.stripSuffix("/")
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    val logPath = new Path(s"$base/_delta_log")
-    val fs = logPath.getFileSystem(conf)
-    val dst = DeltaTable.snapshotState(spark, table)
-    val version = dst.version
-    val schemaJson = dst.schemaJson
-    val partCols = dst.partitionColumns
-    val config = dst.configuration
-    val files = dst.files
-    val proto = dst.protocol
     // rowTracking: DV re-adds preserve their file's ids verbatim, and
     // the copy-on-write rewrite preserves SURVIVORS' identity through
     // the materialized row-id columns (only deleted rows' ids retire)
-    val tracking = proto.writerFeatures.contains("rowTracking")
-    val trackIds: Option[Map[String, (Long, Long)]] =
-      if (tracking) Some(dst.fileRowIds) else None
-    // the appendOnly FEATURE being supported is not the same as being
-    // enabled — only the table property turns it on (PROTOCOL.md)
-    if (config.get("delta.appendOnly").exists(_.equalsIgnoreCase("true")))
-      throw UnsupportedWrite(
-        s"$table: the table is append-only — DELETE is forbidden by its " +
-          "own contract")
-    def resolve(rel: String): String = DeltaTable.resolveAdd(base, rel)
-    val fileByKey: Map[String, (String, Map[String, String],
-      Option[DeletionVector.Descriptor], Option[String])] =
-      files.map(f => PathUris.canon(resolve(f._1)) -> f).toMap
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    val cdfEnabled = config.get("delta.enableChangeDataFeed")
-      .exists(_.equalsIgnoreCase("true"))
-    // column-mapped targets: every row-writing shape (rewrite
-    // survivors, cdc) stores PHYSICAL names + field ids at every
-    // nesting level — a file written with logical names would read
-    // back all-NULL through the physical read schema
-    val mapped = config.get("delta.columnMapping.mode").exists(_ != "none")
-    val outPartCols =
-      if (!mapped) partCols
-      else partCols.map(c => DeltaTable.physFieldName(schema(c)))
+    val t = mutableTarget(spark, table, "DELETE")
+    val version = t.version
     val keyed = DeltaTable.readWithRowKey(spark, table).filter(condition)
-
-    def commit(lines: Seq[String], newFiles: Seq[String]): Long = {
-      val dest = new Path(logPath, f"${version + 1}%020d.json")
-      if (!putText(fs, dest, lines.mkString("\n"))) {
-        cleanup(fs, newFiles)
-        throw CommitConflict(
-          s"$table: version ${version + 1} was committed concurrently — " +
-            "re-read the table and retry the delete")
-      }
-      version + 1
-    }
 
     // a CDF-enabled table's DELETE commit must carry its killed rows as
     // cdc files — without them readCdf would either fail directed (DV
     // shape) or misreport the rewrite's survivors as inserts.
-    def cdcDeleteLines(killed: DataFrame, ts: Long,
-        newFiles: scala.collection.mutable.Builder[String, Seq[String]])
-        : Seq[String] =
-      if (!cdfEnabled) Nil
+    def cdcDeleteLines(killed: DataFrame,
+        written: mutable.ArrayBuffer[String]): Seq[String] =
+      if (!t.cdfEnabled) Nil
       else {
-        import org.apache.spark.sql.functions.{lit, col => fcol}
         // a FOREIGN table may hold ''/sentinel string partition values
         // the directory encoding cannot round-trip — the cdc rows would
         // misreport them as null (this engine's own appends direct the
         // values at write time, but other writers do not)
-        locally {
-          val strCols = partCols.filter(c =>
-            schema(c).dataType == StringType)
-          if (strCols.nonEmpty) {
-            val ambiguous = strCols.map(c =>
-              fcol(c) === "" || fcol(c) === "__HIVE_DEFAULT_PARTITION__")
-              .reduce(_ || _)
-            if (!killed.filter(ambiguous).isEmpty) throw UnsupportedWrite(
-              s"$table: a killed row's string partition value is '' or " +
-                "the hive null sentinel — its cdc row cannot represent it")
-          }
-        }
-        val cdc = killed
-          .select(schema.fields.toIndexedSeq.map(f => fcol(s"`${f.name}`")): _*)
-          .withColumn("_change_type", lit("delete"))
-        val outCdc = if (!mapped) cdc
-          else toPhysical(cdc, schema, extra = Seq("_change_type"))
-        val cdcFiles = writeData(outCdc, base, outPartCols,
-          "_change_data", conf)
-        newFiles ++= cdcFiles.map(_._2)
-        cdcFiles.map { case (rel, _, size) =>
-          val pv = partitionValuesJson(partValues(rel))
-          s"""{"cdc":{"path":"${pctEncodeRel(rel)}","partitionValues":{$pv},""" +
-            s""""size":$size,"dataChange":false}}"""
-        }
+        requireEncodablePartitions(table, t.schema, t.partCols, killed,
+          "a killed row's cdc image carries")
+        cdcActions(t, killed
+          .select(t.schema.fieldNames.toIndexedSeq.map(n => col(s"`$n`")): _*)
+          .withColumn("_change_type", lit("delete")), written)
       }
 
-    def dvShape(): Long = {
-      val matches = keyed.groupBy(col("__row_path"))
-        .agg(collect_list(col("__row_pos")).as("pos")).collect()
-      val totalDeleted = matches.map(_.getSeq[Long](1).size.toLong).sum
+    def dvShape(written: mutable.ArrayBuffer[String]): Long = {
+      val matches = killPositions(keyed)
+      val totalDeleted = matches.map(_._2.length.toLong).sum
       if (totalDeleted == 0) return version
       if (totalDeleted > maxDeletedRows) throw UnsupportedWrite(
         s"$table: DELETE matches $totalDeleted rows (> $maxDeletedRows) " +
           "— deletion vectors are for small deletes; use mode=rewrite " +
           "(or auto)")
       val ts = System.currentTimeMillis()
-      val (dvLines, newDvFiles) = dvKillActions(base, table, fs, conf,
-        fileByKey,
-        matches.toSeq.map(m =>
-          (m.getString(0), m.getSeq[Long](1).toArray)), ts, trackIds)
-      val allNew = Seq.newBuilder[String]
-      allNew ++= newDvFiles
+      val killLines = dvKillActions(t, matches, ts, written)
       // the cdc rows derive from the COLLECTED kill set (a semi-join on
       // the exact row identities), never a re-evaluation of the
       // condition — the feed always agrees with the rows the DVs killed
       val cdcLines =
-        if (!cdfEnabled) Nil
+        if (!t.cdfEnabled) Nil
         else {
           import spark.implicits._
-          val killedKeys = matches.toSeq.flatMap(m =>
-            m.getSeq[Long](1).map(p => (m.getString(0), p)))
-          val killedDf = spark.createDataset(killedKeys)
+          val killedDf = spark.createDataset(matches.flatMap {
+            case (f, pos) => pos.toSeq.map(p => (f, p)) })
             .toDF("__kp", "__kpos")
           val whole = DeltaTable.readWithRowKey(spark, table)
-          val killed = whole.join(killedDf,
+          cdcDeleteLines(whole.join(killedDf,
             whole("__row_path") === killedDf("__kp") &&
               whole("__row_pos") === killedDf("__kpos"), "left_semi")
-            .drop("__row_path", "__row_pos")
-          cdcDeleteLines(killed, ts, allNew)
+            .drop("__row_path", "__row_pos"), written)
         }
-      // the protocol upgrade rides only on commits that actually WRITE a
-      // deletion vector — a commit whose every touched file fully died is
-      // plain remove actions and must not lock readers out
-      commit(
+      commitLog(t.fs, t.logPath, table, version + 1,
         Seq(s"""{"commitInfo":{"timestamp":$ts,"operation":"DELETE"}}""") ++
-          (if (newDvFiles.nonEmpty) dvProtocolUpgrade(proto) else Nil) ++
-          dvLines ++ cdcLines,
-        allNew.result())
+          killLines ++ cdcLines,
+        "delete", written.toSeq)
     }
 
-    def rewriteShape(touchedCanon: Set[String]): Long = {
+    def rewriteShape(touchedCanon: Set[String],
+        written: mutable.ArrayBuffer[String]): Long = {
       if (touchedCanon.isEmpty) return version
       // rowTracking: the SURVIVORS of a copy-on-write delete keep their
       // identity — each rewritten row stores its stable id and commit
       // version in the materialized columns (minted here on first use),
       // exactly like OPTIMIZE; only the deleted rows' ids retire
-      val matCols = materializedColsFor(table, proto, config, schema)
+      val matCols = materializedColsFor(table, t.dst.protocol, t.config,
+        t.schema)
       // survivors of the TOUCHED files only (existing DVs applied) —
       // rows where the predicate is false OR NULL survive, delta's own
       // DELETE semantics
@@ -1098,99 +1276,57 @@ object DeltaWriter {
       }).filter(not(coalesce(condition, lit(false))))
       // a foreign table may hold ''/sentinel string partition values the
       // directory encoding cannot round-trip — directed before rewriting
-      locally {
-        import org.apache.spark.sql.functions.{col => fcol}
-        val strCols = partCols.filter(c => schema(c).dataType == StringType)
-        if (strCols.nonEmpty) {
-          val ambiguous = strCols.map(c =>
-            fcol(c) === "" || fcol(c) === "__HIVE_DEFAULT_PARTITION__")
-            .reduce(_ || _)
-          if (!survivors.filter(ambiguous).isEmpty) throw UnsupportedWrite(
-            s"$table: a surviving string partition value is '' or the " +
-              "hive null sentinel — the rewrite cannot represent it")
-        }
-      }
+      requireEncodablePartitions(table, t.schema, t.partCols, survivors,
+        "a surviving row carries")
       val ts = System.currentTimeMillis()
-      val matNames = matCols.toSeq.flatMap(m => Seq(m._1, m._2)).toSet
-      val outSurvivors =
-        if (!mapped) survivors
-        else toPhysical(survivors, schema, extra = matNames.toSeq)
-      val dataFiles = writeData(outSurvivors, base, outPartCols, "", conf)
       // stats cover the TABLE's columns only — the materialized row-id
-      // columns are bookkeeping, not pruning input
-      val rwDataSchema = org.apache.spark.sql.types.StructType(
-        outSurvivors.schema.filterNot(f =>
-          outPartCols.contains(f.name) || matNames(f.name)))
-      val sc = statsFieldsWithCounts(dataFiles.map(_._2), rwDataSchema, conf)
-      val nonEmpty = dataFiles.zip(sc).filter(_._2._2 > 0)
-      cleanup(fs, dataFiles.zip(sc).filter(_._2._2 == 0).map(_._1._2))
-      // the adds still carry FRESH baseRowId ranges (the protocol's
-      // required fields); the materialized columns override per row
-      val (rwRid, rwDomain) = rowTrackingFields(table, proto, dst.domains,
-        nonEmpty.map(_._2._2), version + 1)
-      // first rewrite on the table: the minted names commit via a
-      // metaData action in the SAME commit
-      val metaLines = matCols match {
-        case Some((ridCol, rcvCol, true)) => Seq(metaDataActionJson(
-          dst.metaRaw, dst.metaId, schemaJson, partCols, config ++ Map(
-            "delta.rowTracking.materializedRowIdColumnName" -> ridCol,
-            "delta.rowTracking.materializedRowCommitVersionColumnName" ->
-              rcvCol)))
-        case _ => Nil
-      }
-      val adds = nonEmpty.zip(rwRid).map {
-        case (((rel, _, size), (st, _)), rid) =>
-          val pv = partitionValuesJson(partValues(rel))
-          s"""{"add":{"path":"${pctEncodeRel(rel)}","partitionValues":{$pv},""" +
-            s""""size":$size,"modificationTime":$ts,"dataChange":true$rid$st}}"""
-      }
+      // columns are bookkeeping, not pruning input; the adds still carry
+      // FRESH baseRowId ranges (the protocol's required fields), the
+      // materialized columns override per row
+      val matNames = matCols.toSeq.flatMap(m => Seq(m._1, m._2)).toSet
+      val (adds, domain) = placeData(t,
+        t.physical(survivors, extra = matNames.toSeq), ts, written,
+        bookkeeping = matNames)
       val removes = touchedCanon.toSeq.sorted.map { key =>
-        val (rawPath, pv, oldDv, _) = fileByKey.getOrElse(key,
-          throw UnsupportedWrite(
-            s"$table: matched row's file $key is not in the snapshot — " +
-              "path spelling drift"))
-        val pvs = partitionValuesJson(pv)
-        val oldDvJson = oldDv.map(d => s""","deletionVector":${dvJson(d)}""")
-          .getOrElse("")
-        s"""{"remove":{"path":"${jsonEscape(rawPath)}",""" +
-          s""""deletionTimestamp":$ts,""" +
-          s""""dataChange":true,"partitionValues":{$pvs}$oldDvJson}}"""
+        val (rawPath, pv, oldDv, _) = t.fileOf(key)
+        removeAction(rawPath, pv, oldDv, ts, dataChange = true)
       }
-      val allNew = Seq.newBuilder[String]
-      allNew ++= nonEmpty.map(_._1._2)
       // a second pass over the touched files builds the killed-row cdc
       // frame — CDF costs one extra scan of the touched files here, and
       // the documented prefer-dv-for-non-deterministic caveat covers the
       // two evaluations
       val cdcLines = cdcDeleteLines(
         DeltaTable.readFilesSubset(spark, table, touchedCanon)
-          .filter(coalesce(condition, lit(false))), ts, allNew)
-      commit(
+          .filter(coalesce(condition, lit(false))), written)
+      commitLog(t.fs, t.logPath, table, version + 1,
         Seq(s"""{"commitInfo":{"timestamp":$ts,"operation":"DELETE"}}""") ++
-          metaLines ++ removes ++ adds ++ cdcLines ++ rwDomain,
-        allNew.result())
+          materializedNames(t, matCols) ++ removes ++ adds ++ cdcLines ++
+          domain,
+        "delete", written.toSeq)
     }
 
-    mode match {
-      case "dv" =>
-        // a distributed pre-count protects the driver from collecting a
-        // data-scale position set before the authoritative (collected)
-        // cap check can run — the collect-side check still governs
-        if (keyed.count() > maxDeletedRows) throw UnsupportedWrite(
-          s"$table: DELETE matches more than $maxDeletedRows rows — " +
-            "deletion vectors are for small deletes; use mode=rewrite " +
-            "(or auto)")
-        dvShape()
-      case "rewrite" =>
-        val touched = keyed.select(col("__row_path")).distinct()
-          .collect().map(_.getString(0)).toSet
-        rewriteShape(touched)
-      case _ => // auto: an O(files) count pass picks the shape
-        val groups = keyed.groupBy(col("__row_path")).count().collect()
-        val total = groups.map(_.getLong(1)).sum
-        if (total == 0) version
-        else if (total <= maxDeletedRows) dvShape()
-        else rewriteShape(groups.map(_.getString(0)).toSet)
+    reclaiming(t.fs) { written =>
+      mode match {
+        case "dv" =>
+          // a distributed pre-count protects the driver from collecting
+          // a data-scale position set before the authoritative
+          // (collected) cap check can run — the collect-side check still
+          // governs
+          if (keyed.count() > maxDeletedRows) throw UnsupportedWrite(
+            s"$table: DELETE matches more than $maxDeletedRows rows — " +
+              "deletion vectors are for small deletes; use mode=rewrite " +
+              "(or auto)")
+          dvShape(written)
+        case "rewrite" =>
+          rewriteShape(keyed.select(col("__row_path")).distinct()
+            .collect().map(_.getString(0)).toSet, written)
+        case _ => // auto: an O(files) count pass picks the shape
+          val groups = keyed.groupBy(col("__row_path")).count().collect()
+          val total = groups.map(_.getLong(1)).sum
+          if (total == 0) version
+          else if (total <= maxDeletedRows) dvShape(written)
+          else rewriteShape(groups.map(_.getString(0)).toSet, written)
+      }
     }
   }
 
@@ -1218,155 +1354,33 @@ object DeltaWriter {
       condition: org.apache.spark.sql.Column,
       set: Map[String, org.apache.spark.sql.Column],
       maxUpdatedRows: Long = 10000000L): Long = {
-    import org.apache.spark.sql.functions.{collect_list, lit, col => fcol}
-    val base = table.stripSuffix("/")
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    val logPath = new Path(s"$base/_delta_log")
-    val fs = logPath.getFileSystem(conf)
-    val dst = DeltaTable.snapshotState(spark, table)
-    val version = dst.version
-    val schemaJson = dst.schemaJson
-    val partCols = dst.partitionColumns
-    val config = dst.configuration
-    val files = dst.files
-    val proto = dst.protocol
+    import org.apache.spark.sql.functions.lit
     // rowTracking: the DV re-adds of surviving files preserve their
     // baseRowId verbatim, the appended post-update images take FRESH
     // ids (the protocol's baseline — stable ids across an update need
     // materialized row-id columns), and the high-water mark advances
     // in the same commit
-    val tracking = proto.writerFeatures.contains("rowTracking")
-    val trackIds: Option[Map[String, (Long, Long)]] =
-      if (tracking) Some(dst.fileRowIds) else None
-    if (config.get("delta.appendOnly").exists(_.equalsIgnoreCase("true")))
-      throw UnsupportedWrite(
-        s"$table: the table is append-only — UPDATE is forbidden by its " +
-          "own contract")
-    enforceConstraints(table, config, schemaJson, None)
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    // column-mapped targets: the rewritten images and cdc files store
-    // PHYSICAL column names + field ids, partition dirs and
-    // add.partitionValues keyed physical — the same shape mapped
-    // appends write, nested levels renamed through toPhysical's cast
-    val mapped = config.get("delta.columnMapping.mode").exists(_ != "none")
-    set.keys.foreach { k =>
-      if (!schema.fieldNames.contains(k)) throw UnsupportedWrite(
-        s"$table: SET column '$k' is not in the table schema")
-    }
-    val outPartCols =
-      if (!mapped) partCols
-      else partCols.map(c => DeltaTable.physFieldName(schema(c)))
-    val cdfEnabled = config.get("delta.enableChangeDataFeed")
-      .exists(_.equalsIgnoreCase("true"))
-    def resolve(rel: String): String = DeltaTable.resolveAdd(base, rel)
-    val fileByKey: Map[String, (String, Map[String, String],
-      Option[DeletionVector.Descriptor], Option[String])] =
-      files.map(f => PathUris.canon(resolve(f._1)) -> f).toMap
-    // ONE evaluation of the condition: matched rows land in a temp
-    // parquet (with their row identity), and everything downstream — the
-    // DV positions, the rewritten images, the cdc pre/post images —
-    // derives from that same materialized set
-    val tmpDir = s"$base/_delta_log/_tmp_update_${java.util.UUID.randomUUID()}"
-    val newFiles = Seq.newBuilder[String]
-    try {
-      DeltaTable.readWithRowKey(spark, table).filter(condition)
-        .write.mode("overwrite").parquet(tmpDir)
-      val matched = readTmpFiles(spark, tmpDir, conf)
-      // footer counts of the MATERIALIZED matched set guard the cap
-      // BEFORE any position collect — O(files) metadata, the same
-      // evaluation the kill consumes, so the driver never materializes a
+    val t = mutableTarget(spark, table, "UPDATE")
+    enforceConstraints(table, t.config, t.dst.schemaJson, None)
+    requireColumns(table, t.schema, "SET column", set.keys)
+    rowLevelWrite(DeltaTable.readWithRowKey(spark, table).filter(condition),
+      t.logPath.toString, t.conf, t.version) { (matched, n, written) =>
+      // the footer count of the MATERIALIZED matched set guards the cap
+      // BEFORE any position collect, so the driver never materializes a
       // data-scale position set
-      val tmpFiles = fs.listStatus(new Path(tmpDir))
-        .map(_.getPath.toString).filter(_.endsWith(".parquet")).toSeq
-      val totalMatched = rowCounts(tmpFiles, conf).sum
-      if (totalMatched == 0) return version
-      if (totalMatched > maxUpdatedRows) throw UnsupportedWrite(
-        s"$table: UPDATE matches $totalMatched rows (> $maxUpdatedRows) " +
+      if (n > maxUpdatedRows) throw UnsupportedWrite(
+        s"$table: UPDATE matches $n rows (> $maxUpdatedRows) " +
           "— deletion vectors are for small updates; rewrite the table " +
           "instead")
-      val posGroups = matched.groupBy(fcol("__row_path"))
-        .agg(collect_list(fcol("__row_pos")).as("pos")).collect()
-      val preimage = matched.drop("__row_path", "__row_pos")
-        .select(schema.fields.toIndexedSeq.map(f => fcol(s"`${f.name}`")): _*)
-      // every SET expression evaluates against the PRE-update row (SQL
-      // UPDATE semantics) — one select, so SET a=b, b=a swaps instead of
-      // seeing its own partial result, and Map ordering cannot matter
-      val rewritten = preimage.select(
-        schema.fields.toIndexedSeq.map(f =>
-          set.getOrElse(f.name, fcol(s"`${f.name}`"))
-            .cast(f.dataType).as(f.name)): _*)
-      // the table's row contracts hold on the POST-update images (the
-      // rows this commit writes) — one pass over the materialized
-      // matched set, rejected whole on a violation
-      enforceConstraints(table, config, schemaJson, Some(rewritten))
-      // the partition-dir '' / hive-sentinel ambiguity check, on the
-      // POST-update images (a SET can move rows into the ambiguous value)
-      locally {
-        val strCols = partCols.filter(c => schema(c).dataType == StringType)
-        if (strCols.nonEmpty) {
-          val ambiguous = strCols.map(c =>
-            fcol(c) === "" || fcol(c) === "__HIVE_DEFAULT_PARTITION__")
-            .reduce(_ || _)
-          if (!rewritten.filter(ambiguous).isEmpty) throw UnsupportedWrite(
-            s"$table: an updated string partition value is '' or the hive " +
-              "null sentinel — the directory encoding cannot represent it")
-        }
-      }
-      val ts = System.currentTimeMillis()
-      val outRewritten =
-        if (!mapped) rewritten else toPhysical(rewritten, schema)
-      val dataFiles = writeData(outRewritten, base, outPartCols, "", conf)
-      newFiles ++= dataFiles.map(_._2)
-      // stats key by what the files STORE — physical names on a mapped
-      // table (readWhere parses them against the physical schema)
-      val updDataSchema = org.apache.spark.sql.types.StructType(
-        outRewritten.schema.filterNot(f => outPartCols.contains(f.name)))
-      val updSc = statsFieldsWithCounts(dataFiles.map(_._2), updDataSchema,
-        conf)
-      val (updRid, updDomain) = rowTrackingFields(table, proto,
-        dst.domains, updSc.map(_._2), version + 1)
-      val adds = dataFiles.zip(updSc).zip(updRid).map {
-        case (((rel, _, size), (st, _)), rid) =>
-          val pv = partitionValuesJson(partValues(rel))
-          s"""{"add":{"path":"${pctEncodeRel(rel)}","partitionValues":{$pv},""" +
-            s""""size":$size,"modificationTime":$ts,"dataChange":true$rid$st}}"""
-      }
-      val (dvLines, newDvFiles) = dvKillActions(base, table, fs, conf,
-        fileByKey,
-        posGroups.toSeq.map(m =>
-          (m.getString(0), m.getSeq[Long](1).toArray)), ts, trackIds)
-      newFiles ++= newDvFiles
-      val cdcLines =
-        if (!cdfEnabled) Nil
-        else {
-          val cdc = preimage
-            .withColumn("_change_type", lit("update_preimage"))
-            .unionByName(rewritten
-              .withColumn("_change_type", lit("update_postimage")))
-          val outCdc = if (!mapped) cdc
-            else toPhysical(cdc, schema, extra = Seq("_change_type"))
-          val cdcFiles = writeData(outCdc, base, outPartCols,
-            "_change_data", conf)
-          newFiles ++= cdcFiles.map(_._2)
-          cdcFiles.map { case (rel, _, size) =>
-            val pv = partitionValuesJson(partValues(rel))
-            s"""{"cdc":{"path":"${pctEncodeRel(rel)}","partitionValues":{$pv},""" +
-              s""""size":$size,"dataChange":false}}"""
-          }
-        }
-      val lines =
-        Seq(s"""{"commitInfo":{"timestamp":$ts,"operation":"UPDATE"}}""") ++
-          (if (newDvFiles.nonEmpty) dvProtocolUpgrade(proto) else Nil) ++
-          dvLines ++ adds ++ cdcLines ++ updDomain
-      val dest = new Path(logPath, f"${version + 1}%020d.json")
-      if (!putText(fs, dest, lines.mkString("\n"))) {
-        cleanup(fs, newFiles.result())
-        throw CommitConflict(
-          s"$table: version ${version + 1} was committed concurrently — " +
-            "re-read the table and retry the update")
-      }
-      version + 1
-    } finally fs.delete(new Path(tmpDir), true)
+      val preimage = matched
+        .select(t.schema.fieldNames.toIndexedSeq.map(c => col(s"`$c`")): _*)
+      val rewritten = images(matched, t.schema, set)
+      replaceRows(t, "UPDATE", matched, rewritten,
+        preimage.withColumn("_change_type", lit("update_preimage"))
+          .unionByName(rewritten
+            .withColumn("_change_type", lit("update_postimage"))),
+        written)
+    }
   }
 
   /** MERGE (upsert) `source` into the table on `keys`: source rows whose
@@ -1383,169 +1397,37 @@ object DeltaWriter {
     * the writeUpdate guard set. Returns the committed version. */
   def writeMerge(spark: SparkSession, table: String, source: DataFrame,
       keys: Seq[String], maxUpdatedRows: Long = 10000000L): Long = {
-    import org.apache.spark.sql.functions.{collect_list, lit, col => fcol}
-    if (keys.isEmpty) throw UnsupportedWrite(
-      s"$table: MERGE needs at least one key column")
-    val base = table.stripSuffix("/")
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    val logPath = new Path(s"$base/_delta_log")
-    val fs = logPath.getFileSystem(conf)
-    val dst = DeltaTable.snapshotState(spark, table)
-    val version = dst.version
-    val schemaJson = dst.schemaJson
-    val partCols = dst.partitionColumns
-    val config = dst.configuration
-    val files = dst.files
-    val proto = dst.protocol
+    import org.apache.spark.sql.functions.{lit, when}
     // rowTracking: like UPDATE — kill re-adds preserve, source images
     // take fresh ids, one high-water-mark advance per commit
-    val tracking = proto.writerFeatures.contains("rowTracking")
-    val trackIds: Option[Map[String, (Long, Long)]] =
-      if (tracking) Some(dst.fileRowIds) else None
-    if (config.get("delta.appendOnly").exists(_.equalsIgnoreCase("true")))
-      throw UnsupportedWrite(
-        s"$table: the table is append-only — MERGE is forbidden by its " +
-          "own contract")
-    enforceConstraints(table, config, schemaJson, None)
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    // column-mapped targets: appended data and cdc files store PHYSICAL
-    // names + field ids at every nesting level (see writeUpdate)
-    val mapped = config.get("delta.columnMapping.mode").exists(_ != "none")
-    val outPartCols =
-      if (!mapped) partCols
-      else partCols.map(c => DeltaTable.physFieldName(schema(c)))
-    keys.foreach { k =>
-      if (!schema.fieldNames.contains(k)) throw UnsupportedWrite(
-        s"$table: MERGE key '$k' is not in the table schema")
-    }
-    if (!sameSchema(schema, source.schema)) throw UnsupportedWrite(
-      s"$table: MERGE source schema ${source.schema.simpleString} != " +
-        s"table schema ${schema.simpleString}")
-    val cdfEnabled = config.get("delta.enableChangeDataFeed")
-      .exists(_.equalsIgnoreCase("true"))
-    def resolve(rel: String): String = DeltaTable.resolveAdd(base, rel)
-    val fileByKey: Map[String, (String, Map[String, String],
-      Option[DeletionVector.Descriptor], Option[String])] =
-      files.map(f => PathUris.canon(resolve(f._1)) -> f).toMap
-    val tmpDir = s"$base/_delta_log/_tmp_merge_${java.util.UUID.randomUUID()}"
-    val newFiles = Seq.newBuilder[String]
-    try {
-      // ONE evaluation of the source plan
-      source.select(schema.fields.toIndexedSeq.map(f =>
-        fcol(s"`${f.name}`").cast(deepNullableType(f.dataType))
-          .as(f.name)): _*)
-        .write.mode("overwrite").parquet(tmpDir)
-      val src = readTmpFiles(spark, tmpDir, conf)
-      if (src.isEmpty) return version
-      // every source row lands in the table (update image or insert) —
-      // the row contracts hold on all of them
-      enforceConstraints(table, config, schemaJson, Some(src))
-      val dup = src.groupBy(keys.map(fcol): _*)
-        .count().filter(fcol("count") > 1)
-      if (!dup.isEmpty) throw UnsupportedWrite(
-        s"$table: the MERGE source carries duplicate keys — one target " +
-          "row cannot take two images")
-      // matched TARGET rows (to kill): semi join on the keys
+    val t = mutableTarget(spark, table, "MERGE")
+    enforceConstraints(table, t.config, t.dst.schemaJson, None)
+    requireMergeInput(table, t.schema, source, keys)
+    rowLevelWrite(images(source,
+      deepNullableType(t.schema).asInstanceOf[StructType]),
+      t.logPath.toString, t.conf, t.version) { (src, _, written) =>
       val target = DeltaTable.readWithRowKey(spark, table)
-      val srcKeys = src.select(keys.map(fcol): _*)
-      val matched = target.join(srcKeys,
-        keys.map(k => target(k) <=> srcKeys(k)).reduce(_ && _),
-        "left_semi")
-      // ONE aggregation serves both guards: the cap (the driver must
-      // never collect a data-scale position set) and target-side
-      // duplicates (killing two rows for one image would silently shrink
-      // the table and unbalance the cdc pairs)
-      val mStats = matched.groupBy(keys.map(fcol): _*).count()
-        .agg(org.apache.spark.sql.functions.sum("count"),
-          org.apache.spark.sql.functions.max("count")).head()
-      val totalMatched = if (mStats.isNullAt(0)) 0L else mStats.getLong(0)
-      if (totalMatched > maxUpdatedRows) throw UnsupportedWrite(
-        s"$table: MERGE matches $totalMatched rows (> $maxUpdatedRows) " +
-          "— deletion vectors are for small matched sets")
-      if (!mStats.isNullAt(1) && mStats.getLong(1) > 1)
-        throw UnsupportedWrite(
-          s"$table: MERGE keys match multiple TARGET rows for one source " +
-            "row — per-key replacement would silently collapse them")
-      val posGroups = matched.groupBy(fcol("__row_path"))
-        .agg(collect_list(fcol("__row_pos")).as("pos")).collect()
-      val ts = System.currentTimeMillis()
-      // every source row lands in new data files
-      locally {
-        val strCols = partCols.filter(c => schema(c).dataType == StringType)
-        if (strCols.nonEmpty) {
-          val ambiguous = strCols.map(c =>
-            fcol(c) === "" || fcol(c) === "__HIVE_DEFAULT_PARTITION__")
-            .reduce(_ || _)
-          if (!src.filter(ambiguous).isEmpty) throw UnsupportedWrite(
-            s"$table: a source string partition value is '' or the hive " +
-              "null sentinel — the directory encoding cannot represent it")
-        }
-      }
-      val outSrc = if (!mapped) src else toPhysical(src, schema)
-      val dataFiles = writeData(outSrc, base, outPartCols, "", conf)
-      newFiles ++= dataFiles.map(_._2)
-      val mrgDataSchema = org.apache.spark.sql.types.StructType(
-        outSrc.schema.filterNot(f => outPartCols.contains(f.name)))
-      val mrgSc = statsFieldsWithCounts(dataFiles.map(_._2), mrgDataSchema,
-        conf)
-      val (mrgRid, mrgDomain) = rowTrackingFields(table, proto,
-        dst.domains, mrgSc.map(_._2), version + 1)
-      val adds = dataFiles.zip(mrgSc).zip(mrgRid).map {
-        case (((rel, _, size), (st, _)), rid) =>
-          val pv = partitionValuesJson(partValues(rel))
-          s"""{"add":{"path":"${pctEncodeRel(rel)}","partitionValues":{$pv},""" +
-            s""""size":$size,"modificationTime":$ts,"dataChange":true$rid$st}}"""
-      }
-      val (dvLines, newDvFiles) = dvKillActions(base, table, fs, conf,
-        fileByKey,
-        posGroups.toSeq.map(m =>
-          (m.getString(0), m.getSeq[Long](1).toArray)), ts, trackIds)
-      newFiles ++= newDvFiles
-      val cdcLines =
-        if (!cdfEnabled) Nil
-        else {
-          // matched source rows are postimages, unmatched are inserts;
-          // matched target rows are preimages
-          val tKeys = target.select(keys.map(k =>
-            target(k).as(s"__tk_$k")): _*).distinct()
-            .withColumn("__matched", lit(1))
-          val joined = src.join(tKeys,
-            keys.map(k => src(k) <=> tKeys(s"__tk_$k")).reduce(_ && _),
-            "left")
-          val tagged = joined.withColumn("_change_type",
-            org.apache.spark.sql.functions.when(
-              fcol("__matched").isNotNull,
-              lit("update_postimage")).otherwise(lit("insert")))
-            .drop(keys.map(k => s"__tk_$k") :+ "__matched": _*)
-          val pre = matched.drop("__row_path", "__row_pos")
-            .withColumn("_change_type", lit("update_preimage"))
-          val cdc = pre.unionByName(tagged)
-            .select((schema.fieldNames.toSeq :+ "_change_type")
-              .map(n => fcol(s"`$n`")): _*)
-          val outCdc = if (!mapped) cdc
-            else toPhysical(cdc, schema, extra = Seq("_change_type"))
-          val cdcFiles = writeData(outCdc, base, outPartCols,
-            "_change_data", conf)
-          newFiles ++= cdcFiles.map(_._2)
-          cdcFiles.map { case (rel, _, size) =>
-            val pv = partitionValuesJson(partValues(rel))
-            s"""{"cdc":{"path":"${pctEncodeRel(rel)}","partitionValues":{$pv},""" +
-              s""""size":$size,"dataChange":false}}"""
-          }
-        }
-      val lines =
-        Seq(s"""{"commitInfo":{"timestamp":$ts,"operation":"MERGE"}}""") ++
-          (if (newDvFiles.nonEmpty) dvProtocolUpgrade(proto) else Nil) ++
-          dvLines ++ adds ++ cdcLines ++ mrgDomain
-      val dest = new Path(logPath, f"${version + 1}%020d.json")
-      if (!putText(fs, dest, lines.mkString("\n"))) {
-        cleanup(fs, newFiles.result())
-        throw CommitConflict(
-          s"$table: version ${version + 1} was committed concurrently — " +
-            "re-read the table and retry the merge")
-      }
-      version + 1
-    } finally fs.delete(new Path(tmpDir), true)
+      val matched = mergeMatches(table, src, target, keys, maxUpdatedRows)
+      // every source row lands in the table (update image or insert)
+      replaceRows(t, "MERGE", matched, src, {
+        // matched source rows are postimages, unmatched are inserts;
+        // matched target rows are preimages
+        val tKeys = target.select(keys.map(k =>
+          target(k).as(s"__tk_$k")): _*).distinct()
+          .withColumn("__matched", lit(1))
+        val tagged = src.join(tKeys,
+          keys.map(k => src(k) <=> tKeys(s"__tk_$k")).reduce(_ && _),
+          "left")
+          .withColumn("_change_type", when(col("__matched").isNotNull,
+            lit("update_postimage")).otherwise(lit("insert")))
+          .drop(keys.map(k => s"__tk_$k") :+ "__matched": _*)
+        matched.drop("__row_path", "__row_pos")
+          .withColumn("_change_type", lit("update_preimage"))
+          .unionByName(tagged)
+          .select((t.schema.fieldNames.toSeq :+ "_change_type")
+            .map(n => col(s"`$n`")): _*)
+      }, written)
+    }
   }
 
   /** ALTER TABLE ... RENAME COLUMN — the migration column mapping
@@ -1870,12 +1752,8 @@ object DeltaWriter {
       extraLines ++ Seq(
       metaDataActionJson(metaRaw, metaId, schemaJsonText, partCols,
         config))
-    val dest = new Path(logPath, f"${version + 1}%020d.json")
-    if (!putText(fs, dest, lines.mkString("\n")))
-      throw CommitConflict(
-        s"$table: version ${version + 1} was committed concurrently — " +
-          s"re-read the table and retry the ${operation.toLowerCase}")
-    version + 1
+    commitLog(fs, logPath, table, version + 1, lines,
+      operation.toLowerCase)
   }
 
   /** Does any declared contract (CHECK constraint, column invariant,
@@ -1926,6 +1804,21 @@ object DeltaWriter {
         Some((s"_row-id-col-$u", s"_row-commit-version-col-$u", true))
     }
 
+  /** A rewrite that MINTED the materialized row-id column names commits
+    * them via a metaData action in the SAME commit — no reader ever sees
+    * materialized files without the names that decode them. */
+  private def materializedNames(t: RowTarget,
+      matCols: Option[(String, String, Boolean)]): Seq[String] =
+    matCols match {
+      case Some((ridCol, rcvCol, true)) => Seq(metaDataActionJson(
+        t.dst.metaRaw, t.dst.metaId, t.dst.schemaJson, t.partCols,
+        t.config ++ Map(
+          "delta.rowTracking.materializedRowIdColumnName" -> ridCol,
+          "delta.rowTracking.materializedRowCommitVersionColumnName" ->
+            rcvCol)))
+      case _ => Nil
+    }
+
   /** OPTIMIZE (bin-packing compaction): partitions holding at least two
     * data files smaller than `smallFileThreshold` get those files
     * rewritten into ~`targetFileBytes` ones, in ONE commit of
@@ -1960,29 +1853,16 @@ object DeltaWriter {
       targetFileBytes: Long = 128L << 20,
       smallFileThreshold: Long = Long.MaxValue,
       zorderBy: Seq[String] = Nil): Long = {
-    import org.apache.spark.sql.functions.{col => fcol}
-    val base = table.stripSuffix("/")
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    val logPath = new Path(s"$base/_delta_log")
-    val fs = logPath.getFileSystem(conf)
-    val dst = DeltaTable.snapshotState(spark, table)
-    val version = dst.version
-    val schemaJson = dst.schemaJson
-    val partCols = dst.partitionColumns
-    val config = dst.configuration
-    val files = dst.files
-    val proto = dst.protocol
-    // column-mapped targets: rewritten files store PHYSICAL names +
-    // field ids at every nesting level
-    val cpSchema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    val matCols = materializedColsFor(table, proto, config, cpSchema)
-    val mapped = config.get("delta.columnMapping.mode").exists(_ != "none")
-    def resolve(rel: String): String = DeltaTable.resolveAdd(base, rel)
+    val t = rowTarget(spark, table)
+    val partCols = t.partCols
+    val matCols = materializedColsFor(table, t.dst.protocol, t.config,
+      t.schema)
+    def resolve(rel: String): String = DeltaTable.resolveAdd(t.base, rel)
     // O(files) driver stats pick the targets: per partition tuple, at
     // least two qualifying files, DV'd files always qualify (their debt
     // is the point)
-    val sized = files.map { f =>
-      (f, try fs.getFileStatus(new Path(resolve(f._1))).getLen
+    val sized = t.dst.files.map { f =>
+      (f, try t.fs.getFileStatus(new Path(resolve(f._1))).getLen
         catch { case _: java.io.FileNotFoundException => 0L })
     }
     // ZORDER is a clustering rewrite: EVERY active file is a target
@@ -2005,8 +1885,8 @@ object DeltaWriter {
         s"$table: z-order column '$c' is a partition column — the " +
           "directory layout already clusters it")
     }
-    if (targets.isEmpty) return version
-    val targetCanon = targets.map(t => PathUris.canon(resolve(t._1._1))).toSet
+    if (targets.isEmpty) return t.version
+    val targetCanon = targets.map(x => PathUris.canon(resolve(x._1._1))).toSet
     // rowTracking: the rewrite input carries each survivor's stable id
     // and commit version POPULATED into the materialized columns (its
     // file's prior materialized value, or baseRowId + position) — the
@@ -2027,67 +1907,27 @@ object DeltaWriter {
       if (zorderBy.nonEmpty)
         graft.operators.ZOrder.cluster(rows, zorderBy, nOut, partCols)
       else if (partCols.isEmpty) rows.coalesce(nOut)
-      else rows.repartition(nOut, partCols.map(fcol): _*)
-    val ts = System.currentTimeMillis()
-    // physicalize AFTER packing: a select is narrow, so the coalesce/
-    // repartition/z-order layout (and in-partition order) is preserved
-    val matNames = matCols.toSeq.flatMap(m => Seq(m._1, m._2)).toSet
-    val outPacked = if (!mapped) packed
-      else toPhysical(packed, cpSchema, extra = matNames.toSeq)
-    val outPartCols =
-      if (!mapped) partCols
-      else partCols.map(c => DeltaTable.physFieldName(cpSchema(c)))
-    val dataFiles = writeData(outPacked, base, outPartCols, "", conf)
-    // stats cover the TABLE's columns only — the materialized row-id
-    // columns are bookkeeping, not pruning input
-    val cpDataSchema = org.apache.spark.sql.types.StructType(
-      outPacked.schema.filterNot(f =>
-        outPartCols.contains(f.name) || matNames(f.name)))
-    val sc = statsFieldsWithCounts(dataFiles.map(_._2), cpDataSchema, conf)
-    val nonEmpty = dataFiles.zip(sc).filter(_._2._2 > 0)
-    cleanup(fs, dataFiles.zip(sc).filter(_._2._2 == 0).map(_._1._2))
-    // the adds still carry FRESH baseRowId ranges (the protocol's
-    // required fields on a rowTracking table); the materialized columns
-    // override them row-by-row at read time
-    val (ridFields, domainLines) = rowTrackingFields(table, proto,
-      dst.domains, nonEmpty.map(_._2._2), version + 1)
-    val adds = nonEmpty.zip(ridFields).map {
-      case (((rel, _, size), (st, _)), rid) =>
-        val pv = partitionValuesJson(partValues(rel))
-        s"""{"add":{"path":"${pctEncodeRel(rel)}","partitionValues":{$pv},""" +
-          s""""size":$size,"modificationTime":$ts,"dataChange":false""" +
-          s"""$rid$st}}"""
+      else rows.repartition(nOut, partCols.map(col): _*)
+    reclaiming(t.fs) { written =>
+      val ts = System.currentTimeMillis()
+      // physicalize AFTER packing: a select is narrow, so the coalesce/
+      // repartition/z-order layout (and in-partition order) is
+      // preserved. Stats cover the TABLE's columns only, and the adds
+      // still carry FRESH baseRowId ranges (the protocol's required
+      // fields on a rowTracking table); the materialized columns
+      // override them row-by-row at read time
+      val matNames = matCols.toSeq.flatMap(m => Seq(m._1, m._2)).toSet
+      val (adds, domain) = placeData(t,
+        t.physical(packed, extra = matNames.toSeq), ts, written,
+        bookkeeping = matNames, dataChange = false)
+      val removes = targets.map { case ((rawPath, pv, oldDv, _), _) =>
+        removeAction(rawPath, pv, oldDv, ts, dataChange = false)
+      }
+      commitLog(t.fs, t.logPath, table, t.version + 1,
+        Seq(s"""{"commitInfo":{"timestamp":$ts,"operation":"OPTIMIZE"}}""") ++
+          materializedNames(t, matCols) ++ removes ++ adds ++ domain,
+        "compaction", written.toSeq)
     }
-    val removes = targets.map { case ((rawPath, pv, oldDv, _), _) =>
-      val pvs = partitionValuesJson(pv)
-      val oldDvJson = oldDv.map(d => s""","deletionVector":${dvJson(d)}""")
-        .getOrElse("")
-      s"""{"remove":{"path":"${jsonEscape(rawPath)}",""" +
-        s""""deletionTimestamp":$ts,""" +
-        s""""dataChange":false,"partitionValues":{$pvs}$oldDvJson}}"""
-    }
-    // first rowTracking compaction: the minted materialized column
-    // names commit via a metaData action in the SAME commit — no reader
-    // ever sees materialized files without the names that decode them
-    val metaLines = matCols match {
-      case Some((ridCol, rcvCol, true)) => Seq(metaDataActionJson(
-        dst.metaRaw, dst.metaId, schemaJson, partCols, config ++ Map(
-          "delta.rowTracking.materializedRowIdColumnName" -> ridCol,
-          "delta.rowTracking.materializedRowCommitVersionColumnName" ->
-            rcvCol)))
-      case _ => Nil
-    }
-    val lines =
-      Seq(s"""{"commitInfo":{"timestamp":$ts,"operation":"OPTIMIZE"}}""") ++
-        metaLines ++ removes ++ adds ++ domainLines
-    val dest = new Path(logPath, f"${version + 1}%020d.json")
-    if (!putText(fs, dest, lines.mkString("\n"))) {
-      cleanup(fs, nonEmpty.map(_._1._2))
-      throw CommitConflict(
-        s"$table: version ${version + 1} was committed concurrently — " +
-          "re-read the table and retry the compaction")
-    }
-    version + 1
   }
 
   /** VACUUM: physically delete files the table no longer needs — data
@@ -2845,6 +2685,101 @@ object IcebergWriter {
       metaPath.getName.stripSuffix(".metadata.json").stripPrefix("v")
         .toLongOption.getOrElse(0L),
       priorManifests)
+  }
+
+  /** The id a new snapshot takes: one past every snapshot on record. */
+  private def nextSnapshotId(st: TableState): Long =
+    (st.snapshots.flatMap(sn =>
+      (sn \ "snapshot-id").extractOpt[Long]) :+ 0L).max + 1
+
+  /** The state an Iceberg row-level write starts from: a table with a
+    * current snapshot, its schema and default partition spec (see
+    * [[partitionSpecInfo]]), and the sequence number, snapshot id and
+    * attempt uuid of the snapshot the write commits. */
+  private final case class RowTarget(table: String, base: String,
+      conf: Configuration, fs: FileSystem, st: TableState, fv: Int,
+      currentId: Long, schema: StructType, schemaJson: String,
+      specId: Int, partStructFields: Seq[StructField],
+      partFieldIds: Seq[Int], parts: Seq[PartField], specJson: String) {
+    val newSeq: Long = st.lastSeq + 1
+    val snapId: Long = nextSnapshotId(st)
+    val attempt: String = java.util.UUID.randomUUID().toString
+    val priorNext: Long =
+      (st.meta \ "next-row-id").extractOpt[Long].getOrElse(0L)
+    /** The cast targets of images written into this table: a
+      * required-marked schema must not fail the cast. */
+    def imageSchema: StructType =
+      deepNullableType(schema).asInstanceOf[StructType]
+    def manifestMetaOf(content: String): Map[String, String] =
+      manifestMeta(schemaJson, specJson, specId, content, fv)
+  }
+
+  /** Load a [[RowTarget]]: directed unless the format version is one of
+    * `fvs` (`what` names the write) and a current snapshot exists
+    * (`nothingTo` finishes that message); `specOp` names the write in
+    * the partition-spec guard. */
+  private def rowTarget(spark: SparkSession, table: String, what: String,
+      fvs: Seq[Int], nothingTo: String, specOp: String): RowTarget = {
+    val base = table.stripSuffix("/")
+    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
+    val fs = new Path(base).getFileSystem(conf)
+    val st = loadState(spark, fs, base)
+    val fv = (st.meta \ "format-version").extract[Int]
+    if (!fvs.contains(fv)) throw UnsupportedWrite(
+      s"$table: $what format-version ${fvs.mkString(" or ")} " +
+        s"(table is $fv)")
+    val currentId = (st.meta \ "current-snapshot-id").extractOpt[Long]
+      .filter(_ != -1L).getOrElse(throw UnsupportedWrite(
+        s"$table: no current snapshot — nothing to $nothingTo"))
+    val schemaNode = IcebergTable.currentSchemaJson(st.meta)
+    val schema = IcebergTable.structOf(schemaNode)
+    val (specId, partStructFields, partFieldIds, parts, specJson) =
+      partitionSpecInfo(table, st.meta, schema, specOp)
+    RowTarget(table, base, conf, fs, st, fv, currentId, schema,
+      JsonMethods.compact(JsonMethods.render(schemaNode)), specId,
+      partStructFields, partFieldIds, parts, specJson)
+  }
+
+  /** Write `images` as data files of the target's default spec (one
+    * file set per partition tuple, field-id tagged), footer stats per
+    * file with zero-row files dropped, and their data manifest at the
+    * new sequence — on v3 with first_row_id cells from next-row-id.
+    * Every file is recorded in `written` BEFORE the footer-stats pass,
+    * so a throw there still reclaims it. */
+  private def imageManifest(spark: SparkSession, t: RowTarget,
+      images: DataFrame, written: mutable.ArrayBuffer[String])
+      : NewManifest = {
+    val files = writeIdentityPartitioned(spark, images, t.base, t.parts,
+      t.table, t.fs, t.conf, fieldIds = idPathsOf(t.schemaJson))
+    written ++= files.map(_._1._2)
+    val idFields = idFieldsOf(t.schemaJson)
+    val (kept, empty) = files.map(f =>
+      (f, statsCells(f._1._2, idFields, t.conf))).partition(_._2._2 > 0)
+    cleanup(t.fs, empty.map(_._1._1._2))
+    val path = s"${t.base}/metadata/m-${t.attempt}-data.avro"
+    writeDataManifest(path, t.partStructFields, t.partFieldIds,
+      kept.map(_._1), kept.map(_._2), t.newSeq, t.priorNext, t.fv, t.conf,
+      t.manifestMetaOf("data"))
+    written += path
+    NewManifest(path, 0, kept.size, kept.map(_._2._2).sum)
+  }
+
+  /** Commit the target's new snapshot carrying `manifests`; on v3 the
+    * lineage advances by the rows of its data manifests. `written` is
+    * what the loser of a commit race deletes. Returns the snapshot id. */
+  private def commitRowLevel(t: RowTarget, operation: String,
+      manifests: Seq[NewManifest], written: Seq[String],
+      carried: Option[Seq[(String, String)]] = None,
+      prior: Option[Seq[ManifestFile]] = None): Long = {
+    val added = manifests.filter(_.content == 0).map(_.rows).sum
+    commitSnapshot(t.fs, t.conf, t.base, t.table, t.snapId, t.newSeq,
+      System.currentTimeMillis(), operation, manifests, t.attempt,
+      t.specId, carried.getOrElse(t.st.carried), t.st.snapshots,
+      prior.getOrElse(t.st.priorManifests), t.st.metaVersion, written,
+      fv = t.fv,
+      rowLineage =
+        if (t.fv == 3) Some((t.priorNext, t.priorNext + added)) else None)
+    t.snapId
   }
 
   private val BucketT = """bucket\[(\d+)\]""".r
@@ -3916,17 +3851,6 @@ object IcebergWriter {
     }
   }
 
-  /** Row-level DELETE for Iceberg: matching rows become POSITIONAL
-    * DELETE files (`file_path`, `pos` — the v2 merge-on-read shape) in
-    * one new `delete` snapshot; NO data file is rewritten. The delete
-    * rows are written DISTRIBUTED (data-scale deletes never pass
-    * through the driver — only the v2-positional shape makes that
-    * possible; Delta's DV bitmaps cannot). On an identity-PARTITIONED
-    * table the kill rows group by their target data file's partition
-    * tuple — one delete file per touched tuple, its manifest entry
-    * carrying the partition struct, so stock readers' partition-equality
-    * application rule and file-level pruning both hold. An empty DELETE
-    * is a no-op. Returns the snapshot id. */
   /** The default spec's partition shape for a row-level write:
     * (spec id, partition-struct fields [spec field name, transform
     * RESULT type], manifest field ids, PartFields for re-written
@@ -3981,62 +3905,36 @@ object IcebergWriter {
     (specId, structFields, fieldIds, parts, fieldsJson)
   }
 
+  /** Row-level DELETE for Iceberg: matching rows become POSITIONAL
+    * DELETE files (`file_path`, `pos` — the v2 merge-on-read shape) in
+    * one new `delete` snapshot; NO data file is rewritten. The delete
+    * rows are written DISTRIBUTED (data-scale deletes never pass
+    * through the driver — only the v2-positional shape makes that
+    * possible; Delta's DV bitmaps cannot). On an identity-PARTITIONED
+    * table the kill rows group by their target data file's partition
+    * tuple — one delete file per touched tuple, its manifest entry
+    * carrying the partition struct, so stock readers' partition-equality
+    * application rule and file-level pruning both hold. A v3 table's
+    * rows die by Puffin deletion vectors instead ([[writeDeleteV3]]).
+    * An empty DELETE is a no-op. Returns the snapshot id. */
   def writeDelete(spark: SparkSession, table: String,
       condition: org.apache.spark.sql.Column): Long = {
-    val base = table.stripSuffix("/")
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    val fs = new Path(base).getFileSystem(conf)
-    val st = loadState(spark, fs, base)
-    val meta = st.meta
-    val fv = (meta \ "format-version").extract[Int]
-    if (fv == 3) return writeDeleteV3(spark, table, base, fs, conf, st,
-      condition)
-    if (fv != 2) throw UnsupportedWrite(
-      s"$table: row-level deletes target format-version 2 or 3 " +
-        s"(table is $fv)")
-    val currentId = (meta \ "current-snapshot-id").extractOpt[Long]
-      .filter(_ != -1L).getOrElse(throw UnsupportedWrite(
-        s"$table: no current snapshot — nothing to delete from"))
-    val schemaNode = IcebergTable.currentSchemaJson(meta)
-    val schema = IcebergTable.structOf(schemaNode)
     // the delete manifest is tagged with the table's DEFAULT spec id —
     // a dangling spec-0 reference would break stock readers on tables
-    // whose empty spec evolved to a nonzero id; its partition struct
-    // carries spec field names with source column types
-    val (delSpecId, partStructFields, partFieldIds, _, delSpecJson) =
-      partitionSpecInfo(table, meta, schema, "deleting")
-    // matching rows → (manifest-spelled file path, position), fully
-    // DISTRIBUTED: the canonical row key maps back to the raw manifest
-    // path (and its partition scope) through a broadcast dimension so
-    // foreign readers' raw-string compares still match; sorted within
-    // each delete file per spec. ONE scan: the plan is written straight
-    // to parquet and "nothing matched" is detected from the written
-    // files' footer counts.
-    val kills = writeKillFiles(spark, table, base, fs, conf,
-      IcebergTable.readWithRowKey(spark, table).filter(condition),
-      partStructFields, delSpecId)
-    if (kills.isEmpty) return currentId // empty DELETE: no-op
-    val newSeq = st.lastSeq + 1
-    val snapId = (st.snapshots.flatMap(sn =>
-      (sn \ "snapshot-id").extractOpt[Long]) :+ 0L).max + 1
-    val ts = System.currentTimeMillis()
-    val attempt = java.util.UUID.randomUUID().toString
-    val manifestPath = s"$base/metadata/m-$attempt.avro"
-    val schemaJson = JsonMethods.compact(JsonMethods.render(schemaNode))
-    AvroOcf.write(manifestPath,
-      manifestAvroSchema(partStructFields, partFieldIds),
-      kills.map { case ((_, abs, size), n, t) =>
-        // content 1: positional deletes
-        Seq(1, newSeq, Seq(1, abs, "PARQUET", t, n, size) ++
-          noStatsCells)
-      }, conf = conf,
-      meta = manifestMeta(schemaJson, delSpecJson, delSpecId, "deletes"))
-    commitSnapshot(fs, conf, base, table, snapId, newSeq, ts, "delete",
-      Seq(NewManifest(manifestPath, 1, kills.size,
-        kills.map(_._2).sum)),
-      attempt, delSpecId, st.carried, st.snapshots,
-      st.priorManifests, st.metaVersion, kills.map(_._1._2))
-    snapId
+    // whose empty spec evolved to a nonzero id
+    val t = rowTarget(spark, table, "row-level deletes target", Seq(2, 3),
+      "delete from", "deleting")
+    if (t.fv == 3) writeDeleteV3(spark, t, condition)
+    else reclaiming(t.fs) { written =>
+      // ONE scan: the matching rows are written straight to positional
+      // delete files and "nothing matched" is read from their footers
+      positionalKill(spark, t,
+        IcebergTable.readWithRowKey(spark, table).filter(condition),
+        written) match {
+        case None => t.currentId // empty DELETE: no-op
+        case Some(man) => commitRowLevel(t, "delete", Seq(man), written.toSeq)
+      }
+    }
   }
 
   /** Row-level DELETE BY KEY — an EQUALITY delete (content=2): the key
@@ -4092,8 +3990,7 @@ object IcebergWriter {
       attempt, fv) match {
       case None => currentId // empty key set: no-op, no empty snapshot
       case Some((man, manSpec, carried, dataFiles)) =>
-        val snapId = (st.snapshots.flatMap(sn =>
-          (sn \ "snapshot-id").extractOpt[Long]) :+ 0L).max + 1
+        val snapId = nextSnapshotId(st)
         val ts = System.currentTimeMillis()
         val priorNext = (meta \ "next-row-id").extractOpt[Long]
           .getOrElse(0L)
@@ -4129,107 +4026,24 @@ object IcebergWriter {
     * partition-grouped. Returns the new snapshot id. */
   def writeMergeByKey(spark: SparkSession, table: String,
       source: DataFrame, keys: Seq[String]): Long = {
-    import org.apache.spark.sql.functions.{col => fcol}
-    if (keys.isEmpty) throw UnsupportedWrite(
-      s"$table: MERGE needs at least one key column")
-    val base = table.stripSuffix("/")
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    val fs = new Path(base).getFileSystem(conf)
-    val st = loadState(spark, fs, base)
-    val meta = st.meta
-    val fv = (meta \ "format-version").extract[Int]
-    if (fv != 2 && fv != 3) throw UnsupportedWrite(
-      s"$table: equality-delete merges target format-version 2 or 3 " +
-        s"(table is $fv)")
-    val currentId = (meta \ "current-snapshot-id").extractOpt[Long]
-      .filter(_ != -1L).getOrElse(throw UnsupportedWrite(
-        s"$table: no current snapshot — nothing to merge into"))
-    val schemaNode = IcebergTable.currentSchemaJson(meta)
-    val schema = IcebergTable.structOf(schemaNode)
-    val (specId, partStructFields, partFieldIds, parts, specJson) =
-      partitionSpecInfo(table, meta, schema, "MERGE")
-    keys.foreach { k =>
-      if (!schema.fieldNames.contains(k)) throw UnsupportedWrite(
-        s"$table: MERGE key '$k' is not in the table schema")
+    val t = rowTarget(spark, table, "equality-delete merges target",
+      Seq(2, 3), "merge into", "MERGE")
+    requireMergeInput(table, t.schema, source, keys)
+    // ONE evaluation of the source plan — the delete keys and the
+    // appended images must agree even for a non-deterministic source
+    rowLevelWrite(images(source, t.imageSchema), s"${t.base}/metadata",
+      t.conf, t.currentId) { (src, _, written) =>
+      requireUniqueKeys(table, src, keys, "one key cannot take two images")
+      // kill half: one equality delete of the source keys — O(source)
+      val eq = eqDeleteArtifacts(spark, table, t.base, t.fs, t.conf, t.st,
+        src.select(keys.map(col): _*), t.newSeq, t.attempt, t.fv)
+      eq.foreach { case (man, _, _, files) => written ++= files :+ man.path }
+      // append half: every source row, partition-grouped
+      commitRowLevel(t, "overwrite", imageManifest(spark, t, src, written) +:
+        eq.toSeq.map { case (man, manSpec, _, _) =>
+          man.copy(specId = Some(manSpec)) },
+        written.toSeq, carried = eq.map(_._3))
     }
-    if (!sameSchema(schema, source.schema)) throw UnsupportedWrite(
-      s"$table: MERGE source schema ${source.schema.simpleString} != " +
-        s"table schema ${schema.simpleString}")
-    val tmpDir = s"$base/metadata/_tmp_merge_${java.util.UUID.randomUUID()}"
-    val newFiles = Seq.newBuilder[String]
-    // manifests written before the commit — orphans to reclaim if any
-    // later step throws (a lost COMMIT race is commitSnapshot's own
-    // cleanup; everything else is ours, same as writeUpdate)
-    val newManifests = Seq.newBuilder[String]
-    try {
-      // ONE evaluation of the source plan — the delete keys and the
-      // appended images must agree even for a non-deterministic source
-      source.select(schema.fields.toIndexedSeq.map(f =>
-        fcol(s"`${f.name}`").cast(deepNullableType(f.dataType))
-          .as(f.name)): _*)
-        .write.mode("overwrite").parquet(tmpDir)
-      val src = readTmpFiles(spark, tmpDir, conf)
-      if (src.isEmpty) return currentId
-      val dup = src.groupBy(keys.map(fcol): _*)
-        .count().filter(fcol("count") > 1)
-      if (!dup.isEmpty) throw UnsupportedWrite(
-        s"$table: the MERGE source carries duplicate keys — one key " +
-          "cannot take two images")
-      try {
-        val newSeq = st.lastSeq + 1
-        val attempt = java.util.UUID.randomUUID().toString
-        // kill half: one equality delete of the source keys — O(source)
-        val eq = eqDeleteArtifacts(spark, table, base, fs, conf, st,
-          src.select(keys.map(fcol): _*), newSeq, attempt, fv)
-        val (eqMan, carried) = eq match {
-          case Some((man, manSpec, c, files)) =>
-            newFiles ++= files
-            newManifests += man.path
-            (Seq(man.copy(specId = Some(manSpec))), c)
-          case None => (Nil, st.carried)
-        }
-        // append half: every source row, partition-grouped
-        val schemaJson = JsonMethods.compact(JsonMethods.render(schemaNode))
-        val mrgIdFields = idFieldsOf(schemaJson)
-        val filesWithTuple = writeIdentityPartitioned(spark, src, base,
-          parts, table, fs, conf,
-          fieldIds = idPathsOf(schemaJson))
-        // registered BEFORE the footer-stats pass: a throw there must
-        // still reclaim the just-written files
-        newFiles ++= filesWithTuple.map(_._1._2)
-        val dataSC = filesWithTuple.map(f =>
-          statsCells(f._1._2, mrgIdFields, conf))
-        val dataNonEmpty = filesWithTuple.zip(dataSC).filter(_._2._2 > 0)
-        cleanup(fs,
-          filesWithTuple.zip(dataSC).filter(_._2._2 == 0).map(_._1._1._2))
-        val addedRows = dataNonEmpty.map(_._2._2).sum
-        val snapId = (st.snapshots.flatMap(sn =>
-          (sn \ "snapshot-id").extractOpt[Long]) :+ 0L).max + 1
-        val ts = System.currentTimeMillis()
-        val dataManifest = s"$base/metadata/m-$attempt-data.avro"
-        val priorNext = (meta \ "next-row-id").extractOpt[Long].getOrElse(0L)
-        writeDataManifest(dataManifest, partStructFields, partFieldIds,
-          dataNonEmpty.map(_._1), dataNonEmpty.map(_._2), newSeq,
-          priorNext, fv, conf,
-          manifestMeta(schemaJson, specJson, specId, "data", fv))
-        newManifests += dataManifest
-        commitSnapshot(fs, conf, base, table, snapId, newSeq, ts,
-          "overwrite",
-          NewManifest(dataManifest, 0, dataNonEmpty.size, addedRows) +:
-            eqMan,
-          attempt, specId, carried, st.snapshots,
-          st.priorManifests, st.metaVersion, newFiles.result(),
-          fv = fv,
-          rowLineage =
-            if (fv == 3) Some((priorNext, priorNext + addedRows)) else None)
-        snapId
-      } catch {
-        case t: CommitConflict => throw t
-        case t: Throwable =>
-          cleanup(fs, newFiles.result() ++ newManifests.result())
-          throw t
-      }
-    } finally fs.delete(new Path(tmpDir), true)
   }
 
   /** [[writeEqualityDelete]]'s artifact half, shared with
@@ -4312,62 +4126,60 @@ object IcebergWriter {
     // silently-nulled key, which would null-safely delete unrelated
     // null rows. The key frame is O(keys) by design, so the extra
     // write is small.
-    val tmpDir = s"$base/metadata/_tmp_eqdel_${java.util.UUID.randomUUID()}"
-    val written: Seq[((String, String, Long), Long, Seq[Any])] = try {
-      keys.write.mode("overwrite").parquet(tmpDir)
-      val matKeys = readTmpFiles(spark, tmpDir, conf)
-      // typed to the table's own column types, deduplicated — two equal
-      // key rows must not double-count or bloat the delete file. A cast
-      // that turns a non-null key into null must DIRECT.
-      locally {
-        import org.apache.spark.sql.functions.{sum, when}
-        // try_cast so the guard itself is ANSI-independent (a plain cast
-        // would throw under ANSI before this count could name the column)
-        val introduced = matKeys.select(keys.columns.toSeq.map(c =>
-          sum(when(fcol(s"`$c`").isNotNull &&
-            fcol(s"`$c`").try_cast(deepNullableType(schema(c).dataType))
-              .isNull, 1)
-            .otherwise(0)).as(c)): _*).head()
-        keys.columns.toSeq.zipWithIndex.foreach { case (c, i) =>
-          if (!introduced.isNullAt(i) && introduced.getLong(i) > 0L)
-            throw UnsupportedWrite(
-              s"$table: ${introduced.getLong(i)} key value(s) in '$c' do " +
-                s"not cast to the table's ${schema(c).dataType.simpleString} " +
-                "— a silently nulled key would delete unrelated null rows")
+    val written: Seq[((String, String, Long), Long, Seq[Any])] =
+      materialize(keys, s"$base/metadata", conf) { (matKeys, _) =>
+        // typed to the table's own column types, deduplicated — two equal
+        // key rows must not double-count or bloat the delete file. A cast
+        // that turns a non-null key into null must DIRECT.
+        locally {
+          import org.apache.spark.sql.functions.{sum, when}
+          // try_cast so the guard itself is ANSI-independent (a plain cast
+          // would throw under ANSI before this count could name the column)
+          val introduced = matKeys.select(keys.columns.toSeq.map(c =>
+            sum(when(fcol(s"`$c`").isNotNull &&
+              fcol(s"`$c`").try_cast(deepNullableType(schema(c).dataType))
+                .isNull, 1)
+              .otherwise(0)).as(c)): _*).head()
+          keys.columns.toSeq.zipWithIndex.foreach { case (c, i) =>
+            if (!introduced.isNullAt(i) && introduced.getLong(i) > 0L)
+              throw UnsupportedWrite(
+                s"$table: ${introduced.getLong(i)} key value(s) in '$c' do " +
+                  s"not cast to the table's ${schema(c).dataType.simpleString} " +
+                  "— a silently nulled key would delete unrelated null rows")
+          }
         }
+        // equality-delete files are data-file-spec files: their columns
+        // carry the spec's ID-KEYED identity (parquet.field.id), so a
+        // stock reader resolves them by id exactly like data files —
+        // recursively through STRUCT-typed keys (every member tagged with
+        // its own schema field id, the same tagFieldIds machinery the
+        // append path uses). Keys containing LIST/MAP types stay
+        // uniformly untagged (their element ids have no StructField to
+        // ride on; partial tagging reads worse than none), resolving by
+        // name.
+        val untaggableKey = keys.columns.toSeq.exists(c =>
+          hasListOrMap(schema(c).dataType))
+        val src0 = matKeys.select(keys.columns.toSeq.map(c =>
+          fcol(s"`$c`").try_cast(deepNullableType(schema(c).dataType))
+            .as(c)): _*).distinct()
+        val src =
+          if (untaggableKey) src0
+          else {
+            val idPaths = idPathsOf(schemaJson)
+            src0.select(src0.schema.fields.toIndexedSeq
+              .map(f => tagIdCol(f, idPaths)): _*)
+          }
+        // scoped: grouped by the computed partition-transform values, one
+        // delete file per touched tuple (src already carries its field-id
+        // tags, so no second tagging pass); global/unpartitioned: one
+        // unscoped file set
+        val filesWithTuple: Seq[((String, String, Long), Seq[Any])] =
+          if (scoped)
+            writeIdentityPartitioned(spark, src, base, parts, table, fs, conf)
+          else writeData(src, base, Nil, "data", conf).map(f => (f, Nil))
+        val cts = rowCounts(filesWithTuple.map(_._1._2), conf)
+        filesWithTuple.zip(cts).map { case ((f, t), n) => (f, n, t) }
       }
-      // equality-delete files are data-file-spec files: their columns
-      // carry the spec's ID-KEYED identity (parquet.field.id), so a
-      // stock reader resolves them by id exactly like data files —
-      // recursively through STRUCT-typed keys (every member tagged with
-      // its own schema field id, the same tagFieldIds machinery the
-      // append path uses). Keys containing LIST/MAP types stay
-      // uniformly untagged (their element ids have no StructField to
-      // ride on; partial tagging reads worse than none), resolving by
-      // name.
-      val untaggableKey = keys.columns.toSeq.exists(c =>
-        hasListOrMap(schema(c).dataType))
-      val src0 = matKeys.select(keys.columns.toSeq.map(c =>
-        fcol(s"`$c`").try_cast(deepNullableType(schema(c).dataType))
-          .as(c)): _*).distinct()
-      val src =
-        if (untaggableKey) src0
-        else {
-          val idPaths = idPathsOf(schemaJson)
-          src0.select(src0.schema.fields.toIndexedSeq
-            .map(f => tagIdCol(f, idPaths)): _*)
-        }
-      // scoped: grouped by the computed partition-transform values, one
-      // delete file per touched tuple (src already carries its field-id
-      // tags, so no second tagging pass); global/unpartitioned: one
-      // unscoped file set
-      val filesWithTuple: Seq[((String, String, Long), Seq[Any])] =
-        if (scoped)
-          writeIdentityPartitioned(spark, src, base, parts, table, fs, conf)
-        else writeData(src, base, Nil, "data", conf).map(f => (f, Nil))
-      val cts = rowCounts(filesWithTuple.map(_._1._2), conf)
-      filesWithTuple.zip(cts).map { case ((f, t), n) => (f, n, t) }
-    } finally fs.delete(new Path(tmpDir), true)
     if (written.map(_._2).sum == 0) { // empty key set: no artifacts
       cleanup(fs, written.map(_._1._2))
       return None
@@ -4424,10 +4236,10 @@ object IcebergWriter {
       nonEmpty.map(_._2).sum), manSpecId, carried,
       nonEmpty.map(_._1._2)))
   }
-  /** The kill half of every Iceberg row-level write: matching rows
-    * (`keyed` must carry `__row_path`/`__row_pos`) become positional-
-    * delete parquet files under `data/`, fully DISTRIBUTED — the
-    * canonical row key maps back to the raw manifest path (and its
+  /** The v2 kill encoding of every Iceberg row-level write: matching
+    * rows (`keyed` must carry `__row_path`/`__row_pos`) become
+    * positional-delete parquet files under `data/`, fully DISTRIBUTED —
+    * the canonical row key maps back to the raw manifest path (and its
     * partition scope) through a broadcast dimension so foreign readers'
     * raw-string compares still match; rows sort (file_path, pos) within
     * each delete file per spec. On a partitioned table each delete file
@@ -4436,17 +4248,17 @@ object IcebergWriter {
     * delete manifest's partition structs let scan planners skip the
     * delete file everywhere outside its partition. ONE scan: the plan
     * writes straight to parquet, "nothing matched" is detected from
-    * footer counts (empty result = no-op, zero-row files cleaned).
-    * Returns one entry per non-empty delete file:
-    * ((rel, abs, size), rowCount, partitionTuple). A touched data file
-    * under a NON-default spec cannot be scoped by this manifest and
-    * fails directed. */
-  private def writeKillFiles(spark: SparkSession, table: String,
-      base: String, fs: FileSystem, conf: Configuration, keyed: DataFrame,
-      partStructFields: Seq[StructField], delSpecId: Int)
-      : Seq[((String, String, Long), Long, Seq[Any])] = {
+    * footer counts (zero-row files cleaned). Returns the content=1
+    * manifest of the non-empty delete files at the new sequence, or
+    * None when nothing matched. A touched data file under a NON-default
+    * spec cannot be scoped by this manifest and fails directed. */
+  private def positionalKill(spark: SparkSession, t: RowTarget,
+      keyed: DataFrame, written: mutable.ArrayBuffer[String])
+      : Option[NewManifest] = {
     import org.apache.spark.sql.functions.{broadcast, col => fcol}
     import spark.implicits._
+    val table = t.table
+    val partStructFields = t.partStructFields
     val partitioned = partStructFields.nonEmpty
     val scopes = IcebergTable.activeDataScopes(spark, table)
     if (partitioned && scopes.exists(_._2.isEmpty)) throw UnsupportedWrite(
@@ -4478,16 +4290,14 @@ object IcebergWriter {
         // each delete file survives the write
         keyedSel.select(fpCol, posCol, fcol("__pt"))
           .sortWithinPartitions(fcol("__pt"), fcol("file_path"), fcol("pos"))
-    val files = writeData(delRows, base,
-      if (partitioned) Seq("__pt") else Nil, "data", conf)
-    val counts = rowCounts(files.map(_._2), conf)
-    if (counts.sum == 0) { // nothing matched
-      cleanup(fs, files.map(_._2))
-      return Nil
-    }
+    val files = writeData(delRows, t.base,
+      if (partitioned) Seq("__pt") else Nil, "data", t.conf)
+    written ++= files.map(_._2)
     // files with zero delete rows add nothing but manifest noise
-    val nonEmpty = files.zip(counts).filter(_._2 > 0)
-    cleanup(fs, files.zip(counts).filter(_._2 == 0).map(_._1._2))
+    val (nonEmpty, empty) =
+      files.zip(rowCounts(files.map(_._2), t.conf)).partition(_._2 > 0)
+    cleanup(t.fs, empty.map(_._1._2))
+    if (nonEmpty.isEmpty) return None // nothing matched
     // each delete file's partition tuple parses back from its __pt=
     // directory segment
     def tupleOf(rel: String): Seq[Any] =
@@ -4498,14 +4308,22 @@ object IcebergWriter {
             s"$table: partition dir missing in delete file $rel"))
         val raw = PathUris.pctDecode(seg.drop("__pt=".length))
         val specPart = raw.takeWhile(_ != ':')
-        if (specPart.toIntOption != Some(delSpecId)) throw UnsupportedWrite(
+        if (specPart.toIntOption != Some(t.specId)) throw UnsupportedWrite(
           s"$table: matched rows live under partition spec $specPart, " +
-            s"not the default spec $delSpecId — a spec-evolved table's " +
+            s"not the default spec ${t.specId} — a spec-evolved table's " +
             "old files cannot be scoped by this delete manifest")
         val jm = JsonMethods.parse(raw.drop(specPart.length + 1))
         partStructFields.map(sf => jvalueTo(sf.dataType, jm \ sf.name))
       }
-    nonEmpty.map { case (f, n) => (f, n, tupleOf(f._1)) }
+    val path = s"${t.base}/metadata/m-${t.attempt}-deletes.avro"
+    AvroOcf.write(path, manifestAvroSchema(partStructFields, t.partFieldIds),
+      nonEmpty.map { case ((rel, abs, size), n) =>
+        // content 1: positional deletes
+        Seq(1, t.newSeq, Seq(1, abs, "PARQUET", tupleOf(rel), n, size) ++
+          noStatsCells)
+      }, conf = t.conf, meta = t.manifestMetaOf("deletes"))
+    written += path
+    Some(NewManifest(path, 1, nonEmpty.size, nonEmpty.map(_._2).sum))
   }
 
   /** v3 row-level DELETE: matching rows become Puffin DELETION VECTORS —
@@ -4530,54 +4348,32 @@ object IcebergWriter {
     * manifests drop from the new manifest list, their surviving DV
     * entries carried forward as status-EXISTING rows at their original
     * sequences. */
-  private def writeDeleteV3(spark: SparkSession, table: String,
-      base: String, fs: FileSystem, conf: Configuration, st: TableState,
+  private def writeDeleteV3(spark: SparkSession, t: RowTarget,
       condition: org.apache.spark.sql.Column,
       maxDeletedRows: Long = 10000000L): Long = {
-    import org.apache.spark.sql.functions.{collect_list, col => fcol}
-    val meta = st.meta
-    val currentId = (meta \ "current-snapshot-id").extractOpt[Long]
-      .filter(_ != -1L).getOrElse(throw UnsupportedWrite(
-        s"$table: no current snapshot — nothing to delete from"))
-    // the structural guards run BEFORE any data work — a zero-match
-    // DELETE on an unsupported table must still direct, and the ONE
-    // metadata replay they need serves the scope lookup below too
-    val schema = IcebergTable.structOf(IcebergTable.currentSchemaJson(meta))
-    val specInfo0 = partitionSpecInfo(table, meta, schema, "DV delete")
-    val specInfo = (specInfo0._1, specInfo0._2, specInfo0._3, specInfo0._5)
-    val shapes = IcebergTable.deleteShapes(spark, table)
-    val keyed = IcebergTable.readWithRowKey(spark, table).filter(condition)
+    // the structural guards ran in rowTarget, BEFORE any data work — a
+    // zero-match DELETE on an unsupported table must still direct
+    val shapes = IcebergTable.deleteShapes(spark, t.table)
+    val keyed = IcebergTable.readWithRowKey(spark, t.table).filter(condition)
     // distributed pre-count: the driver must never collect a data-scale
     // position set before the cap can trip
     if (keyed.count() > maxDeletedRows) throw UnsupportedWrite(
-      s"$table: DELETE matches more than $maxDeletedRows rows — " +
+      s"${t.table}: DELETE matches more than $maxDeletedRows rows — " +
         "deletion vectors are for small deletes")
-    val matches = keyed
-      .groupBy(fcol("__row_path"))
-      .agg(collect_list(fcol("__row_pos")).as("pos")).collect()
-      .map(m => (m.getString(0), m.getSeq[Long](1).toArray)).toSeq
+    val matches = killPositions(keyed)
     // the collect-side cap still GOVERNS — a non-deterministic condition
     // can pass the pre-count and still over-materialize here
     val total = matches.map(_._2.length.toLong).sum
-    if (total == 0) return currentId
+    if (total == 0) return t.currentId
     if (total > maxDeletedRows) throw UnsupportedWrite(
-      s"$table: DELETE matches $total rows (> $maxDeletedRows) — " +
+      s"${t.table}: DELETE matches $total rows (> $maxDeletedRows) — " +
         "deletion vectors are for small deletes")
-    val newSeq = st.lastSeq + 1
-    val snapId = (st.snapshots.flatMap(sn =>
-      (sn \ "snapshot-id").extractOpt[Long]) :+ 0L).max + 1
-    val ts = System.currentTimeMillis()
-    val attempt = java.util.UUID.randomUUID().toString
-    val (man, killFiles, keptPrior) = dvKillManifest(spark, table, base,
-      fs, conf, st, matches, newSeq, snapId, attempt, "DV delete",
-      shapes, specInfo, maxDeletedRows)
-    val priorNext = (meta \ "next-row-id").extractOpt[Long].getOrElse(0L)
-    commitSnapshot(fs, conf, base, table, snapId, newSeq, ts, "delete",
-      Seq(man),
-      attempt, man.specId.getOrElse(0), st.carried, st.snapshots,
-      keptPrior, st.metaVersion, killFiles,
-      fv = 3, rowLineage = Some((priorNext, priorNext)))
-    snapId
+    reclaiming(t.fs) { written =>
+      val (man, keptPrior) = dvKillManifest(spark, t, matches, "DV delete",
+        shapes, maxDeletedRows, written)
+      commitRowLevel(t, "delete", Seq(man), written.toSeq,
+        prior = Some(keptPrior))
+    }
   }
 
   /** The v3 DV KILL artifacts from a COLLECTED (canonical path →
@@ -4599,22 +4395,19 @@ object IcebergWriter {
     * superseded ones is directed — carrying its equality entries needs
     * per-spec manifest surgery this writer does not attempt). After any
     * such commit the table holds at most ONE DV per data file and ZERO
-    * live positional entries. Returns (the delete manifest — its
-    * `specId` carries the default spec for the manifest list — the
-    * files to clean on a lost commit race, and the prior manifests the
+    * live positional entries. The Puffin file and the manifest go to
+    * `written`. Returns (the delete manifest — its `specId` carries the
+    * default spec for the manifest list — and the prior manifests the
     * new list should carry). */
-  private def dvKillManifest(spark: SparkSession, table: String,
-      base: String, fs: FileSystem, conf: Configuration, st: TableState,
-      matches: Seq[(String, Array[Long])], newSeq: Long, snapId: Long,
-      attempt: String, opName: String,
-      shapes: IcebergTable.DeleteShapes,
-      specInfo: (Int, Seq[StructField], Seq[Int], String),
-      maxKillRows: Long = 10000000L)
-      : (NewManifest, Seq[String], Seq[ManifestFile]) = {
+  private def dvKillManifest(spark: SparkSession, t: RowTarget,
+      matches: Seq[(String, Array[Long])], opName: String,
+      shapes: IcebergTable.DeleteShapes, maxKillRows: Long,
+      written: mutable.ArrayBuffer[String])
+      : (NewManifest, Seq[ManifestFile]) = {
     import org.apache.spark.sql.functions.{col => fcol}
-    val meta = st.meta
-    val (delSpecId, partStructFields, partFieldIds, specFieldsJson) =
-      specInfo
+    val RowTarget(table, base, conf, fs, st, _, _, _, schemaJson,
+      delSpecId, partStructFields, partFieldIds, _, specFieldsJson) = t
+    val newSeq = t.newSeq
     val partitioned = partStructFields.nonEmpty
     val dvByFile = shapes.dvByFile
     val dataScopes = shapes.dataScopes
@@ -4784,18 +4577,18 @@ object IcebergWriter {
       }
     // ------------------------------------------------- new artifacts
     val blobs = ordered.map { case (canon, pos) =>
-      Puffin.Blob("deletion-vector-v1", Nil, snapId, newSeq,
+      Puffin.Blob("deletion-vector-v1", Nil, t.snapId, newSeq,
         Map("referenced-data-file" -> rawByCanon(canon),
           "cardinality" -> pos.length.toString),
         Puffin.dvBlob(pos))
     }
-    val puffinPath = s"$base/data/dv-$attempt.puffin"
+    val puffinPath = s"$base/data/dv-${t.attempt}.puffin"
+    written += puffinPath
     val placed = Puffin.writeFile(puffinPath, blobs,
       Map("created-by" -> "graft"), conf)
     val puffinLen = fs.getFileStatus(new Path(puffinPath)).getLen
-    val manifestPath = s"$base/metadata/m-$attempt-dv.avro"
-    val schemaJson = JsonMethods.compact(JsonMethods.render(
-      IcebergTable.currentSchemaJson(meta)))
+    val manifestPath = s"$base/metadata/m-${t.attempt}-dv.avro"
+    written += manifestPath
     AvroOcf.write(manifestPath,
       dvManifestAvroSchema(partStructFields, partFieldIds),
       ordered.zip(placed).map { case ((canon, pos), (off, len)) =>
@@ -4809,7 +4602,7 @@ object IcebergWriter {
       specId = Some(delSpecId),
       minSeq = if (carriedCount > 0) Some(minCarriedSeq) else None,
       existingFiles = carriedCount, existingRows = carriedCards),
-      Seq(puffinPath), keptPrior)
+      keptPrior)
   }
 
   /** MERGE (upsert) `source` into the Iceberg table on `keys`: matched
@@ -4826,109 +4619,20 @@ object IcebergWriter {
     * identity transforms directed. Returns the new snapshot id. */
   def writeMerge(spark: SparkSession, table: String, source: DataFrame,
       keys: Seq[String]): Long = {
-    import org.apache.spark.sql.functions.{col => fcol}
-    if (keys.isEmpty) throw UnsupportedWrite(
-      s"$table: MERGE needs at least one key column")
-    val base = table.stripSuffix("/")
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    val fs = new Path(base).getFileSystem(conf)
-    val st = loadState(spark, fs, base)
-    val meta = st.meta
-    val fv = (meta \ "format-version").extract[Int]
-    if (fv != 2) throw UnsupportedWrite(
-      s"$table: positional-delete merges target format-version 2 " +
-        s"(table is $fv)")
-    val currentId = (meta \ "current-snapshot-id").extractOpt[Long]
-      .filter(_ != -1L).getOrElse(throw UnsupportedWrite(
-        s"$table: no current snapshot — nothing to merge into"))
-    val schemaNode = IcebergTable.currentSchemaJson(meta)
-    val schema = IcebergTable.structOf(schemaNode)
-    val (delSpecId, partStructFields, partFieldIds, parts, specJson) =
-      partitionSpecInfo(table, meta, schema, "MERGE")
-    keys.foreach { k =>
-      if (!schema.fieldNames.contains(k)) throw UnsupportedWrite(
-        s"$table: MERGE key '$k' is not in the table schema")
+    val t = rowTarget(spark, table, "positional-delete merges target",
+      Seq(2), "merge into", "MERGE")
+    requireMergeInput(table, t.schema, source, keys)
+    rowLevelWrite(images(source, t.imageSchema), s"${t.base}/metadata",
+      t.conf, t.currentId) { (src, _, written) =>
+      // kill side: target rows whose keys match, fully distributed — a
+      // positional kill never collects positions, so no cap
+      val kill = positionalKill(spark, t, mergeMatches(table, src,
+        IcebergTable.readWithRowKey(spark, table), keys, Long.MaxValue),
+        written)
+      // a merge with NO matched keys is insert-only: no delete manifest
+      commitRowLevel(t, "overwrite",
+        imageManifest(spark, t, src, written) +: kill.toSeq, written.toSeq)
     }
-    if (!sameSchema(schema, source.schema)) throw UnsupportedWrite(
-      s"$table: MERGE source schema ${source.schema.simpleString} != " +
-        s"table schema ${schema.simpleString}")
-    val tmpDir = s"$base/metadata/_tmp_merge_${java.util.UUID.randomUUID()}"
-    val newFiles = Seq.newBuilder[String]
-    try {
-      source.select(schema.fields.toIndexedSeq.map(f =>
-        fcol(s"`${f.name}`").cast(deepNullableType(f.dataType))
-          .as(f.name)): _*)
-        .write.mode("overwrite").parquet(tmpDir)
-      val src = readTmpFiles(spark, tmpDir, conf)
-      if (src.isEmpty) return currentId
-      val dup = src.groupBy(keys.map(fcol): _*)
-        .count().filter(fcol("count") > 1)
-      if (!dup.isEmpty) throw UnsupportedWrite(
-        s"$table: the MERGE source carries duplicate keys — one target " +
-          "row cannot take two images")
-      // kill side: target rows whose keys match, fully distributed
-      val target = IcebergTable.readWithRowKey(spark, table)
-      val srcKeys = src.select(keys.map(fcol): _*)
-      val matched = target.join(srcKeys,
-        keys.map(k => target(k) <=> srcKeys(k)).reduce(_ && _),
-        "left_semi")
-      // duplicate keys on the TARGET side are directed too: killing two
-      // target rows and appending one image would silently shrink the
-      // table
-      val tDup = matched.groupBy(keys.map(fcol): _*)
-        .count().filter(fcol("count") > 1)
-      if (!tDup.isEmpty) throw UnsupportedWrite(
-        s"$table: MERGE keys match multiple TARGET rows for one source " +
-          "row — per-key replacement would silently collapse them")
-      val kills = writeKillFiles(spark, table, base, fs, conf, matched,
-        partStructFields, delSpecId)
-      newFiles ++= kills.map(_._1._2)
-      val schemaJson = JsonMethods.compact(JsonMethods.render(schemaNode))
-      val mrgIdFields = idFieldsOf(schemaJson)
-      val filesWithTuple = writeIdentityPartitioned(spark, src, base,
-        parts, table, fs, conf,
-        fieldIds = idPathsOf(schemaJson))
-      // registered BEFORE the footer-stats pass: a throw there must
-      // still reclaim the just-written files
-      newFiles ++= filesWithTuple.map(_._1._2)
-      val dataSC = filesWithTuple.map(f =>
-        statsCells(f._1._2, mrgIdFields, conf))
-      val dataNonEmpty = filesWithTuple.zip(dataSC).filter(_._2._2 > 0)
-      cleanup(fs,
-        filesWithTuple.zip(dataSC).filter(_._2._2 == 0).map(_._1._1._2))
-      val newSeq = st.lastSeq + 1
-      val snapId = (st.snapshots.flatMap(sn =>
-        (sn \ "snapshot-id").extractOpt[Long]) :+ 0L).max + 1
-      val ts = System.currentTimeMillis()
-      val attempt = java.util.UUID.randomUUID().toString
-      val dataManifest = s"$base/metadata/m-$attempt-data.avro"
-      AvroOcf.write(dataManifest,
-        manifestAvroSchema(partStructFields, partFieldIds),
-        dataNonEmpty.map { case (((_, abs, size), t), (cells, n)) =>
-          Seq(1, newSeq, Seq(0, abs, "PARQUET", t, n, size) ++ cells)
-        }, conf = conf,
-        meta = manifestMeta(schemaJson, specJson, delSpecId, "data"))
-      val manifests = Seq.newBuilder[NewManifest]
-      manifests += NewManifest(dataManifest, 0, dataNonEmpty.size,
-        dataNonEmpty.map(_._2._2).sum)
-      if (kills.nonEmpty) {
-        val delManifest = s"$base/metadata/m-$attempt-deletes.avro"
-        AvroOcf.write(delManifest,
-          manifestAvroSchema(partStructFields, partFieldIds),
-          kills.map { case ((_, abs, size), n, t) =>
-            Seq(1, newSeq, Seq(1, abs, "PARQUET", t, n, size) ++
-              noStatsCells)
-          }, conf = conf,
-          meta = manifestMeta(schemaJson, specJson, delSpecId, "deletes"))
-        manifests += NewManifest(delManifest, 1, kills.size,
-          kills.map(_._2).sum)
-      }
-      commitSnapshot(fs, conf, base, table, snapId, newSeq, ts,
-        "overwrite", manifests.result(),
-        attempt, delSpecId, st.carried, st.snapshots,
-        st.priorManifests, st.metaVersion, newFiles.result())
-      snapId
-    } finally fs.delete(new Path(tmpDir), true)
   }
 
   /** Row-level UPDATE for Iceberg: rows matching `condition` take the
@@ -4956,138 +4660,38 @@ object IcebergWriter {
       condition: org.apache.spark.sql.Column,
       set: Map[String, org.apache.spark.sql.Column],
       maxUpdatedRows: Long = 10000000L): Long = {
-    import org.apache.spark.sql.functions.{col => fcol}
-    val base = table.stripSuffix("/")
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    val fs = new Path(base).getFileSystem(conf)
-    val st = loadState(spark, fs, base)
-    val meta = st.meta
-    val fv = (meta \ "format-version").extract[Int]
-    if (fv != 2 && fv != 3) throw UnsupportedWrite(
-      s"$table: row-level updates target format-version 2 or 3 " +
-        s"(table is $fv)")
-    val currentId = (meta \ "current-snapshot-id").extractOpt[Long]
-      .filter(_ != -1L).getOrElse(throw UnsupportedWrite(
-        s"$table: no current snapshot — nothing to update"))
-    val schemaNode = IcebergTable.currentSchemaJson(meta)
-    val schema = IcebergTable.structOf(schemaNode)
-    val (delSpecId, partStructFields, partFieldIds, parts, specJson) =
-      partitionSpecInfo(table, meta, schema, "row-level updates")
-    set.keys.foreach { k =>
-      if (!schema.fieldNames.contains(k)) throw UnsupportedWrite(
-        s"$table: SET column '$k' is not in the table schema")
-    }
+    val t = rowTarget(spark, table, "row-level updates target", Seq(2, 3),
+      "update", "row-level updates")
+    requireColumns(table, t.schema, "SET column", set.keys)
     // v3 updates kill by deletion vector; prior DVs on the touched
     // files (and any live v2 positional deletes) merge through the
     // delete-manifest rewrite inside dvKillManifest
     val v3Shapes: Option[IcebergTable.DeleteShapes] =
-      if (fv != 3) None
+      if (t.fv != 3) None
       else Some(IcebergTable.deleteShapes(spark, table))
-    val tmpDir = s"$base/metadata/_tmp_update_${java.util.UUID.randomUUID()}"
-    val newFiles = Seq.newBuilder[String]
-    // the v3 kill side may rewrite the prior delete manifests — the
-    // commit then carries its filtered view instead of st.priorManifests
-    var keptPriorV3: Option[Seq[ManifestFile]] = None
-    try {
-      // ONE evaluation of the condition (see the Delta twin)
-      IcebergTable.readWithRowKey(spark, table).filter(condition)
-        .write.mode("overwrite").parquet(tmpDir)
-      val matched = readTmpFiles(spark, tmpDir, conf)
-      if (matched.isEmpty) return currentId
-      val newSeq = st.lastSeq + 1
-      val snapId = (st.snapshots.flatMap(sn =>
-        (sn \ "snapshot-id").extractOpt[Long]) :+ 0L).max + 1
-      val ts = System.currentTimeMillis()
-      val attempt = java.util.UUID.randomUUID().toString
-      val schemaJson = JsonMethods.compact(JsonMethods.render(schemaNode))
-      // kill side — v2: (manifest-spelled path, pos) positional files,
-      // distributed + sorted, partition-scoped; v3: Puffin deletion
-      // vectors (collected, capped — the DV position set passes the
-      // driver, exactly the Delta twin's shape)
-      val (killMan, killFiles): (NewManifest, Seq[String]) =
-        if (fv == 2) {
-          val kills = writeKillFiles(spark, table, base, fs, conf,
-            matched, partStructFields, delSpecId)
-          val delManifest = s"$base/metadata/m-$attempt-deletes.avro"
-          AvroOcf.write(delManifest,
-            manifestAvroSchema(partStructFields, partFieldIds),
-            kills.map { case ((_, abs, size), n, t) =>
-              Seq(1, newSeq, Seq(1, abs, "PARQUET", t, n, size) ++
-                noStatsCells)
-            }, conf = conf,
-            meta = manifestMeta(schemaJson, specJson, delSpecId,
-              "deletes"))
-          (NewManifest(delManifest, 1, kills.size, kills.map(_._2).sum),
-            kills.map(_._1._2))
-        } else {
-          import org.apache.spark.sql.functions.collect_list
-          val totalMatched = matched.count()
-          if (totalMatched > maxUpdatedRows) throw UnsupportedWrite(
-            s"$table: UPDATE matches $totalMatched rows " +
-              s"(> $maxUpdatedRows) — v3 deletion vectors are for " +
-              "small updates")
-          val posGroups = matched.groupBy(fcol("__row_path"))
-            .agg(collect_list(fcol("__row_pos")).as("pos")).collect()
-            .map(m => (m.getString(0), m.getSeq[Long](1).toArray)).toSeq
-          val (man, files, kept) = dvKillManifest(spark, table, base, fs,
-            conf, st, posGroups, newSeq, snapId, attempt, "DV update",
-            v3Shapes.get,
-            (delSpecId, partStructFields, partFieldIds, specJson),
-            maxUpdatedRows)
-          keptPriorV3 = Some(kept)
-          (man, files)
-        }
-      newFiles ++= killFiles
-      // a throw between the kill artifacts and the commit must not
-      // leave the Puffin/manifest orphaned — the commit race cleans
-      // its own litter inside commitSnapshot, everything else cleans
-      // here before rethrowing
-      try {
-        // rewrite side: updated images under the table schema; every
-        // SET expression evaluates against the PRE-update row (SQL
-        // UPDATE semantics) — one select, never its own partial result
-        val rewritten = matched.drop("__row_path", "__row_pos").select(
-          schema.fields.toIndexedSeq.map(f =>
-            set.getOrElse(f.name, fcol(s"`${f.name}`"))
-              .cast(deepNullableType(f.dataType)).as(f.name)): _*)
-        val updIdFields = idFieldsOf(schemaJson)
-        val filesWithTuple = writeIdentityPartitioned(spark, rewritten,
-          base, parts, table, fs, conf,
-          fieldIds = idPathsOf(schemaJson))
-        // registered BEFORE the footer-stats pass: a throw there must
-        // still reclaim the just-written files
-        newFiles ++= filesWithTuple.map(_._1._2)
-        val dataSC = filesWithTuple.map(f =>
-          statsCells(f._1._2, updIdFields, conf))
-        val dataNonEmpty = filesWithTuple.zip(dataSC).filter(_._2._2 > 0)
-        cleanup(fs,
-          filesWithTuple.zip(dataSC).filter(_._2._2 == 0).map(_._1._1._2))
-        val addedRows = dataNonEmpty.map(_._2._2).sum
-        val dataManifest = s"$base/metadata/m-$attempt-data.avro"
-        val priorNext = (meta \ "next-row-id").extractOpt[Long]
-          .getOrElse(0L)
-        writeDataManifest(dataManifest, partStructFields, partFieldIds,
-          dataNonEmpty.map(_._1), dataNonEmpty.map(_._2), newSeq,
-          priorNext, fv, conf,
-          manifestMeta(schemaJson, specJson, delSpecId, "data", fv))
-        commitSnapshot(fs, conf, base, table, snapId, newSeq, ts,
-          "overwrite",
-          Seq(NewManifest(dataManifest, 0, dataNonEmpty.size, addedRows),
-            killMan),
-          attempt, delSpecId, st.carried, st.snapshots,
-          keptPriorV3.getOrElse(st.priorManifests), st.metaVersion,
-          newFiles.result(),
-          fv = fv,
-          rowLineage =
-            if (fv == 3) Some((priorNext, priorNext + addedRows)) else None)
-        snapId
-      } catch {
-        case t: CommitConflict => throw t
-        case t: Throwable =>
-          cleanup(fs, newFiles.result() :+ killMan.path)
-          throw t
+    // ONE evaluation of the condition (see the Delta twin)
+    rowLevelWrite(IcebergTable.readWithRowKey(spark, table).filter(condition),
+      s"${t.base}/metadata", t.conf, t.currentId) { (matched, n, written) =>
+      // kill side — v2: positional files, distributed + sorted,
+      // partition-scoped; v3: Puffin deletion vectors (collected and
+      // capped — the DV position set passes the driver, exactly the
+      // Delta twin's shape). The v3 kill may rewrite the prior delete
+      // manifests: the commit then carries its filtered view.
+      val (kill, prior) = v3Shapes match {
+        case None => (positionalKill(spark, t, matched, written).toSeq, None)
+        case Some(shapes) =>
+          if (n > maxUpdatedRows) throw UnsupportedWrite(
+            s"$table: UPDATE matches $n rows (> $maxUpdatedRows) — v3 " +
+              "deletion vectors are for small updates")
+          val (man, kept) = dvKillManifest(spark, t, killPositions(matched),
+            "DV update", shapes, maxUpdatedRows, written)
+          (Seq(man), Some(kept))
       }
-    } finally fs.delete(new Path(tmpDir), true)
+      // rewrite side: updated images under the table schema
+      commitRowLevel(t, "overwrite",
+        imageManifest(spark, t, images(matched, t.imageSchema, set),
+          written) +: kill, written.toSeq, prior = prior)
+    }
   }
 
   /** Full-table compaction (the RewriteDataFiles maintenance action):
@@ -5118,26 +4722,13 @@ object IcebergWriter {
   def rewriteDataFiles(spark: SparkSession, table: String,
       targetFileBytes: Long = 128L << 20,
       zorderBy: Seq[String] = Nil): Long = {
-    import org.apache.spark.sql.functions.{col => fcol}
-    val base = table.stripSuffix("/")
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    val fs = new Path(base).getFileSystem(conf)
-    val st = loadState(spark, fs, base)
-    val meta = st.meta
-    val fv = (meta \ "format-version").extract[Int]
-    if (fv != 2 && fv != 3) throw UnsupportedWrite(
-      s"$table: compaction targets format-version 2 or 3 (table is $fv)")
-    (meta \ "current-snapshot-id").extractOpt[Long]
-      .filter(_ != -1L).getOrElse(throw UnsupportedWrite(
-        s"$table: no current snapshot — nothing to compact"))
-    val schemaNode = IcebergTable.currentSchemaJson(meta)
-    val schema = IcebergTable.structOf(schemaNode)
-    val (specId, partStructFields, partFieldIds, parts, specFieldsJson) =
-      partitionSpecInfo(table, meta, schema, "compaction")
+    val t = rowTarget(spark, table, "compaction targets", Seq(2, 3),
+      "compact", "compaction")
+    val (schema, parts) = (t.schema, t.parts)
     // output sizing from the CURRENT data files' stats — O(files)
     val dataPaths = IcebergTable.activeDataPaths(spark, table)
     val totalBytes = dataPaths.map { p =>
-      try fs.getFileStatus(new Path(p)).getLen
+      try t.fs.getFileStatus(new Path(p)).getLen
       catch { case _: java.io.FileNotFoundException => 0L }
     }.sum
     val nOut = math.max(1,
@@ -5165,38 +4756,24 @@ object IcebergWriter {
       // write emits ~one file per (task, tuple) instead of one per
       // (task, tuple) x tasks
       else rows.repartition(nOut, parts.map(_.valueCol(schema)): _*)
-    val schemaJson = JsonMethods.compact(JsonMethods.render(schemaNode))
-    val rwIdFields = idFieldsOf(schemaJson)
-    val filesWithTuple = writeIdentityPartitioned(spark, packed, base,
-      parts, table, fs, conf,
-      fieldIds = idPathsOf(schemaJson))
+    val filesWithTuple = writeIdentityPartitioned(spark, packed, t.base,
+      parts, table, t.fs, t.conf, fieldIds = idPathsOf(t.schemaJson))
+    val rwIdFields = idFieldsOf(t.schemaJson)
     val fileSC = filesWithTuple.map(f =>
-      statsCells(f._1._2, rwIdFields, conf))
-    val counts = fileSC.map(_._2)
-    val newSeq = st.lastSeq + 1
-    val snapId = (st.snapshots.flatMap(sn =>
-      (sn \ "snapshot-id").extractOpt[Long]) :+ 0L).max + 1
-    val ts = System.currentTimeMillis()
-    val attempt = java.util.UUID.randomUUID().toString
-    val manifestPath = s"$base/metadata/m-$attempt.avro"
-    val priorNext = (meta \ "next-row-id").extractOpt[Long].getOrElse(0L)
+      statsCells(f._1._2, rwIdFields, t.conf))
+    val manifestPath = s"${t.base}/metadata/m-${t.attempt}.avro"
     // v3 row lineage: the rewritten files take FRESH id ranges — this
     // compaction does not materialize per-row ids, so identity does not
     // survive it (readWithRowIds serves the fresh ranges); the Delta
     // twin's materialized-column preservation is the OPTIMIZE path
-    writeDataManifest(manifestPath, partStructFields, partFieldIds,
-      filesWithTuple, fileSC, newSeq, priorNext, fv, conf,
-      manifestMeta(schemaJson, specFieldsJson, specId, "data", fv))
-    // priorManifests = Nil: the replace snapshot's list names ONLY the
+    writeDataManifest(manifestPath, t.partStructFields, t.partFieldIds,
+      filesWithTuple, fileSC, t.newSeq, t.priorNext, t.fv, t.conf,
+      t.manifestMetaOf("data"))
+    // no prior manifests: the replace snapshot's list names ONLY the
     // compacted manifest — that IS the operation's semantics
-    commitSnapshot(fs, conf, base, table, snapId, newSeq, ts, "replace",
-      Seq(NewManifest(manifestPath, 0, filesWithTuple.size, counts.sum)),
-      attempt, specId, st.carried, st.snapshots,
-      Nil, st.metaVersion, filesWithTuple.map(_._1._2),
-      fv = fv,
-      rowLineage =
-        if (fv == 3) Some((priorNext, priorNext + counts.sum)) else None)
-    snapId
+    commitRowLevel(t, "replace", Seq(NewManifest(manifestPath, 0,
+      filesWithTuple.size, fileSC.map(_._2).sum)),
+      filesWithTuple.map(_._1._2), prior = Some(Nil))
   }
 
   /** Expire all but the newest `keepLast` snapshots: the metadata json

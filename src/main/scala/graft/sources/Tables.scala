@@ -26,20 +26,26 @@ object Tables {
 
   def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
-  // Once-per-JVM schema memo (r19): the driver-generated fixtures are
-  // immutable, but `spark.read.parquet` re-infers the schema (a driver-side
-  // footer read) on EVERY loader call — a few hundred calls per bench pass.
-  // Passing the remembered schema skips inference while reading the data
-  // fresh each time; nanosAsLong-dependent physical types are captured
-  // faithfully because the memoized schema IS the first inference's result.
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+  // Schema memo (r19): `spark.read.parquet` re-infers the schema (a
+  // driver-side footer read) on EVERY loader call — a few hundred calls per
+  // bench pass. Passing the remembered schema skips inference while reading
+  // the data fresh each time; nanosAsLong-dependent physical types are
+  // captured faithfully because the memoized schema IS the first
+  // inference's result. The key carries the path's length and modification
+  // time, so a fixture regenerated at the same path is inferred afresh
+  // instead of being read with its predecessor's schema.
+  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
+    (String, Long, Long), org.apache.spark.sql.types.StructType]()
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     val p = path(dir, name)
-    val schema = schemaCache.computeIfAbsent(p,
-      (_: String) => spark.read.parquet(p).schema)
+    val hp = new org.apache.hadoop.fs.Path(p)
+    val st = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(hp)
+    val schema = schemaCache.computeIfAbsent(
+      (p, st.getLen, st.getModificationTime),
+      (_: (String, Long, Long)) => spark.read.parquet(p).schema)
     val df = spark.read.schema(schema).parquet(p)
     name match {
       case "events" =>

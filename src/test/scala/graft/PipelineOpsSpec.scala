@@ -357,9 +357,13 @@ class DedupSpec extends SparkSpec {
         4L -> 4L, 5L -> 4L, 9L -> 9L))
     } finally {
       // SparkContext has no public unset; clear the shared session's dir so
-      // later suites keep exercising the localCheckpoint path
-      sc.getClass.getMethods.find(_.getName == "checkpointDir_$eq")
-        .foreach(_.invoke(sc, None))
+      // later suites keep exercising the localCheckpoint path. A missing
+      // setter must fail here: every later suite would otherwise run only
+      // the reliable-checkpoint path without saying so
+      val reset = sc.getClass.getMethods.find(_.getName == "checkpointDir_$eq")
+      assert(reset.isDefined, "SparkContext.checkpointDir_= not found")
+      reset.get.invoke(sc, None)
+      assert(sc.getCheckpointDir.isEmpty)
     }
   }
 

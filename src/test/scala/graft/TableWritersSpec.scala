@@ -1530,6 +1530,99 @@ class TableWritersSpec extends SparkSpec {
     assert(eIDup.getMessage.contains("duplicate"), eIDup.getMessage)
   }
 
+  test("row-level DML parity: one script on Delta and Iceberg v2, same " +
+    "rows, same guards") {
+    final case class Fmt(name: String, metaDir: String,
+        append: (org.apache.spark.sql.DataFrame, String) => Long,
+        merge: (String, org.apache.spark.sql.DataFrame, Seq[String]) => Long,
+        update: (String, org.apache.spark.sql.Column,
+          Map[String, org.apache.spark.sql.Column]) => Long,
+        delete: (String, org.apache.spark.sql.Column) => Long,
+        read: String => org.apache.spark.sql.DataFrame)
+    val formats = Seq(
+      Fmt("delta", "_delta_log",
+        (df, t) => DeltaWriter.writeAppend(spark, df, t),
+        (t, src, k) => DeltaWriter.writeMerge(spark, t, src, k),
+        (t, c, set) => DeltaWriter.writeUpdate(spark, t, c, set),
+        (t, c) => DeltaWriter.writeDelete(spark, t, c),
+        t => DeltaTable.read(spark, t)),
+      Fmt("iceberg", "metadata",
+        (df, t) => IcebergWriter.writeAppend(spark, df, t),
+        (t, src, k) => IcebergWriter.writeMerge(spark, t, src, k),
+        (t, c, set) => IcebergWriter.writeUpdate(spark, t, c, set),
+        (t, c) => IcebergWriter.writeDelete(spark, t, c),
+        t => IcebergTable.read(spark, t)))
+    def rows(xs: (Long, String, String)*) = xs.toDF("id", "a", "b")
+    val finals = formats.map { f =>
+      def directed(needle: String)(body: => Any): Unit = {
+        val e = intercept[TableCommit.UnsupportedWrite](body)
+        assert(e.getMessage.contains(needle), s"${f.name}: ${e.getMessage}")
+      }
+      val t = tmp()
+      f.append(rows((1L to 6L).map(i => (i, s"a$i", s"b$i")): _*), t)
+      f.merge(t, rows((2L, "u2", "v2"), (9L, "n9", "m9")), Seq("id"))
+      f.update(t, $"id" <= 3L, Map("a" -> $"b", "b" -> $"a"))
+      val last = f.delete(t, $"id" === 5L)
+      // an empty source is a no-op: the current version / snapshot
+      assert(f.merge(t, rows(), Seq("id")) == last, f.name)
+      directed("duplicate keys")(
+        f.merge(t, rows((2L, "x", "y"), (2L, "z", "w")), Seq("id")))
+      directed("MERGE key 'nope'")(f.merge(t, rows((2L, "x", "y")), Seq("nope")))
+      directed("SET column 'nope'")(
+        f.update(t, lit(true), Map("nope" -> lit("x"))))
+      directed("schema")(
+        f.merge(t, Seq((2L, 1.0)).toDF("id", "score"), Seq("id")))
+      val dupTarget = tmp()
+      f.append(rows((7L, "a", "b"), (7L, "c", "d")), dupTarget)
+      directed("TARGET")(f.merge(dupTarget, rows((7L, "u", "v")), Seq("id")))
+      // none of the writes, failed ones included, leaves its temp
+      // materialization behind
+      Seq(t, dupTarget).foreach { d =>
+        val litter = new java.io.File(s"$d/${f.metaDir}").listFiles()
+          .filter(_.getName.startsWith("_tmp_"))
+        assert(litter.isEmpty, s"${f.name}: ${litter.toSeq}")
+      }
+      f.read(t).orderBy($"id").select($"id", $"a", $"b")
+        .as[(Long, String, String)].collect().toSeq
+    }
+    assert(finals.distinct.size == 1, finals)
+    assert(finals.head == Seq((1L, "b1", "a1"), (2L, "v2", "u2"),
+      (3L, "b3", "a3"), (4L, "a4", "b4"), (6L, "a6", "b6"),
+      (9L, "n9", "m9")))
+
+    // where the formats differ on purpose: Delta's DV kill collects
+    // positions, so its MERGE is capped; Iceberg v2's positional kill
+    // is not
+    val dt = tmp()
+    val it = tmp()
+    DeltaWriter.writeAppend(spark, rows((1L, "a", "b"), (2L, "a", "b")), dt)
+    IcebergWriter.writeAppend(spark, rows((1L, "a", "b"), (2L, "a", "b")), it)
+    val both = rows((1L, "x", "y"), (2L, "x", "y"))
+    val eCap = intercept[TableCommit.UnsupportedWrite](
+      DeltaWriter.writeMerge(spark, dt, both, Seq("id"), maxUpdatedRows = 1L))
+    assert(eCap.getMessage.contains("small matched sets"), eCap.getMessage)
+    IcebergWriter.writeMerge(spark, it, both, Seq("id"))
+    assert(IcebergTable.read(spark, it).filter($"a" === "x").count() == 2)
+
+    // a MERGE that fails after writing its delete files reclaims them:
+    // the source's '' partition value fails the image write, which runs
+    // after the matched row's positional-delete file is placed
+    val pt = tmp()
+    IcebergWriter.writeAppend(spark, rows((1L, "a", "en"), (2L, "b", "en")),
+      pt, partitionBy = Seq("b"))
+    def dataFiles(): Seq[String] = {
+      val it = new Path(s"$pt/data").getFileSystem(
+        spark.sparkContext.hadoopConfiguration)
+        .listFiles(new Path(s"$pt/data"), true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath
+        .toString).filterNot(_.endsWith(".crc")).toSeq.sorted
+    }
+    val beforeFail = dataFiles()
+    intercept[TableCommit.UnsupportedWrite](IcebergWriter.writeMerge(spark,
+      pt, rows((1L, "x", "")), Seq("id")))
+    assert(dataFiles() == beforeFail)
+  }
+
   test("review fixes: SET swap, insert-only merge protocol, target dups, " +
     "constraints, CDF deletes") {
     // SQL UPDATE semantics: every SET evaluates against the PRE-update
@@ -3257,6 +3350,10 @@ class TableWritersSpec extends SparkSpec {
     val eDup = intercept[Exception](IcebergWriter.writeMergeByKey(spark, t,
       Seq((5L, "a"), (5L, "b")).toDF("id", "text"), Seq("id")))
     assert(eDup.getMessage.contains("duplicate"), eDup.getMessage)
+    // the key-only merge has no target row to name (writeMerge's message
+    // says "one target row")
+    assert(eDup.getMessage.contains("one key cannot take two images"),
+      eDup.getMessage)
     // v3 twin: eq deletes are first-class in v3, lineage advances by
     // the INSERTED rows only at the metadata level
     val t3 = tmp()

@@ -50,6 +50,20 @@ class TablesSpec extends SparkSpec {
       Seq(1700000000123456789L, 1700000001123456789L))
   }
 
+  test("schema memo: a fixture regenerated at the same path is re-inferred") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("tables-spec").toString
+    val p = Tables.path(dir, "region")
+    Seq((0L, "AFRICA")).toDF("r_regionkey", "r_name")
+      .coalesce(1).write.parquet(p)
+    assert(Tables.region(spark, dir).columns.toSeq ===
+      Seq("r_regionkey", "r_name"))
+    Seq((0L, "AFRICA", "lush")).toDF("r_regionkey", "r_name", "r_comment")
+      .coalesce(1).write.mode("overwrite").parquet(p)
+    assert(Tables.region(spark, dir).select("r_comment").as[String]
+      .collect().toSeq === Seq("lush"))
+  }
+
   test("events loader: directed error on an unexpected ts physical type") {
     import spark.implicits._
     val dir = writeEvents(Seq((1L, "2023-11-14T22:13:20Z")).toDF("id", "ts"))
