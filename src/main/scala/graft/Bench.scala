@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Driver-run benchmark: every SparkEntry query timed at the target SF,
   * one JSON line on stdout.
   *
@@ -39,13 +39,7 @@ object Bench {
     // per-query swings up to 4x; a third interleaved pass collapses that noise
     // for ~60s of extra wall time.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftSession.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt, cpus.toInt)
     // FileStreamSink logs a WARN + full stack trace while probing freshly
     // written fixture dirs for stream metadata (CdxIndex gz fixtures); the
     // multi-line blob can land mid-capture in the driver's bounded stdout
@@ -54,45 +48,7 @@ object Bench {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.streaming",
       org.apache.logging.log4j.Level.ERROR)
-    // Warm the JVM on the smoke scale factor: classloading, whole-stage
-    // codegen compilation (janino caches by generated source, which is
-    // data-independent), shuffle machinery. Timed runs then measure the
-    // queries, not JVM startup.
-    val warmDir = "/root/testdata/sf0.001"
-    SparkEntry.queries.foreach { case (name, fn) =>
-      // same per-query cache isolation as the timed loop: without it the
-      // warm-up pass persists q46's ranked-bucket frame and q69's
-      // identically-canonicalized persist logs a CacheManager WARN into
-      // the driver's bounded stdout tail
-      spark.sharedState.cacheManager.clearCache()
-      try fn(spark, warmDir).count() catch {
-        case t: Throwable =>
-          // visible but non-fatal: the timed loop below is where a broken
-          // query must surface as an error marker, not a near-zero "win"
-          System.err.println(s"BENCH WARMUP ERROR $name: ${firstLine(t)}")
-      }
-    }
-    // A rep either yields seconds or the failure's first line. A query that
-    // throws must NOT record its (near-zero) wall time as a timing — that
-    // would let a broken query silently IMPROVE the bench total.
-    def timeOnce(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Either[String, Double] = {
-      // drop persisted frames from previous runs: every rep measures
-      // cold-cache, and late-alphabet queries aren't taxed by accumulated
-      // cache memory pressure from the ones before them
-      spark.sharedState.cacheManager.clearCache()
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
-      catch { case t: Throwable => Left(firstLine(t)) }
-    }
-    val inventory = SparkEntry.queries.toSeq.sortBy(_._1)
-    // rep i of every query runs before rep i+1 of any query — see Scaladoc
-    val passes = (1 to reps).map { _ =>
-      inventory.map { case (name, fn) => name -> timeOnce(name, fn) }.toMap
-    }
-    val detail = inventory.map { case (name, _) =>
-      name -> passes.map(_(name))
-    }
+    val detail = passes(spark, SparkEntry.queries.toSeq.sortBy(_._1), sfDir, reps)(r => r)
     val s = summarize(detail, sfDir, reps,
       java.nio.file.Paths.get(detailPath).getFileName.toString)
     s.errors.foreach { case (name, e) => System.err.println(s"BENCH ERROR $name: $e") }
@@ -106,6 +62,49 @@ object Bench {
         "BENCH_HEADLINE.json")), s.stdoutJson + "\n")
     println(s.stdoutJson)
     spark.stop()
+  }
+
+  type Query = (SparkSession, String) => DataFrame
+
+  /** The bench's measurement loop. Warm the JVM on the smoke scale factor
+    * (classloading, whole-stage codegen compilation — janino caches by
+    * generated source, which is data-independent — and shuffle machinery),
+    * so timed runs measure the queries, not JVM startup. Then run `reps`
+    * interleaved passes over `inventory` at `sfDir`: rep i of every query
+    * runs before rep i+1 of any query (see the Scaladoc above). Each timed
+    * rep, a `count()` yielding seconds or the failure's first line, runs
+    * inside `around`, which may read counters on either side of it. Returns
+    * every query's reps in order. */
+  private[graft] def passes[A](spark: SparkSession, inventory: Seq[(String, Query)],
+      sfDir: String, reps: Int)(around: (=> Either[String, Double]) => A): Seq[(String, Seq[A])] = {
+    inventory.foreach { case (name, fn) =>
+      // same per-query cache isolation as the timed loop: without it the
+      // warm-up pass persists q46's ranked-bucket frame and q69's
+      // identically-canonicalized persist logs a CacheManager WARN into
+      // the driver's bounded stdout tail
+      spark.sharedState.cacheManager.clearCache()
+      try fn(spark, "/root/testdata/sf0.001").count() catch {
+        case t: Throwable =>
+          // visible but non-fatal: the timed loop below is where a broken
+          // query must surface as an error marker, not a near-zero "win"
+          System.err.println(s"BENCH WARMUP ERROR $name: ${firstLine(t)}")
+      }
+    }
+    // A query that throws must NOT record its (near-zero) wall time as a
+    // timing — that would let a broken query silently IMPROVE the bench total.
+    def timeOnce(fn: Query): Either[String, Double] = {
+      // drop persisted frames from previous runs: every rep measures
+      // cold-cache, and late-alphabet queries aren't taxed by accumulated
+      // cache memory pressure from the ones before them
+      spark.sharedState.cacheManager.clearCache()
+      val t0 = System.nanoTime()
+      try { fn(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
+      catch { case t: Throwable => Left(firstLine(t)) }
+    }
+    val byPass = (1 to reps).map { _ =>
+      inventory.map { case (name, fn) => name -> around(timeOnce(fn)) }.toMap
+    }
+    inventory.map { case (name, _) => name -> byPass.map(_(name)) }
   }
 
   private[graft] final case class Summary(

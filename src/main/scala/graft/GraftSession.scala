@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Central SparkSession factory so Verify / Bench / tests share one config.
+/** The one SparkSession factory: `Bench`, `Verify`, the dev tools, the test
+  * suites and `perfbench` all build their session here, so every entry point
+  * runs with [[graft.plans.GraftExtensions]] and the same confs.
   *
   * Settings that matter for oracle parity and local-mode throughput:
   *  - UTC session timezone (naive timestamps are UTC in the reference:
@@ -14,31 +16,36 @@ import org.apache.spark.sql.SparkSession
   *    post-shuffle partitions; at cluster scale it also handles skew joins).
   */
 object GraftSession {
+  /** Runtime confs: set at build time, and re-set by [[tune]]. */
+  private val runtimeConfs: Map[String, String] = Map(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
+
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .withExtensions(new graft.plans.GraftExtensions)
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      .config(runtimeConfs)
       .config("spark.ui.enabled", "false")
 
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
-    val s = builder(s"local[$cores]", math.max(cores, 4)).getOrCreate()
+  /** A `local[cores]` session logging at WARN. */
+  def local(cores: Int, shufflePartitions: Int): SparkSession = {
+    val s = builder(s"local[$cores]", shufflePartitions).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
 
-  /** Apply the graft runtime confs to an externally built session (the
-    * driver's Verify/Bench sessions call this so contract files stay thin). */
+  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
+    local(cores, math.max(cores, 4))
+
+  /** Apply the graft runtime confs to an externally built session
+    * (`SparkEntry.queries` calls this on every query). */
   def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    runtimeConfs.foreach { case (k, v) => spark.conf.set(k, v) }
     spark
   }
 }

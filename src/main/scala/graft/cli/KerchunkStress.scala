@@ -1,6 +1,5 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sources.hdf5.{Hdf5Writer => HW}
@@ -23,10 +22,7 @@ object KerchunkStress {
   def main(args: Array[String]): Unit = {
     val work = if (args.length > 0) args(0) else "/tmp/graft-kerchunk-stress"
     val days = if (args.length > 1) args(1).toInt else 365
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .appName("kerchunk-stress").getOrCreate()
+    val spark = graft.GraftSession.local(32)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -60,7 +60,7 @@ object ScaleStress {
     val factors =
       if (args.length > 2) args(2).split(",").map(_.toInt).toSeq else Seq(4, 16)
     val reps = sys.env.getOrElse("SPARK_GRAFT_STRESS_REPS", "2").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // args(3): comma-separated query-name override (documents/embeddings-
     // derived queries only — the replica scales just those two tables)
     val queries =
@@ -69,13 +69,7 @@ object ScaleStress {
         "q31_minhash_near_dups", "q46_embedding_near_dups", "q69_semdedup",
         "q77_dedup_clusters", "q86_dup_spans", "q88_cut_spans",
         "q90_canonical_docs", "q112_fuzzy_join_corpus")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.GraftSession.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(cpus, cpus)
 
     factors.foreach { k =>
       println(s"[stress] building ${k}x replica under $workRoot/x$k")

@@ -1,6 +1,5 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{EqualTo, GreaterThanOrEqual, LessThan}
 
@@ -21,22 +20,12 @@ import graft.sources.{ColumnStats, DeltaTable, DeltaWriter, IcebergTable,
   * Usage: runMain graft.cli.SkippingStress [workRoot] [commits] [rowsPerCommit]
   */
 object SkippingStress {
-  private def time[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val a = f
-    (a, (System.nanoTime() - t0) / 1e9)
-  }
-
   def main(args: Array[String]): Unit = {
+    import Harness.time
     val root = if (args.length > 0) args(0) else "/tmp/graft-skipping"
     val commits = if (args.length > 1) args(1).toInt else 16
     val rows = if (args.length > 2) args(2).toInt else 25000
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .appName("skipping-stress").getOrCreate()
-    graft.GraftSession.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(32)
     import spark.implicits._
 
     val n = commits.toLong * rows

@@ -97,7 +97,7 @@ object ScaleToolkit {
     else df.persist()
 
   /** Count Exchange (shuffle) operators in a frame's executed plan — the
-    * evidence hook the specs and PlanAudit use. */
+    * evidence hook the specs use. */
   def shuffleCount(df: DataFrame): Int =
     df.queryExecution.executedPlan.toString.linesIterator
       .count(_.trim.startsWith("Exchange"))

@@ -15,8 +15,8 @@ import graft.functions.{DotProduct, HaversineDistance, SquaredDistance}
   *  - `haversine_km`: the custom codegen scalar [[HaversineDistance]]
   *    available from SQL.
   *
-  * Wire-up: `SparkSession.builder().withExtensions(new GraftExtensions)` —
-  * GraftSession.local does this; externally built sessions can use
+  * Wire-up: `GraftSession.builder` registers them for every session it
+  * builds; externally built sessions can use
   * `--conf spark.sql.extensions=graft.plans.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

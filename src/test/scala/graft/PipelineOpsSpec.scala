@@ -827,7 +827,7 @@ class SamplingSpec extends SparkSpec {
     // iterative merge training has no DuckDB oracle (driver records
     // rows-only), so pin the subword-frequency result like q62. Regenerate
     // after an INTENDED change with:
-    //   sbt 'runMain graft.cli.QueryDump /root/testdata/sf0.001 \
+    //   sbt 'runMain graft.cli.Harness dump /root/testdata/sf0.001 \
     //     q92_bpe_encode src/test/resources/golden/q92_bpe_encode_sf0001.csv'
     val got = SparkEntry.queries("q92_bpe_encode")(spark, "/root/testdata/sf0.001")
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
@@ -1253,7 +1253,7 @@ class MultimodalSpec extends SparkSpec {
     // q62 has no DuckDB oracle (the driver records rows-only), so decoder
     // or banding regressions could hide behind rows>0. Pin the full result
     // against a committed golden. Regenerate after an INTENDED change with:
-    //   sbt 'runMain graft.cli.QueryDump /root/testdata/sf0.001 \
+    //   sbt 'runMain graft.cli.Harness dump /root/testdata/sf0.001 \
     //     q62_image_near_dups src/test/resources/golden/q62_image_near_dups_sf0001.csv'
     val got = SparkEntry.queries("q62_image_near_dups")(spark, "/root/testdata/sf0.001")
       .collect().map(r => (r.getLong(0), r.getLong(1),

@@ -3,12 +3,12 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FormattedMode
 
-/** The PlanAudit plan-shape checks as a regression suite: the seven audits
-  * the 100 TB design depends on (pushdown, pruning, broadcast, top-k,
-  * partial aggregation) plus the CartesianProduct lint over the ENTIRE query
+/** The plan-shape checks as a regression suite: the seven audits the
+  * 100 TB design depends on (pushdown, pruning, broadcast, top-k, partial
+  * aggregation) plus the CartesianProduct lint over the ENTIRE query
   * inventory, so a regressed join strategy can't ship silently between
-  * rounds. `PlanAudit.main` remains the verbose dev tool; this spec is the
-  * gate. Runs at sf0.001 and only inspects plans — nothing executes.
+  * rounds. `graft.cli.Harness explain` prints the full plans; this spec is
+  * the gate. Runs at sf0.001 and only inspects plans — nothing executes.
   */
 class PlanAuditSpec extends SparkSpec {
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sources.{Npy, Safetensors}
@@ -16,13 +15,7 @@ object TensorThroughputHarness {
     val rows = if (args.length > 0) args(0).toInt else 2000000
     val cols = if (args.length > 1) args(1).toInt else 16
 
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("tensor-throughput")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32)
 
     val dir = java.nio.file.Files.createTempDirectory("tensorbench").toString
     val mb = rows.toLong * cols * 4 / 1e6

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.HtmlText
@@ -21,14 +20,8 @@ object WarcThroughputHarness {
     // crawl ratio) instead of the repetitive lorem block (~36x)
     val varied = args.length > 2 && args(2) == "varied"
 
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("warc-throughput")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(32)
     import spark.implicits._
-    spark.sparkContext.setLogLevel("WARN")
 
     val dir = java.nio.file.Files.createTempDirectory("warcbench").toString
     // ~20 KB of HTML per page -> per-shard raw size ~= pages * 20 KB
