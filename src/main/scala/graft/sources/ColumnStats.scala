@@ -7,7 +7,6 @@ import scala.jdk.CollectionConverters._
 import scala.language.existentials // parquet's raw Statistics[_] footer type
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources._
@@ -69,6 +68,10 @@ object ColumnStats {
       case _ => false
     })
 
+  /** [[statColumns]] by name. */
+  private[sources] def statTypes(schema: StructType): Map[String, DataType] =
+    statColumns(schema).map(f => f.name -> f.dataType).toMap
+
   // ------------------------------------------------- footer collection
 
   /** Collect (numRecords, per-column min/max/nullCount) from ONE parquet
@@ -78,66 +81,55 @@ object ColumnStats {
     * nothing for that piece. */
   def footerStats(path: String, schema: StructType,
       conf: Configuration): FileStats = {
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new Path(path), conf))
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala.toSeq
-      val numRecords = blocks.map(_.getRowCount).sum
-      val wanted = statColumns(schema).map(f => f.name -> f.dataType).toMap
-      // per column: collected chunk bounds + null sum; a chunk WITH
-      // values but undecodable bounds poisons the file's bounds (they
-      // would understate), an all-null chunk contributes none and
-      // poisons nothing
-      final case class Acc(mins: List[Any], maxs: List[Any],
-        nulls: Option[Long], boundsOk: Boolean)
-      val acc = scala.collection.mutable.Map.empty[String, Acc]
-      blocks.foreach { b =>
-        b.getColumns.asScala.foreach { c =>
-          val pathParts = c.getPath.toArray
-          if (pathParts.length == 1 && wanted.contains(pathParts(0))) {
-            val name = pathParts(0)
-            val dt = wanted(name)
-            val st = c.getStatistics
-            val hasStats = st != null && !st.isEmpty
-            val hasValues = hasStats && st.hasNonNullValue
-            val (mn, mx) =
-              if (!hasValues) (None, None)
-              else (footerValue(st.genericGetMin.asInstanceOf[AnyRef], c, dt),
-                footerValue(st.genericGetMax.asInstanceOf[AnyRef], c, dt))
-            val nulls: Option[Long] =
-              if (!hasStats || !st.isNumNullsSet || st.getNumNulls < 0) None
-              else Some(st.getNumNulls)
-            val ok = hasStats && (!hasValues || (mn.isDefined && mx.isDefined))
-            val p = acc.getOrElse(name, Acc(Nil, Nil, Some(0L), true))
-            acc(name) = Acc(
-              mn.fold(p.mins)(_ :: p.mins), mx.fold(p.maxs)(_ :: p.maxs),
-              for (a <- p.nulls; b2 <- nulls) yield a + b2,
-              p.boundsOk && ok)
-          }
+    val blocks = TableScan.footer(path, conf).getBlocks.asScala.toSeq
+    val numRecords = blocks.map(_.getRowCount).sum
+    val wanted = statTypes(schema)
+    // per column: collected chunk bounds + null sum; a chunk WITH
+    // values but undecodable bounds poisons the file's bounds (they
+    // would understate), an all-null chunk contributes none and
+    // poisons nothing
+    final case class Acc(mins: List[Any], maxs: List[Any],
+      nulls: Option[Long], boundsOk: Boolean)
+    val acc = scala.collection.mutable.Map.empty[String, Acc]
+    blocks.foreach { b =>
+      b.getColumns.asScala.foreach { c =>
+        val pathParts = c.getPath.toArray
+        if (pathParts.length == 1 && wanted.contains(pathParts(0))) {
+          val name = pathParts(0)
+          val dt = wanted(name)
+          val st = c.getStatistics
+          val hasStats = st != null && !st.isEmpty
+          val hasValues = hasStats && st.hasNonNullValue
+          val (mn, mx) =
+            if (!hasValues) (None, None)
+            else (footerValue(st.genericGetMin.asInstanceOf[AnyRef], c, dt),
+              footerValue(st.genericGetMax.asInstanceOf[AnyRef], c, dt))
+          val nulls: Option[Long] =
+            if (!hasStats || !st.isNumNullsSet || st.getNumNulls < 0) None
+            else Some(st.getNumNulls)
+          val ok = hasStats && (!hasValues || (mn.isDefined && mx.isDefined))
+          val p = acc.getOrElse(name, Acc(Nil, Nil, Some(0L), true))
+          acc(name) = Acc(
+            mn.fold(p.mins)(_ :: p.mins), mx.fold(p.maxs)(_ :: p.maxs),
+            for (a <- p.nulls; b2 <- nulls) yield a + b2,
+            p.boundsOk && ok)
         }
       }
-      val cols = acc.toMap.flatMap { case (name, a) =>
-        val dt = wanted(name)
-        val mn = if (a.boundsOk && a.mins.nonEmpty)
-          Some(a.mins.reduce((x, y) => if (cmp(x, y, dt) <= 0) x else y))
-        else None
-        val mx = if (a.boundsOk && a.maxs.nonEmpty)
-          Some(a.maxs.reduce((x, y) => if (cmp(x, y, dt) >= 0) x else y))
-        else None
-        val c = ColStats(mn, mx, a.nulls)
-        if (c.min.isEmpty && c.max.isEmpty && c.nullCount.isEmpty) None
-        else Some(name -> c)
-      }
-      FileStats(Some(numRecords), cols)
-    } finally reader.close()
+    }
+    val cols = acc.toMap.flatMap { case (name, a) =>
+      val dt = wanted(name)
+      val mn = if (a.boundsOk && a.mins.nonEmpty)
+        Some(a.mins.reduce((x, y) => if (cmp(x, y, dt) <= 0) x else y))
+      else None
+      val mx = if (a.boundsOk && a.maxs.nonEmpty)
+        Some(a.maxs.reduce((x, y) => if (cmp(x, y, dt) >= 0) x else y))
+      else None
+      val c = ColStats(mn, mx, a.nulls)
+      if (c.min.isEmpty && c.max.isEmpty && c.nullCount.isEmpty) None
+      else Some(name -> c)
+    }
+    FileStats(Some(numRecords), cols)
   }
-
-  /** One [[footerStats]] per file — O(files) footer reads, the commit-
-    * time stat collection every table-format writer performs. */
-  def footerStatsAll(paths: Seq[String], schema: StructType,
-      conf: Configuration): Seq[FileStats] =
-    paths.map(footerStats(_, schema, conf))
 
   /** Parquet footer generic value → normalized domain, by the TABLE
     * type. Timestamp chunks honor the footer's own MILLIS/MICROS

@@ -4,7 +4,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.{col, lit, struct, transform, transform_values, when}
+import org.apache.spark.sql.functions.{coalesce, col, lit, struct, transform, transform_values, when}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -493,11 +493,7 @@ object DeltaTable {
       filters: Seq[org.apache.spark.sql.sources.Filter],
       versionAsOf: Option[Long] = None): DataFrame = {
     val snap = replay(spark, table, versionAsOf)._1
-    if (filters.isEmpty) return assemble(spark, table, snap)
-    val residual = filters.map(ColumnStats.filterColumn).reduce(_ && _)
     val full = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
-    val types = ColumnStats.statColumns(full)
-      .map(f => f.name -> f.dataType).toMap
     val partTypes = snap.partitionColumns
       .flatMap(c => full.fields.find(_.name == c)).map(f => f.name -> f)
     // column-mapped tables key their stats by PHYSICAL name — parse
@@ -509,7 +505,7 @@ object DeltaTable {
       else StructType(full.fields.map(f =>
         StructField(physFieldName(f), f.dataType)))
     val physToLogical = full.fields.map(f => physFieldName(f) -> f.name).toMap
-    val kept = snap.files.filter { f =>
+    def stats(f: AddFile): ColumnStats.FileStats = {
       val rawParsed = f.stats
         .map(ColumnStats.parseDeltaStats(_, statsSchema))
         .getOrElse(ColumnStats.NoStats)
@@ -535,10 +531,10 @@ object DeltaTable {
           Some(Long.MaxValue)
         else None
       }
-      val st = ColumnStats.FileStats(nr, parsed.cols ++ pvCols)
-      filters.forall(ColumnStats.mayMatch(_, st, types))
+      ColumnStats.FileStats(nr, parsed.cols ++ pvCols)
     }
-    assemble(spark, table, snap.copy(files = kept)).filter(residual)
+    TableScan.readWhere(filters, ColumnStats.statTypes(full), snap.files)(
+      stats)(kept => assemble(spark, table, snap.copy(files = kept)))
   }
 
   // ------------------------------------------------- column mapping (name)
@@ -598,15 +594,6 @@ object DeltaTable {
         .putLong("parquet.field.id",
           nf.metadata.getLong("delta.columnMapping.id")).build()
     StructField(physFieldName(f), walk(f.dataType), f.nullable, idMeta(f))
-  }
-
-  /** One file's parquet message type — an O(KB) footer read. */
-  private def footerSchema(path: String, conf: Configuration)
-      : org.apache.parquet.schema.GroupType = {
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new Path(path), conf))
-    try reader.getFooter.getFileMetaData.getSchema finally reader.close()
   }
 
   /** The id-mode read schema for ONE file: `expected` (the physical
@@ -741,77 +728,58 @@ object DeltaTable {
     // add.path is percent-encoded whether relative OR absolute
     // (PROTOCOL.md); strict RFC 3986 decoding, '+' untouched
     def resolve(rel: String): String = resolveAdd(base, rel)
-    val outSchema = StructType(full.fields ++ extraCols ++
-      (if (!keepRowKey) Nil else Seq(
-        StructField("__row_path", org.apache.spark.sql.types.StringType),
-        StructField("__row_pos", org.apache.spark.sql.types.LongType))))
-    if (snap.files.isEmpty) {
-      // an empty snapshot still has the table's schema
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema)
-    }
+    val outSchema = StructType(full.fields ++ extraCols)
+    if (snap.files.isEmpty)
+      return TableScan.empty(spark, TableScan.keyed(outSchema, keepRowKey))
     // deletion vectors decode on executors: descriptors (driver metadata,
     // one row per DV'd file) flat-map into (file, deleted row index) rows
     val dvFiles = snap.files.filter(_.dv.isDefined)
     val deletes: Option[DataFrame] = if (dvFiles.isEmpty) None else {
       val tconf = TaskConf(
         new Configuration(spark.sparkContext.hadoopConfiguration))
-      import spark.implicits._
       val descs = dvFiles.map { f =>
         val d = f.dv.get
         (PathUris.canon(resolve(f.path)), d.storageType, d.pathOrInlineDv,
           d.offset.getOrElse(-1), d.sizeInBytes, d.cardinality)
       }
-      Some(spark.createDataset(descs)
-        .repartition(math.min(descs.size, 32))
-        .flatMap { case (dataPath, st, pod, off, size, card) =>
+      Some(TableScan.killSet(spark, descs) {
+        case (dataPath, st, pod, off, size, card) =>
           DeletionVector.positions(
             DeletionVector.Descriptor(st, pod,
               if (off < 0) None else Some(off), size, card),
             base, tconf).iterator.map(pos => (dataPath, pos))
-        }.toDF("__del_path", "__del_pos"))
+      })
     }
     // one parquet relation per distinct partition tuple, partition values
     // injected as typed literals; id mode further
     // splits by RESOLVED read schema (files written by different engines
-    // may spell the same field id with different column names)
-    val groups: Seq[(Map[String, String], Seq[AddFile], StructType)] =
+    // may spell the same field id with different column names). Each
+    // group anti-joins the kill set when one of its files carries a DV.
+    def group(pv: Map[String, String], fs: Seq[AddFile], schema: StructType) =
+      TableScan.ReadGroup(pv, fs.map(f => resolve(f.path)),
+        StructType(schema.fields ++ extraCols),
+        if (fs.exists(_.dv.isDefined)) deletes else None)
+    val groups =
       if (!idMode)
         snap.files.groupBy(_.partitionValues).toSeq
-          .map { case (pv, fs) => (pv, fs, readSchema) }
+          .map { case (pv, fs) => group(pv, fs, readSchema) }
       else {
         val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
         snap.files
-          .map(f => (f, resolveByFieldId(readSchema,
-            footerSchema(resolve(f.path), conf), f.path)))
+          .map(f => (f, resolveByFieldId(readSchema, TableScan.footer(
+            resolve(f.path), conf).getFileMetaData.getSchema, f.path)))
           .groupBy(x => (x._1.partitionValues, x._2.json)).toSeq
           .map { case (_, xs) =>
-            (xs.head._1.partitionValues, xs.map(_._1), xs.head._2) }
+            group(xs.head._1.partitionValues, xs.map(_._1), xs.head._2) }
       }
-    val parts = groups.map { case (pv, fs, groupSchema) =>
-      var df = spark.read
-        .schema(StructType(groupSchema.fields ++ extraCols))
-        .parquet(fs.map(f => resolve(f.path)): _*)
-      if (keepRowKey || fs.exists(_.dv.isDefined))
-        df = df
-          .withColumn("__row_path",
-            PathUris.canonMetaCol(col("_metadata.file_path")))
-          .withColumn("__row_pos", col("_metadata.row_index"))
-      if (fs.exists(_.dv.isDefined)) {
-        val dels = deletes.get
-        val joined = df.join(dels,
-          df("__row_path") === dels("__del_path") &&
-            df("__row_pos") === dels("__del_pos"), "left_anti")
-        df = if (keepRowKey) joined
-          else joined.drop("__row_path", "__row_pos")
-      }
+    TableScan.scanGroups(spark, groups, keepRowKey) { (g, scanned) =>
+      var df = scanned
       if (mapped) {
         // rebuild logical names (extra physical columns and metadata
         // key columns pass through — they carry no mapping)
         val keyCols = extraCols.map(f => col(s"`${f.name}`")) ++
-          (if (keepRowKey) Seq(col("__row_path"), col("__row_pos"))
-          else Nil)
-        df = df.select(groupSchema.fields.zip(dataSchema.fields)
+          (if (keepRowKey) TableScan.rowKey else Nil)
+        df = df.select(g.schema.fields.zip(dataSchema.fields)
           .toIndexedSeq.map { case (pf, lf) =>
             toLogical(col(s"`${pf.name}`"), pf.dataType, lf.dataType)
               .as(lf.name)
@@ -821,16 +789,16 @@ object DeltaTable {
         val t = full(c).dataType
         // partitionValues are keyed by PHYSICAL name under column mapping
         val key = if (mapped) physFieldName(full(c)) else c
-        val raw = pv.get(key).orElse(pv.get(c))
+        val raw = g.key.get(key).orElse(g.key.get(c))
           .filterNot(_ == "__HIVE_DEFAULT_PARTITION__").orNull
         df = df.withColumn(c, lit(raw).cast(t))
       }
-      df.select(outSchema.fieldNames.toIndexedSeq.map(col): _*)
+      df.select(TableScan.keyed(outSchema, keepRowKey).fieldNames
+        .toIndexedSeq.map(col): _*)
     }
-    parts.reduce(_ unionByName _)
   }
 
-  /** The snapshot with each row's `(__row_path, __row_pos)` identity —
+  /** The snapshot with each row's [[TableScan]] row key —
     * what [[DeltaWriter.writeDelete]] filters to locate the rows a
     * deletion vector must cover. Existing DVs are already applied. */
   private[graft] def readWithRowKey(spark: SparkSession,
@@ -872,40 +840,47 @@ object DeltaTable {
     * enablement without backfill — serving ids would fabricate
     * identity). */
   def readWithRowIds(spark: SparkSession, table: String): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce}
-    import spark.implicits._
-    val base = table.stripSuffix("/")
     val snap = replay(spark, table, None)._1
     if (!snap.protocol.writerFeatures.contains("rowTracking"))
       throw UnsupportedDelta(
         s"$table: the table does not declare the rowTracking feature — " +
           "row ids do not exist")
-    val mat = materializedRowIdCols(table, snap.configuration)
-    val extras = mat.toSeq.flatMap { case (r, c) => Seq(
+    withRowIds(spark, table, snap,
+      materializedRowIdCols(table, snap.configuration),
+      ("_row_id", "_row_commit_version"),
+      "rowTracking was enabled without a backfill")
+  }
+
+  /** The row-tracking read both [[readWithRowIds]] and the compaction
+    * input share: `out` = (row id, commit version) per row, each the
+    * `materialized` column when present, else the file's baseRowId + the
+    * row's position and its defaultRowCommitVersion. A file missing
+    * either field is directed, with `why` as the reason. */
+  private def withRowIds(spark: SparkSession, table: String, snap: Snapshot,
+      materialized: Option[(String, String)], out: (String, String),
+      why: String): DataFrame = {
+    val base = table.stripSuffix("/")
+    val extras = materialized.toSeq.flatMap { case (r, c) => Seq(
       StructField(r, org.apache.spark.sql.types.LongType),
       StructField(c, org.apache.spark.sql.types.LongType)) }
     val dim = snap.files.map { f =>
       val b = f.baseRowId.getOrElse(throw UnsupportedDelta(
-        s"$table: active file ${f.path} carries no baseRowId — " +
-          "rowTracking was enabled without a backfill"))
+        s"$table: active file ${f.path} carries no baseRowId — $why"))
       val v = f.defaultRowCommitVersion.getOrElse(throw UnsupportedDelta(
         s"$table: active file ${f.path} carries no " +
           "defaultRowCommitVersion"))
       (PathUris.canon(resolveAdd(base, f.path)), b, v)
     }
-    val d = dim.toDF("__rid_path", "__rid_base", "__rid_ver")
-    val defaultRid = col("__rid_base") + col("__row_pos")
-    val (rid, rcv) = mat match {
-      case Some((r, c)) => (coalesce(col(s"`$r`"), defaultRid),
-        coalesce(col(s"`$c`"), col("__rid_ver")))
-      case None => (defaultRid, col("__rid_ver"))
+    TableScan.withLineage(
+        assemble(spark, table, snap, keepRowKey = true, extraCols = extras),
+        dim, extras.map(_.name).filterNot(Set(out._1, out._2))) {
+      (defaultRid, version) => materialized match {
+        case Some((r, c)) => Seq(
+          out._1 -> coalesce(col(s"`$r`"), defaultRid),
+          out._2 -> coalesce(col(s"`$c`"), version))
+        case None => Seq(out._1 -> defaultRid, out._2 -> version)
+      }
     }
-    assemble(spark, table, snap, keepRowKey = true, extraCols = extras)
-      .join(broadcast(d), col("__row_path") === col("__rid_path"), "left")
-      .withColumn("_row_id", rid)
-      .withColumn("_row_commit_version", rcv)
-      .drop(extras.map(_.name) ++ Seq("__rid_path", "__rid_base",
-        "__rid_ver", "__row_path", "__row_pos"): _*)
   }
 
   /** The table's SetTransaction watermarks: appId → newest `txn`
@@ -996,46 +971,25 @@ object DeltaTable {
     * fields. */
   private[graft] def readFilesSubsetWithRowIds(spark: SparkSession,
       table: String, canonPaths: Set[String], ridCol: String,
-      rcvCol: String): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce}
-    import spark.implicits._
-    val base = table.stripSuffix("/")
-    val snap = replay(spark, table, None)._1
-    val sel = snap.files.filter(f =>
-      canonPaths(PathUris.canon(resolveAdd(base, f.path))))
-    val extras = Seq(
-      StructField(ridCol, org.apache.spark.sql.types.LongType),
-      StructField(rcvCol, org.apache.spark.sql.types.LongType))
-    val dim = sel.map { f =>
-      val b = f.baseRowId.getOrElse(throw UnsupportedDelta(
-        s"$table: active file ${f.path} carries no baseRowId — its " +
-          "rows' identity cannot survive a rewrite"))
-      val v = f.defaultRowCommitVersion.getOrElse(throw UnsupportedDelta(
-        s"$table: active file ${f.path} carries no " +
-          "defaultRowCommitVersion"))
-      (PathUris.canon(resolveAdd(base, f.path)), b, v)
-    }
-    val d = dim.toDF("__rid_path", "__rid_base", "__rid_ver")
-    assemble(spark, table, snap.copy(files = sel), keepRowKey = true,
-        extraCols = extras)
-      .join(broadcast(d), col("__row_path") === col("__rid_path"), "left")
-      .withColumn(ridCol,
-        coalesce(col(s"`$ridCol`"), col("__rid_base") + col("__row_pos")))
-      .withColumn(rcvCol, coalesce(col(s"`$rcvCol`"), col("__rid_ver")))
-      .drop("__rid_path", "__rid_base", "__rid_ver",
-        "__row_path", "__row_pos")
-  }
+      rcvCol: String): DataFrame =
+    withRowIds(spark, table, filesSubset(spark, table, canonPaths),
+      Some((ridCol, rcvCol)), (ridCol, rcvCol),
+      "its rows' identity cannot survive a rewrite")
 
   /** The live rows of ONLY the named data files (canonical absolute
     * paths), existing DVs applied — the copy-on-write rewrite's input:
     * data IO scales with the TOUCHED files, never the table. */
   private[graft] def readFilesSubset(spark: SparkSession, table: String,
-      canonPaths: Set[String]): DataFrame = {
+      canonPaths: Set[String]): DataFrame =
+    assemble(spark, table, filesSubset(spark, table, canonPaths))
+
+  /** The latest snapshot narrowed to the named data files. */
+  private def filesSubset(spark: SparkSession, table: String,
+      canonPaths: Set[String]): Snapshot = {
     val base = table.stripSuffix("/")
     val snap = replay(spark, table, None)._1
-    val sel = snap.files.filter(f =>
-      canonPaths(PathUris.canon(resolveAdd(base, f.path))))
-    assemble(spark, table, snap.copy(files = sel))
+    snap.copy(files = snap.files.filter(f =>
+      canonPaths(PathUris.canon(resolveAdd(base, f.path)))))
   }
 
   /** Incremental consumption: rows of the data files ACTIVE at
@@ -1255,29 +1209,19 @@ object DeltaTable {
               "diff is not reconstructible (enable CDF on the writer)")
         // synthesized rows honor each action's DV: an insert serves the
         // add's LIVE rows, a delete the rows live at removal
-        val ins = addFiles match {
-          case Nil => Nil
-          case fsAdd => Seq(tagged(
-            assemble(spark, table, snap.copy(files = fsAdd))
-              .withColumn("_change_type", lit("insert")), v, ts))
-        }
-        val del = rmFiles match {
-          case Nil => Nil
-          case fsRm => Seq(tagged(
-            assemble(spark, table, snap.copy(files = fsRm))
-              .withColumn("_change_type", lit("delete")), v, ts))
-        }
-        ins ++ del
+        def synthesized(files: Seq[AddFile], kind: String) =
+          if (files.isEmpty) Nil
+          else Seq(tagged(assemble(spark, table, snap.copy(files = files))
+            .withColumn("_change_type", lit(kind)), v, ts))
+        synthesized(addFiles, "insert") ++ synthesized(rmFiles, "delete")
       }
     }
     if (frames.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(full.fields ++ Seq(
-          StructField("_change_type", org.apache.spark.sql.types.StringType),
-          StructField("_commit_version", org.apache.spark.sql.types.LongType),
-          StructField("_commit_timestamp",
-            org.apache.spark.sql.types.TimestampType))))
+      TableScan.empty(spark, StructType(full.fields ++ Seq(
+        StructField("_change_type", org.apache.spark.sql.types.StringType),
+        StructField("_commit_version", org.apache.spark.sql.types.LongType),
+        StructField("_commit_timestamp",
+          org.apache.spark.sql.types.TimestampType))))
     else frames.map(_.select(
         (full.fieldNames.toSeq :+ "_change_type" :+ "_commit_version" :+
           "_commit_timestamp").map(col): _*))

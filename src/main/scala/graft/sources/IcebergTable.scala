@@ -159,6 +159,14 @@ object IcebergTable {
     }
   }
 
+  /** The latest metadata json, parsed — the one read every metadata
+    * probe and snapshot replay starts from. */
+  private def metadata(spark: SparkSession, table: String): JValue = {
+    val fs = new Path(table).getFileSystem(
+      new Configuration(spark.sparkContext.hadoopConfiguration))
+    JsonMethods.parse(FsText.read(fs, latestMetadata(fs, table)))
+  }
+
   private def resolvePath(table: String, location: String, p: String): String = {
     val raw =
       if (p.contains("://") || p.startsWith("/")) p
@@ -179,13 +187,13 @@ object IcebergTable {
   def readPartitions(spark: SparkSession, table: String,
       partitionFilter: Map[String, String],
       snapshotId: Option[Long] = None): DataFrame =
-    readImpl(spark, table, snapshotId, partitionFilter)
+    assemble(spark, activeFiles(spark, table, snapshotId, partitionFilter))
 
   /** Read an Iceberg table snapshot: the current snapshot, or an explicit
     * `snapshotId` for time travel. */
   def read(spark: SparkSession, table: String,
       snapshotId: Option[Long] = None): DataFrame =
-    readImpl(spark, table, snapshotId, Map.empty)
+    assemble(spark, activeFiles(spark, table, snapshotId, Map.empty))
 
   /** Read with DATA SKIPPING: data files whose manifest stats
     * (record_count, null_value_counts, lower_bounds, upper_bounds —
@@ -203,10 +211,7 @@ object IcebergTable {
       filters: Seq[org.apache.spark.sql.sources.Filter],
       snapshotId: Option[Long] = None): DataFrame = {
     val a = activeFiles(spark, table, snapshotId, Map.empty)
-    if (filters.isEmpty) return assemble(spark, a)
-    val residual = filters.map(ColumnStats.filterColumn).reduce(_ && _)
-    val types = ColumnStats.statColumns(a.schema)
-      .map(f => f.name -> f.dataType).toMap
+    val types = ColumnStats.statTypes(a.schema)
     // transform-aware pruning: an EqualTo/In on a bucket SOURCE column
     // admits only the literal's bucket(s) — the axis min/max bounds
     // cannot serve on hash-scattered files. Conservative: any unknown
@@ -259,17 +264,9 @@ object IcebergTable {
         (jm \ fname).extractOpt[Int].forall(set.contains)
       }
     }
-    val kept = a.data.filter { case (path, _, scope) =>
-      val st = a.dataStats.getOrElse(path, ColumnStats.NoStats)
-      bucketOk(scope) && filters.forall(ColumnStats.mayMatch(_, st, types))
-    }
-    assemble(spark, a.copy(data = kept)).filter(residual)
-  }
-
-  private def readImpl(spark: SparkSession, table: String,
-      snapshotId: Option[Long], partitionFilter: Map[String, String]): DataFrame = {
-    val a = activeFiles(spark, table, snapshotId, partitionFilter)
-    assemble(spark, a)
+    TableScan.readWhere(filters, types, a.data)(
+      f => a.dataStats.getOrElse(f._1, ColumnStats.NoStats),
+      f => bucketOk(f._3))(kept => assemble(spark, a.copy(data = kept)))
   }
 
   /** The current snapshot with each row's `(__row_path, __row_pos)`
@@ -325,12 +322,8 @@ object IcebergTable {
   private def assemble(spark: SparkSession, a: ActiveSet,
       keepRowKey: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.broadcast
-    val keySchema = StructType(a.schema.fields ++ Seq(
-      StructField("__row_path", StringType), StructField("__row_pos", LongType)))
     if (a.data.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        if (keepRowKey) keySchema else a.schema)
+      return TableScan.empty(spark, TableScan.keyed(a.schema, keepRowKey))
     val needKeys = keepRowKey || a.posDeletes.nonEmpty ||
       a.eqDeletes.nonEmpty || a.dvDeletes.nonEmpty
     // renamed-schema tables read through FIELD-ID resolution (a
@@ -349,15 +342,16 @@ object IcebergTable {
       throw UnsupportedIceberg(
         "equality deletes on a table with RENAMED nested members are " +
           "not implemented (delete files store write-time member names)")
-    val data =
-      if (a.priorNames.isEmpty) {
-        val d = spark.read.schema(a.schema).parquet(a.data.map(_._1): _*)
-        if (!needKeys) d
-        else d
-          .withColumn("__row_path",
-            PathUris.canonMetaCol(col("_metadata.file_path")))
-          .withColumn("__row_pos", col("_metadata.row_index"))
-      } else resolvedRead(spark, a, needKeys)
+    // one relation over the table schema, or — under renames — one per
+    // resolved column spelling, relabeled to the current names; deletes
+    // apply once, after the union
+    val data = TableScan.scanGroups(spark,
+      if (a.priorNames.isEmpty)
+        Seq(TableScan.ReadGroup(Option.empty[Spelling], a.data.map(_._1),
+          a.schema))
+      else resolvedGroups(spark, a), needKeys) { (g, df) =>
+      g.key.fold(df)(relabel(a.schema, _, df, needKeys))
+    }
     if (!needKeys) return data
     var withMeta = data
     // positional delete parquet (v2) and Puffin deletion vectors (v3)
@@ -366,31 +360,25 @@ object IcebergTable {
     // (puffin, referenced file, offset, size) descriptors.
     val posDels: Option[DataFrame] =
       if (a.posDeletes.isEmpty) None
-      else Some(spark.read.parquet(a.posDeletes: _*)
-        // spec schema: file_path (string), pos (long); a delete file may
-        // also carry the deleted `row` struct — not selected
-        .select(PathUris.canonCol(col("file_path")).as("__del_path"),
-          col("pos").cast("long").as("__del_pos")))
+      // spec schema: file_path (string), pos (long); a delete file may
+      // also carry the deleted `row` struct — not selected
+      else Some(TableScan.killRows(spark.read.parquet(a.posDeletes: _*),
+        col("file_path"), col("pos")))
     val dvDels: Option[DataFrame] =
       if (a.dvDeletes.isEmpty) None
       else {
-        import spark.implicits._
         val tconf = TaskConf(
           new Configuration(spark.sparkContext.hadoopConfiguration))
         val descs = a.dvDeletes.map { case (pf, ref, off, size, _) =>
           (pf, PathUris.canon(ref), off, size)
         }
-        Some(spark.createDataset(descs)
-          .repartition(math.min(descs.size, 32))
-          .flatMap { case (pf, ref, off, size) =>
-            DeletionVector.puffinDvPositions(pf, off, size, tconf.value)
-              .iterator.map(pos => (ref, pos))
-          }.toDF("__del_path", "__del_pos"))
+        Some(TableScan.killSet(spark, descs) { case (pf, ref, off, size) =>
+          DeletionVector.puffinDvPositions(pf, off, size, tconf.value)
+            .iterator.map(pos => (ref, pos))
+        })
       }
     (posDels ++ dvDels).reduceOption(_ unionByName _).foreach { dels =>
-      withMeta = withMeta.join(dels,
-        withMeta("__row_path") === dels("__del_path") &&
-          withMeta("__row_pos") === dels("__del_pos"), "left_anti")
+      withMeta = TableScan.withoutKilled(withMeta, dels)
     }
     if (a.eqDeletes.nonEmpty) {
       import spark.implicits._
@@ -400,7 +388,7 @@ object IcebergTable {
         (PathUris.canon(p), sq, scope)
       }.toDF("__sp", "__file_seq", "__file_scope")
       withMeta = withMeta.join(broadcast(seqDf),
-        withMeta("__row_path") === seqDf("__sp"), "left").drop("__sp")
+        withMeta(TableScan.RowPath) === seqDf("__sp"), "left").drop("__sp")
       a.eqDeletes.groupBy(_._3.sorted).toSeq.sortBy(_._1.mkString(","))
         .foreach { case (ids, group) =>
           val cols = ids.map(id => a.fieldNames.getOrElse(id,
@@ -464,21 +452,9 @@ object IcebergTable {
         }
       withMeta = withMeta.drop("__file_seq", "__file_scope")
     }
-    if (keepRowKey) withMeta else withMeta.drop("__row_path", "__row_pos")
+    if (keepRowKey) withMeta else TableScan.dropRowKey(withMeta)
   }
 
-  /** The table spec's column-resolution rule — columns are selected by
-    * FIELD ID — applied per data file. Runs only when the schema
-    * history proves a rename happened (some id maps to more than one
-    * name): one footer read per data file (O(files) driver metadata,
-    * the same pass the writers' stat collection performs), files then
-    * GROUPED by their resolved column spelling — one parquet relation
-    * per spelling, not per file. Resolution order per table column: the
-    * file column carrying the field id; else the current name; else the
-    * most recent PRIOR name present (an id-less file written before the
-    * rename); else the column reads as null (a file predating an
-    * additive evolution). Row-key columns attach per scan group (the
-    * `_metadata` pseudo-column does not survive a union). */
   /** One parquet FOOTER read: the file's top-level (field-id → column
     * name) map, its column-name set, and the message type itself (the
     * nested clipping input) — what every id-keyed resolution site
@@ -488,11 +464,7 @@ object IcebergTable {
       : (Map[Int, String], Set[String],
         org.apache.parquet.schema.GroupType) = {
     import scala.jdk.CollectionConverters._
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new Path(p), conf))
-    val g = try reader.getFooter.getFileMetaData.getSchema
-      finally reader.close()
+    val g = TableScan.footer(p, conf).getFileMetaData.getSchema
     val byId = scala.collection.mutable.Map.empty[Int, String]
     val names = scala.collection.mutable.Set.empty[String]
     g.getFields.asScala.foreach { t =>
@@ -506,8 +478,22 @@ object IcebergTable {
     (byId.toMap, names.toSet, g)
   }
 
-  private def resolvedRead(spark: SparkSession, a: ActiveSet,
-      needKeys: Boolean): DataFrame = {
+  /** One data file's read field per table column (None: absent). */
+  private type Spelling = Seq[Option[StructField]]
+
+  /** The table spec's column-resolution rule — columns are selected by
+    * FIELD ID — applied per data file. Runs only when the schema
+    * history proves a rename happened (some id maps to more than one
+    * name): one footer read per data file (O(files) driver metadata,
+    * the same pass the writers' stat collection performs), files then
+    * GROUPED by their resolved column spelling — one parquet relation
+    * per spelling, not per file. Resolution order per table column: the
+    * file column carrying the field id; else the current name; else the
+    * most recent PRIOR name present (an id-less file written before the
+    * rename); else the column reads as null (a file predating an
+    * additive evolution). */
+  private def resolvedGroups(spark: SparkSession, a: ActiveSet)
+      : Seq[TableScan.ReadGroup[Option[Spelling]]] = {
     val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
     val idOf: Map[String, Int] = a.fieldNames.map(_.swap)
     val fields = a.schema.fields.toSeq
@@ -591,44 +577,37 @@ object IcebergTable {
       .toSeq
       .sortBy(_._1.map(_.getOrElse("")).mkString(","))
       .map { case (_, ps) =>
-        val colFields = ps.head._2
-        val present = colFields.flatten
-        var df = spark.read.schema(StructType(present))
-          .parquet(ps.map(_._1): _*)
-        if (needKeys) df = df
-          .withColumn("__row_path",
-            PathUris.canonMetaCol(col("_metadata.file_path")))
-          .withColumn("__row_pos", col("_metadata.row_index"))
-        val keyCols =
-          if (needKeys) Seq(col("__row_path"), col("__row_pos")) else Nil
-        // the relabeling cast targets a deep-NULLABLE copy: the read
-        // schema's members are nullable by construction (absent ones
-        // read null), and Spark refuses a cast that would promise
-        // NOT NULL. Same-spelling fields skip the cast entirely.
-        df.select(fields.zip(colFields).map {
-          case (f, Some(rf)) if rf.dataType == f.dataType =>
-            col(s"`${rf.name}`").as(f.name)
-          case (f, Some(rf)) =>
-            col(s"`${rf.name}`")
-              .cast(TableCommit.deepNullableType(f.dataType)).as(f.name)
-          case (f, None) => org.apache.spark.sql.functions.lit(null)
-            .cast(f.dataType).as(f.name)
-        } ++ keyCols: _*)
-      }.reduce(_ unionByName _)
+        TableScan.ReadGroup(Some(ps.head._2), ps.map(_._1),
+          StructType(ps.head._2.flatten))
+      }
   }
+
+  /** One resolved group's columns under the current schema's names. The
+    * relabeling cast targets a deep-NULLABLE copy: the read schema's
+    * members are nullable by construction (absent ones read null), and
+    * Spark refuses a cast that would promise NOT NULL. Same-spelling
+    * fields skip the cast entirely. */
+  private def relabel(schema: StructType, colFields: Spelling,
+      df: DataFrame, needKeys: Boolean): DataFrame =
+    df.select(schema.fields.toSeq.zip(colFields).map {
+      case (f, Some(rf)) if rf.dataType == f.dataType =>
+        col(s"`${rf.name}`").as(f.name)
+      case (f, Some(rf)) =>
+        col(s"`${rf.name}`")
+          .cast(TableCommit.deepNullableType(f.dataType)).as(f.name)
+      case (f, None) => org.apache.spark.sql.functions.lit(null)
+        .cast(f.dataType).as(f.name)
+    } ++ (if (needKeys) TableScan.rowKey else Nil): _*)
 
   /** The snapshot's [[ActiveSet]] — pure metadata work: manifest-list +
     * manifest replay, no data IO. */
   private def activeFiles(spark: SparkSession, table: String,
       snapshotId: Option[Long], partitionFilter: Map[String, String],
       metaPre: Option[JValue] = None): ActiveSet = {
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    val fs = new Path(table).getFileSystem(conf)
     // `metaPre`: a caller that already parsed the metadata json (for a
     // guard of its own) hands it over instead of paying the read+parse
     // twice
-    val meta = metaPre.getOrElse(
-      JsonMethods.parse(FsText.read(fs, latestMetadata(fs, table))))
+    val meta = metaPre.getOrElse(metadata(spark, table))
     val fv = (meta \ "format-version").extract[Int]
     if (fv > 3) throw UnsupportedIceberg(
       s"format-version $fv (1, 2 and 3 only)")
@@ -1024,34 +1003,38 @@ object IcebergTable {
     * a compaction rewrite re-surfaces its rows. */
   def readAppended(spark: SparkSession, table: String, fromSnapshotId: Long,
       toSnapshotId: Option[Long] = None): DataFrame = {
-    // snapshot ids are arbitrary — ORDER is the timestamp's; a reversed
-    // range would serve already-superseded files, so it fails directed
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    val fs = new Path(table).getFileSystem(conf)
-    val meta = JsonMethods.parse(FsText.read(fs, latestMetadata(fs, table)))
+    val meta = metadata(spark, table)
     val toId = toSnapshotId.orElse(
       (meta \ "current-snapshot-id").extractOpt[Long])
+    toId.foreach(
+      requireOrdered(meta, table, "readAppended", fromSnapshotId, _))
+    // both active sets are METADATA (manifest replays of the one parsed
+    // json, so the served end is the checked `toId`); the diff costs
+    // zero data reads. The TO snapshot's deletes apply to the fresh
+    // files (a row added and deleted within the range never existed for
+    // a consumer of the range's end state).
+    val before = activeFiles(spark, table, Some(fromSnapshotId), Map.empty,
+      Some(meta))
+    val after = activeFiles(spark, table, toId, Map.empty, Some(meta))
+    val beforeSet = before.data.map(_._1).toSet
+    val fresh = after.data.filterNot(f => beforeSet(f._1))
+    assemble(spark, after.copy(data = fresh))
+  }
+
+  /** Snapshot ids are arbitrary — a range's ORDER is its snapshots'
+    * timestamps'. A reversed range would serve superseded files, so it
+    * fails directed. */
+  private def requireOrdered(meta: JValue, table: String, op: String,
+      fromId: Long, toId: Long): Unit = {
     def tsOf(id: Long): Option[Long] =
       (meta \ "snapshots").extractOpt[Seq[JValue]].getOrElse(Nil)
         .find(sn => (sn \ "snapshot-id").extractOpt[Long].contains(id))
         .flatMap(sn => (sn \ "timestamp-ms").extractOpt[Long])
-    for (t <- toId; fromTs <- tsOf(fromSnapshotId); toTs <- tsOf(t))
+    for (fromTs <- tsOf(fromId); toTs <- tsOf(toId))
       if (fromTs > toTs) throw UnsupportedIceberg(
-        s"$table: readAppended range is reversed (from snapshot " +
-          s"$fromSnapshotId at $fromTs ms, to $t at $toTs ms) — a " +
-          "reversed diff would serve superseded files")
-    // both active sets are METADATA (manifest replays); the diff costs
-    // zero data reads. The TO snapshot's deletes apply to the fresh
-    // files (a row added and deleted within the range never existed for
-    // a consumer of the range's end state).
-    val before = activeFiles(spark, table, Some(fromSnapshotId), Map.empty)
-    val after = activeFiles(spark, table, toSnapshotId, Map.empty)
-    val beforeSet = before.data.map(_._1).toSet
-    val fresh = after.data.filterNot(f => beforeSet(f._1))
-    assemble(spark, after.copy(data = fresh,
-      posDeletes = if (fresh.isEmpty) Nil else after.posDeletes,
-      eqDeletes = if (fresh.isEmpty) Nil else after.eqDeletes,
-      dvDeletes = if (fresh.isEmpty) Nil else after.dvDeletes))
+        s"$table: $op range is reversed (from snapshot $fromId at " +
+          s"$fromTs ms, to $toId at $toTs ms) — a reversed diff would " +
+          "serve superseded files")
   }
 
   /** ROW-LEVEL incremental consumption: the net change between two
@@ -1076,23 +1059,15 @@ object IcebergTable {
   def readChangelog(spark: SparkSession, table: String, fromSnapshotId: Long,
       toSnapshotId: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.functions.lit
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    val fs = new Path(table).getFileSystem(conf)
-    val meta = JsonMethods.parse(FsText.read(fs, latestMetadata(fs, table)))
+    val meta = metadata(spark, table)
     val toId = toSnapshotId.orElse(
         (meta \ "current-snapshot-id").extractOpt[Long].filter(_ != -1L))
       .getOrElse(throw UnsupportedIceberg(
         s"$table: no current snapshot — nothing to serve a changelog from"))
-    def tsOf(id: Long): Option[Long] =
-      (meta \ "snapshots").extractOpt[Seq[JValue]].getOrElse(Nil)
-        .find(sn => (sn \ "snapshot-id").extractOpt[Long].contains(id))
-        .flatMap(sn => (sn \ "timestamp-ms").extractOpt[Long])
-    for (fromTs <- tsOf(fromSnapshotId); toTs <- tsOf(toId))
-      if (fromTs > toTs) throw UnsupportedIceberg(
-        s"$table: readChangelog range is reversed (from snapshot " +
-          s"$fromSnapshotId at $fromTs ms, to $toId at $toTs ms)")
-    val before = activeFiles(spark, table, Some(fromSnapshotId), Map.empty)
-    val after = activeFiles(spark, table, Some(toId), Map.empty)
+    requireOrdered(meta, table, "readChangelog", fromSnapshotId, toId)
+    val before = activeFiles(spark, table, Some(fromSnapshotId), Map.empty,
+      Some(meta))
+    val after = activeFiles(spark, table, Some(toId), Map.empty, Some(meta))
     val bPaths = before.data.map(_._1).toSet
     val aPaths = after.data.map(_._1).toSet
     val added = after.data.filterNot(f => bPaths(f._1))
@@ -1121,32 +1096,22 @@ object IcebergTable {
           keepRowKey = true)
         val dTo = assemble(spark, after.copy(data = common),
           keepRowKey = true)
-          .select(col("__row_path").as("__to_path"),
-            col("__row_pos").as("__to_pos"))
-        Some(tag(dFrom.join(dTo,
-            dFrom("__row_path") === dTo("__to_path") &&
-              dFrom("__row_pos") === dTo("__to_pos"), "left_anti")
-          .drop("__row_path", "__row_pos"), "delete"))
+        Some(tag(TableScan.dropRowKey(TableScan.withoutKilled(dFrom,
+          TableScan.keysAsKills(dTo))), "delete"))
       }
     val frames = Seq(inserts, droppedFiles, newlyDead).flatten
     if (frames.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(after.schema.fields ++ Seq(
-          StructField("_change_type", StringType),
-          StructField("_snapshot_id", LongType))))
+      TableScan.empty(spark, StructType(after.schema.fields ++ Seq(
+        StructField("_change_type", StringType),
+        StructField("_snapshot_id", LongType))))
     else frames.reduce(_ unionByName _)
   }
 
   /** The current schema as a Spark StructType — one metadata-json read,
     * no manifest IO (the streaming wrapper's schema source). */
   private[graft] def tableSchema(spark: SparkSession,
-      table: String): StructType = {
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    val fs = new Path(table).getFileSystem(conf)
-    val meta = JsonMethods.parse(FsText.read(fs, latestMetadata(fs, table)))
-    structOf(currentSchemaJson(meta))
-  }
+      table: String): StructType =
+    structOf(currentSchemaJson(metadata(spark, table)))
 
   /** Summary operations of the snapshots STRICTLY AFTER `fromSnapshotId`
     * up to and including `toSnapshotId`, in SNAPSHOT-LOG ORDER (array
@@ -1156,9 +1121,7 @@ object IcebergTable {
     * non-append churn in a range; metadata-json only. */
   private[graft] def rangeOperations(spark: SparkSession, table: String,
       fromSnapshotId: Long, toSnapshotId: Long): Seq[String] = {
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    val fs = new Path(table).getFileSystem(conf)
-    val meta = JsonMethods.parse(FsText.read(fs, latestMetadata(fs, table)))
+    val meta = metadata(spark, table)
     val snaps = (meta \ "snapshots").extractOpt[Seq[JValue]].getOrElse(Nil)
       .flatMap { s =>
         (s \ "snapshot-id").extractOpt[Long].map(id => (id,
@@ -1172,14 +1135,6 @@ object IcebergTable {
         "range's operations are unknowable")
     snaps.slice(fromIdx + 1, toIdx + 1).map(_._2)
   }
-
-  /** The current snapshot's data-file paths (manifest-resolved, raw
-    * spelling) — [[IcebergWriter.writeDelete]] maps canonical row keys
-    * back to these before writing positional-delete rows, so foreign
-    * readers' raw-string path compares still match. */
-  private[graft] def activeDataPaths(spark: SparkSession,
-      table: String): Seq[String] =
-    activeFiles(spark, table, None, Map.empty).data.map(_._1)
 
   /** The current snapshot's delete shapes for the v3 DELETE/UPDATE
     * writers: each data file's ACTIVE deletion vector (canonical data
@@ -1222,12 +1177,9 @@ object IcebergTable {
   /** The current snapshot id (None on a never-written table) — one
     * metadata-json read, no manifest IO. The cheap "did anything change"
     * probe an incremental poller runs each tick. */
-  def currentSnapshotId(spark: SparkSession, table: String): Option[Long] = {
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    val fs = new Path(table).getFileSystem(conf)
-    val meta = JsonMethods.parse(FsText.read(fs, latestMetadata(fs, table)))
-    (meta \ "current-snapshot-id").extractOpt[Long].filter(_ != -1L)
-  }
+  def currentSnapshotId(spark: SparkSession, table: String): Option[Long] =
+    (metadata(spark, table) \ "current-snapshot-id").extractOpt[Long]
+      .filter(_ != -1L)
 
   /** Snapshot log from the metadata: (snapshot id, timestamp ms,
     * operation) — the time-travel picker. */
@@ -1239,9 +1191,7 @@ object IcebergTable {
     * retained snapshot is directed (earlier ones may be expired). */
   def snapshotAt(spark: SparkSession, table: String,
       timestampMs: Long): Long = {
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    val fs = new Path(table).getFileSystem(conf)
-    val meta = JsonMethods.parse(FsText.read(fs, latestMetadata(fs, table)))
+    val meta = metadata(spark, table)
     val log: Seq[(Long, Long)] =
       (meta \ "snapshots").extractOpt[Seq[JValue]].getOrElse(Nil)
         .flatMap { s =>
@@ -1268,9 +1218,7 @@ object IcebergTable {
     * Unknown refs are directed. */
   def refSnapshot(spark: SparkSession, table: String,
       name: String): Long = {
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    val fs = new Path(table).getFileSystem(conf)
-    val meta = JsonMethods.parse(FsText.read(fs, latestMetadata(fs, table)))
+    val meta = metadata(spark, table)
     (meta \ "refs" \ name \ "snapshot-id").extractOpt[Long]
       .orElse(if (name == "main")
         (meta \ "current-snapshot-id").extractOpt[Long].filter(_ != -1L)
@@ -1297,11 +1245,7 @@ object IcebergTable {
     * lineage stamping — `rewriteDataFiles` re-stamps the whole
     * table). */
   def readWithRowIds(spark: SparkSession, table: String): DataFrame = {
-    import org.apache.spark.sql.functions.broadcast
-    import spark.implicits._
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    val fs = new Path(table).getFileSystem(conf)
-    val meta = JsonMethods.parse(FsText.read(fs, latestMetadata(fs, table)))
+    val meta = metadata(spark, table)
     val fv = (meta \ "format-version").extract[Int]
     if (fv != 3) throw UnsupportedIceberg(
       s"$table: row lineage is a format-version 3 feature (table is $fv)")
@@ -1315,20 +1259,15 @@ object IcebergTable {
             "table with fresh ranges)"))
       (canon, frid, sq)
     }
-    val d = dim.toDF("__rid_path", "__rid_first", "__rid_seq")
-    assemble(spark, a, keepRowKey = true)
-      .join(broadcast(d), col("__row_path") === col("__rid_path"), "left")
-      .withColumn("_row_id", col("__rid_first") + col("__row_pos"))
-      .withColumn("_last_updated_sequence_number", col("__rid_seq"))
-      .drop("__rid_path", "__rid_first", "__rid_seq",
-        "__row_path", "__row_pos")
+    TableScan.withLineage(assemble(spark, a, keepRowKey = true), dim) {
+      (rid, seq) =>
+        Seq("_row_id" -> rid, "_last_updated_sequence_number" -> seq)
+    }
   }
 
   def snapshots(spark: SparkSession, table: String): DataFrame = {
     import spark.implicits._
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    val fs = new Path(table).getFileSystem(conf)
-    val meta = JsonMethods.parse(FsText.read(fs, latestMetadata(fs, table)))
+    val meta = metadata(spark, table)
     (meta \ "snapshots").extractOpt[Seq[JValue]].getOrElse(Nil).map { s =>
       ((s \ "snapshot-id").extract[Long],
         (s \ "timestamp-ms").extractOpt[Long].getOrElse(0L),

@@ -4,8 +4,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -49,18 +47,13 @@ object ParquetMeta {
     val rdd = spark.sparkContext.parallelize(files,
       math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism)))
       .flatMap { case (uri, len) =>
-        val c = tconf.value
-        val reader = ParquetFileReader.open(
-          HadoopInputFile.fromPath(new Path(uri), c))
-        try {
-          val footer = reader.getFooter
-          val created = Option(footer.getFileMetaData.getCreatedBy).orNull
-          footer.getBlocks.asScala.toSeq.zipWithIndex.map { case (b, i) =>
-            Row(uri, len, i, b.getRowCount, b.getCompressedSize,
-              b.getTotalByteSize,
-              b.getColumns.size(), created)
-          }
-        } finally reader.close()
+        val footer = TableScan.footer(uri, tconf.value)
+        val created = Option(footer.getFileMetaData.getCreatedBy).orNull
+        footer.getBlocks.asScala.toSeq.zipWithIndex.map { case (b, i) =>
+          Row(uri, len, i, b.getRowCount, b.getCompressedSize,
+            b.getTotalByteSize,
+            b.getColumns.size(), created)
+        }
       }
     spark.createDataFrame(rdd, schema)
   }

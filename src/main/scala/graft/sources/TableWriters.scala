@@ -223,28 +223,16 @@ object TableCommit {
     * same stat collection every table-format writer performs at commit. */
   private[sources] def rowCounts(files: Seq[String],
       conf: Configuration): Seq[Long] =
-    files.map { f =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new Path(f), conf))
-      try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-      finally reader.close()
-    }
+    files.map(f =>
+      TableScan.footer(f, conf).getBlocks.asScala.map(_.getRowCount).sum)
 
   /** Per-file `,"stats":"…"` add-action fields for freshly committed
-    * parquet files — one FOOTER read per file (O(KB) driver metadata,
-    * collected in the same pass family as [[rowCounts]]), serialized as
-    * the protocol's numRecords/minValues/maxValues/nullCount JSON.
+    * parquet files, serialized as the protocol's
+    * numRecords/minValues/maxValues/nullCount JSON, AND each file's row
+    * count — ONE footer read per file, so the commit paths that also
+    * filter empty files out never pay a second footer pass.
     * `dataSchema` is the table schema MINUS partition columns (what the
     * files store). */
-  private[sources] def statsFields(absPaths: Seq[String],
-      dataSchema: org.apache.spark.sql.types.StructType,
-      conf: Configuration): Seq[String] =
-    statsFieldsWithCounts(absPaths, dataSchema, conf).map(_._1)
-
-  /** ONE footer read per file: the add's `,"stats":"…"` field AND its
-    * row count — the commit paths that also filter empty files out
-    * never pay a second footer pass. */
   private[sources] def statsFieldsWithCounts(absPaths: Seq[String],
       dataSchema: org.apache.spark.sql.types.StructType,
       conf: Configuration): Seq[(String, Long)] =
@@ -405,8 +393,8 @@ object TableCommit {
     * consumes, so its callers cap the rows first. */
   private[sources] def killPositions(keyed: DataFrame)
       : Seq[(String, Array[Long])] =
-    keyed.groupBy(col("__row_path"))
-      .agg(org.apache.spark.sql.functions.collect_list(col("__row_pos")))
+    keyed.groupBy(col(TableScan.RowPath))
+      .agg(org.apache.spark.sql.functions.collect_list(col(TableScan.RowPos)))
       .collect().toSeq.map(m => (m.getString(0), m.getSeq[Long](1).toArray))
 
   /** The new fields `next` appends after `prior` — `next` must carry
@@ -1245,10 +1233,10 @@ object DeltaWriter {
             case (f, pos) => pos.toSeq.map(p => (f, p)) })
             .toDF("__kp", "__kpos")
           val whole = DeltaTable.readWithRowKey(spark, table)
-          cdcDeleteLines(whole.join(killedDf,
-            whole("__row_path") === killedDf("__kp") &&
-              whole("__row_pos") === killedDf("__kpos"), "left_semi")
-            .drop("__row_path", "__row_pos"), written)
+          cdcDeleteLines(TableScan.dropRowKey(whole.join(killedDf,
+            whole(TableScan.RowPath) === killedDf("__kp") &&
+              whole(TableScan.RowPos) === killedDf("__kpos"), "left_semi")),
+            written)
         }
       commitLog(t.fs, t.logPath, table, version + 1,
         Seq(s"""{"commitInfo":{"timestamp":$ts,"operation":"DELETE"}}""") ++
@@ -1318,10 +1306,10 @@ object DeltaWriter {
               "(or auto)")
           dvShape(written)
         case "rewrite" =>
-          rewriteShape(keyed.select(col("__row_path")).distinct()
+          rewriteShape(keyed.select(col(TableScan.RowPath)).distinct()
             .collect().map(_.getString(0)).toSet, written)
         case _ => // auto: an O(files) count pass picks the shape
-          val groups = keyed.groupBy(col("__row_path")).count().collect()
+          val groups = keyed.groupBy(col(TableScan.RowPath)).count().collect()
           val total = groups.map(_.getLong(1)).sum
           if (total == 0) version
           else if (total <= maxDeletedRows) dvShape(written)
@@ -1421,7 +1409,7 @@ object DeltaWriter {
           .withColumn("_change_type", when(col("__matched").isNotNull,
             lit("update_postimage")).otherwise(lit("insert")))
           .drop(keys.map(k => s"__tk_$k") :+ "__matched": _*)
-        matched.drop("__row_path", "__row_pos")
+        TableScan.dropRowKey(matched)
           .withColumn("_change_type", lit("update_preimage"))
           .unionByName(tagged)
           .select((t.schema.fieldNames.toSeq :+ "_change_type")
@@ -4268,7 +4256,8 @@ object IcebergWriter {
       (PathUris.canon(p), p, sc)
     }.toDF("__ck", "file_path", "__pt")
     val keyedSel = keyed
-      .select(fcol("__row_path").as("__ck"), fcol("__row_pos").as("pos"))
+      .select(fcol(TableScan.RowPath).as("__ck"),
+        fcol(TableScan.RowPos).as("pos"))
       .join(broadcast(pathDim), "__ck")
     // positional-delete files are data-file-spec files: the spec keys
     // their two columns by the RESERVED field ids (file_path 2147483546,
@@ -4726,7 +4715,7 @@ object IcebergWriter {
       "compact", "compaction")
     val (schema, parts) = (t.schema, t.parts)
     // output sizing from the CURRENT data files' stats — O(files)
-    val dataPaths = IcebergTable.activeDataPaths(spark, table)
+    val dataPaths = IcebergTable.activeDataScopes(spark, table).map(_._1)
     val totalBytes = dataPaths.map { p =>
       try t.fs.getFileStatus(new Path(p)).getLen
       catch { case _: java.io.FileNotFoundException => 0L }

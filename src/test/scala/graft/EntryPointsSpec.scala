@@ -7,8 +7,9 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Rules every driver and dev entry point keeps: one session factory, and
-  * one JSON string escaper for the artifacts the driver parses. */
+/** Rules every driver and dev entry point keeps: one session factory, one
+  * JSON string escaper for the artifacts the driver parses, and one scan
+  * core for the table formats' row keys, kill sets and parquet footers. */
 class EntryPointsSpec extends AnyFunSuite {
 
   test("no session is built outside GraftSession") {
@@ -33,5 +34,18 @@ class EntryPointsSpec extends AnyFunSuite {
     val parsed = json.readValue(Verify.oracleJson(SparkEntry.oracleSql),
       classOf[java.util.Map[String, String]]).asScala.toMap
     assert(parsed == SparkEntry.oracleSql)
+  }
+
+  test("row keys, kill sets and parquet footers live only in TableScan") {
+    val owned = Seq("\"__row_path\"", "\"__row_pos\"", "\"_metadata.row_index\"",
+      "\"__del_path\"", "\"__del_pos\"", "ParquetFileReader.open")
+    val main = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val offenders = for {
+      p <- main if p.getFileName.toString != "TableScan.scala"
+      text = Files.readString(p)
+      o <- owned if text.contains(o)
+    } yield s"$p: $o"
+    assert(offenders.isEmpty, s"use graft.sources.TableScan instead: ${offenders.mkString(", ")}")
   }
 }

@@ -1623,6 +1623,94 @@ class TableWritersSpec extends SparkSpec {
     assert(dataFiles() == beforeFail)
   }
 
+  test("merge-on-read read parity: Delta DV, Iceberg v2 positional " +
+    "delete and v3 Puffin DV serve the same rows, keys and increments") {
+    import org.apache.spark.sql.sources.GreaterThanOrEqual
+    final case class Fmt(name: String,
+        append: (org.apache.spark.sql.DataFrame, String) => Unit,
+        delete: (String, org.apache.spark.sql.Column) => Unit,
+        read: String => org.apache.spark.sql.DataFrame,
+        readWhere: (String, Seq[org.apache.spark.sql.sources.Filter]) =>
+          org.apache.spark.sql.DataFrame,
+        activeFiles: String => Set[String],
+        current: String => Long,
+        increment: (String, Long, Option[Long]) => org.apache.spark.sql.DataFrame,
+        killMarker: String => Boolean)
+    def listed(dir: String): Seq[String] = {
+      val it = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listFiles(new Path(dir), true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath.toString).toSeq
+    }
+    def iceberg(v: Int) = Fmt(s"iceberg v$v",
+      (df, t) => IcebergWriter.writeAppend(spark, df, t, formatVersion = v),
+      (t, c) => IcebergWriter.writeDelete(spark, t, c),
+      t => IcebergTable.read(spark, t),
+      (t, fs) => IcebergTable.readWhere(spark, t, fs),
+      t => IcebergTable.activeDataScopes(spark, t).map(p => sources.PathUris.canon(p._1))
+        .toSet,
+      t => IcebergTable.currentSnapshotId(spark, t).get,
+      (t, from, to) => IcebergTable.readAppended(spark, t, from, to),
+      t => listed(s"$t/data").exists(_.endsWith(".puffin")) == (v == 3) &&
+        listed(s"$t/metadata").exists(_.endsWith("-deletes.avro")) == (v == 2))
+    val formats = Seq(
+      Fmt("delta",
+        (df, t) => DeltaWriter.writeAppend(spark, df, t),
+        (t, c) => DeltaWriter.writeDelete(spark, t, c),
+        t => DeltaTable.read(spark, t),
+        (t, fs) => DeltaTable.readWhere(spark, t, fs),
+        t => DeltaTable.snapshotState(spark, t).files.map(f => sources.PathUris
+          .canon(DeltaTable.resolveAdd(t, f._1))).toSet,
+        t => DeltaTable.latestVersion(spark, t),
+        (t, from, to) => DeltaTable.readChanges(spark, t, from, to),
+        t => listed(s"$t/_delta_log").exists(p =>
+          graft.sources.FsText.read(new Path(p).getFileSystem(
+            spark.sparkContext.hadoopConfiguration), new Path(p))
+            .contains("deletionVector"))),
+      iceberg(2), iceberg(3))
+    def rows(ids: Seq[Long]) = ids.map(i => (i, s"a$i", i * 0.5))
+      .toDF("id", "a", "x").repartition(1)
+    def collected(df: org.apache.spark.sql.DataFrame) =
+      df.select($"id", $"a", $"x").orderBy($"id").as[(Long, String, Double)]
+        .collect().toSeq
+    val filters = Seq(GreaterThanOrEqual("id", 7L))
+    val results = formats.map { f =>
+      val t = tmp()
+      // three files with disjoint id ranges, so stats prune two of them
+      Seq(1L to 4L, 5L to 8L, 9L to 12L).foreach(r => f.append(rows(r), t))
+      f.delete(t, $"id" === 6L)
+      assert(f.killMarker(t), s"${f.name}: no kill file of the expected kind")
+      val all = f.read(t)
+      val where = f.readWhere(t, filters)
+      assert(collected(where) == collected(all.filter($"id" >= 7L)), f.name)
+      assert(where.inputFiles.length < all.inputFiles.length,
+        s"${f.name}: ${where.inputFiles.toSeq} vs ${all.inputFiles.toSeq}")
+      // every row key names an active data file, at a position inside it
+      val keyed = (if (f.name == "delta") DeltaTable.readWithRowKey(spark, t)
+        else IcebergTable.readWithRowKey(spark, t))
+        .select($"__row_path", $"__row_pos").as[(String, Long)].collect()
+      assert(keyed.length == all.count(), f.name)
+      val active = f.activeFiles(t)
+      keyed.groupBy(_._1).foreach { case (path, ks) =>
+        assert(active(path), s"${f.name}: $path is not an active data file")
+        val n = spark.read.parquet(path).count()
+        assert(ks.forall(k => k._2 >= 0 && k._2 < n), s"${f.name}: $path")
+      }
+      // an empty range is a typed empty frame with the table schema
+      val v = f.current(t)
+      val none = f.increment(t, v, Some(v))
+      assert(none.isEmpty, f.name)
+      assert(none.schema.map(c => (c.name, c.dataType)) ==
+        all.schema.map(c => (c.name, c.dataType)), f.name)
+      val served = collected(all)
+      f.append(rows(Seq(13L, 14L)), t)
+      (served, collected(f.increment(t, v, None)))
+    }
+    assert(results.map(_._1).distinct.size == 1, results.map(_._1))
+    assert(results.head._1.map(_._1) == (1L to 12L).filterNot(_ == 6L))
+    assert(results.map(_._2).distinct.size == 1, results.map(_._2))
+    assert(results.head._2.map(_._1) == Seq(13L, 14L))
+  }
+
   test("review fixes: SET swap, insert-only merge protocol, target dups, " +
     "constraints, CDF deletes") {
     // SQL UPDATE semantics: every SET evaluates against the PRE-update
