@@ -1,7 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftColumnBridge}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{LeafExpression, Literal}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 
 /** Remaining mover scalar semantics (SURVEY §2.9) as column expressions. */
 object MoverFunctions {
@@ -48,4 +52,26 @@ object MoverFunctions {
     * util.py:121-125), from a microsecond interval column. */
   def timedeltaSeconds(micros: Column): Column =
     micros.cast("double") / 1e6
+
+  /** A constant column that stays nullable, like the aggregate it stands
+    * for (see [[NullableConstant]]). */
+  private[graft] def nullableLit(value: Any, dataType: DataType): Column =
+    GraftColumnBridge.column(NullableConstant(Literal.create(value, dataType)))
+}
+
+/** A constant that keeps `nullable = true` through optimization. Spark
+  * folds every foldable expression into a `Literal`, whose nullability
+  * follows its value, so even `KnownNullable(lit(x))` ends non-nullable in
+  * the optimized plan, and parquet writers then mark the column REQUIRED.
+  * Not foldable, so it stays; codegen emits the literal itself. */
+private[graft] case class NullableConstant(lit: Literal) extends LeafExpression {
+  override def dataType: DataType = lit.dataType
+  override def nullable: Boolean = true
+  override def foldable: Boolean = false
+  override def eval(input: InternalRow): Any = lit.value
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = lit.genCode(ctx)
+    ev.copy(code = c.code, isNull = c.isNull, value = c.value)
+  }
+  override def toString: String = lit.toString
 }

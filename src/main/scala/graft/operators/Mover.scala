@@ -1,9 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import java.time.LocalDateTime
 
-import graft.functions.GeoFunctions
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.TimestampNTZType
+
+import graft.functions.{GeoFunctions, MoverFunctions}
+import graft.sources.grib.GridFacts
 
 /** The mover (`weather-mv bq`): hypercube -> denormalized rows -> sink.
   *
@@ -71,11 +75,19 @@ object Mover {
     * over the distinct coordinate values of a *sample* (first-URI pattern,
     * pipeline.py:56-57). */
   def inferHalfRes(df: DataFrame, coordCol: String): Double =
-    df.select(GeoFunctions.halfResolution(col(coordCol)).cast("double")).head().getDouble(0)
+    df.select(halfRes(coordCol)).head().getDouble(0)
+
+  private def halfRes(coordCol: String): Column =
+    GeoFunctions.halfResolution(col(coordCol)).cast("double")
 
   /** The extract_rows core (bq.py:321-386) as a single declarative plan:
     * area filter -> variable projection -> metadata columns (bq.py:50-54) ->
-    * geo_point/geo_polygon GeoJSON. */
+    * geo_point/geo_polygon GeoJSON.
+    *
+    * The half resolutions and, for a single-URI frame, `data_first_step`
+    * (bq.py:325-327) become literals. On the GRIB reader's own frame they
+    * come from the header index ([[GridFacts]]) and no job runs; otherwise
+    * one aggregate row computes whatever is missing in one pass. */
   def extractRows(ds: DataFrame, uri: String, opts: Options = Options()): DataFrame = {
     // a multi-file (glob) frame already carries per-file data_uri — preserve
     // it through the variable projection and the per-file metadata below
@@ -85,33 +97,44 @@ object Mover {
     val lat = col(opts.latCol)
     val lon = col(opts.lonCol)
 
-    val filtered = opts.area match {
-      case Some(a) => ds.filter(lat.between(a.south, a.north) && lon.between(a.west, a.east))
-      case None => ds
-    }
+    val inArea = opts.area.map(a => lat.between(a.south, a.north) && lon.between(a.west, a.east))
+    val filtered = inArea.fold(ds)(p => ds.filter(p))
     val projected = onlyTargetVars(filtered, opts.variables, coordCols)
 
-    val latRes = opts.latRes.getOrElse(inferHalfRes(ds, opts.latCol))
-    val lonRes = opts.lonRes.getOrElse(inferHalfRes(ds, opts.lonCol))
+    val facts = GridFacts.on(ds)
+    val latKnown = opts.latRes.orElse(facts.flatMap(_.axis(opts.latCol)).map(_.halfRes))
+    val lonKnown = opts.lonRes.orElse(facts.flatMap(_.axis(opts.lonCol)).map(_.halfRes))
+    val stepKnown = facts.flatMap(_.firstStep(opts.timeCol))
+    val time = col(opts.timeCol).cast("timestamp_ntz")
+    // data_first_step = first time step of this FILE (bq.py:325-327) under
+    // the area filter; a glob frame's is per data_uri, below
+    val wanted = Seq(
+      (latKnown.isEmpty, halfRes(opts.latCol).as("lat")),
+      (lonKnown.isEmpty, halfRes(opts.lonCol).as("lon")),
+      (!hasUri && stepKnown.isEmpty, min(inArea.fold(time)(when(_, time))).as("step")))
+      .collect { case (true, c) => c }
+    lazy val agg: Row = ds.agg(wanted.head, wanted.tail: _*).head()
+    val latRes = latKnown.getOrElse(agg.getDouble(agg.fieldIndex("lat")))
+    val lonRes = lonKnown.getOrElse(agg.getDouble(agg.fieldIndex("lon")))
+
     val importTime: Column = opts.importTime
       .map(t => lit(t).cast("timestamp_ntz"))
       .getOrElse(current_timestamp().cast("timestamp_ntz"))
-
-    // data_first_step = first time step of this FILE (bq.py:325-327). As a
-    // broadcast aggregate: partial aggregation over a column-pruned second
-    // scan, then a broadcast join with one build row per file. The obvious
-    // `min(time) OVER ()` instead moves EVERY row of the dataset into one
-    // task — a guaranteed OOM at 100 TB. Multi-file frames aggregate per
-    // data_uri (the reference's per-URI semantics) and equi-join on it.
-    val stepCol = min(col(opts.timeCol).cast("timestamp_ntz")).as("data_first_step")
     val base = projected.withColumn("data_import_time", importTime)
     val withStep =
       if (hasUri)
-        base.join(broadcast(projected.groupBy(col("data_uri")).agg(stepCol)),
-          Seq("data_uri"))
-      else
+        // per data_uri (the reference's per-URI semantics) as a broadcast
+        // aggregate: partial aggregation over a column-pruned second scan,
+        // then a broadcast join with one build row per file. The obvious
+        // `min(time) OVER ()` instead moves EVERY row of the dataset into
+        // one task — a guaranteed OOM at 100 TB.
+        base.join(broadcast(projected.groupBy(col("data_uri"))
+          .agg(min(time).as("data_first_step"))), Seq("data_uri"))
+      else {
+        val step = stepKnown.getOrElse(agg.getAs[LocalDateTime]("step"))
         base.withColumn("data_uri", lit(uri))
-          .crossJoin(broadcast(projected.agg(stepCol)))
+          .withColumn("data_first_step", MoverFunctions.nullableLit(step, TimestampNTZType))
+      }
     withStep
       .withColumn("geo_point", GeoFunctions.geoPointJson(lat, lon))
       .withColumn("geo_polygon",

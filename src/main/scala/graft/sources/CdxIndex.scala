@@ -30,9 +30,20 @@ object CdxIndex {
     StructField("filename", StringType)))
 
   /** One row per index line: (surt, timestamp, url, mime, status, digest,
-    * length, offset, filename). Lines without a JSON body are dropped. */
+    * length, offset, filename). Lines without a JSON body are dropped.
+    * `pattern` (a file, glob or directory) expands on the driver: handed a
+    * glob, Spark's streaming-sink metadata probe logs a spurious
+    * FileNotFoundException at WARN. Hidden files (`_`/`.` names) are
+    * skipped, as Spark's own listing skips them. */
   def read(spark: SparkSession, pattern: String): DataFrame = {
-    val raw = spark.read.textFile(pattern).toDF("line")
+    val files = graft.sources.grib.GribIndex
+      .expand(spark.sparkContext.hadoopConfiguration, pattern)
+      .filterNot { f =>
+        val name = new Path(f).getName
+        name.startsWith("_") || name.startsWith(".")
+      }
+    require(files.nonEmpty, s"no CDX index files match: $pattern")
+    val raw = spark.read.textFile(files: _*).toDF("line")
     parseLines(raw, col("line"))
   }
 

@@ -98,6 +98,10 @@ object Grib1 {
       }
     }
 
+    private[grib] def gridKey: String =
+      s"1|$ni|$nj|$la1|$lo1|$la2|$lo2|$gaussianN|${pl.map(_.mkString(","))}|" +
+        s"$rotated|$projection|$dxMeters|$dyMeters"
+
     def decode(data: Array[Byte], bitmap: Array[Byte]): Array[Double] =
       Grib1.decodeValues(this, data, bitmap)
 

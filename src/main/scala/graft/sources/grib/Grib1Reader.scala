@@ -142,15 +142,6 @@ object Grib1Reader {
   /** Wide per-channel frame: the GRIB normalize path (sinks.py:251-342) —
     * long rows pivoted on the synthesized channel name over the coordinate
     * key. One header index serves both the channel list and the row scan. */
-  def readMerged(spark: SparkSession, path: String, partitions: Int = 0): DataFrame = {
-    val msgs = indexMessages(sessionConf(spark), path)
-    val channels = msgs
-      .map(m => graft.operators.Mover.channelName(
-        m.levelName, m.levelHeight, m.stepType, m.shortName))
-      .distinct
-    val long = fromIndex(spark, path, msgs, partitions)
-      .select("time", "latitude", "longitude", "channel", "value")
-    graft.operators.Mover.mergeChannels(
-      long, Seq("time", "latitude", "longitude"), "channel", "value", channels)
-  }
+  def readMerged(spark: SparkSession, path: String, partitions: Int = 0): DataFrame =
+    GribIndex.readMerged(spark, path, indexMessages(sessionConf(spark), path), partitions)
 }

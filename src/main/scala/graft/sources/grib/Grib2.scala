@@ -107,6 +107,10 @@ object Grib2 {
         (latOf(j), lo1 + i * 360.0 / counts(j))
     }
 
+    private[grib] def gridKey: String =
+      s"2|$ni|$nj|$la1|$lo1|$la2|$lo2|$gaussianN|${pl.map(_.mkString(","))}|" +
+        s"$projection|$dxMeters|$dyMeters|$planeOrigin"
+
     def decode(data: Array[Byte], bitmap: Array[Byte]): Array[Double] =
       Grib2.decodeValues(this, data, bitmap)
 

@@ -49,17 +49,20 @@ object Grib2Reader {
   private def sessionConf(spark: SparkSession): Configuration =
     new Configuration(spark.sparkContext.hadoopConfiguration)
 
-  def readLongFormat(spark: SparkSession, path: String,
-      partitions: Int = 0): DataFrame = {
-    // spectral fields have no lat/lon row model — [[readSpectral]] is
-    // their access path; grid fields keep the standard long format
+  /** The file's grid fields: spectral fields have no lat/lon row model —
+    * [[readSpectral]] is their access path. */
+  private def gridded(spark: SparkSession, path: String): Seq[Grib2.Field] = {
     val all = indexFields(sessionConf(spark), path)
     val gridded = all.filterNot(_.spectral.isDefined)
     if (gridded.isEmpty && all.nonEmpty)
       throw Grib1.UnsupportedGrib(s"only spectral (3.50) fields in $path — " +
         "read them with Grib2Reader.readSpectral")
-    fromIndex(spark, path, gridded, partitions)
+    gridded
   }
+
+  def readLongFormat(spark: SparkSession, path: String,
+      partitions: Int = 0): DataFrame =
+    fromIndex(spark, path, gridded(spark, path), partitions)
 
   /** Long format for SPECTRAL fields (grid template 3.50 + representation
     * 5.50/5.51): one row per complex spherical-harmonic coefficient —
@@ -75,17 +78,8 @@ object Grib2Reader {
       partitions: Int = 0): DataFrame =
     GribIndex.fromUnits(spark, path, fields, partitions)
 
-  def readMerged(spark: SparkSession, path: String, partitions: Int = 0): DataFrame = {
-    val fields = indexFields(sessionConf(spark), path)
-    val channels = fields
-      .map(f => graft.operators.Mover.channelName(
-        f.levelName, f.levelHeight, f.stepType, f.shortName))
-      .distinct
-    val long = fromIndex(spark, path, fields, partitions)
-      .select("time", "latitude", "longitude", "channel", "value")
-    graft.operators.Mover.mergeChannels(
-      long, Seq("time", "latitude", "longitude"), "channel", "value", channels)
-  }
+  def readMerged(spark: SparkSession, path: String, partitions: Int = 0): DataFrame =
+    GribIndex.readMerged(spark, path, gridded(spark, path), partitions)
 }
 
 /** Edition-agnostic facade: the index dispatches PER MESSAGE on indicator
@@ -117,21 +111,17 @@ object GribReader {
   private def sessionConf(spark: SparkSession): Configuration =
     new Configuration(spark.sparkContext.hadoopConfiguration)
 
-  def readLongFormat(spark: SparkSession, path: String, partitions: Int = 0): DataFrame = {
+  private def units(spark: SparkSession, path: String): Seq[GribUnit] = {
     val units = GribIndex.indexFile(sessionConf(spark), path)
     require(units.nonEmpty, s"not a GRIB file: $path")
-    GribIndex.fromUnits(spark, path, units, partitions)
+    units
   }
 
-  def readMerged(spark: SparkSession, path: String, partitions: Int = 0): DataFrame = {
-    val units = GribIndex.indexFile(sessionConf(spark), path)
-    require(units.nonEmpty, s"not a GRIB file: $path")
-    val channels = units.map(_.channel).distinct
-    val long = GribIndex.fromUnits(spark, path, units, partitions)
-      .select("time", "latitude", "longitude", "channel", "value")
-    graft.operators.Mover.mergeChannels(
-      long, Seq("time", "latitude", "longitude"), "channel", "value", channels)
-  }
+  def readLongFormat(spark: SparkSession, path: String, partitions: Int = 0): DataFrame =
+    GribIndex.fromUnits(spark, path, units(spark, path), partitions)
+
+  def readMerged(spark: SparkSession, path: String, partitions: Int = 0): DataFrame =
+    GribIndex.readMerged(spark, path, units(spark, path), partitions)
 
   /** Long format over a glob/directory pattern — one indexing+decoding task
     * per file, rows carry data_uri (pattern_to_uris, pipeline.py:42-48). */

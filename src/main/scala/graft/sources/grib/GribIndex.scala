@@ -41,6 +41,12 @@ trait GribUnit extends Serializable {
     * with their per-row geometry. */
   def coordOf(k: Int): (Double, Double) = (latOf(k / ni), lonOf(k % ni))
 
+  /** Exact identity of the point set [[coordOf]] walks: every field it
+    * reads, as text. `Double.toString` is exact and NaN-safe, where
+    * case-class equality on a NaN field (a spherical projection's minor
+    * axis) is false. Units with equal keys have identical coordinates. */
+  private[grib] def gridKey: String
+
   final def channel: String = graft.operators.Mover.channelName(
     levelName, levelHeight, stepType, shortName)
 }
@@ -284,6 +290,21 @@ object GribIndex {
     spark.createDataFrame(rdd, if (withUri) longSchemaUri else Grib1Reader.longSchema)
   }
 
+  /** Wide per-channel frame over one file's index: the GRIB normalize path
+    * (sinks.py:251-342) — long rows pivoted on the synthesized channel name
+    * over the coordinate key — carrying the index's [[GridFacts]]. The one
+    * body behind every single-file `readMerged`; each entry point keeps its
+    * own edition and spectral guards on `units`. */
+  private[grib] def readMerged(spark: SparkSession, path: String,
+      units: Seq[GribUnit], partitions: Int): DataFrame = {
+    val long = fromUnits(spark, path, units, partitions)
+      .select("time", "latitude", "longitude", "channel", "value")
+    val merged = graft.operators.Mover.mergeChannels(
+      long, Seq("time", "latitude", "longitude"), "channel", "value",
+      units.map(_.channel).distinct)
+    GridFacts.attach(merged, GridFacts.fromUnits(units))
+  }
+
   /** Distributed multi-file scan: ONE TASK PER FILE indexes and decodes its
     * own file (no driver round-trips — this is what fixes the driver-serial
     * per-file indexing for many-file corpora). A single-path list keeps
@@ -323,9 +344,11 @@ object GribIndex {
     val nPart = math.max(1, math.min(paths.size,
       spark.sparkContext.defaultParallelism))
     val tconf = TaskConf(new Configuration(spark.sparkContext.hadoopConfiguration))
+    // a per-partition distinct, then the driver's: a few dozen names need
+    // no shuffle stage
     spark.sparkContext.parallelize(paths, nPart)
-      .flatMap(path => indexFile(tconf.value, path).map(_.channel))
-      .distinct().collect().sorted.toSeq
+      .mapPartitions(_.flatMap(path => indexFile(tconf.value, path).map(_.channel)).distinct)
+      .collect().distinct.sorted.toSeq
   }
 
   /** Wide per-channel merge over a glob's files: the GRIB normalize path

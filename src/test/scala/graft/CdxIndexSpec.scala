@@ -262,4 +262,40 @@ class CdxIndexSpec extends SparkSpec {
       .filter($"digest" === $"d")
     assert(joinCheck.count() == 15)
   }
+
+  test("a glob read expands on the driver: same rows, no FileStreamSink WARN") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val dir = java.nio.file.Files.createTempDirectory("cdxglob").toString
+    def line(i: Int) = s"com,example)/p$i 20260101120000 " +
+      s"""{"url": "https://example.com/p$i", "offset": "$i", "filename": "f.warc.gz"}"""
+    (0 until 3).foreach(f => CdxIndex.writeGz(f"$dir/cdx-$f%05d.gz", (0 until 4).map(i => line(f * 4 + i))))
+    // a hidden file in the directory is skipped, as Spark's listing skips it
+    CdxIndex.writeGz(s"$dir/_cdx-hidden.gz", Seq(line(99)))
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink").asInstanceOf[CoreLogger]
+    assert(logger.isEnabled(Level.WARN), "the probe's WARN would be logged")
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("cdx-glob-probe", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN)) warned.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    logger.addAppender(appender)
+    val (glob, asDir) = try {
+      (CdxIndex.read(spark, s"$dir/cdx-*.gz").collect(), CdxIndex.read(spark, dir).collect())
+    } finally {
+      logger.removeAppender(appender)
+      appender.stop()
+    }
+    assert(warned.isEmpty, warned.toString)
+    val perFile = (0 until 3).flatMap(f => CdxIndex.read(spark, f"$dir/cdx-$f%05d.gz").collect())
+    assert(glob.map(_.toString).sorted.toSeq == perFile.map(_.toString).sorted)
+    assert(asDir.map(_.toString).sorted.toSeq == perFile.map(_.toString).sorted)
+    assert(glob.length == 12)
+    val e = intercept[IllegalArgumentException](CdxIndex.read(spark, s"$dir/none-*.gz"))
+    assert(e.getMessage.contains("no CDX index files match"), e.getMessage)
+  }
 }
