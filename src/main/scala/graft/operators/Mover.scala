@@ -62,14 +62,17 @@ object Mover {
   }
 
   /** Merge a long-format (coordKeys..., channel, value) frame into the wide
-    * per-channel schema (S3/J2: `xr.merge` of per-variable arrays becomes a
-    * groupBy + pivot on the coordinate key — one shuffle, no N-way join). */
+    * per-channel schema (S3/J2: `xr.merge` of per-variable arrays becomes one
+    * aggregate on the coordinate key with a conditional `combine` per
+    * channel — one shuffle, no N-way join). This is the form Spark's pivot
+    * takes when `PivotFirst` does not apply; `pivot` itself would plan a
+    * second aggregate on (coordKeys, channel) behind its own exchange. */
   def mergeChannels(long: DataFrame, coordKeys: Seq[String], channelCol: String,
       valueCol: String, channels: Seq[String],
-      combine: Column => Column = first(_)): DataFrame =
-    long.groupBy(coordKeys.map(col): _*)
-      .pivot(channelCol, channels)
-      .agg(combine(col(valueCol)))
+      combine: Column => Column = first(_, ignoreNulls = true)): DataFrame = {
+    val wide = channels.map(c => combine(when(col(channelCol) === c, col(valueCol))).as(c))
+    long.groupBy(coordKeys.map(col): _*).agg(wide.head, wide.tail: _*)
+  }
 
   /** Half grid resolution per F5 (bq.py:248-264) — one tiny driver-side job
     * over the distinct coordinate values of a *sample* (first-URI pattern,

@@ -1,11 +1,12 @@
 package graft.operators
 
 import scala.collection.mutable
-import scala.util.matching.Regex
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftPlanBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, IntegerLiteral, Literal, Or}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Limit, LogicalPlan, Offset, UnresolvedWith}
 
-import graft.plans.GeoConstants
+import graft.plans.XqlRules
 
 /** xql-equivalent SQL front-end: a thin sugar layer over `spark.sql`.
   *
@@ -15,18 +16,30 @@ import graft.plans.GeoConstants
   * this layer only re-expresses xql's three *extensions*:
   *
   *  1. a session alias catalog (`.set alias uri`, apply.py:37, 367-386) —
-  *     [[WxSql.set]] registers a parquet path as a temp view;
-  *  2. custom geo predicates `city = 'x'` / `country = 'y'` rewritten to
-  *     bounding-box conjunctions (where.py:140-171, constant.py:16-34);
+  *     [[WxSql.set]] registers a store path as a temp view;
+  *  2. custom geo predicates `city = 'x'` / `country = 'y'` as bounding-box
+  *     conjunctions (where.py:140-171, constant.py:16-34) —
+  *     [[graft.plans.GeoPredicateRule]];
   *  3. `GROUP BY time_date | time_month | time_year` bucketing sugar and
-  *     `{func}_{variable}` aggregate naming (apply.py:56-60, 132-155).
+  *     `{func}_{variable}` aggregate naming (apply.py:56-60, 132-155) —
+  *     [[graft.plans.TimeBucketRule]], [[graft.plans.XqlAggNamingRule]].
+  *
+  * The sugar lives only in those Catalyst resolution rules, so it sees real
+  * attribute and function nodes, never literal content; WxSql never edits
+  * the SQL text. The rules come with [[graft.plans.GraftExtensions]]
+  * (`GraftSession` registers them), and a session without them is refused.
   *
   * Divergences from the reference, by design (SURVEY §7.4): WHERE handles OR
   * correctly (xql evaluates only the first DNF term, where.py:229-238), and
   * ORDER BY/LIMIT/OFFSET follow standard SQL semantics and stay distributed
-  * instead of running in pandas on the driver.
+  * instead of running in pandas on the driver. `xqlCompat` restores the
+  * reference's results on both ([[WxSql.compatPlan]]).
   */
 class WxSql(spark: SparkSession, xqlCompat: Boolean = false) {
+  require(WxSql.hasPlanRules(spark),
+    "WxSql needs the graft resolution rules: build the session with graft.GraftSession, " +
+      "or start it with --conf spark.sql.extensions=graft.plans.GraftExtensions")
+
   private val aliases = mutable.Map.empty[String, String]
 
   /** `.set alias uri` — alias a store path (parquet, zarr, csv, …; format
@@ -39,19 +52,13 @@ class WxSql(spark: SparkSession, xqlCompat: Boolean = false) {
   /** `.show` meta-command analog. */
   def show: Map[String, String] = aliases.toMap
 
-  /** When the session carries the graft Catalyst rules (GraftSession does),
-    * the sugar is applied at the PLAN level — [[graft.plans.GeoPredicateRule]],
-    * [[graft.plans.TimeBucketRule]], [[graft.plans.XqlAggNamingRule]] — which
-    * is immune to string-literal false positives. Sessions built without the
-    * extensions fall back to the (literal-aware) string rewrites. */
-  def sql(query: String): DataFrame = {
-    val q = if (xqlCompat) WxSql.rewriteXqlCompat(query) else query
-    if (WxSql.hasPlanRules(spark)) {
-      // analysis is eager on this thread, so the thread-local scopes the
-      // xql naming to this one query — concurrent spark.sql / WxSql calls
-      // on the same session are unaffected
-      graft.plans.XqlRules.withAggNaming(spark.sql(q))
-    } else spark.sql(WxSql.rewrite(q))
+  /** Analysis is eager on this thread, so the thread-local scopes the xql
+    * naming to this one query — concurrent `spark.sql` / WxSql calls on the
+    * same session are unaffected. */
+  def sql(query: String): DataFrame = XqlRules.withAggNaming {
+    if (!xqlCompat) spark.sql(query)
+    else GraftPlanBridge.ofRows(spark,
+      WxSql.compatPlan(spark.sessionState.sqlParser.parsePlan(query)))
   }
 }
 
@@ -59,171 +66,35 @@ object WxSql {
   def apply(spark: SparkSession): WxSql = new WxSql(spark)
   def apply(spark: SparkSession, xqlCompat: Boolean): WxSql = new WxSql(spark, xqlCompat)
 
-  /** Opt-in bug-for-bug xql semantics (SURVEY §7.4 "known hazards") for
-    * users migrating result-exact workloads:
-    *  - WHERE evaluates only the FIRST top-level OR term (the reference
-    *    computes the full DNF but returns `or_ds[0]`, where.py:229-238);
-    *  - `LIMIT n OFFSET m` slices rows [m, n) of the ORIGINAL result —
-    *    xql applies `iloc[m:]` then `iloc[:n]` against the original start
-    *    (apply.py:326-364) — i.e. standard-SQL `LIMIT max(n-m,0) OFFSET m`.
-    * Default mode keeps correct SQL semantics (the DuckDB oracle's). */
-  def rewriteXqlCompat(query: String): String = {
-    var q = query
-    val lim = """(?is)\bLIMIT\s+(\d+)\s+OFFSET\s+(\d+)""".r
-    q = lim.replaceAllIn(q, m => {
-      val n = m.group(1).toLong
-      val off = m.group(2).toLong
-      s"LIMIT ${math.max(n - off, 0)} OFFSET $off"
-    })
-    val whereBody = """(?is)\bWHERE\b(.*?)(\bGROUP\s+BY\b|\bORDER\s+BY\b|\bLIMIT\b|$)""".r
-    q = whereBody.replaceAllIn(q, m => {
-      val body = m.group(1)
-      val firstTerm = splitTopLevelOr(body).head
-      java.util.regex.Matcher.quoteReplacement(s" WHERE $firstTerm ${m.group(2)}")
-    })
-    q
-  }
-
-  /** Split a predicate on top-level ORs (parenthesis-aware). */
-  private[operators] def splitTopLevelOr(s: String): Seq[String] = {
-    val out = mutable.ArrayBuffer.empty[String]
-    var depth = 0
-    var start = 0
-    var i = 0
-    val up = s.toUpperCase
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ if depth == 0 && i + 4 <= s.length &&
-            up.regionMatches(i, " OR ", 0, 4) =>
-          out += s.substring(start, i).trim
-          start = i + 4
-          i += 3
-        case _ =>
-      }
-      i += 1
-    }
-    out += s.substring(start).trim
-    out.toSeq
-  }
-
-  private val GeoPred: Regex = """(?i)\b(city|country)\s*=\s*'([^']+)'""".r
-  private val TimeBucket: Regex = """(?i)\btime_(date|month|year)\b""".r
-  // AVG(x)/SUM(x)/MIN(x)/MAX(x) in the SELECT list without an explicit alias
-  // don't rewrite when the user aliased it (AS) or when the aggregate is a
-  // sub-expression (followed by an arithmetic or comparison operator)
-  private val AggNoAlias: Regex =
-    """(?i)\b(AVG|SUM|MIN|MAX)\s*\(\s*([A-Za-z_][A-Za-z0-9_]*)\s*\)(?!\s*AS\b)(?!\s*[+\-*/%<>=!])""".r
-  private val ClauseKw: Regex = """(?i)\b(SELECT|FROM|WHERE|GROUP|HAVING|ORDER)\b""".r
-
   /** True when the session's analyzer carries the graft resolution rules
     * (injected by [[graft.plans.GraftExtensions]]). */
   def hasPlanRules(spark: SparkSession): Boolean =
     spark.sessionState.analyzer.extendedResolutionRules
       .exists(_ eq graft.plans.GeoPredicateRule)
 
-  /** Spans (start, endExclusive) of single-quoted string literals, honoring
-    * the SQL `''` escape. Regex rewrites skip matches starting inside one —
-    * sugar tokens inside literal CONTENT must survive untouched. */
-  private[operators] def literalSpans(q: String): Seq[(Int, Int)] = {
-    val out = mutable.ArrayBuffer.empty[(Int, Int)]
-    var i = 0
-    while (i < q.length) {
-      if (q.charAt(i) == '\'') {
-        val start = i
-        i += 1
-        var done = false
-        while (i < q.length && !done) {
-          if (q.charAt(i) == '\'') {
-            if (i + 1 < q.length && q.charAt(i + 1) == '\'') i += 2
-            else { done = true; i += 1 }
-          } else i += 1
-        }
-        out += ((start, i))
-      } else i += 1
-    }
-    out.toSeq
-  }
-
-  private def inLiteral(spans: Seq[(Int, Int)], pos: Int): Boolean =
-    spans.exists { case (s, e) => pos > s && pos < e }
-
-  /** True when the nearest preceding clause keyword (outside literals, at a
-    * parenthesis depth not deeper than `pos`) is SELECT — i.e. `pos` sits in
-    * a SELECT list, not in HAVING/ORDER BY/WHERE. The depth filter keeps a
-    * CLOSED sibling subquery's FROM from shadowing the outer SELECT
-    * (`SELECT (SELECT MAX(b) FROM y), AVG(c) FROM x`), while a containing
-    * subquery's own SELECT (same depth as `pos`) still wins. */
-  private def inSelectList(q: String, spans: Seq[(Int, Int)], pos: Int): Boolean = {
-    val depth = new Array[Int](q.length + 1)
-    var d = 0
-    var i = 0
-    while (i < q.length) {
-      depth(i) = d
-      val c = q.charAt(i)
-      if (!inLiteral(spans, i)) {
-        if (c == '(') d += 1 else if (c == ')') d -= 1
-      }
-      i += 1
-    }
-    depth(q.length) = d
-    ClauseKw.findAllMatchIn(q)
-      .filter(m => m.start < pos && !inLiteral(spans, m.start) &&
-        depth(m.start) <= depth(pos))
-      .foldLeft(Option.empty[String])((_, m) => Some(m.group(1)))
-      .exists(_.equalsIgnoreCase("SELECT"))
-  }
-
-  /** Apply all sugar rewrites; the result is plain Spark SQL. (Fallback path
-    * for sessions without the graft Catalyst rules.) */
-  def rewrite(query: String): String =
-    rewriteAggNaming(rewriteTimeBuckets(rewriteGeoPredicates(query)))
-
-  /** `city='new york'` -> bounding-box conjunction over latitude/longitude
-    * (where.py:140-171). Unknown names raise, mirroring the reference. */
-  def rewriteGeoPredicates(query: String): String = {
-    val spans = literalSpans(query)
-    GeoPred.replaceSomeIn(query, m => {
-      if (inLiteral(spans, m.start)) None
-      else {
-        val kind = m.group(1).toLowerCase
-        val name = m.group(2)
-        val box = GeoConstants.lookup(kind, name).getOrElse(
-          throw new IllegalArgumentException(s"Unsupported $kind: '$name'"))
-        Some(s"(latitude >= ${box.latMin} AND latitude <= ${box.latMax} " +
-          s"AND longitude >= ${box.lonMin} AND longitude <= ${box.lonMax})")
-      }
-    })
-  }
-
-  /** `time_date|time_month|time_year` -> `date_trunc` over the `time`
-    * coordinate (apply.py:56-60: strftime %Y-%m-%d / %Y-%m / %Y). */
-  def rewriteTimeBuckets(query: String): String = {
-    val spans = literalSpans(query)
-    TimeBucket.replaceSomeIn(query, m => {
-      if (inLiteral(spans, m.start)) None
-      else Some(m.group(1).toLowerCase match {
-        case "date" => "date_trunc('DAY', time)"
-        case "month" => "date_trunc('MONTH', time)"
-        case "year" => "date_trunc('YEAR', time)"
+  /** Opt-in bug-for-bug xql semantics (SURVEY §7.4 "known hazards") for
+    * users migrating result-exact workloads, applied to the parsed plan:
+    *  - every WHERE, at any query level (subqueries and CTEs too), keeps only
+    *    the leftmost operand of its top-level OR chain (the reference
+    *    computes the full DNF but returns `or_ds[0]`, where.py:229-238).
+    *    HAVING parses as `UnresolvedHaving`, not `Filter`, and keeps all of
+    *    its terms;
+    *  - `LIMIT n OFFSET m` slices rows [m, n) of the ORIGINAL result — xql
+    *    applies `iloc[m:]` then `iloc[:n]` against the original start
+    *    (apply.py:326-364) — i.e. standard-SQL `LIMIT max(n-m,0) OFFSET m`.
+    * Default mode keeps correct SQL semantics (the DuckDB oracle's). */
+  private[graft] def compatPlan(plan: LogicalPlan): LogicalPlan =
+    plan.transformDownWithSubqueries {
+      case Filter(cond, child) => Filter(firstOrTerm(cond), child)
+      case Limit(IntegerLiteral(n), o @ Offset(IntegerLiteral(m), _)) =>
+        Limit(Literal(math.max(n - m, 0)), o)
+      case w: UnresolvedWith => w.copy(cteRelations = w.cteRelations.map {
+        case (name, q, depth) => (name, q.copy(child = compatPlan(q.child)), depth)
       })
-    })
-  }
+    }
 
-  /** Unaliased aggregates in the SELECT list get the reference's
-    * `{func}_{variable}` output name (apply.py:155 — the reference names
-    * SELECT outputs only; HAVING/ORDER BY aggregates must stay as-is or the
-    * result is invalid SQL). */
-  def rewriteAggNaming(query: String): String = {
-    val spans = literalSpans(query)
-    AggNoAlias.replaceSomeIn(query, m => {
-      if (inLiteral(spans, m.start) || !inSelectList(query, spans, m.start)) None
-      else {
-        val f = m.group(1).toUpperCase
-        val v = m.group(2)
-        Some(s"$f($v) AS ${f.toLowerCase}_$v")
-      }
-    })
+  private def firstOrTerm(e: Expression): Expression = e match {
+    case Or(left, _) => firstOrTerm(left)
+    case other => other
   }
 }

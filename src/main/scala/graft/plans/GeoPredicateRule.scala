@@ -15,9 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * The rule only fires on an UNRESOLVED `city`/`country` attribute: if the
   * relation actually has such a column, normal resolution wins and the
-  * predicate keeps its ordinary meaning. This is the plan-level counterpart
-  * of WxSql.rewriteGeoPredicates (the string-level form that works on
-  * sessions built without graft extensions).
+  * predicate keeps its ordinary meaning.
   */
 object GeoPredicateRule extends Rule[LogicalPlan] {
 
@@ -30,19 +28,23 @@ object GeoPredicateRule extends Rule[LogicalPlan] {
         And(GreaterThanOrEqual(lon, Literal(b.lonMin)), LessThanOrEqual(lon, Literal(b.lonMax))))
     }
 
+  /** `attribute = 'string'` in either operand order, as (lower-cased
+    * attribute name, string). */
+  private object AttrEqString {
+    def unapply(e: Expression): Option[(String, String)] = e match {
+      case EqualTo(l: Literal, a: UnresolvedAttribute) => unapply(EqualTo(a, l))
+      case EqualTo(a: UnresolvedAttribute, Literal(v: UTF8String, StringType)) =>
+        Some((a.name.toLowerCase, v.toString))
+      case _ => None
+    }
+  }
+
   override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperatorsUp {
     case f @ Filter(cond, child) =>
       val rewritten = cond.transformUp {
-        case EqualTo(a: UnresolvedAttribute, Literal(v: UTF8String, StringType))
-            if a.name.equalsIgnoreCase("city") || a.name.equalsIgnoreCase("country") =>
-          boxPredicate(a.name.toLowerCase, v.toString).getOrElse(
-            throw new IllegalArgumentException(
-              s"Unsupported ${a.name.toLowerCase}: '${v.toString}'"))
-        case EqualTo(Literal(v: UTF8String, StringType), a: UnresolvedAttribute)
-            if a.name.equalsIgnoreCase("city") || a.name.equalsIgnoreCase("country") =>
-          boxPredicate(a.name.toLowerCase, v.toString).getOrElse(
-            throw new IllegalArgumentException(
-              s"Unsupported ${a.name.toLowerCase}: '${v.toString}'"))
+        case AttrEqString(kind, name) if kind == "city" || kind == "country" =>
+          boxPredicate(kind, name).getOrElse(
+            throw new IllegalArgumentException(s"Unsupported $kind: '$name'"))
       }
       if (rewritten fastEquals cond) f else Filter(rewritten, child)
   }

@@ -10,8 +10,8 @@ import graft.functions.{DotProduct, HaversineDistance, SquaredDistance}
   *  - [[GeoPredicateRule]]: analysis-time rewrite of `city`/`country`
   *    predicates into bounding boxes (P7);
   *  - [[TimeBucketRule]]: `time_date|time_month|time_year` bucketing sugar;
-  *  - [[XqlAggNamingRule]]: conf-gated `{func}_{var}` aggregate naming for
-  *    WxSql queries;
+  *  - [[XqlAggNamingRule]]: thread-local-gated `{func}_{var}` aggregate
+  *    naming for WxSql queries ([[XqlRules.withAggNaming]]);
   *  - `haversine_km`: the custom codegen scalar [[HaversineDistance]]
   *    available from SQL.
   *

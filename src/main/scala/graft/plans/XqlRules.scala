@@ -7,12 +7,10 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Proj
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.toPrettySQL
 
-/** Plan-level forms of the xql sugar (apply.py:56-60, 132-155) that WxSql
-  * historically applied as regex string rewrites. Operating on the logical
-  * plan makes them immune to the string-level false positives the regexes
-  * had (sugar tokens inside string literals, aggregates in HAVING/ORDER BY):
-  * Catalyst only hands us real attribute/function nodes, never literal
-  * content.
+/** Plan-level forms of the xql sugar (apply.py:56-60, 132-155) behind
+  * WxSql. Operating on the logical plan keeps them clear of sugar tokens
+  * inside string literals and of aggregates in HAVING/ORDER BY: Catalyst
+  * only hands us real attribute/function nodes, never literal content.
   */
 object XqlRules {
   /** Thread-local gate for [[XqlAggNamingRule]]: the `{func}_{var}` output
@@ -89,8 +87,7 @@ object TimeBucketRule extends Rule[LogicalPlan] {
   * list — only top-level entries of Project/Aggregate output lists are
   * touched, so aggregates inside HAVING or ORDER BY (which live in
   * Filter/Sort conditions, or as exprId-referenced extra columns) keep
-  * working — the string-level rewrite used to corrupt those into invalid
-  * SQL. Gated per-thread: see [[XqlRules.withAggNaming]]. */
+  * working. Gated per-thread: see [[XqlRules.withAggNaming]]. */
 object XqlAggNamingRule extends Rule[LogicalPlan] {
   private val Fns = Set("avg", "sum", "min", "max")
 

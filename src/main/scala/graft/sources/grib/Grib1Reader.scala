@@ -140,7 +140,7 @@ object Grib1Reader {
   }
 
   /** Wide per-channel frame: the GRIB normalize path (sinks.py:251-342) —
-    * long rows pivoted on the synthesized channel name over the coordinate
+    * long rows merged on the synthesized channel name over the coordinate
     * key. One header index serves both the channel list and the row scan. */
   def readMerged(spark: SparkSession, path: String, partitions: Int = 0): DataFrame =
     GribIndex.readMerged(spark, path, indexMessages(sessionConf(spark), path), partitions)

@@ -174,7 +174,7 @@ object Grib2 {
         case _ => base
       }
       // ensemble members (templates 4.1/4.11) demux into per-member
-      // channels for the wide pivot — cfgrib's `number` coordinate
+      // channels for the wide merge — cfgrib's `number` coordinate
       // re-expressed in the flat row model; derived products (4.2) name
       // by the eccodes dataType convention (em = mean, es = spread)
       val withEns =
@@ -186,7 +186,7 @@ object Grib2 {
         else if (ensembleMember >= 0) s"${named}_m$ensembleMember" else named
       // probability products (4.5/4.9) demux into per-threshold channels:
       // _p<type>[_l<lower>][_u<upper>], limits with '.'->'p' / '-'->'m'
-      // so the name stays a valid pivot column
+      // so the name stays a valid merge column
       probability match {
         case Some((t, lo, up)) =>
           def fmt(v: Double): String = {

@@ -131,7 +131,7 @@ object GribReader {
     GribIndex.readLongFormatFiles(spark, paths)
   }
 
-  /** Channel-merged frame over a glob/directory pattern; the pivot key
+  /** Channel-merged frame over a glob/directory pattern; the merge key
     * includes data_uri (= the reference's per-URI extract then union). */
   def readMergedGlob(spark: SparkSession, pattern: String): DataFrame = {
     val paths = GribIndex.expand(sessionConf(spark), pattern)

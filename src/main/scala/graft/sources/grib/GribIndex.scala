@@ -291,7 +291,7 @@ object GribIndex {
   }
 
   /** Wide per-channel frame over one file's index: the GRIB normalize path
-    * (sinks.py:251-342) — long rows pivoted on the synthesized channel name
+    * (sinks.py:251-342) — long rows merged on the synthesized channel name
     * over the coordinate key — carrying the index's [[GridFacts]]. The one
     * body behind every single-file `readMerged`; each entry point keeps its
     * own edition and spectral guards on `units`. */
@@ -339,7 +339,7 @@ object GribIndex {
   }
 
   /** Channel inventory of many files from HEADERS only (parallel, one task
-    * per file) — feeds the wide-merge pivot without decoding any data. */
+    * per file) — feeds the wide merge without decoding any data. */
   def channelsOfFiles(spark: SparkSession, paths: Seq[String]): Seq[String] = {
     val nPart = math.max(1, math.min(paths.size,
       spark.sparkContext.defaultParallelism))
@@ -352,7 +352,7 @@ object GribIndex {
   }
 
   /** Wide per-channel merge over a glob's files: the GRIB normalize path
-    * (sinks.py:251-342) applied per file — the pivot key includes data_uri,
+    * (sinks.py:251-342) applied per file — the merge key includes data_uri,
     * which is exactly "extract_rows per URI, then union" in the reference's
     * Beam pipeline. */
   def readMergedFiles(spark: SparkSession, paths: Seq[String]): DataFrame = {

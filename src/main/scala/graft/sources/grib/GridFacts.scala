@@ -43,7 +43,7 @@ private[graft] object GridFacts {
 
   private val Tag = TreeNodeTag[GridFacts]("graft.grib.gridFacts")
 
-  /** Facts over the points of each distinct grid among `units`. The pivot
+  /** Facts over the points of each distinct grid among `units`. The merge
     * groups on latitude/longitude, which folds -0.0 into 0.0 and every NaN
     * into one; the `+ 0.0` and the sort order below do the same. */
   def fromUnits(units: Seq[GribUnit]): GridFacts = {

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.functions._
 
 import graft.functions.{GeoFunctions => G}
@@ -35,6 +37,20 @@ class GeoFunctionsSpec extends SparkSpec {
 }
 
 class WxSqlSpec extends SparkSpec {
+  private def grid = Tables.lineitem(spark, sfDir)
+    .selectExpr("l_shipdate AS time",
+      "((l_orderkey * 131 + l_linenumber * 17) % 3600) / CAST(20 AS DOUBLE) - 90 AS latitude",
+      "((l_orderkey * 89 + l_linenumber * 131) % 7200) / CAST(20 AS DOUBLE) - 180 AS longitude",
+      "l_quantity AS temperature")
+
+  private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq
+
+  private def boxCount(kind: String, name: String): Long = {
+    val b = graft.plans.GeoConstants.lookup(kind, name).get
+    grid.filter(col("latitude").between(b.latMin, b.latMax) &&
+      col("longitude").between(b.lonMin, b.lonMax)).count()
+  }
+
   test("alias catalog + full sugar query end-to-end") {
     val wx = WxSql(spark)
     wx.set("lineitem", s"$sfDir/lineitem.parquet")
@@ -51,48 +67,69 @@ class WxSqlSpec extends SparkSpec {
     assert(df.count() == 5)
   }
 
-  test("geo predicate rewrite expands to a bounding box") {
-    val out = WxSql.rewriteGeoPredicates("SELECT * FROM t WHERE city = 'new york'")
-    assert(out.contains("latitude >= 40.4774") && out.contains("longitude <= -73.7002"))
-    intercept[IllegalArgumentException](
-      WxSql.rewriteGeoPredicates("SELECT 1 WHERE city = 'atlantis'"))
+  test("geo box equals the manual filter; an unknown city is a directed error") {
+    grid.createOrReplaceTempView("wx_geo")
+    val wx = WxSql(spark)
+    for ((kind, name) <- Seq("city" -> "new york", "country" -> "united states")) {
+      val got = wx.sql(s"SELECT count(*) FROM wx_geo WHERE $kind = '$name'").head().getLong(0)
+      assert(got == boxCount(kind, name), s"$kind = '$name'")
+    }
+    assert(boxCount("country", "united states") > 0)
+    val e = intercept[IllegalArgumentException](
+      wx.sql("SELECT * FROM wx_geo WHERE city = 'atlantis'"))
+    assert(e.getMessage.contains("Unsupported city: 'atlantis'"), e.getMessage)
   }
 
-  test("agg naming only when unaliased and not a sub-expression") {
-    assert(WxSql.rewriteAggNaming("SELECT AVG(t), SUM(c) AS total FROM x")
-      == "SELECT AVG(t) AS avg_t, SUM(c) AS total FROM x")
-    assert(WxSql.rewriteAggNaming("SELECT AVG(t) / 2 FROM x")
-      == "SELECT AVG(t) / 2 FROM x")
+  test("agg naming: unaliased gets the xql name, AS wins, a sub-expression keeps Spark's") {
+    Tables.lineitem(spark, sfDir).createOrReplaceTempView("wx_li")
+    val wx = WxSql(spark)
+    assert(wx.sql("SELECT AVG(l_quantity), SUM(l_tax) AS total FROM wx_li").columns.toSeq
+      == Seq("avg_l_quantity", "total"))
+    val half = "SELECT AVG(l_quantity) / 2 FROM wx_li"
+    assert(wx.sql(half).columns.toSeq == spark.sql(half).columns.toSeq)
+    assert(wx.sql(half).columns.head != "avg_l_quantity")
   }
 
-  test("time bucket rewrite") {
-    assert(WxSql.rewriteTimeBuckets("GROUP BY time_month")
-      == "GROUP BY date_trunc('MONTH', time)")
+  test("agg naming: HAVING/ORDER BY aggregates untouched; subquery SELECT lists named") {
+    Tables.lineitem(spark, sfDir).createOrReplaceTempView("wx_li")
+    val wx = WxSql(spark)
+    // (Spark itself cannot resolve a new ORDER BY aggregate above a HAVING)
+    for (tail <- Seq("HAVING AVG(l_tax) > 0 ORDER BY l_returnflag", "ORDER BY MAX(l_extendedprice)")) {
+      val q = s"SELECT l_returnflag, AVG(l_quantity) FROM wx_li GROUP BY l_returnflag $tail"
+      val got = wx.sql(q)
+      assert(got.columns.toSeq == Seq("l_returnflag", "avg_l_quantity"))
+      assert(rows(got) == rows(spark.sql(q)) && got.count() == 3, tail)
+    }
+    def aggNames(df: DataFrame): Seq[Seq[String]] =
+      df.queryExecution.analyzed.collectWithSubqueries { case a: Aggregate => a.output.map(_.name) }
+    // a scalar subquery's own SELECT list is named
+    val sub = wx.sql("SELECT l_returnflag, (SELECT SUM(l_tax) FROM wx_li) FROM wx_li")
+    assert(aggNames(sub) == Seq(Seq("sum_l_tax")))
+    // a CLOSED sibling subquery does not shadow the outer SELECT list
+    val sib = wx.sql("SELECT (SELECT MAX(l_tax) FROM wx_li) AS m, AVG(l_quantity) FROM wx_li")
+    assert(sib.columns.toSeq == Seq("m", "avg_l_quantity"))
+    assert(aggNames(sib).toSet == Set(Seq("m", "avg_l_quantity"), Seq("max_l_tax")))
   }
 
-  test("agg naming is SELECT-list only: HAVING/ORDER BY aggregates untouched") {
-    // the regression: rewriting 'HAVING AVG(q) > 5' into 'AVG(q) AS avg_q > 5'
-    // produced invalid SQL
-    assert(WxSql.rewriteAggNaming(
-      "SELECT AVG(t) FROM x GROUP BY g HAVING AVG(q) > 5 ORDER BY MAX(p)")
-      == "SELECT AVG(t) AS avg_t FROM x GROUP BY g HAVING AVG(q) > 5 ORDER BY MAX(p)")
-    // subquery SELECT lists still rewrite (nearest clause keyword is SELECT)
-    assert(WxSql.rewriteAggNaming("SELECT a, (SELECT SUM(b) FROM y) FROM x")
-      == "SELECT a, (SELECT SUM(b) AS sum_b FROM y) FROM x")
-    // a CLOSED sibling subquery's FROM must not shadow the outer SELECT
-    assert(WxSql.rewriteAggNaming("SELECT (SELECT MAX(b) FROM y) AS m, AVG(c) FROM x")
-      == "SELECT (SELECT MAX(b) AS max_b FROM y) AS m, AVG(c) AS avg_c FROM x")
+  test("time_date, time_month and time_year buckets equal date_trunc") {
+    grid.createOrReplaceTempView("wx_time")
+    val wx = WxSql(spark)
+    for ((sugar, unit) <- Seq("time_date" -> "DAY", "time_month" -> "MONTH", "time_year" -> "YEAR")) {
+      val got = wx.sql(s"SELECT $sugar, count(*) AS n FROM wx_time GROUP BY $sugar ORDER BY $sugar")
+      assert(got.columns.toSeq == Seq(sugar, "n"))
+      assert(rows(got) == rows(spark.sql(s"SELECT date_trunc('$unit', time) AS $sugar, " +
+        "count(*) AS n FROM wx_time GROUP BY 1 ORDER BY 1")), sugar)
+    }
   }
 
-  test("string rewrites never fire inside string literals") {
-    val geo = WxSql.rewriteGeoPredicates(
-      "SELECT 'city = ''atlantis''' AS note FROM t WHERE city = 'new york'")
-    assert(geo.contains("'city = ''atlantis'''"), geo) // literal intact
-    assert(geo.contains("latitude >= 40.4774"), geo)   // real predicate rewritten
-    assert(WxSql.rewriteTimeBuckets("SELECT 'time_month' AS s, time_month FROM t")
-      == "SELECT 'time_month' AS s, date_trunc('MONTH', time) FROM t")
-    assert(WxSql.rewriteAggNaming("SELECT 'AVG(x)' AS s FROM t")
-      == "SELECT 'AVG(x)' AS s FROM t")
+  test("sugar tokens inside string literals survive all three rules") {
+    grid.createOrReplaceTempView("wx_lit")
+    val r = WxSql(spark).sql(
+      "SELECT 'city = ''atlantis''' AS note, 'time_month' AS s, 'AVG(x)' AS a, time_month " +
+        "FROM wx_lit WHERE country = 'united states' LIMIT 1").head()
+    assert(r.getString(0) == "city = 'atlantis'" && r.getString(1) == "time_month" &&
+      r.getString(2) == "AVG(x)")
+    assert(!r.isNullAt(3)) // the real time_month next to the literal is bucketed
   }
 
   test("plan-rule path: sugar in literal content survives; HAVING aggregates work") {
@@ -108,27 +145,71 @@ class WxSqlSpec extends SparkSpec {
         "GROUP BY l_returnflag HAVING AVG(l_quantity) > 0 ORDER BY l_returnflag")
     assert(hav.columns.toSeq == Seq("l_returnflag", "avg_l_quantity"))
     assert(hav.count() == 3)
-    // the conf gate resets: plain spark.sql keeps default aggregate naming
+    // the thread-local gate resets: plain spark.sql keeps default aggregate naming
     val plain = spark.sql("SELECT AVG(l_quantity) FROM li_wx")
     assert(plain.columns.head != "avg_l_quantity")
   }
 
   test("xqlCompat: LIMIT counts from the original start, OR keeps first term") {
-    assert(WxSql.rewriteXqlCompat("SELECT * FROM t LIMIT 20 OFFSET 10")
-      .contains("LIMIT 10 OFFSET 10"))
-    assert(WxSql.rewriteXqlCompat("SELECT * FROM t LIMIT 5 OFFSET 9")
-      .contains("LIMIT 0 OFFSET 9"))
-    val q = WxSql.rewriteXqlCompat(
-      "SELECT a FROM t WHERE (x > 1 AND y < 2) OR z = 3 ORDER BY a")
-    assert(q.contains("WHERE (x > 1 AND y < 2) ORDER BY a") && !q.contains("z = 3"))
+    def parse(q: String) = spark.sessionState.sqlParser.parsePlan(q)
+    def compat(q: String, expected: String): Unit =
+      assert(WxSql.compatPlan(parse(q)) == parse(expected), q)
+    compat("SELECT * FROM t LIMIT 20 OFFSET 10", "SELECT * FROM t LIMIT 10 OFFSET 10")
+    compat("SELECT * FROM t LIMIT 5 OFFSET 9", "SELECT * FROM t LIMIT 0 OFFSET 9")
+    compat("SELECT a FROM t WHERE (x > 1 AND y < 2) OR z = 3 ORDER BY a",
+      "SELECT a FROM t WHERE (x > 1 AND y < 2) ORDER BY a")
     // end-to-end: compat mode returns only the first OR branch
     Tables.lineitem(spark, sfDir).createOrReplaceTempView("li_compat")
-    val compat = WxSql(spark, xqlCompat = true).sql(
+    val compatN = WxSql(spark, xqlCompat = true).sql(
       "SELECT count(*) AS n FROM li_compat WHERE l_returnflag = 'A' OR l_returnflag = 'R'")
       .head().getLong(0)
     val firstOnly = Tables.lineitem(spark, sfDir)
       .filter(col("l_returnflag") === "A").count()
-    assert(compat == firstOnly)
+    assert(compatN == firstOnly)
+  }
+
+  /** `query` in compat mode returns what `firstTermQuery` returns by
+    * default, and (when the two differ) the dropped terms would change it. */
+  private def compatMatches(query: String, firstTermQuery: String): Unit = {
+    val expected = rows(WxSql(spark).sql(firstTermQuery))
+    assert(expected.nonEmpty && rows(WxSql(spark, xqlCompat = true).sql(query)) == expected, query)
+    assert(query == firstTermQuery || rows(WxSql(spark).sql(query)) != expected, query)
+  }
+
+  test("xqlCompat: literal content never moves the WHERE or LIMIT split") {
+    // real rows carry sugar-like literals: line 1 notes 'limit', line 2
+    // ships 'AIR OR RAIL'
+    Tables.lineitem(spark, sfDir)
+      .withColumn("l_comment", when(col("l_linenumber") === 1, lit("limit")).otherwise(lit("-")))
+      .withColumn("l_shipmode", when(col("l_linenumber") === 2, lit("AIR OR RAIL"))
+        .otherwise(lit("RAIL")))
+      .createOrReplaceTempView("li_lits")
+    for (first <- Seq("l_comment = 'limit'", "l_shipmode = 'AIR OR RAIL'")) {
+      val q = s"SELECT l_orderkey, l_linenumber FROM li_lits WHERE $first"
+      compatMatches(s"$q OR l_returnflag = 'R' ORDER BY 1, 2", s"$q ORDER BY 1, 2")
+    }
+    val s = WxSql(spark, xqlCompat = true)
+      .sql("SELECT 'LIMIT 20 OFFSET 10' AS s FROM li_lits LIMIT 1").head().getString(0)
+    assert(s == "LIMIT 20 OFFSET 10")
+  }
+
+  test("xqlCompat: HAVING keeps every OR term; subquery and CTE WHEREs keep the first") {
+    Tables.lineitem(spark, sfDir).createOrReplaceTempView("li_compat")
+    val having = "HAVING l_returnflag = 'A' OR l_returnflag = 'R' ORDER BY l_returnflag"
+    compatMatches(
+      "SELECT l_returnflag, count(*) FROM li_compat WHERE l_quantity > 10 OR l_quantity < 5 " +
+        s"GROUP BY l_returnflag $having",
+      s"SELECT l_returnflag, count(*) FROM li_compat WHERE l_quantity > 10 GROUP BY l_returnflag $having")
+    val global = "SELECT count(*) AS n FROM li_compat WHERE l_quantity > 0 " +
+      "HAVING count(*) > 1000000 OR count(*) > 0 ORDER BY n"
+    compatMatches(global, global)
+    val first = "l_returnflag = 'A'"
+    for (shape <- Seq[String => String](
+        w => s"SELECT count(*) FROM li_compat WHERE l_orderkey IN " +
+          s"(SELECT l_orderkey FROM li_compat WHERE $w)",
+        w => s"SELECT count(*) FROM (SELECT * FROM li_compat WHERE $w) s",
+        w => s"WITH s AS (SELECT * FROM li_compat WHERE $w) SELECT count(*) FROM s"))
+      compatMatches(shape(s"$first OR l_returnflag = 'R'"), shape(first))
   }
 }
 
