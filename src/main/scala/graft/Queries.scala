@@ -605,7 +605,7 @@ object Queries {
       FROM o
       ORDER BY time, latitude, longitude"""))(
       (s, d) => {
-        import graft.sources.grib.{Grib1Reader, Grib1Writer => GW}
+        import graft.sources.grib.{GribReader, Grib1Writer => GW}
         val path = Fixtures.path("q48", d, "q48.grib") { p =>
           val vals = Tables.orders(s, d).orderBy($"o_orderkey").limit(200)
             .select(($"o_orderkey" % 997).cast("double"))
@@ -618,7 +618,7 @@ object Queries {
             decimalScale = 0)
           GW.write(p, Seq(spec(vals.take(100), 0), spec(vals.drop(100), 6)))
         }
-        Grib1Reader.readLongFormat(s, path)
+        GribReader.readLongFormat(s, path)
           .select($"time", $"latitude", $"longitude", $"value")
           .orderBy($"time", $"latitude", $"longitude")
       }),
@@ -636,7 +636,7 @@ object Queries {
       FROM o
       ORDER BY time, latitude, longitude"""))(
       (s, d) => {
-        import graft.sources.grib.{Grib2Reader, Grib2Writer => GW2}
+        import graft.sources.grib.{GribReader, Grib2Writer => GW2}
         val path = Fixtures.path("q50", d, "q50.grib2") { p =>
           val vals = Tables.orders(s, d).orderBy($"o_orderkey").limit(200)
             .select(($"o_orderkey" % 997).cast("double"))
@@ -649,7 +649,7 @@ object Queries {
             forecastTime = fcst, decimalScale = 0)
           GW2.write(p, Seq(spec(vals.take(100), 0), spec(vals.drop(100), 6)))
         }
-        Grib2Reader.readLongFormat(s, path)
+        GribReader.readLongFormat(s, path)
           .select($"time", $"latitude", $"longitude", $"value")
           .orderBy($"time", $"latitude", $"longitude")
       }),
@@ -854,7 +854,7 @@ object Queries {
              value
       FROM i4 ORDER BY latitude, longitude"""))(
       (s, d) => {
-        import graft.sources.grib.{Grib2Reader, GribProjection, Grib2Writer => GW2}
+        import graft.sources.grib.{GribReader, GribProjection, Grib2Writer => GW2}
         val path = Fixtures.path("q140", d, "q140.grib2") { p =>
           val vals = Tables.orders(s, d).orderBy($"o_orderkey").limit(200)
             .select(($"o_orderkey" % 997).cast("double"))
@@ -867,7 +867,7 @@ object Queries {
             decimalScale = 0, projection = Some(merc),
             dxMeters = 50000.0, dyMeters = 50000.0)))
         }
-        Grib2Reader.readLongFormat(s, path)
+        GribReader.readLongFormat(s, path)
           .select(round($"latitude", 6).as("latitude"),
             round($"longitude", 6).as("longitude"), $"value")
           .orderBy($"latitude", $"longitude")
@@ -897,7 +897,7 @@ object Queries {
              value
       FROM g ORDER BY value"""))(
       (s, d) => {
-        import graft.sources.grib.{Grib2Reader, GribProjection, Grib2Writer => GW2}
+        import graft.sources.grib.{GribReader, GribProjection, Grib2Writer => GW2}
         val path = Fixtures.path("q108", d, "q108.grib2") { p =>
           val ks = Tables.orders(s, d).orderBy($"o_orderkey").limit(100)
             .select(($"o_orderkey" % 997).cast("double"))
@@ -911,7 +911,7 @@ object Queries {
             decimalScale = 0, bitsPerValue = 24,
             projection = Some(GribProjection.RotatedLatLon(-40.0, 10.0)))))
         }
-        Grib2Reader.readLongFormat(s, path)
+        GribReader.readLongFormat(s, path)
           .select(round($"latitude", 6).as("latitude"),
             round($"longitude", 6).as("longitude"), $"value")
           .orderBy($"value")
@@ -935,7 +935,7 @@ object Queries {
       FROM o
       ORDER BY short_name, latitude, longitude"""))(
       (s, d) => {
-        import graft.sources.grib.{Grib2Reader, Grib2Writer => GW2}
+        import graft.sources.grib.{GribReader, Grib2Writer => GW2}
         val path = Fixtures.path("q109", d, "q109.grib2") { p =>
           val vals = Tables.orders(s, d).orderBy($"o_orderkey").limit(200)
             .select(($"o_orderkey" % 101).cast("double"))
@@ -952,7 +952,7 @@ object Queries {
             spec(vals.take(100), (1, 1.0, Double.NaN), -1),
             spec(vals.drop(100), (2, 0.5, 2.5), 1)))
         }
-        Grib2Reader.readLongFormat(s, path)
+        GribReader.readLongFormat(s, path)
           .select($"short_name", $"step_type", $"latitude", $"longitude",
             $"value")
           .orderBy($"short_name", $"latitude", $"longitude")
@@ -1049,7 +1049,7 @@ object Queries {
       FROM o
       ORDER BY time, latitude, longitude"""))(
       (s, d) => {
-        import graft.sources.grib.{Grib2Reader, Grib2Writer => GW2}
+        import graft.sources.grib.{GribReader, Grib2Writer => GW2}
         val path = Fixtures.path("q54", d, "q54.grib2") { p =>
           val vals = Tables.orders(s, d).orderBy($"o_orderkey").limit(200)
             .select(($"o_orderkey" % 997).cast("double"))
@@ -1064,7 +1064,7 @@ object Queries {
           GW2.write(p, Seq(spec(vals.take(100), 0, pack = 2),
             spec(vals.drop(100), 6, pack = 3)))
         }
-        Grib2Reader.readLongFormat(s, path)
+        GribReader.readLongFormat(s, path)
           .select($"time", $"latitude", $"longitude", $"value")
           .orderBy($"time", $"latitude", $"longitude")
       }),
@@ -1087,7 +1087,7 @@ object Queries {
       FROM o
       ORDER BY time, latitude, longitude"""))(
       (s, d) => {
-        import graft.sources.grib.{Grib1Reader, Grib1Writer => GW}
+        import graft.sources.grib.{GribReader, Grib1Writer => GW}
         val path = Fixtures.path("q55", d, "q55.grib") { p =>
           val vals = Tables.orders(s, d).orderBy($"o_orderkey").limit(200)
             .select(($"o_orderkey" % 997).cast("double"))
@@ -1100,7 +1100,7 @@ object Queries {
             decimalScale = 0, secondOrder = true, groupSize = 23)
           GW.write(p, Seq(spec(vals.take(100), 0), spec(vals.drop(100), 6)))
         }
-        Grib1Reader.readLongFormat(s, path)
+        GribReader.readLongFormat(s, path)
           .select($"time", $"latitude", $"longitude", $"value")
           .orderBy($"time", $"latitude", $"longitude")
       }),
@@ -1126,7 +1126,7 @@ object Queries {
       WHERE NOT (rn0 >= 100 AND rn0 % 7 = 0)
       ORDER BY time, latitude, longitude"""))(
       (s, d) => {
-        import graft.sources.grib.{Grib2Reader, Grib2Writer => GW2}
+        import graft.sources.grib.{GribReader, Grib2Writer => GW2}
         val path = Fixtures.path("q61", d, "q61.grib2") { p =>
           val vals = Tables.orders(s, d).orderBy($"o_orderkey").limit(200)
             .select(($"o_orderkey" % 997).cast("double"))
@@ -1144,7 +1144,7 @@ object Queries {
           GW2.write(p, Seq(spec(vals.take(100), 0, bits = 16),
             spec(m2, 6, bits = 8)))
         }
-        Grib2Reader.readLongFormat(s, path)
+        GribReader.readLongFormat(s, path)
           .filter($"value".isNotNull) // bitmap-missing points decode as null
           .select($"time", $"latitude", $"longitude", $"value")
           .orderBy($"time", $"latitude", $"longitude")
@@ -1650,7 +1650,7 @@ object Queries {
              value
       FROM t ORDER BY latitude, longitude"""))(
       (s, d) => {
-        import graft.sources.grib.{Grib2Reader, GribProjection, Grib2Writer => GW2}
+        import graft.sources.grib.{GribReader, GribProjection, Grib2Writer => GW2}
         val path = Fixtures.path("q150", d, "q150.grib2") { p =>
           val vals = Tables.orders(s, d).orderBy($"o_orderkey").limit(200)
             .select(($"o_orderkey" % 997).cast("double"))
@@ -1663,7 +1663,7 @@ object Queries {
             decimalScale = 0, projection = Some(tm),
             dxMeters = 25000.0, dyMeters = 20000.0)))
         }
-        Grib2Reader.readLongFormat(s, path)
+        GribReader.readLongFormat(s, path)
           .select(round($"latitude", 6).as("latitude"),
             round($"longitude", 6).as("longitude"), $"value")
           .orderBy($"latitude", $"longitude")
@@ -1886,7 +1886,7 @@ object Queries {
              value
       FROM p ORDER BY latitude, longitude"""))(
       (s, d) => {
-        import graft.sources.grib.{Grib2Reader, GribProjection, Grib2Writer => GW2}
+        import graft.sources.grib.{GribReader, GribProjection, Grib2Writer => GW2}
         val path = Fixtures.path("q154", d, "q154.grib2") { p =>
           val vals = Tables.orders(s, d).orderBy($"o_orderkey").limit(200)
             .select(($"o_orderkey" % 997).cast("double"))
@@ -1905,7 +1905,7 @@ object Queries {
             spaceView = Some(GW2.SpaceView(nrRaw = 6610700, dx = 500,
               dy = 500, xpMilli = 5000, ypMilli = 10000)))))
         }
-        Grib2Reader.readLongFormat(s, path)
+        GribReader.readLongFormat(s, path)
           .select(round($"latitude", 6).as("latitude"),
             round($"longitude", 6).as("longitude"), $"value")
           .orderBy($"latitude", $"longitude")
@@ -1950,7 +1950,7 @@ object Queries {
              value
       FROM p ORDER BY latitude, longitude"""))(
       (s, d) => {
-        import graft.sources.grib.{Grib1Reader, GribProjection, Grib1Writer => GW}
+        import graft.sources.grib.{GribReader, GribProjection, Grib1Writer => GW}
         val path = Fixtures.path("q155", d, "q155.grib") { p =>
           val vals = Tables.orders(s, d).orderBy($"o_orderkey").limit(200)
             .select(($"o_orderkey" % 997).cast("double"))
@@ -1963,7 +1963,7 @@ object Queries {
             decimalScale = 0, projection = Some(lcc),
             dxMeters = 40000.0, dyMeters = 30000.0)))
         }
-        Grib1Reader.readLongFormat(s, path)
+        GribReader.readLongFormat(s, path)
           .select(round($"latitude", 6).as("latitude"),
             round($"longitude", 6).as("longitude"), $"value")
           .orderBy($"latitude", $"longitude")
@@ -2399,7 +2399,7 @@ object Queries {
       JOIN o im ON im.rn0 = 2 * mn.k + 1
       ORDER BY m, n"""))(
       (s, d) => {
-        import graft.sources.grib.{Grib2Reader, Grib2Writer => GW2}
+        import graft.sources.grib.{GribReader, Grib2Writer => GW2}
         val path = Fixtures.path("q100", d, "q100.grib2") { p =>
           val vals = Tables.orders(s, d).orderBy($"o_orderkey").limit(110)
             .select(($"o_orderkey" % 997 - 400).cast("double"))
@@ -2409,7 +2409,7 @@ object Queries {
             110, 1, 0.0, 0.0, 0.0, 0.0, decimalScale = 0, bitsPerValue = 24,
             packing = 51, spectralT = 9, subTruncation = 3, laplacianP = 1.0)))
         }
-        Grib2Reader.readSpectral(s, path)
+        GribReader.readSpectral(s, path)
           .select($"m", $"n", $"re", $"im")
           .orderBy($"m", $"n")
       }),
@@ -2434,7 +2434,7 @@ object Queries {
       JOIN o im ON im.rn0 = 2 * mn.k + 1
       ORDER BY m, n"""))(
       (s, d) => {
-        import graft.sources.grib.{Grib1Reader, Grib1Writer => GW}
+        import graft.sources.grib.{GribReader, Grib1Writer => GW}
         val path = Fixtures.path("q102", d, "q102.grib") { p =>
           val vals = Tables.orders(s, d).orderBy($"o_orderkey").limit(110)
             .select(($"o_orderkey" % 811 - 300).cast("double"))
@@ -2445,7 +2445,7 @@ object Queries {
             tableVersion = 128, decimalScale = 0, bitsPerValue = 24,
             spectralT = 9)))
         }
-        Grib1Reader.readSpectral(s, path)
+        GribReader.readSpectral(s, path)
           .select($"m", $"n", $"re", $"im")
           .orderBy($"m", $"n")
       }),
@@ -2810,7 +2810,7 @@ object Queries {
       WHERE NOT (rn0 >= 100 AND rn0 % 7 = 0)
       ORDER BY time, latitude, longitude"""))(
       (s, d) => {
-        import graft.sources.grib.{Grib2Reader, Grib2Writer => GW2}
+        import graft.sources.grib.{GribReader, Grib2Writer => GW2}
         val path = Fixtures.path("q64", d, "q64.grib2") { p =>
           val vals = Tables.orders(s, d).orderBy($"o_orderkey").limit(200)
             .select(($"o_orderkey" % 997).cast("double"))
@@ -2827,7 +2827,7 @@ object Queries {
           }
           GW2.write(p, Seq(spec(vals.take(100), 0), spec(m2, 6)))
         }
-        Grib2Reader.readLongFormat(s, path)
+        GribReader.readLongFormat(s, path)
           .filter($"value".isNotNull)
           .select($"time", $"latitude", $"longitude", $"value")
           .orderBy($"time", $"latitude", $"longitude")
@@ -2855,7 +2855,7 @@ object Queries {
       WHERE NOT (rn0 >= 100 AND rn0 % 7 = 0)
       ORDER BY time, latitude, longitude"""))(
       (s, d) => {
-        import graft.sources.grib.{Grib2Reader, Grib2Writer => GW2}
+        import graft.sources.grib.{GribReader, Grib2Writer => GW2}
         val path = Fixtures.path("q65", d, "q65.grib2") { p =>
           val vals = Tables.orders(s, d).orderBy($"o_orderkey").limit(200)
             .select(($"o_orderkey" % 1499).cast("double"))
@@ -2872,7 +2872,7 @@ object Queries {
           }
           GW2.write(p, Seq(spec(vals.take(100), 0), spec(m2, 6)))
         }
-        Grib2Reader.readLongFormat(s, path)
+        GribReader.readLongFormat(s, path)
           .filter($"value".isNotNull)
           .select($"time", $"latitude", $"longitude", $"value")
           .orderBy($"time", $"latitude", $"longitude")
@@ -2902,7 +2902,7 @@ object Queries {
       WHERE NOT (rn0 >= 100 AND rn0 % 7 = 0)
       ORDER BY time, latitude, longitude"""))(
       (s, d) => {
-        import graft.sources.grib.{Grib2Reader, Grib2Writer => GW2}
+        import graft.sources.grib.{GribReader, Grib2Writer => GW2}
         val path = Fixtures.path("q80", d, "q80.grib2") { p =>
           val vals = Tables.orders(s, d).orderBy($"o_orderkey").limit(200)
             .select(($"o_orderkey" % 997).cast("double"))
@@ -2920,7 +2920,7 @@ object Queries {
           GW2.write(p, Seq(spec(vals.take(100).map(_ + 0.25), 0, bits = 32),
             spec(m2, 6, bits = 64)))
         }
-        Grib2Reader.readLongFormat(s, path)
+        GribReader.readLongFormat(s, path)
           .filter($"value".isNotNull)
           .select($"time", $"latitude", $"longitude",
             round($"value", 6).as("value"))

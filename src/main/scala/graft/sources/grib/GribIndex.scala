@@ -51,14 +51,12 @@ trait GribUnit extends Serializable {
     levelName, levelHeight, stepType, shortName)
 }
 
-/** Shared long-format builder for SPECTRAL units of either edition: one row
-  * per spherical-harmonic coefficient — (time, short_name, level, m, n, re,
-  * im) in m-major stream order (the layout eccodes exposes as a spectral
+/** Long-format builder for SPECTRAL units of either edition: one row per
+  * spherical-harmonic coefficient — (time, short_name, level, m, n, re, im)
+  * in m-major stream order (the layout eccodes exposes as a spectral
   * message's `values`). One task per field/message. */
 object GribSpectral {
-  def fromUnits(spark: org.apache.spark.sql.SparkSession, path: String,
-      units: Seq[GribUnit], partitions: Int = 0): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.types._
+  def fromUnits(spark: SparkSession, path: String, units: Seq[GribUnit]): DataFrame = {
     require(units.nonEmpty, s"no spectral fields in $path")
     require(units.forall(_.spectralM.isDefined), "non-spectral unit in spectral read")
     val schema = StructType(Seq(
@@ -69,10 +67,8 @@ object GribSpectral {
       StructField("n", LongType, nullable = false),
       StructField("re", DoubleType, nullable = false),
       StructField("im", DoubleType, nullable = false)))
-    val nPart = if (partitions > 0) partitions
-      else math.max(1, math.min(units.size, spark.sparkContext.defaultParallelism))
-    val tconf = graft.sources.TaskConf(
-      new Configuration(spark.sparkContext.hadoopConfiguration))
+    val nPart = math.max(1, math.min(units.size, spark.sparkContext.defaultParallelism))
+    val tconf = TaskConf(new Configuration(spark.sparkContext.hadoopConfiguration))
     val pathLocal = path
     val rdd = spark.sparkContext.parallelize(units, nPart).flatMap { u =>
       graft.sources.RangedIO.rows(pathLocal, tconf) { fin =>
@@ -87,8 +83,7 @@ object GribSpectral {
         var vi = 0
         (0 to mt).iterator.flatMap { m =>
           (m to mt).iterator.map { n =>
-            val r = org.apache.spark.sql.Row(
-              t, name, level, m.toLong, n.toLong, vals(vi), vals(vi + 1))
+            val r = Row(t, name, level, m.toLong, n.toLong, vals(vi), vals(vi + 1))
             vi += 2
             r
           }
@@ -126,97 +121,135 @@ final class BufferedReads(underlying: (Long, Int) => Array[Byte],
   }
 }
 
-/** Unified GRIB indexing and scanning: per-MESSAGE edition dispatch, buffered
-  * header IO, and the distributed multi-file (glob) ingest path — the
-  * reference's primary invocation shape (`pattern_to_uris` then one element
-  * per URI, weather_mv/loader_pipeline/pipeline.py:42-48). */
+/** The one GRIB index and scan, for either edition and mixed-edition
+  * files: per-MESSAGE edition dispatch, buffered header IO, and the
+  * distributed multi-file (glob) ingest path — the reference's primary
+  * invocation shape (`pattern_to_uris` then one element per URI,
+  * weather_mv/loader_pipeline/pipeline.py:42-48). [[messages]] is the only
+  * walk over a file's messages. */
 object GribIndex {
 
-  /** [[Grib1Reader.longSchema]] plus the originating file URI — the
-    * multi-file frames carry provenance like the reference's BQ rows
-    * (sinks.py: data_uri column). */
-  val longSchemaUri: StructType = StructType(
-    StructField("data_uri", StringType, nullable = false) +:
-      Grib1Reader.longSchema.fields.toSeq)
+  val longSchema: StructType = StructType(Seq(
+    StructField("time", TimestampNTZType, nullable = false),
+    StructField("latitude", DoubleType, nullable = false),
+    StructField("longitude", DoubleType, nullable = false),
+    StructField("level", StringType, nullable = false),
+    StructField("height", DoubleType, nullable = false),
+    StructField("step_type", StringType, nullable = false),
+    StructField("short_name", StringType, nullable = false),
+    StructField("channel", StringType, nullable = false),
+    StructField("value", DoubleType, nullable = true)))
 
-  /** Index every decodable unit of a file, dispatching PER MESSAGE on the
-    * edition byte (indicator octet 8) — mixed-edition operational archives
-    * read transparently instead of failing mid-index. */
-  def indexUnits(read: (Long, Int) => Array[Byte], fileLen: Long): Seq[GribUnit] = {
-    val out = Seq.newBuilder[GribUnit]
-    var off = Grib1Reader.nextMessage(read, fileLen, 0L)
+  /** [[longSchema]] plus the originating file URI — the multi-file frames
+    * carry provenance like the reference's BQ rows (sinks.py: data_uri
+    * column). */
+  val longSchemaUri: StructType = StructType(
+    StructField("data_uri", StringType, nullable = false) +: longSchema.fields.toSeq)
+
+  /** Next offset >= `from` where a VALID GRIB message starts. Fast path:
+    * probe `from` directly, so contiguous-message files keep the
+    * header-only-IO indexing shape (no bulk scans). Fallback: scan forward
+    * for the magic (real files carry WMO bulletin wrappers and padding),
+    * validating each hit's edition + total length so ASCII "GRIB" inside
+    * bulletin text can't derail the index. -1 when none. */
+  private def nextMessage(read: (Long, Int) => Array[Byte], fileLen: Long,
+      from: Long): Long = {
+    def valid(off: Long): Boolean = {
+      if (off + 8 > fileLen) return false
+      val b = read(off, math.min(16L, fileLen - off).toInt)
+      if (!(b(0) == 'G' && b(1) == 'R' && b(2) == 'I' && b(3) == 'B')) return false
+      (b(7) & 0xff) match {
+        case 1 =>
+          val total = Grib1.u24(b, 4)
+          total >= 40 && off + total <= fileLen
+        case 2 =>
+          b.length >= 16 && {
+            val total = Grib2.u64(b, 8)
+            total >= 30 && off + total <= fileLen
+          }
+        case _ => false
+      }
+    }
+    if (from + 4 <= fileLen && valid(from)) return from
+    val chunk = 64 * 1024
+    var off = from
+    while (off + 4 <= fileLen) {
+      val len = math.min(chunk.toLong, fileLen - off).toInt
+      val b = read(off, len)
+      var i = 0
+      while (i + 4 <= len) {
+        if (b(i) == 'G' && b(i + 1) == 'R' && b(i + 2) == 'I' && b(i + 3) == 'B' &&
+            valid(off + i))
+          return off + i
+        i += 1
+      }
+      off += math.max(len - 3, 1)
+    }
+    -1L
+  }
+
+  /** Every message of a file as (offset, length, units), dispatching PER
+    * MESSAGE on the edition byte (indicator octet 8), so mixed-edition
+    * operational archives read transparently. An edition-1 message is one
+    * unit; an edition-2 message may carry several fields. Spectral units
+    * are kept — the caller decides. Non-GRIB bytes between messages are
+    * skipped by the magic scan. */
+  def messages(read: (Long, Int) => Array[Byte],
+      fileLen: Long): Seq[(Long, Long, Seq[GribUnit])] = {
+    val out = Seq.newBuilder[(Long, Long, Seq[GribUnit])]
+    var off = nextMessage(read, fileLen, 0L)
     while (off >= 0 && off + 8 <= fileLen) {
-      Grib1.u8(read(off, 8), 7) match {
+      val (units, total) = Grib1.u8(read(off, 8), 7) match {
         case 1 =>
           val m = Grib1.parseMessage(read, off)
-          // spectral (type-50) messages are excluded like their GRIB2 kin;
-          // Grib1Reader.readSpectral reads them
-          if (m.spectral.isEmpty) out += m
-          off = Grib1Reader.nextMessage(read, fileLen, off + m.totalLength)
-        case 2 =>
-          val (fields, total) = Grib2.parseMessage(read, off)
-          // spectral (3.50) fields have no lat/lon row model — excluded from
-          // the gridded index; Grib2Reader.readSpectral reads them
-          out ++= fields.filterNot(_.spectral.isDefined)
-          off = Grib1Reader.nextMessage(read, fileLen, off + total)
+          (Seq(m), m.totalLength.toLong)
+        case 2 => Grib2.parseMessage(read, off)
         case e => throw Grib1.UnsupportedGrib(s"edition $e at offset $off")
       }
+      out += ((off, total, units))
+      off = nextMessage(read, fileLen, off + total)
     }
     out.result()
   }
 
-  /** Mixed-edition walk that keeps each MESSAGE's byte span — the unit of
-    * GRIB virtualization (`Kerchunk.scanGrib` references messages whole).
-    * Returns (offset, length, units); edition-2 messages may carry several
-    * fields. Spectral fields are NOT excluded here — the caller decides. */
+  /** The gridded units of a walk: spectral units have no lat/lon row
+    * model ([[GribReader.readSpectral]] is their access path). */
+  private def gridded(msgs: Seq[(Long, Long, Seq[GribUnit])]): Seq[GribUnit] =
+    msgs.flatMap(_._3).filter(_.spectralM.isEmpty)
+
+  /** Every gridded unit of a file, in file order. */
+  def indexUnits(read: (Long, Int) => Array[Byte], fileLen: Long): Seq[GribUnit] =
+    gridded(messages(read, fileLen))
+
+  /** [[messages]] over a stream the caller opened on `path` and closes:
+    * header-only ranged reads served from a [[BufferedReads]] 64 KiB
+    * window, so a 10k-message file costs O(fileLen / 64 KiB) filesystem
+    * round-trips, not ~4 per message. */
+  private def walk(conf: Configuration, path: String,
+      in: org.apache.hadoop.fs.FSDataInputStream): Seq[(Long, Long, Seq[GribUnit])] = {
+    val p = new Path(path)
+    val fileLen = p.getFileSystem(conf).getFileStatus(p).getLen
+    val raw = (off: Long, len: Int) => {
+      val b = new Array[Byte](len)
+      in.readFully(off, b)
+      b
+    }
+    messages(new BufferedReads(raw, fileLen), fileLen)
+  }
+
+  /** [[messages]] of one file — each message keeps its byte span, the
+    * unit of GRIB virtualization (`Kerchunk.scanGrib`) and of the
+    * byte-copy split ([[GribSplitter]]). */
   def indexMessageSpans(conf: Configuration,
       path: String): Seq[(Long, Long, Seq[GribUnit])] = {
     val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val fileLen = fs.getFileStatus(p).getLen
-    val in = fs.open(p)
-    try {
-      val raw = (off: Long, len: Int) => {
-        val b = new Array[Byte](len)
-        in.readFully(off, b)
-        b
-      }
-      val read = new BufferedReads(raw, fileLen)
-      val out = Seq.newBuilder[(Long, Long, Seq[GribUnit])]
-      var off = Grib1Reader.nextMessage(read, fileLen, 0L)
-      while (off >= 0 && off + 8 <= fileLen) {
-        val total = Grib1.u8(read(off, 8), 7) match {
-          case 1 =>
-            val m = Grib1.parseMessage(read, off)
-            out += ((off, m.totalLength.toLong, Seq(m)))
-            m.totalLength.toLong
-          case 2 =>
-            val (fields, t) = Grib2.parseMessage(read, off)
-            out += ((off, t, fields))
-            t
-          case e => throw Grib1.UnsupportedGrib(s"edition $e at offset $off")
-        }
-        off = Grib1Reader.nextMessage(read, fileLen, off + total)
-      }
-      out.result()
-    } finally in.close()
+    val in = p.getFileSystem(conf).open(p)
+    try walk(conf, path, in) finally in.close()
   }
 
-  /** Header-only index of one file through a buffered reader. */
-  def indexFile(conf: Configuration, path: String): Seq[GribUnit] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val fileLen = fs.getFileStatus(p).getLen
-    val in = fs.open(p)
-    try {
-      val raw = (off: Long, len: Int) => {
-        val b = new Array[Byte](len)
-        in.readFully(off, b)
-        b
-      }
-      indexUnits(new BufferedReads(raw, fileLen), fileLen)
-    } finally in.close()
-  }
+  /** Header-only index of one file's gridded units. */
+  def indexFile(conf: Configuration, path: String): Seq[GribUnit] =
+    gridded(indexMessageSpans(conf, path))
 
   /** Expand a concrete path, glob pattern, or directory into file URIs
     * (S6 `pattern_to_uris`, pipeline.py:42-48; directories list their
@@ -275,10 +308,9 @@ object GribIndex {
     * units spread across tasks, each task ranged-reads exactly its own
     * packed-data spans. `withUri` adds the data_uri column. */
   def fromUnits(spark: SparkSession, path: String, units: Seq[GribUnit],
-      partitions: Int = 0, withUri: Boolean = false): DataFrame = {
+      withUri: Boolean = false): DataFrame = {
     require(units.nonEmpty, s"no GRIB messages in $path")
-    val nPart = if (partitions > 0) partitions
-      else math.max(1, math.min(units.size, spark.sparkContext.defaultParallelism))
+    val nPart = math.max(1, math.min(units.size, spark.sparkContext.defaultParallelism))
     val pathLocal = path
     val uriOpt = if (withUri) Some(path) else None
     val tconf = TaskConf(new Configuration(spark.sparkContext.hadoopConfiguration))
@@ -287,17 +319,16 @@ object GribIndex {
         it.flatMap(u => unitRows(in, u, uriOpt))
       }
     }
-    spark.createDataFrame(rdd, if (withUri) longSchemaUri else Grib1Reader.longSchema)
+    spark.createDataFrame(rdd, if (withUri) longSchemaUri else longSchema)
   }
 
-  /** Wide per-channel frame over one file's index: the GRIB normalize path
-    * (sinks.py:251-342) — long rows merged on the synthesized channel name
-    * over the coordinate key — carrying the index's [[GridFacts]]. The one
-    * body behind every single-file `readMerged`; each entry point keeps its
-    * own edition and spectral guards on `units`. */
+  /** Wide per-channel frame over one file's gridded units: the GRIB
+    * normalize path (sinks.py:251-342) — long rows merged on the
+    * synthesized channel name over the coordinate key — carrying the
+    * index's [[GridFacts]]. The body behind [[GribReader.readMerged]]. */
   private[grib] def readMerged(spark: SparkSession, path: String,
-      units: Seq[GribUnit], partitions: Int): DataFrame = {
-    val long = fromUnits(spark, path, units, partitions)
+      units: Seq[GribUnit]): DataFrame = {
+    val long = fromUnits(spark, path, units)
       .select("time", "latitude", "longitude", "channel", "value")
     val merged = graft.operators.Mover.mergeChannels(
       long, Seq("time", "latitude", "longitude"), "channel", "value",
@@ -322,15 +353,7 @@ object GribIndex {
     val rdd = spark.sparkContext.parallelize(paths, nPart).mapPartitions { files =>
       files.flatMap { path =>
         graft.sources.RangedIO.rows(path, tconf) { in =>
-          val p = new Path(path)
-          val fs = p.getFileSystem(tconf.value)
-          val fileLen = fs.getFileStatus(p).getLen
-          val raw = (off: Long, len: Int) => {
-            val b = new Array[Byte](len)
-            in.readFully(off, b)
-            b
-          }
-          indexUnits(new BufferedReads(raw, fileLen), fileLen)
+          gridded(walk(tconf.value, path, in))
             .iterator.flatMap(u => unitRows(in, u, Some(path)))
         }
       }

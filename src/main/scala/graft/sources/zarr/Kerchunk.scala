@@ -569,7 +569,7 @@ object Kerchunk {
         require(dups.size == 1,
           s"$path: message at offset $off carries $sn ${dups.size} times " +
             "(multiple valid times of one field in one message) — split " +
-            "the message (Grib1Splitter) before virtualizing")
+            "the message into single-field messages before virtualizing")
       }
     // edition-agnostic identity: one variable spanning GRIB1+GRIB2 epochs
     // of an archive stays one array

@@ -214,8 +214,8 @@ class CliRunSpec extends SparkSpec {
       .filterNot(_.startsWith(".")).toSet // drop Hadoop .crc sidecars
     assert(outs == Set("in_2t.grib", "in_10u.grib"))
     val conf = new org.apache.hadoop.conf.Configuration()
-    assert(graft.sources.grib.Grib1Reader
-      .indexMessages(conf, s"$dir/out/in_2t.grib").head.shortName == "2t")
+    assert(graft.sources.grib.GribIndex
+      .indexFile(conf, s"$dir/out/in_2t.grib").head.shortName == "2t")
   }
 
   test("weather-sp splits a NetCDF file by variable (unpivot path)") {

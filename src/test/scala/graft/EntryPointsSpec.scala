@@ -8,8 +8,9 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Rules every driver and dev entry point keeps: one session factory, one
-  * JSON string escaper for the artifacts the driver parses, and one scan
-  * core for the table formats' row keys, kill sets and parquet footers. */
+  * JSON string escaper for the artifacts the driver parses, one scan core
+  * for the table formats' row keys, kill sets and parquet footers, and one
+  * walk over a GRIB file's messages. */
 class EntryPointsSpec extends AnyFunSuite {
 
   test("no session is built outside GraftSession") {
@@ -47,5 +48,18 @@ class EntryPointsSpec extends AnyFunSuite {
       o <- owned if text.contains(o)
     } yield s"$p: $o"
     assert(offenders.isEmpty, s"use graft.sources.TableScan instead: ${offenders.mkString(", ")}")
+  }
+
+  test("GRIB files are walked only in GribIndex") {
+    val main = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val offenders = main.flatMap { p =>
+      val text = Files.readString(p)
+      val walks = p.getFileName.toString != "GribIndex.scala" && text.contains("nextMessage(")
+      val strict = Seq("object Grib1Reader", "object Grib2Reader").filter(text.contains)
+      (if (walks) Seq(s"$p: nextMessage(") else Nil) ++ strict.map(o => s"$p: $o")
+    }
+    assert(offenders.isEmpty,
+      s"walk GRIB messages through GribIndex and read through GribReader: ${offenders.mkString(", ")}")
   }
 }

@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.grib.{Grib1, Grib1Reader, Grib1Writer => GW}
+import org.apache.hadoop.conf.Configuration
+
+import graft.sources.grib.{Grib1, GribIndex, GribReader, GribSplitter, Grib1Writer => GW}
 
 /** Golden tests for the pure-JVM GRIB1 reader: write edition-1 messages with
   * the fixture writer (simple packing, IBM-float reference value, optional
@@ -13,6 +15,10 @@ class Grib1Spec extends SparkSpec {
 
   private val (ni, nj) = (5, 4)
   private val t0 = java.time.LocalDateTime.of(2026, 1, 15, 0, 0)
+
+  /** The file's gridded messages, from the one header index. */
+  private def indexMessages(conf: Configuration, path: String): Seq[Grib1.Message] =
+    GribIndex.indexFile(conf, path).collect { case m: Grib1.Message => m }
 
   private def gridVals(f: (Int, Int) => Double): Seq[Double] =
     for (j <- 0 until nj; i <- 0 until ni) yield f(j, i)
@@ -47,12 +53,12 @@ class Grib1Spec extends SparkSpec {
       ni, nj, la1 = 60.0, lo1 = -10.0, la2 = 45.0, lo2 = 10.0,
       decimalScale = 2, ensembleMember = member)
     GW.write(path, Seq(f(0, 0.0), f(1, 1.0), f(2, 2.0), f(-1, 5.0)))
-    val msgs = Grib1Reader.indexMessages(
+    val msgs = indexMessages(
       new org.apache.hadoop.conf.Configuration(), path)
     assert(msgs.map(_.ensembleMember) == Seq(0, 1, 2, -1))
     assert(msgs.map(_.shortName) == Seq("2t_m0", "2t_m1", "2t_m2", "2t"))
     // members stay distinct channels through the wide merge
-    val wide = Grib1Reader.readMerged(spark, path)
+    val wide = GribReader.readMerged(spark, path)
     val chans = Seq("2t_m0", "2t_m1", "2t_m2", "2t")
       .map(n => s"heightAboveGround_2_00_instant_$n")
     assert(chans.forall(wide.columns.contains), wide.columns.mkString(","))
@@ -75,7 +81,7 @@ class Grib1Spec extends SparkSpec {
   }
 
   test("message headers parse: PDS/GDS fields, channel metadata") {
-    val msgs = Grib1Reader.indexMessages(new org.apache.hadoop.conf.Configuration(), file)
+    val msgs = indexMessages(new org.apache.hadoop.conf.Configuration(), file)
     assert(msgs.size == 5)
     val m = msgs.head
     assert(m.ni == ni && m.nj == nj)
@@ -102,7 +108,7 @@ class Grib1Spec extends SparkSpec {
   }
 
   test("long-format read: exact values at golden points, valid times") {
-    val df = Grib1Reader.readLongFormat(spark, file)
+    val df = GribReader.readLongFormat(spark, file)
     assert(df.count() == 5L * ni * nj)
     // golden row (bq_test.py:247-326 style): 2t at t0, grid corner and interior
     val r = df.filter($"channel" === "heightAboveGround_2_00_instant_2t" &&
@@ -119,7 +125,7 @@ class Grib1Spec extends SparkSpec {
   }
 
   test("bitmap-masked points decode to null, others to exact values") {
-    val tp = Grib1Reader.readLongFormat(spark, file)
+    val tp = GribReader.readLongFormat(spark, file)
       .filter($"channel" === "surface_0_00_accum_tp")
     assert(tp.count() == ni * nj)
     assert(tp.filter($"value".isNull).count() == 1)
@@ -151,7 +157,7 @@ class Grib1Spec extends SparkSpec {
   }
 
   test("mover extract pipeline runs end-to-end on the GRIB hypercube") {
-    val wide = Grib1Reader.readMerged(spark, file)
+    val wide = GribReader.readMerged(spark, file)
     val out = graft.operators.Mover.extractRows(wide, s"file://$file",
       graft.operators.Mover.Options(variables = Seq("2t"),
         importTime = Some("2026-01-15 12:00:00"),
@@ -163,25 +169,26 @@ class Grib1Spec extends SparkSpec {
   }
 
   test("reads are distributed across messages") {
-    val parts = Grib1Reader.readLongFormat(spark, file, partitions = 3)
-    assert(parts.rdd.getNumPartitions == 3)
-    assert(parts.agg(round(sum($"value"), 6)).head().getDouble(0) ==
-      Grib1Reader.readLongFormat(spark, file, partitions = 1)
-        .agg(round(sum($"value"), 6)).head().getDouble(0))
+    val df = GribReader.readLongFormat(spark, file)
+    val want = math.min(5, spark.sparkContext.defaultParallelism)
+    assert(df.rdd.getNumPartitions == want)
+    // every task decodes whole messages: its row count is a multiple of the grid
+    val perTask = df.rdd.glom().map(_.length).collect().toSeq
+    assert(perTask.count(_ > 0) == want && perTask.forall(_ % (ni * nj) == 0))
+    assert(perTask.sum == 5 * ni * nj)
   }
 
   test("grib splitter writes per-key GRIB files by verbatim byte copy") {
-    import graft.sources.grib.Grib1Splitter
     val outDir = java.nio.file.Files.createTempDirectory("gribsplit").toString
-    val outputs = Grib1Splitter.split(spark, file, outDir)
+    val outputs = GribSplitter.split(spark, file, outDir)
     assert(outputs.keySet == Set("2t", "p39", "tp"))
     // each output is a valid GRIB file with exactly its group's messages
     val conf = new org.apache.hadoop.conf.Configuration()
-    val by2t = Grib1Reader.indexMessages(conf, outputs("2t"))
+    val by2t = indexMessages(conf, outputs("2t"))
     assert(by2t.size == 2 && by2t.forall(_.shortName == "2t"))
-    assert(Grib1Reader.indexMessages(conf, outputs("tp")).size == 1)
+    assert(indexMessages(conf, outputs("tp")).size == 1)
     // values survive bit-identically (byte copy, no re-encode)
-    val v = Grib1Reader.readLongFormat(spark, outputs("2t"))
+    val v = GribReader.readLongFormat(spark, outputs("2t"))
       .filter(date_format($"time", "HH") === "00" &&
         $"latitude" === 55.0 && $"longitude" === 0.0).head()
     assert(v.getAs[Double]("value") == 270.0 + 1 + 0.25 * 2)
@@ -199,11 +206,9 @@ class Grib1Spec extends SparkSpec {
     os.write(msg)
     os.write("NNNN".getBytes)
     os.close()
-    val msgs = Grib1Reader.indexMessages(new org.apache.hadoop.conf.Configuration(), p)
+    val msgs = indexMessages(new org.apache.hadoop.conf.Configuration(), p)
     assert(msgs.size == 2)
-    assert(Grib1Reader.readLongFormat(spark, p).count() == 2L * 12)
-    assert(graft.sources.grib.GribReader.edition(
-      new org.apache.hadoop.conf.Configuration(), p) == 1)
+    assert(GribReader.readLongFormat(spark, p).count() == 2L * 12)
   }
 
   test("second-order packing round-trips, including bitmap-masked cells") {
@@ -219,9 +224,9 @@ class Grib1Spec extends SparkSpec {
     GW.write(p, Seq(GW.FieldSpec(167, 105, 2, t0, vals, 10, 6,
       la1 = 50.0, lo1 = 0.0, la2 = 45.0, lo2 = 9.0,
       decimalScale = 1, secondOrder = true, groupSize = 13)))
-    val msgs = Grib1Reader.indexMessages(conf, p)
+    val msgs = indexMessages(conf, p)
     assert(msgs.head.secondOrder)
-    val got = Grib1Reader.readLongFormat(spark, p)
+    val got = GribReader.readLongFormat(spark, p)
       .orderBy($"latitude".desc, $"longitude")
       .select($"value").collect()
       .map(r => if (r.isNullAt(0)) Double.NaN else r.getDouble(0))
@@ -234,20 +239,13 @@ class Grib1Spec extends SparkSpec {
     raw(bdsOff + 13) = (raw(bdsOff + 13) | 0x08).toByte
     val pe = s"$dir/ext.grib"
     java.nio.file.Files.write(java.nio.file.Paths.get(pe), raw)
-    val e = intercept[Grib1.UnsupportedGrib](Grib1Reader.indexMessages(conf, pe))
+    val e = intercept[Grib1.UnsupportedGrib](indexMessages(conf, pe))
     assert(e.getMessage.contains("ECMWF"))
   }
 
-  test("edition 2 and complex packing raise directed errors") {
+  test("complex packing raises a directed error; garbage indexes empty") {
     val conf = new org.apache.hadoop.conf.Configuration()
     val dir = java.nio.file.Files.createTempDirectory("grib2").toString
-    // a REAL edition-2 message handed to the edition-1 reader
-    val p2 = s"$dir/real.grib2"
-    graft.sources.grib.Grib2Writer.write(p2, Seq(
-      graft.sources.grib.Grib2Writer.FieldSpec(0, 0, 0, 103, 2, t0,
-        Seq(1.0, 2.0), 2, 1, 0.0, 0.0, 0.0, 1.0)))
-    val e = intercept[Grib1.UnsupportedGrib](Grib1Reader.indexMessages(conf, p2))
-    assert(e.getMessage.contains("edition 2"))
     // complex-packing flag in an otherwise valid edition-1 message
     val msg = GW.message(GW.FieldSpec(167, 1, 0, t0,
       Seq(1.0, 2.0), 2, 1, 0.0, 0.0, 0.0, 1.0))
@@ -255,14 +253,14 @@ class Grib1Spec extends SparkSpec {
     msg(bdsOff + 3) = (msg(bdsOff + 3) | 0x40).toByte
     val p1 = s"$dir/complex.grib"
     val fs = new java.io.FileOutputStream(p1); fs.write(msg); fs.close()
-    val e2 = intercept[Grib1.UnsupportedGrib](Grib1Reader.indexMessages(conf, p1))
+    val e2 = intercept[Grib1.UnsupportedGrib](indexMessages(conf, p1))
     assert(e2.getMessage.contains("complex"))
     // pure garbage yields an empty index, not a crash (magic-scan validation)
     val pg = s"$dir/garbage.grib"
     val g = new java.io.FileOutputStream(pg)
     g.write("GRIB but not really a message, just prose mentioning GRIB twice".getBytes)
     g.close()
-    assert(Grib1Reader.indexMessages(conf, pg).isEmpty)
+    assert(indexMessages(conf, pg).isEmpty)
   }
 
   test("spectral messages (grid type 50) round-trip coefficient-exact") {
@@ -278,21 +276,21 @@ class Grib1Spec extends SparkSpec {
       ni = nVals, nj = 1, la1 = 0, lo1 = 0, la2 = 0, lo2 = 0,
       tableVersion = 128, decimalScale = 0, bitsPerValue = 24,
       spectralT = t)))
-    val df = Grib1Reader.readSpectral(spark, p)
+    val df = GribReader.readSpectral(spark, p)
     assert(df.count() == nVals / 2)
     val got = df.orderBy($"m", $"n").select($"re", $"im").collect()
       .flatMap(r => Seq(r.getDouble(0), r.getDouble(1))).toSeq
     assert(got == vals)
     assert(df.head().getAs[Double]("level") == 500.0)
     // the gridded index excludes spectral messages (no fake lat/lon rows)
-    assert(Grib1Reader.indexMessages(conf, p).isEmpty)
+    assert(indexMessages(conf, p).isEmpty)
     // pentagonal truncation is a directed error
     val raw = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p))
     raw(8 + 28 + 9) = (t + 1).toByte // K low byte != J in the GDS
     val pBad = s"$dir/pent.grib"
     java.nio.file.Files.write(java.nio.file.Paths.get(pBad), raw)
     val e = intercept[Grib1.UnsupportedGrib](
-      Grib1Reader.readSpectral(spark, pBad))
+      GribReader.readSpectral(spark, pBad))
     assert(e.getMessage.contains("triangular"), e.getMessage)
   }
 
@@ -308,7 +306,7 @@ class Grib1Spec extends SparkSpec {
       decimalScale = 0, projection = Some(merc),
       dxMeters = 50000.0, dyMeters = 60000.0)))
     val (mx0, my0) = merc.forward(10.0, -5.0)
-    Grib1Reader.readLongFormat(spark, pM)
+    GribReader.readLongFormat(spark, pM)
       .select($"latitude", $"longitude", $"value").collect().foreach { r =>
         val k = r.getDouble(2).toInt
         val (lat, lon) = merc.inverse(mx0 + (k % 10) * 50000.0,
@@ -325,7 +323,7 @@ class Grib1Spec extends SparkSpec {
       ni = 10, nj = 5, la1 = -70.0, lo1 = 150.0, la2 = 0, lo2 = 0,
       decimalScale = 0, projection = Some(ps),
       dxMeters = 25000.0, dyMeters = -25000.0)))
-    Grib1Reader.readLongFormat(spark, pP)
+    GribReader.readLongFormat(spark, pP)
       .select($"latitude", $"longitude", $"value").collect().foreach { r =>
         val k = r.getDouble(2).toInt
         // the writer quantizes the first point to MILLIDEGREES; -70/150

@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.grib.{Grib2Reader, Grib2Writer => GW2, GribReader}
+import org.apache.hadoop.conf.Configuration
+
+import graft.sources.grib.{Grib2, Grib2Writer => GW2, GribIndex, GribReader}
 
 /** Golden tests for the GRIB edition-2 reader: templates 3.0/4.0/4.8/5.0,
   * IEEE-float32 reference value, bitmap, cfgrib naming conventions, and the
@@ -12,6 +14,10 @@ class Grib2Spec extends SparkSpec {
 
   private val (ni, nj) = (5, 4)
   private val t0 = java.time.LocalDateTime.of(2026, 3, 1, 0, 0)
+
+  /** Every edition-2 field of the file, spectral ones included. */
+  private def indexFields(conf: Configuration, path: String): Seq[Grib2.Field] =
+    GribIndex.indexMessageSpans(conf, path).flatMap(_._3).collect { case f: Grib2.Field => f }
 
   private def gridVals(f: (Int, Int) => Double): Seq[Double] =
     for (j <- 0 until nj; i <- 0 until ni) yield f(j, i)
@@ -35,7 +41,7 @@ class Grib2Spec extends SparkSpec {
   }
 
   test("field headers parse: grid, product, representation, conventions") {
-    val fs = Grib2Reader.indexFields(new org.apache.hadoop.conf.Configuration(), file)
+    val fs = indexFields(new org.apache.hadoop.conf.Configuration(), file)
     assert(fs.size == 3)
     val m = fs.head
     assert(m.ni == ni && m.nj == nj)
@@ -49,7 +55,7 @@ class Grib2Spec extends SparkSpec {
   }
 
   test("values decode exactly through IEEE ref + simple packing") {
-    val df = Grib2Reader.readLongFormat(spark, file)
+    val df = GribReader.readLongFormat(spark, file)
     assert(df.count() == 3L * ni * nj)
     val r = df.filter($"channel" === "heightAboveGround_2_00_instant_2t" &&
       date_format($"time", "HH") === "00" &&
@@ -73,8 +79,6 @@ class Grib2Spec extends SparkSpec {
         latRes = Some(2.5), lonRes = Some(2.5)))
     assert(out.count() == 2L * ni * nj)
     assert(out.columns.contains("heightAboveGround_2_00_instant_2t"))
-    // and the facade still reads edition-1 files
-    assert(GribReader.edition(new org.apache.hadoop.conf.Configuration(), file) == 2)
   }
 
   test("edition-2 split writes per-shortName GRIB files by message byte copy") {
@@ -83,10 +87,10 @@ class Grib2Spec extends SparkSpec {
     val outputs = GribSplitter.split(spark, file, outDir)
     assert(outputs.keySet == Set("2t", "tp"))
     val conf = new org.apache.hadoop.conf.Configuration()
-    val t2 = Grib2Reader.indexFields(conf, outputs("2t"))
+    val t2 = indexFields(conf, outputs("2t"))
     assert(t2.size == 2 && t2.forall(_.shortName == "2t"))
     // outputs decode identically (verbatim copy)
-    val v = Grib2Reader.readLongFormat(spark, outputs("2t"))
+    val v = GribReader.readLongFormat(spark, outputs("2t"))
       .filter(date_format($"time", "HH") === "06" &&
         $"latitude" === 45.0 && $"longitude" === 10.0).head()
     assert(v.getAs[Double]("value") == 271.0 + 3 + 0.25 * 4)
@@ -99,7 +103,7 @@ class Grib2Spec extends SparkSpec {
     GW2.write(p, Seq(GW2.FieldSpec(0, 0, 0, 100, 32, t0,
       (0 until 4).map(_.toDouble), 2, 2, 50.0, 0.0, 49.0, 1.0,
       levelScaleFactor = -1)))
-    val f = Grib2Reader.indexFields(new org.apache.hadoop.conf.Configuration(), p).head
+    val f = indexFields(new org.apache.hadoop.conf.Configuration(), p).head
     // 32 / 10^-1 = 320 Pa -> isobaricInhPa reports /100
     assert(f.levelValue == 320.0)
     assert(f.levelHeight == 3.2)
@@ -116,10 +120,10 @@ class Grib2Spec extends SparkSpec {
     GW2.write(p, Seq(GW2.FieldSpec(0, 0, 0, 103, 2, t0, vals, ni, nj,
       la1 = 60.0, lo1 = -10.0, la2 = 45.0, lo2 = 10.0,
       decimalScale = 1, packing = 2, groupSize = 5)))
-    val fields = Grib2Reader.indexFields(new org.apache.hadoop.conf.Configuration(), p)
+    val fields = indexFields(new org.apache.hadoop.conf.Configuration(), p)
     assert(fields.head.reprTemplate == 2)
     assert(fields.head.complex.exists(_.spatialOrder == 0))
-    val got = Grib2Reader.readLongFormat(spark, p)
+    val got = GribReader.readLongFormat(spark, p)
       .orderBy($"latitude".desc, $"longitude")
       .select($"value").collect()
       .map(r => if (r.isNullAt(0)) Double.NaN else r.getDouble(0))
@@ -139,10 +143,10 @@ class Grib2Spec extends SparkSpec {
       GW2.write(p, Seq(GW2.FieldSpec(0, 3, 5, 100, 50000, t0, vals, ni, nj,
         la1 = 60.0, lo1 = -10.0, la2 = 45.0, lo2 = 10.0,
         decimalScale = 0, packing = 3, spatialOrder = order, groupSize = 6)))
-      val fields = Grib2Reader.indexFields(new org.apache.hadoop.conf.Configuration(), p)
+      val fields = indexFields(new org.apache.hadoop.conf.Configuration(), p)
       assert(fields.head.reprTemplate == 3)
       assert(fields.head.complex.exists(_.spatialOrder == order))
-      val got = Grib2Reader.readLongFormat(spark, p)
+      val got = GribReader.readLongFormat(spark, p)
         .orderBy($"latitude".desc, $"longitude")
         .select($"value").as[Double].collect()
       assert(got.toSeq == vals, s"order-$order spatial differencing mismatch")
@@ -160,9 +164,9 @@ class Grib2Spec extends SparkSpec {
       GW2.write(p, Seq(GW2.FieldSpec(0, 0, 0, 103, 2, t0, vals, ni, nj,
         la1 = 60.0, lo1 = -10.0, la2 = 45.0, lo2 = 10.0,
         decimalScale = 0, packing = 41, bitsPerValue = bits)))
-      val fields = Grib2Reader.indexFields(new org.apache.hadoop.conf.Configuration(), p)
+      val fields = indexFields(new org.apache.hadoop.conf.Configuration(), p)
       assert(fields.head.reprTemplate == 41)
-      val got = Grib2Reader.readLongFormat(spark, p)
+      val got = GribReader.readLongFormat(spark, p)
         .orderBy($"latitude".desc, $"longitude")
         .select($"value").collect()
         .map(r => if (r.isNullAt(0)) Double.NaN else r.getDouble(0))
@@ -185,10 +189,10 @@ class Grib2Spec extends SparkSpec {
       GW2.write(p, Seq(GW2.FieldSpec(0, 0, 0, 103, 2, t0, vals, ni, nj,
         la1 = 60.0, lo1 = -10.0, la2 = 45.0, lo2 = 10.0,
         decimalScale = 0, packing = 4, bitsPerValue = bits)))
-      val fields = Grib2Reader.indexFields(new org.apache.hadoop.conf.Configuration(), p)
+      val fields = indexFields(new org.apache.hadoop.conf.Configuration(), p)
       assert(fields.head.reprTemplate == 4)
       assert(fields.head.bitsPerValue == bits)
-      val got = Grib2Reader.readLongFormat(spark, p)
+      val got = GribReader.readLongFormat(spark, p)
         .orderBy($"latitude".desc, $"longitude")
         .select($"value").collect()
         .map(r => if (r.isNullAt(0)) Double.NaN else r.getDouble(0))
@@ -213,9 +217,9 @@ class Grib2Spec extends SparkSpec {
       GW2.write(p, Seq(GW2.FieldSpec(0, 0, 0, 103, 2, t0, vals, ni, nj,
         la1 = 60.0, lo1 = -10.0, la2 = 45.0, lo2 = 10.0,
         decimalScale = 0, packing = 40, bitsPerValue = bits)))
-      val fields = Grib2Reader.indexFields(new org.apache.hadoop.conf.Configuration(), p)
+      val fields = indexFields(new org.apache.hadoop.conf.Configuration(), p)
       assert(fields.head.reprTemplate == 40)
-      val got = Grib2Reader.readLongFormat(spark, p)
+      val got = GribReader.readLongFormat(spark, p)
         .orderBy($"latitude".desc, $"longitude")
         .select($"value").collect()
         .map(r => if (r.isNullAt(0)) Double.NaN else r.getDouble(0))
@@ -245,7 +249,7 @@ class Grib2Spec extends SparkSpec {
     val p2 = s"$dir/lossy2.grib2"
     java.nio.file.Files.write(java.nio.file.Paths.get(p2), bytes)
     val e = intercept[graft.sources.grib.Grib1.UnsupportedGrib] {
-      Grib2Reader.indexFields(new org.apache.hadoop.conf.Configuration(), p2)
+      indexFields(new org.apache.hadoop.conf.Configuration(), p2)
     }
     assert(e.getMessage.contains("lossy"))
   }
@@ -339,10 +343,10 @@ class Grib2Spec extends SparkSpec {
     GW2.write(p, Seq(GW2.FieldSpec(0, 0, 0, 103, 2, t0, vals, ni, nj,
       la1 = 60.0, lo1 = -10.0, la2 = 45.0, lo2 = 10.0,
       decimalScale = 1, packing = 42, bitsPerValue = 16)))
-    val fields = Grib2Reader.indexFields(new org.apache.hadoop.conf.Configuration(), p)
+    val fields = indexFields(new org.apache.hadoop.conf.Configuration(), p)
     assert(fields.head.reprTemplate == 42)
     assert(fields.head.ccsds.contains((12, 32, 128))) // preprocess+MSB, J, RSI
-    val got = Grib2Reader.readLongFormat(spark, p)
+    val got = GribReader.readLongFormat(spark, p)
       .orderBy($"latitude".desc, $"longitude")
       .select($"value").collect()
       .map(r => if (r.isNullAt(0)) Double.NaN else r.getDouble(0))
@@ -371,7 +375,7 @@ class Grib2Spec extends SparkSpec {
   }
 
   test("regular Gaussian grids (3.40 and GRIB1 type 4) read with root latitudes") {
-    import graft.sources.grib.{GaussianGrid, Grib1Reader, Grib1Writer => GW}
+    import graft.sources.grib.{GaussianGrid, Grib1Writer => GW}
     val gn = 4
     val lats = GaussianGrid.latitudes(gn) // 8 parallels
     val (gi, gj) = (5, lats.length)
@@ -382,9 +386,9 @@ class Grib2Spec extends SparkSpec {
     GW2.write(p2, Seq(GW2.FieldSpec(0, 0, 0, 103, 2, t0, vals, gi, gj,
       la1 = lats.head, lo1 = 0.0, la2 = lats.last, lo2 = 40.0,
       decimalScale = 1, gaussianN = gn)))
-    val f2 = Grib2Reader.indexFields(new org.apache.hadoop.conf.Configuration(), p2).head
+    val f2 = indexFields(new org.apache.hadoop.conf.Configuration(), p2).head
     assert(f2.gaussianN == gn)
-    val got2 = Grib2Reader.readLongFormat(spark, p2)
+    val got2 = GribReader.readLongFormat(spark, p2)
       .select($"latitude").distinct().orderBy($"latitude".desc)
       .as[Double].collect()
     got2.zip(lats).foreach { case (have, want) =>
@@ -397,14 +401,14 @@ class Grib2Spec extends SparkSpec {
     GW.write(p1, Seq(GW.FieldSpec(167, 105, 2, t0, vals, gi, gj,
       la1 = lats.head, lo1 = 0.0, la2 = lats.last, lo2 = 40.0,
       gaussianN = gn)))
-    val got1 = Grib1Reader.readLongFormat(spark, p1)
+    val got1 = GribReader.readLongFormat(spark, p1)
       .select($"latitude").distinct().orderBy($"latitude".desc)
       .as[Double].collect()
     got1.zip(lats).foreach { case (have, want) =>
       assert(math.abs(have - want) < 1e-9, s"GRIB1 parallel $have vs $want")
     }
     // values land on the right parallels
-    val v = Grib2Reader.readLongFormat(spark, p2)
+    val v = GribReader.readLongFormat(spark, p2)
       .filter($"longitude" === 10.0)
       .orderBy($"latitude".desc).select($"value").as[Double].collect()
     assert(v.toSeq == (0 until gj).map(100.0 * _ + 1.0))
@@ -424,10 +428,10 @@ class Grib2Spec extends SparkSpec {
       ni = 8, nj = pl.size,
       la1 = lats.head, lo1 = 0.0, la2 = lats.last, lo2 = 315.0,
       decimalScale = 0, gaussianN = gn, reducedPl = Some(pl))))
-    val f = Grib2Reader.indexFields(new org.apache.hadoop.conf.Configuration(), p).head
+    val f = indexFields(new org.apache.hadoop.conf.Configuration(), p).head
     assert(f.pl.map(_.toSeq).contains(pl))
     assert(f.nPoints == pl.sum)
-    val df = Grib2Reader.readLongFormat(spark, p)
+    val df = GribReader.readLongFormat(spark, p)
     assert(df.count() == pl.sum)
     // per-row longitude spacing: 360 / pl(row)
     val polar = df.filter($"latitude" > 50).orderBy($"longitude")
@@ -531,11 +535,11 @@ class Grib2Spec extends SparkSpec {
     GW2.write(p, Seq(GW2.FieldSpec(0, 0, 0, 103, 2, t0, vals, gi, gj,
       la1 = 45.0, lo1 = 0.0, la2 = 0, lo2 = 0, decimalScale = 0,
       projection = Some(lcc), dxMeters = 2500.0, dyMeters = 2500.0)))
-    val f = Grib2Reader.indexFields(new org.apache.hadoop.conf.Configuration(), p).head
+    val f = indexFields(new org.apache.hadoop.conf.Configuration(), p).head
     val got = f.projection.get.asInstanceOf[GribProjection.LambertConformal]
     // axes survive the shape-7 centimetre encoding
     assert(math.abs(got.radius - a) < 0.01 && math.abs(got.minorAxis - bAx) < 0.01)
-    val rows = Grib2Reader.readLongFormat(spark, p)
+    val rows = GribReader.readLongFormat(spark, p)
       .orderBy($"value").select($"latitude", $"longitude", $"value").collect()
     assert(rows.length == gi * gj)
     assert(math.abs(rows(0).getDouble(0) - 45.0) < 1e-6)
@@ -564,9 +568,9 @@ class Grib2Spec extends SparkSpec {
     GW2.write(p, Seq(GW2.FieldSpec(0, 0, 0, 103, 2, t0, vals, gi, gj,
       la1 = 35.0, lo1 = -105.0, la2 = 0, lo2 = 0, decimalScale = 0,
       projection = Some(lcc), dxMeters = 3000.0, dyMeters = 3000.0)))
-    val f = Grib2Reader.indexFields(new org.apache.hadoop.conf.Configuration(), p).head
+    val f = indexFields(new org.apache.hadoop.conf.Configuration(), p).head
     assert(f.projection.isDefined && f.dxMeters == 3000.0 && f.dyMeters == 3000.0)
-    val rows = Grib2Reader.readLongFormat(spark, p)
+    val rows = GribReader.readLongFormat(spark, p)
       .orderBy($"value").select($"latitude", $"longitude", $"value").collect()
     assert(rows.length == gi * gj)
     // first point decodes back to (la1, lo1)
@@ -587,7 +591,7 @@ class Grib2Spec extends SparkSpec {
     GW2.write(p2, Seq(GW2.FieldSpec(0, 0, 0, 103, 2, t0, vals, gi, gj,
       la1 = 50.0, lo1 = -100.0, la2 = 0, lo2 = 0, decimalScale = 0,
       projection = Some(ps), dxMeters = 5000.0, dyMeters = 5000.0)))
-    val rows2 = Grib2Reader.readLongFormat(spark, p2)
+    val rows2 = GribReader.readLongFormat(spark, p2)
       .orderBy($"value").select($"latitude", $"longitude").collect()
     assert(math.abs(rows2(0).getDouble(0) - 50.0) < 1e-6)
     assert(math.abs(rows2(0).getDouble(1) + 100.0) < 1e-6)
@@ -605,10 +609,10 @@ class Grib2Spec extends SparkSpec {
     GW2.write(p, Seq(GW2.FieldSpec(0, 0, 0, 103, 2, t0, vals, gi, gj,
       la1 = 35.0, lo1 = -105.0, la2 = 0, lo2 = 0, decimalScale = 0,
       projection = Some(aea), dxMeters = 4000.0, dyMeters = 4000.0)))
-    val f = Grib2Reader.indexFields(
+    val f = indexFields(
       new org.apache.hadoop.conf.Configuration(), p).head
     assert(f.projection.exists(_.isInstanceOf[GribProjection.AlbersEqualArea]))
-    val rows = Grib2Reader.readLongFormat(spark, p)
+    val rows = GribReader.readLongFormat(spark, p)
       .orderBy($"value").select($"latitude", $"longitude", $"value").collect()
     assert(rows.length == gi * gj)
     assert(math.abs(rows(0).getDouble(0) - 35.0) < 1e-6)
@@ -669,11 +673,11 @@ class Grib2Spec extends SparkSpec {
     GW2.write(p, Seq(GW2.FieldSpec(0, 0, 0, 103, 2, t0, vals, gi, gj,
       la1 = 48.0, lo1 = 2.0, la2 = 0, lo2 = 0, decimalScale = 0,
       projection = Some(grs), dxMeters = 5000.0, dyMeters = 5000.0)))
-    val f = Grib2Reader.indexFields(
+    val f = indexFields(
       new org.apache.hadoop.conf.Configuration(), p).head
     assert(f.projection.exists(
       _.isInstanceOf[GribProjection.LambertAzimuthalEqualArea]))
-    val rows = Grib2Reader.readLongFormat(spark, p)
+    val rows = GribReader.readLongFormat(spark, p)
       .orderBy($"value").select($"latitude", $"longitude", $"value").collect()
     assert(rows.length == gi * gj)
     assert(math.abs(rows(0).getDouble(0) - 48.0) < 1e-6)
@@ -710,7 +714,7 @@ class Grib2Spec extends SparkSpec {
       spec((1, 1.0, Double.NaN), -1),
       spec((2, 0.5, 2.5), 1),
       spec((0, 0.25, Double.NaN), 1)))
-    val fs = Grib2Reader.indexFields(new org.apache.hadoop.conf.Configuration(), p)
+    val fs = indexFields(new org.apache.hadoop.conf.Configuration(), p)
     assert(fs.map(_.shortName) ==
       Seq("tp_p1_l1", "tp_p2_l0p5_u2p5", "tp_p0_l0p25"))
     assert(fs(0).stepType == "instant" && fs(1).stepType == "accum")
@@ -721,7 +725,7 @@ class Grib2Spec extends SparkSpec {
     // 4.9 carries the interval end: valid time = ref + 6 h
     assert(fs(1).validTimeEpochSec == fs(0).validTimeEpochSec)
     // values decode exactly; channels stay distinct through the long format
-    val df = Grib2Reader.readLongFormat(spark, p)
+    val df = GribReader.readLongFormat(spark, p)
     assert(df.select($"short_name").distinct().count() == 3)
     val got = df.filter($"short_name" === "tp_p2_l0p5_u2p5")
       .orderBy($"latitude".desc, $"longitude").select($"value")
@@ -759,7 +763,7 @@ class Grib2Spec extends SparkSpec {
         lo2 = lo1 + (ni - 1) * 0.5,
         forecastTime = 3, statProcess = statP, decimalScale = 0,
         ensembleMember = member, probability = prob, projection = rot)))
-      val f = Grib2Reader.indexFields(conf, p).head
+      val f = indexFields(conf, p).head
       // exact value decode regardless of the header combination
       val data = {
         val raf = new java.io.RandomAccessFile(p, "r")
@@ -804,8 +808,8 @@ class Grib2Spec extends SparkSpec {
     val pStd = s"$dir/std.grib2"; val pCus = s"$dir/cus.grib2"
     write(pStd, r0); write(pCus, rCustom)
     val conf = new org.apache.hadoop.conf.Configuration()
-    val fStd = Grib2Reader.indexFields(conf, pStd).head
-    val fCus = Grib2Reader.indexFields(conf, pCus).head
+    val fStd = indexFields(conf, pStd).head
+    val fCus = indexFields(conf, pCus).head
     assert(fStd.projection.get
       .asInstanceOf[GribProjection.LambertConformal].radius == r0)
     assert(fCus.projection.get
@@ -828,17 +832,17 @@ class Grib2Spec extends SparkSpec {
     raw(s3 + 14) = 2 // oblate IAU-65
     val pObl = s"$dir/obl.grib2"
     java.nio.file.Files.write(java.nio.file.Paths.get(pObl), raw)
-    val lObl = Grib2Reader.indexFields(conf, pObl).head.projection.get
+    val lObl = indexFields(conf, pObl).head.projection.get
       .asInstanceOf[GribProjection.LambertConformal]
     assert(lObl.radius == 6378160.0 && lObl.minorAxis == 6356775.0)
     // and the figure changes interior coordinates vs the sphere
-    val (laO, loO) = Grib2Reader.indexFields(conf, pObl).head.coordOf(11)
+    val (laO, loO) = indexFields(conf, pObl).head.coordOf(11)
     assert(math.abs(laO - laS) > 1e-4 || math.abs(loO - loS) > 1e-4)
     // a reserved shape code still fails directed
     raw(s3 + 14) = 12
     val pBad = s"$dir/bad.grib2"
     java.nio.file.Files.write(java.nio.file.Paths.get(pBad), raw)
-    val e = intercept[Exception] { Grib2Reader.indexFields(conf, pBad) }
+    val e = intercept[Exception] { indexFields(conf, pBad) }
     assert(e.getMessage.contains("shape of earth 12"), e.getMessage)
   }
 
@@ -867,8 +871,8 @@ class Grib2Spec extends SparkSpec {
     putU32At(s3 + 59, 3L)   // lo2 = 1
     val p2 = s"$dir/basic.grib2"
     java.nio.file.Files.write(java.nio.file.Paths.get(p2), raw)
-    val micro = Grib2Reader.indexFields(conf, p).head
-    val basic = Grib2Reader.indexFields(conf, p2).head
+    val micro = indexFields(conf, p).head
+    val basic = indexFields(conf, p2).head
     (0 until 12).foreach { k =>
       val (la1c, lo1c) = micro.coordOf(k)
       val (la2c, lo2c) = basic.coordOf(k)
@@ -880,7 +884,7 @@ class Grib2Spec extends SparkSpec {
   }
 
   test("rotated lat/lon: pole math, GRIB2 3.1 and GRIB1 type 10 read unrotated") {
-    import graft.sources.grib.{GribProjection, Grib1Reader, Grib1Writer => GW}
+    import graft.sources.grib.{GribProjection, Grib1Writer => GW}
     import GribProjection.RotatedLatLon
     // unrotated pole is the identity
     val id = RotatedLatLon(-90.0, 0.0)
@@ -912,9 +916,9 @@ class Grib2Spec extends SparkSpec {
     GW2.write(p2, Seq(GW2.FieldSpec(0, 0, 0, 103, 2, t0, vals, gi, gj,
       la1 = 1.5, lo1 = -2.0, la2 = -1.5, lo2 = 2.0, decimalScale = 0,
       projection = Some(rot))))
-    val f = Grib2Reader.indexFields(new org.apache.hadoop.conf.Configuration(), p2).head
+    val f = indexFields(new org.apache.hadoop.conf.Configuration(), p2).head
     assert(f.projection.contains(rot))
-    val rows = Grib2Reader.readLongFormat(spark, p2)
+    val rows = GribReader.readLongFormat(spark, p2)
       .orderBy($"value").select($"latitude", $"longitude", $"value").collect()
     assert(rows.length == gi * gj)
     rows.zipWithIndex.foreach { case (r, k) =>
@@ -931,7 +935,7 @@ class Grib2Spec extends SparkSpec {
     val p1 = s"$dir/rot.grib"
     GW.write(p1, Seq(GW.FieldSpec(167, 105, 2, t0, vals, ni = gi, nj = gj,
       la1 = 1.5, lo1 = -2.0, la2 = -1.5, lo2 = 2.0, rotated = Some(rot1))))
-    val rows1 = Grib1Reader.readLongFormat(spark, p1)
+    val rows1 = GribReader.readLongFormat(spark, p1)
       .orderBy($"value").select($"latitude", $"longitude", $"value").collect()
     assert(rows1.length == gi * gj)
     rows1.zipWithIndex.foreach { case (r, k) =>
@@ -943,7 +947,7 @@ class Grib2Spec extends SparkSpec {
   }
 
   test("Mercator grids (3.10) and GRIB1 reduced Gaussian read natively") {
-    import graft.sources.grib.{GaussianGrid, GribProjection, Grib1Reader, Grib1Writer => GW}
+    import graft.sources.grib.{GaussianGrid, GribProjection, Grib1Writer => GW}
     val dir = java.nio.file.Files.createTempDirectory("merc").toString
     // Mercator round-trip
     val merc = GribProjection.Mercator(lad = 20.0)
@@ -955,7 +959,7 @@ class Grib2Spec extends SparkSpec {
     GW2.write(pm, Seq(GW2.FieldSpec(0, 0, 0, 103, 2, t0, vals, 4, 3,
       la1 = -5.0, lo1 = 100.0, la2 = 0, lo2 = 0, decimalScale = 0,
       projection = Some(merc), dxMeters = 20000.0, dyMeters = 20000.0)))
-    val rows = Grib2Reader.readLongFormat(spark, pm)
+    val rows = GribReader.readLongFormat(spark, pm)
       .orderBy($"value").select($"latitude", $"longitude").collect()
     assert(math.abs(rows(0).getDouble(0) + 5.0) < 1e-6)
     assert(math.abs(rows(0).getDouble(1) - 100.0) < 1e-6)
@@ -969,7 +973,7 @@ class Grib2Spec extends SparkSpec {
     GW.write(p1, Seq(GW.FieldSpec(167, 105, 2, t0, rvals, ni = 8, nj = pl.size,
       la1 = lats.head, lo1 = 0.0, la2 = lats.last, lo2 = 315.0,
       gaussianN = gn, reducedPl = Some(pl))))
-    val df = Grib1Reader.readLongFormat(spark, p1)
+    val df = GribReader.readLongFormat(spark, p1)
     assert(df.count() == pl.sum)
     val polar = df.filter($"latitude" > 50).orderBy($"longitude")
       .select($"longitude").as[Double].collect()
@@ -988,7 +992,7 @@ class Grib2Spec extends SparkSpec {
       forecastTime = 6, decimalScale = 2, statProcess = stat,
       ensembleMember = m)
     GW2.write(p, Seq(member(0, -1), member(1, -1), member(2, 1)))
-    val fields = Grib2Reader.indexFields(new org.apache.hadoop.conf.Configuration(), p)
+    val fields = indexFields(new org.apache.hadoop.conf.Configuration(), p)
     assert(fields.map(_.ensembleMember) == Seq(0, 1, 2))
     assert(fields(0).shortName == "2t_m0" && fields(1).shortName == "2t_m1")
     assert(fields(2).stepType == "accum") // 4.11 carries the interval stat
@@ -996,13 +1000,13 @@ class Grib2Spec extends SparkSpec {
     // ENS means of accumulations) mean/spread channels
     val pd = s"$dir/derived.grib2"
     GW2.write(pd, Seq(member(1000, -1), member(1004, -1), member(1000, 1)))
-    val dFields = Grib2Reader.indexFields(new org.apache.hadoop.conf.Configuration(), pd)
+    val dFields = indexFields(new org.apache.hadoop.conf.Configuration(), pd)
     assert(dFields.map(_.shortName) == Seq("2t_em", "2t_es", "2t_em"))
     assert(dFields.map(_.stepType) == Seq("instant", "instant", "accum"))
     // 4.12 carries the interval end explicitly: valid = ref + 6 h
     assert(dFields(2).intervalEndEpochSec ==
       dFields(0).refTimeEpochSec + 6 * 3600)
-    val merged = Grib2Reader.readMerged(spark, p)
+    val merged = GribReader.readMerged(spark, p)
     val cols = merged.columns.filter(_.contains("_m"))
     assert(cols.length == 3, s"member channels: ${cols.toSeq}")
     // member values stay separate through the pivot
@@ -1021,7 +1025,7 @@ class Grib2Spec extends SparkSpec {
     val p = s"$dir/bad.grib2"
     val os = new java.io.FileOutputStream(p); os.write(raw); os.close()
     val e = intercept[graft.sources.grib.Grib1.UnsupportedGrib](
-      Grib2Reader.indexFields(new org.apache.hadoop.conf.Configuration(), p))
+      indexFields(new org.apache.hadoop.conf.Configuration(), p))
     assert(e.getMessage.contains("grid template"))
     // a 5.0-sized section claiming template 5.50 is malformed (truncated)
     val raw2 = GW2.message(GW2.FieldSpec(0, 0, 0, 103, 2, t0,
@@ -1030,7 +1034,7 @@ class Grib2Spec extends SparkSpec {
     val p2 = s"$dir/bad50.grib2"
     val os2 = new java.io.FileOutputStream(p2); os2.write(raw2); os2.close()
     val e2 = intercept[graft.sources.grib.Grib1.UnsupportedGrib](
-      Grib2Reader.indexFields(new org.apache.hadoop.conf.Configuration(), p2))
+      indexFields(new org.apache.hadoop.conf.Configuration(), p2))
     assert(e2.getMessage.contains("5.50") || e2.getMessage.contains("template 5."))
     // column-major / boustrophedonic scan orders fail fast in both editions
     // (interpolation would misplace every non-first row silently)
@@ -1041,7 +1045,7 @@ class Grib2Spec extends SparkSpec {
       val p3 = s"$dir/scan$bit.grib2"
       java.nio.file.Files.write(java.nio.file.Paths.get(p3), r3)
       val e3 = intercept[graft.sources.grib.Grib1.UnsupportedGrib](
-        Grib2Reader.indexFields(new org.apache.hadoop.conf.Configuration(), p3))
+        indexFields(new org.apache.hadoop.conf.Configuration(), p3))
       assert(e3.getMessage.contains("scan mode"), e3.getMessage)
       val g1 = graft.sources.grib.Grib1Writer.message(
         graft.sources.grib.Grib1Writer.FieldSpec(167, 105, 2, t0,
@@ -1050,8 +1054,7 @@ class Grib2Spec extends SparkSpec {
       val p4 = s"$dir/scan$bit.grib"
       java.nio.file.Files.write(java.nio.file.Paths.get(p4), g1)
       val e4 = intercept[graft.sources.grib.Grib1.UnsupportedGrib](
-        graft.sources.grib.Grib1Reader.indexMessages(
-          new org.apache.hadoop.conf.Configuration(), p4))
+        GribIndex.indexFile(new org.apache.hadoop.conf.Configuration(), p4))
       assert(e4.getMessage.contains("scan mode"), e4.getMessage)
     }
   }
@@ -1073,10 +1076,10 @@ class Grib2Spec extends SparkSpec {
     GW2.write(p51, Seq(spec(51, sub = 3, p = 1.0)))
 
     // header parse: truncation + spectral params land on the Field
-    val f50 = Grib2Reader.indexFields(new org.apache.hadoop.conf.Configuration(), p50).head
+    val f50 = indexFields(new org.apache.hadoop.conf.Configuration(), p50).head
     assert(f50.spectral.exists(s => s.m == t && s.template == 50))
     assert(f50.spectral.get.realPart00 == vals.head)
-    val f51 = Grib2Reader.indexFields(new org.apache.hadoop.conf.Configuration(), p51).head
+    val f51 = indexFields(new org.apache.hadoop.conf.Configuration(), p51).head
     val sp51 = f51.spectral.get
     assert(sp51.template == 51 && sp51.subT == 3 && sp51.laplacianP == 1.0)
     assert(sp51.ts == 2 * (3 + 1) * (3 + 2) / 2) // IEEE subset value count
@@ -1084,7 +1087,7 @@ class Grib2Spec extends SparkSpec {
     // value decode: both packings reproduce every coefficient exactly
     // (integer values, E=0, D=0, integer Laplacian scaling)
     for (p <- Seq(p50, p51)) {
-      val df = Grib2Reader.readSpectral(spark, p)
+      val df = GribReader.readSpectral(spark, p)
       assert(df.columns.toSeq ==
         Seq("time", "short_name", "level", "m", "n", "re", "im"))
       assert(df.count() == nCoeff)
@@ -1097,7 +1100,7 @@ class Grib2Spec extends SparkSpec {
     }
     // the grid long-format reader refuses to fake lat/lon for spectral data
     val eg = intercept[graft.sources.grib.Grib1.UnsupportedGrib](
-      Grib2Reader.readLongFormat(spark, p50))
+      GribReader.readLongFormat(spark, p50))
     assert(eg.getMessage.contains("readSpectral"), eg.getMessage)
     // pentagonal (non-triangular) truncation is a directed error
     val raw = GW2.message(spec(50))
@@ -1105,7 +1108,7 @@ class Grib2Spec extends SparkSpec {
     val pBad = s"$dir/pent.grib2"
     val os = new java.io.FileOutputStream(pBad); os.write(raw); os.close()
     val e = intercept[graft.sources.grib.Grib1.UnsupportedGrib](
-      Grib2Reader.indexFields(new org.apache.hadoop.conf.Configuration(), pBad))
+      indexFields(new org.apache.hadoop.conf.Configuration(), pBad))
     assert(e.getMessage.contains("triangular"), e.getMessage)
   }
 
@@ -1128,7 +1131,7 @@ class Grib2Spec extends SparkSpec {
     msg(off + 59) = (msg(off + 59) | 0x80).toByte
     val p = s"$dir/negi.grib2"
     java.nio.file.Files.write(java.nio.file.Paths.get(p), msg)
-    val rows = Grib2Reader.readLongFormat(spark, p)
+    val rows = GribReader.readLongFormat(spark, p)
       .orderBy($"value").select($"latitude", $"longitude", $"value").collect()
     val (x0, y0) = merc.forward(10.0, 30.0)
     rows.foreach { r =>
@@ -1156,7 +1159,7 @@ class Grib2Spec extends SparkSpec {
       projection = Some(geos), dxMeters = 1.0, dyMeters = -1.0,
       spaceView = Some(GW2.SpaceView(nrRaw = 6610700, dx = 500, dy = 500,
         xpMilli = -248500, ypMilli = 0)))))
-    val rows = Grib2Reader.readLongFormat(spark, p)
+    val rows = GribReader.readLongFormat(spark, p)
       .orderBy($"value")
       .select($"latitude", $"longitude", $"value").collect()
     assert(rows.length == 4)
@@ -1194,7 +1197,7 @@ class Grib2Spec extends SparkSpec {
     (0 until 4).foreach(i => msg(k0At + i) = ((bits >> (8 * (3 - i))) & 0xff).toByte)
     val p = s"$dir/tm.grib2"
     java.nio.file.Files.write(java.nio.file.Paths.get(p), msg)
-    val rows = Grib2Reader.readLongFormat(spark, p)
+    val rows = GribReader.readLongFormat(spark, p)
       .orderBy($"value").select($"latitude", $"longitude", $"value")
       .collect()
     assert(rows.length == 50)

@@ -35,11 +35,6 @@ class GribIndexSpec extends SparkSpec {
       Seq("heightAboveGround_2_00_instant_2t"))
     val vals = df.select($"value").as[Double].collect().toSet
     assert((1 to 24).map(_.toDouble).toSet == vals)
-    // the edition-strict readers raise DIRECTED errors on the mixed file
-    val e1 = intercept[Grib1.UnsupportedGrib](Grib1Reader.indexMessages(conf, path))
-    assert(e1.getMessage.contains("GribReader"))
-    val e2 = intercept[Grib1.UnsupportedGrib](Grib2Reader.indexMessages(conf, path))
-    assert(e2.getMessage.contains("GribReader"))
   }
 
   test("header indexing issues O(file/64KiB) reads on a 10k-message file") {

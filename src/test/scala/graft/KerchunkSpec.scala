@@ -262,7 +262,7 @@ class KerchunkSpec extends SparkSpec {
   }
 
   // ------------------------------------------------------------ GRIB2
-  import graft.sources.grib.{Grib2Writer => GW2, Grib2Reader}
+  import graft.sources.grib.{Grib2Writer => GW2, GribReader}
 
   private def gSpec(values: Seq[Double], fcst: Int,
       disc: Int = 0, cat: Int = 0, num: Int = 0, lvlType: Int = 103,
@@ -291,7 +291,7 @@ class KerchunkSpec extends SparkSpec {
     val got = df.orderBy($"time", $"latitude", $"longitude")
       .select($"time", $"latitude", $"longitude", $"2t", $"msl")
       .collect().toSeq
-    val merged = Grib2Reader.readMerged(spark, path)
+    val merged = GribReader.readMerged(spark, path)
     val c2t = graft.operators.Mover.channelName(
       "heightAboveGround", 2.0, "instant", "2t")
     val cMsl = graft.operators.Mover.channelName(
@@ -353,7 +353,7 @@ class KerchunkSpec extends SparkSpec {
     assert(df.count() == 3 * 2 * 20)
     assert(df.rdd.getNumPartitions == 6)
     val want = (1 to 3).flatMap { n =>
-      Grib2Reader.readMerged(spark, s"$dir/d$n.grib2")
+      GribReader.readMerged(spark, s"$dir/d$n.grib2")
         .select($"time", $"latitude", $"longitude",
           col(graft.operators.Mover.channelName(
             "heightAboveGround", 2.0, "instant", "2t"))).collect()
@@ -427,7 +427,7 @@ class KerchunkSpec extends SparkSpec {
       .select($"latitude", $"longitude", $"2t")
       .collect().map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2)))
       .sortBy(t => (t._1, t._2)).toSeq
-    val want = Grib2Reader.readMerged(spark, path)
+    val want = GribReader.readMerged(spark, path)
       .filter($"time" === java.time.LocalDateTime.of(2026, 4, 1, 0, 0))
       .select($"latitude", $"longitude",
         col(graft.operators.Mover.channelName("heightAboveGround", 2.0,
@@ -509,7 +509,7 @@ class KerchunkSpec extends SparkSpec {
     val got = df.select($"latitude", $"longitude", $"2t")
       .collect().map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2)))
       .sortBy(t => (t._1, t._2)).toSeq
-    val want = Grib2Reader.readMerged(spark, path)
+    val want = GribReader.readMerged(spark, path)
       .select($"latitude", $"longitude",
         col(graft.operators.Mover.channelName("heightAboveGround", 2.0,
           "instant", "2t")))
@@ -1027,7 +1027,7 @@ class KerchunkSpec extends SparkSpec {
     val path = s"$dir/multi.grib2"
     java.nio.file.Files.write(java.nio.file.Paths.get(path), o.toByteArray)
     // sanity: the spliced message parses as TWO fields of one message
-    assert(Grib2Reader.readLongFormat(spark, path).count() == 40)
+    assert(GribReader.readLongFormat(spark, path).count() == 40)
     val e = intercept[IllegalArgumentException] {
       Kerchunk.scanGrib(conf, path)
     }

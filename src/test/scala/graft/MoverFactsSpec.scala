@@ -13,8 +13,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.operators.Mover
 import graft.sources.FormatRegistry
-import graft.sources.grib.{Grib1Reader, Grib1Writer, Grib2, Grib2Reader, Grib2Writer,
-  GribIndex, GribProjection, GribReader, GridFacts}
+import graft.sources.grib.{Grib1Writer, Grib2, Grib2Writer, GribIndex, GribProjection,
+  GribReader, GridFacts}
 import graft.sources.netcdf.{NetCDF3, NetCDF3Writer}
 
 /** The mover's grid facts from the GRIB header index: on the reader's own
@@ -112,7 +112,7 @@ class MoverFactsSpec extends SparkSpec {
   test("regular GRIB2 grid: facts path launches no job and equals the fallback") {
     val path = regular(tmp("factsreg"))
     val withArea = opts.copy(area = Some(Mover.Area(north = 49, west = -1, south = 47, east = 2)))
-    Seq(FormatRegistry.open(spark, path), Grib2Reader.readMerged(spark, path)).foreach { ds =>
+    Seq(FormatRegistry.open(spark, path), GribReader.readMerged(spark, path)).foreach { ds =>
       val f = factsMatchSpark(ds)
       assert(f.firstTime.contains(t0))
       val (fast, c) = counted(Mover.extractRows(ds, path, withArea))
@@ -140,15 +140,14 @@ class MoverFactsSpec extends SparkSpec {
     val lccOut = sameAsFallback(lccDs, lcc,
       opts.copy(area = Some(Mover.Area(north = la + 0.05, west = lo, south = la, east = lo + 0.05))))
     assert(!lccOut.isEmpty)
-    // GRIB1, both through its own reader and the edition-agnostic one
+    // GRIB1
     val g1 = s"$dir/g1.grib"
     Grib1Writer.write(g1, Seq(0, 6).map(h => Grib1Writer.FieldSpec(167, 105, 2, t0,
       (1 to 12).map(_.toDouble), 4, 3, 50.0, 0.0, 48.0, 3.0, p1 = h)))
-    Seq(Grib1Reader.readMerged(spark, g1), GribReader.readMerged(spark, g1)).foreach { ds =>
-      assert(factsMatchSpark(ds).firstTime.contains(t0))
-      sameAsFallback(ds, g1,
-        opts.copy(area = Some(Mover.Area(north = 49.5, west = 1, south = 48, east = 3))))
-    }
+    val g1Ds = GribReader.readMerged(spark, g1)
+    assert(factsMatchSpark(g1Ds).firstTime.contains(t0))
+    sameAsFallback(g1Ds, g1,
+      opts.copy(area = Some(Mover.Area(north = 49.5, west = 1, south = 48, east = 3))))
     // two grids: the earliest unit lies outside the area, so the minimum
     // over the units is not the area's first step — no time fact
     val two = s"$dir/two.grib2"
@@ -237,36 +236,28 @@ class MoverFactsSpec extends SparkSpec {
     assert(gc.queries.size == 1 && broadcasts(globOut))
   }
 
-  test("every single-file readMerged keeps its edition and spectral guards") {
+  test("single-file readMerged keeps its junk and spectral guards") {
     import graft.sources.grib.Grib1
     val dir = tmp("factsguard")
-    val ed1 = s"$dir/e1.grib"
-    Grib1Writer.write(ed1, Seq(Grib1Writer.FieldSpec(167, 105, 2, t0,
-      (1 to 12).map(_.toDouble), 4, 3, 50.0, 0.0, 48.0, 3.0)))
-    val ed2 = regular(dir)
-    assert(intercept[Grib1.UnsupportedGrib](Grib1Reader.readMerged(spark, ed2))
-      .getMessage.contains("GribReader"))
-    assert(intercept[Grib1.UnsupportedGrib](Grib2Reader.readMerged(spark, ed1))
-      .getMessage.contains("GribReader"))
     val junk = s"$dir/junk.grib"
     java.nio.file.Files.write(java.nio.file.Paths.get(junk), Array.fill[Byte](64)(7))
     assert(intercept[IllegalArgumentException](GribReader.readMerged(spark, junk))
       .getMessage.contains("not a GRIB file"))
-    // Grib2Reader.readMerged takes readLongFormat's spectral guard: a
-    // spectral-only file is a directed error, a mixed file merges its grids
+    // readMerged takes readLongFormat's spectral guard: a spectral-only
+    // file is a directed error, a mixed file merges its grids
     val t = 3
     val coeffs = (0 until (t + 1) * (t + 2)).map(_.toDouble)
     val spectral = Grib2Writer.FieldSpec(0, 3, 5, 100, 50000, t0, coeffs, coeffs.size, 1,
       0.0, 0.0, 0.0, 0.0, bitsPerValue = 24, packing = 50, spectralT = t)
     val sp = s"$dir/sp.grib2"
     Grib2Writer.write(sp, Seq(spectral))
-    assert(intercept[Grib1.UnsupportedGrib](Grib2Reader.readMerged(spark, sp))
+    assert(intercept[Grib1.UnsupportedGrib](GribReader.readMerged(spark, sp))
       .getMessage.contains("readSpectral"))
     val mixed = s"$dir/mixed.grib2"
     Grib2Writer.write(mixed, Seq(spectral, g2(0, 0, t0, 7, 5, 50, -2, 46, 4)))
     val grid = s"$dir/grid.grib2"
     Grib2Writer.write(grid, Seq(g2(0, 0, t0, 7, 5, 50, -2, 46, 4)))
-    assert(rows(Grib2Reader.readMerged(spark, mixed)) == rows(Grib2Reader.readMerged(spark, grid)))
+    assert(rows(GribReader.readMerged(spark, mixed)) == rows(GribReader.readMerged(spark, grid)))
   }
 
   test("splitter channel inventory: one stage, no shuffle, same sorted channels") {
