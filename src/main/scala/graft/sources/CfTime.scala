@@ -219,6 +219,22 @@ object CfTime {
     }
   }
 
+  /** Epoch seconds as epoch microseconds, ROUNDED to the microsecond: a
+    * double's representation error would otherwise truncate
+    * `1700000000.001` to `.000999`. The one rendering of a decoded time
+    * coordinate, shared by every reader. */
+  def micros(epochSec: Double): Long = math.round(epochSec * 1e6)
+
+  /** [[micros]] as the UTC wall time of a TIMESTAMP_NTZ row cell; null
+    * for NaN (a date the calendar mapping cannot represent). */
+  def timestamp(epochSec: Double): java.time.LocalDateTime =
+    if (epochSec.isNaN) null
+    else {
+      val us = micros(epochSec)
+      java.time.LocalDateTime.ofEpochSecond(Math.floorDiv(us, 1000000L),
+        Math.floorMod(us, 1000000L).toInt * 1000, java.time.ZoneOffset.UTC)
+    }
+
   /** Convert a coordinate vector in place-for-copy: identity units return
     * the input array untouched. */
   def convert(values: Array[Double], u: Option[Units]): Array[Double] =

@@ -52,6 +52,16 @@ import org.json4s.jackson.JsonMethods
   *    `writeMerge` (one `overwrite` snapshot), `rewriteDataFiles`
   *    (optionally ZORDER), and `expireSnapshots`.
   *
+  * ONE write core per format: every data-writing commit — append,
+  * compaction, equality delete, MERGE, UPDATE, DELETE — loads its target
+  * through the format's `rowTarget` (a CREATE starts from an in-memory
+  * initial state), places its files through `DeltaWriter.placeData` or
+  * `IcebergWriter.imageManifest` inside [[TableCommit.reclaiming]], and
+  * commits through `commitLog` or `commitRowLevel`. Zero-row data files
+  * are never committed (an empty append commits a version or snapshot
+  * with no data file), and a write that fails before its commit deletes
+  * every file it placed.
+  *
   * Scale model: the DATA writes are Spark's native distributed parquet
   * sink; driver work is O(files) metadata (moves, one footer read per
   * file for row counts + column stats, log lines) — the same
@@ -397,20 +407,27 @@ object TableCommit {
       .agg(org.apache.spark.sql.functions.collect_list(col(TableScan.RowPos)))
       .collect().toSeq.map(m => (m.getString(0), m.getSeq[Long](1).toArray))
 
-  /** The new fields `next` appends after `prior` — `next` must carry
-    * every prior field (names+types, in order) as a prefix and only ADD
-    * trailing columns. None when the change is anything else (renames,
-    * type changes, drops, reorders — not additive). The callers declare
-    * the new TABLE columns nullable regardless of the incoming frame's
-    * nullability (old files must read them as null). */
-  private[sources] def additiveTail(prior: StructType,
-      next: StructType): Option[Seq[StructField]] = {
-    if (next.fields.length <= prior.fields.length) None
-    else {
-      val (head, tail) = next.fields.splitAt(prior.fields.length)
-      if (!sameSchema(StructType(head), prior)) None
-      else Some(tail.toSeq)
-    }
+  /** The columns an append adds to the table schema `prior`: none when
+    * `incoming` is the table's schema; with `mergeSchema`, the ADDITIVE
+    * tail — `incoming` carries every prior field (names and types, in
+    * order) as a prefix and only adds trailing columns, declared
+    * nullable whatever the frame says (old files read them as null).
+    * Anything else (renames, type changes, drops, reorders, or a tail
+    * without `mergeSchema`) is directed. The one schema decision both
+    * formats' appends make. */
+  private[sources] def appendTail(table: String, prior: StructType,
+      incoming: StructType, mergeSchema: Boolean): Seq[StructField] = {
+    if (sameSchema(prior, incoming)) return Nil
+    val (head, tail) = incoming.fields.toSeq.splitAt(prior.fields.length)
+    if (tail.isEmpty || !sameSchema(StructType(head), prior))
+      throw UnsupportedWrite(
+        s"$table: append schema ${incoming.simpleString} != table " +
+          s"schema ${prior.simpleString} (only ADDITIVE evolution — new " +
+          "nullable trailing columns with mergeSchema=true — is implemented)")
+    if (!mergeSchema) throw UnsupportedWrite(
+      s"$table: append schema adds trailing columns — pass " +
+        "mergeSchema=true to evolve the table schema additively")
+    tail.map(f => StructField(f.name, f.dataType, nullable = true))
   }
 
   /** Structural schema equality: names and types, ignoring nullability
@@ -520,6 +537,15 @@ object DeltaWriter {
           "path spelling drift"))
     def physical(df: DataFrame, extra: Seq[String] = Nil): DataFrame =
       if (!mapped) df else toPhysical(df, schema, extra)
+    /** A physical read-back relabeled with the logical names (at every
+      * nesting level) that the table's contract expressions use. */
+    def logical(back: DataFrame): DataFrame =
+      if (!mapped) back
+      else back.select(schema.fields.toIndexedSeq.map { f =>
+        val pf = DeltaTable.physField(f)
+        DeltaTable.toLogical(col(s"`${pf.name}`"), pf.dataType, f.dataType)
+          .as(f.name)
+      }: _*)
   }
 
   private def rowTarget(spark: SparkSession, table: String): RowTarget = {
@@ -584,13 +610,17 @@ object DeltaWriter {
   /** Write `out` (physical on a mapped table) as new data files and
     * build their adds: footer stats over the stored table columns (not
     * the partition or `bookkeeping` columns), zero-row files dropped,
-    * fresh row ids on a rowTracking table. Placed files go to
-    * `written`; returns (adds, the rowTracking domain line). */
+    * fresh row ids on a rowTracking table. `validate` runs over the
+    * logical read-back of the written files before any is placed (see
+    * [[TableCommit.writeData]]). Placed files go to `written`; returns
+    * (adds, the rowTracking domain line). */
   private def placeData(t: RowTarget, out: DataFrame, ts: Long,
       written: mutable.ArrayBuffer[String],
-      bookkeeping: Set[String] = Set.empty, dataChange: Boolean = true)
+      bookkeeping: Set[String] = Set.empty, dataChange: Boolean = true,
+      validate: Option[DataFrame => Unit] = None)
       : (Seq[String], Seq[String]) = {
-    val files = writeData(out, t.base, t.outPartCols, "", t.conf)
+    val files = writeData(out, t.base, t.outPartCols, "", t.conf,
+      validate.map(v => (back: DataFrame) => v(t.logical(back))))
     written ++= files.map(_._2)
     val dataSchema = StructType(out.schema.filterNot(f =>
       t.outPartCols.contains(f.name) || bookkeeping(f.name)))
@@ -968,185 +998,109 @@ object DeltaWriter {
     } ++ extra.map(c => fcol(s"`$c`")): _*)
   }
 
+  /** An append's target: the table's [[rowTarget]], or on CREATE (no
+    * commit and no checkpoint in the log — a vacuumed log may hold ONLY
+    * a checkpoint, still an existing table) a state at version -1 that
+    * carries the create protocol, `schema`, `partitionBy` and
+    * `properties`. Change data feed is a LEGACY writer-version-4
+    * obligation; a table created with `delta.enableRowTracking` is BORN
+    * tracked — writer v7 with rowTracking + domainMetadata (legacy
+    * obligations enumerated), its adds carrying ids from 0 — so no
+    * backfill is ever needed and the config never contradicts the
+    * protocol. */
+  private def appendTarget(spark: SparkSession, table: String,
+      schema: StructType, partitionBy: Seq[String],
+      properties: Map[String, String]): RowTarget = {
+    val base = table.stripSuffix("/")
+    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
+    val fs = new Path(base).getFileSystem(conf)
+    val logPath = new Path(s"$base/_delta_log")
+    val exists = fs.exists(logPath) && fs.listStatus(logPath).exists { st =>
+      val n = st.getPath.getName
+      (n.endsWith(".json") && n.length == 25) ||
+        DeltaTable.ckptVersionOf(n).isDefined
+    }
+    if (exists && properties.nonEmpty) throw UnsupportedWrite(
+      s"$table: properties apply on CREATE only — alter an existing " +
+        "table's configuration with setProperties")
+    if (exists) return rowTarget(spark, table)
+    def on(k: String) = properties.get(k).exists(_.equalsIgnoreCase("true"))
+    val minWriter = if (on("delta.enableChangeDataFeed")) 4 else 2
+    val protocol =
+      if (!on("delta.enableRowTracking"))
+        DeltaTable.Protocol(1, minWriter, Nil, Nil)
+      else DeltaTable.Protocol(1, 7, Nil, (legacyWriterFeatures(minWriter) ++
+        Seq("rowTracking", "domainMetadata")).distinct)
+    val metaId = java.util.UUID.randomUUID().toString
+    val metaRaw = JObject("id" -> JString(metaId),
+      "format" -> JObject("provider" -> JString("parquet"),
+        "options" -> JObject()),
+      "createdTime" -> JInt(System.currentTimeMillis()))
+    RowTarget(table, base, conf, fs, DeltaTable.DeltaState(-1L, metaId,
+      schema.json, partitionBy, properties, Nil, protocol, Map.empty,
+      Some(metaRaw)))
+  }
+
   /** Append `df` to (or create) the Delta table at `table`. Returns the
     * committed version. `partitionBy` and `properties` (the table
     * configuration, e.g. `delta.enableChangeDataFeed`) apply on CREATE
     * only — appends inherit the table's existing partition layout.
-    * `mergeSchema = true` permits ADDITIVE schema evolution: new
-    * NULLABLE trailing columns update the table's metaData in the same
-    * commit, and files written before the evolution read the new columns
-    * as null; anything else (renames, type changes, drops, reorders) is
-    * a directed error either way. */
+    * `mergeSchema = true` permits ADDITIVE schema evolution (see
+    * [[TableCommit.appendTail]]): new nullable trailing columns update
+    * the table's metaData in the same commit, and files written before
+    * the evolution read the new columns as null. The files go through
+    * [[placeData]] like every other data-writing commit: an empty append
+    * places no file and still commits a version, and a failed one
+    * reclaims what it placed. */
   def writeAppend(spark: SparkSession, df: DataFrame, table: String,
       partitionBy: Seq[String] = Nil,
       properties: Map[String, String] = Map.empty,
       mergeSchema: Boolean = false): Long = {
-    val base = table.stripSuffix("/")
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    val logPath = new Path(s"$base/_delta_log")
-    val fs = logPath.getFileSystem(conf)
-    // a vacuumed log may hold ONLY a checkpoint — that is still an
-    // existing table, not a create-from-scratch
-    val exists = fs.exists(logPath) &&
-      fs.listStatus(logPath).exists { st =>
-        val n = st.getPath.getName
-        (n.endsWith(".json") && n.length == 25) ||
-          DeltaTable.ckptVersionOf(n).isDefined
-      }
-    if (exists && properties.nonEmpty) throw UnsupportedWrite(
-      s"$table: properties apply on CREATE only — alter an existing " +
-        "table's configuration with setProperties")
-    // the row-contract validator runs over the WRITTEN batch (inside
-    // writeData, before any file placement) — validating the input plan
-    // and then re-executing it for the write would let a
-    // non-deterministic source commit rows that were never checked
-    var validator: Option[DataFrame => Unit] = None
-    if (!exists)
-      validator = constraintValidator(table, properties, df.schema.json)
-    // `evolved`: Some((metaId, configuration, new schema)) when this
-    // append additively evolves the table schema — the commit then
-    // carries a fresh metaData action
-    var evolved: Option[(String, Map[String, String], StructType)] = None
-    var mapped = false
-    var tableProto = DeltaTable.Protocol(1, 2, Nil, Nil)
-    var tableDomains: Map[String, String] = Map.empty
-    var tableMetaRaw: Option[JValue] = None
-    val (version, schema, partCols) =
-      if (!exists) (0L, df.schema, partitionBy)
-      else {
-        val dst = DeltaTable.snapshotState(spark, table)
-        val v = dst.version
-        val metaId = dst.metaId
-        val schemaJson = dst.schemaJson
-        val pc = dst.partitionColumns
-        val cfg = dst.configuration
-        tableProto = dst.protocol
-        tableDomains = dst.domains
-        tableMetaRaw = dst.metaRaw
-        mapped = cfg.get("delta.columnMapping.mode").exists(_ != "none")
-        validator = constraintValidator(table, cfg, schemaJson)
-        val existing = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-        if (sameSchema(existing, df.schema)) (v + 1, existing, pc)
-        else if (mapped) throw UnsupportedWrite(
-          s"$table: schema evolution on a column-mapped table is not " +
-            "implemented (new columns need fresh ids + physical names)")
-        else additiveTail(existing, df.schema) match {
-          case Some(tail) if mergeSchema =>
-            // old head fields verbatim (their nullability/metadata are
-            // the table's contract), new tail normalized to nullable
-            val next = StructType(existing.fields ++ tail.map(f =>
-              StructField(f.name, f.dataType, nullable = true)))
-            evolved = Some((metaId, cfg, next))
-            (v + 1, next, pc)
-          case Some(_) => throw UnsupportedWrite(
-            s"$table: append schema adds trailing columns — pass " +
-              "mergeSchema=true to evolve the table schema additively")
-          case None => throw UnsupportedWrite(
-            s"$table: append schema ${df.schema.simpleString} != table " +
-              s"schema ${existing.simpleString} (only ADDITIVE evolution " +
-              "— new nullable trailing columns with mergeSchema=true — " +
-              "is implemented)")
-        }
-      }
-    partCols.foreach { c =>
-      if (!schema.fieldNames.contains(c)) throw UnsupportedWrite(
+    val t = appendTarget(spark, table, df.schema, partitionBy, properties)
+    if (t.mapped && !sameSchema(t.schema, df.schema)) throw UnsupportedWrite(
+      s"$table: schema evolution on a column-mapped table is not " +
+        "implemented (new columns need fresh ids + physical names)")
+    val tail = appendTail(table, t.schema, df.schema, mergeSchema)
+    t.partCols.foreach { c =>
+      if (!t.schema.fieldNames.contains(c)) throw UnsupportedWrite(
         s"$table: partition column '$c' is not in the schema")
     }
     // directed up front (one extra scan on partitioned string-column
     // appends; best-effort for non-deterministic plans, which
     // re-evaluate between scans)
-    requireEncodablePartitions(table, schema, partCols, df,
+    requireEncodablePartitions(table, t.schema, t.partCols, df,
       "the append carries")
-    // column-mapped tables store PHYSICAL column names (+ parquet field
-    // ids, the id-mode resolution key) in their data files; partition
-    // dirs and add.partitionValues are keyed physical too — exactly the
-    // shape the reader's assemble/readWhere expect
-    val (outDf, outPartCols, outSchema) =
-      if (!mapped) (df, partCols, schema)
-      else {
-        val renamed = toPhysical(df, schema)
-        (renamed, partCols.map(c => DeltaTable.physFieldName(schema(c))),
-          renamed.schema)
-      }
-    val files = writeData(outDf, base, outPartCols, "", conf,
-      // the read-back of a mapped write carries PHYSICAL names (at
-      // every nesting level) — the contract expressions are written
-      // against logical ones, so rebuild them recursively
-      validate = validator.map(v => (back: DataFrame) =>
-        v(if (!mapped) back
-          else back.select(schema.fields.toIndexedSeq.map { f =>
-            val pf = DeltaTable.physField(f)
-            DeltaTable.toLogical(
-              org.apache.spark.sql.functions.col(s"`${pf.name}`"),
-              pf.dataType, f.dataType).as(f.name)
-          }: _*))))
-    val ts = System.currentTimeMillis()
-    val dataSchema = org.apache.spark.sql.types.StructType(
-      outSchema.filterNot(f => outPartCols.contains(f.name)))
-    val sc = statsFieldsWithCounts(files.map(_._2), dataSchema, conf)
-    // CREATE with delta.enableRowTracking=true: the table is BORN
-    // tracked — the commit declares writer v7 with rowTracking +
-    // domainMetadata (legacy obligations enumerated) and its adds carry
-    // ids from 0, so no backfill is ever needed and the config never
-    // contradicts the protocol
-    val createTracking = !exists && properties
-      .get("delta.enableRowTracking").exists(_.equalsIgnoreCase("true"))
-    if (createTracking)
-      tableProto = DeltaTable.Protocol(1, 7, Nil,
-        (legacyWriterFeatures(
-          if (properties.get("delta.enableChangeDataFeed")
-            .exists(_.equalsIgnoreCase("true"))) 4 else 2) ++
-          Seq("rowTracking", "domainMetadata")).distinct)
-    // a rowTracking table's appends must assign fresh row ids and
-    // advance the high-water mark (silently omitting them would break
-    // every id-aware reader)
-    val (ridFields, domainLines) = rowTrackingFields(table,
-      tableProto, tableDomains, sc.map(_._2), version)
-    val adds = files.zip(sc).zip(ridFields).map {
-      case (((rel, _, size), (st, _)), rid) =>
-        addAction(rel, size, ts, dataChange = true, rid + st)
-    }
-    val head =
-      if (version > 0L) {
-        // an evolving append re-declares the metaData under the SAME
-        // table id — the schema change and the new files land in one
-        // commit, so no reader observes one without the other
-        val metaLine = evolved.toSeq.map { case (metaId, cfg, next) =>
-          // the RAW action carries so foreign fields (name, description,
-          // createdTime) survive the evolution commit too
-          metaDataActionJson(tableMetaRaw, metaId, next.json, partCols, cfg)
-        }
-        Seq(s"""{"commitInfo":{"timestamp":$ts,"operation":"WRITE"}}""") ++
-          metaLine
-      } else {
-        val schemaStr = jsonEscape(schema.json)
-        // change data feed is a LEGACY writer-version-4 obligation — a
-        // table created with it enabled must declare a protocol every
-        // CDF-aware writer respects
-        val minWriter =
-          if (properties.get("delta.enableChangeDataFeed")
-            .exists(_.equalsIgnoreCase("true"))) 4 else 2
-        val cfg = properties.map { case (k, v) =>
-          s""""${jsonEscape(k)}":"${jsonEscape(v)}""""
-        }.mkString(",")
-        val protoLine =
-          if (!createTracking)
-            s"""{"protocol":{"minReaderVersion":1,"minWriterVersion":$minWriter}}"""
-          else s"""{"protocol":{"minReaderVersion":1,"minWriterVersion":7,""" +
-            s""""writerFeatures":[${tableProto.writerFeatures
-              .map(f => s""""$f"""").mkString(",")}]}}"""
-        Seq(
+    // the row contracts run over the WRITTEN batch, before any file is
+    // placed — validating the input plan and then re-executing it for
+    // the write would let a non-deterministic source commit rows that
+    // were never checked
+    val validator = constraintValidator(table, t.config, t.dst.schemaJson)
+    reclaiming(t.fs) { written =>
+      val ts = System.currentTimeMillis()
+      val (adds, domain) = placeData(t, t.physical(df), ts, written,
+        validate = validator)
+      // CREATE declares the protocol and metaData; an evolving append
+      // re-declares the metaData (its RAW action, so foreign fields
+      // survive) under the SAME table id, so no reader observes the new
+      // schema without the new files
+      val metaData =
+        if (t.version >= 0 && tail.isEmpty) Nil
+        else Seq(metaDataActionJson(t.dst.metaRaw, t.dst.metaId,
+          StructType(t.schema.fields ++ tail).json, t.partCols, t.config))
+      val p = t.dst.protocol
+      val head =
+        if (t.version >= 0)
+          s"""{"commitInfo":{"timestamp":$ts,"operation":"WRITE"}}""" +: metaData
+        else Seq(
           s"""{"commitInfo":{"timestamp":$ts,"operation":"CREATE TABLE AS SELECT"}}""",
-          protoLine,
-          s"""{"metaData":{"id":"${java.util.UUID.randomUUID()}",""" +
-            s""""format":{"provider":"parquet","options":{}},""" +
-            s""""schemaString":"$schemaStr",""" +
-            s""""partitionColumns":[${partCols.map(c => s""""$c"""").mkString(",")}],""" +
-            s""""configuration":{$cfg},"createdTime":$ts}}""")
-      }
-    fs.mkdirs(logPath)
-    commitLog(fs, logPath, table, version, head ++ adds ++ domainLines,
-      "append", files.map(_._2))
+          s"""{"protocol":{"minReaderVersion":1,"minWriterVersion":${p.minWriterVersion}""" +
+            (if (p.writerFeatures.isEmpty) "}}"
+            else s""","writerFeatures":[${p.writerFeatures
+              .map(f => s""""$f"""").mkString(",")}]}}""")) ++ metaData
+      t.fs.mkdirs(t.logPath)
+      commitLog(t.fs, t.logPath, table, t.version + 1,
+        head ++ adds ++ domain, "append", written.toSeq)
+    }
   }
 
   /** Row-level DELETE via DELETION VECTORS — the modern (Databricks-
@@ -2675,13 +2629,9 @@ object IcebergWriter {
       priorManifests)
   }
 
-  /** The id a new snapshot takes: one past every snapshot on record. */
-  private def nextSnapshotId(st: TableState): Long =
-    (st.snapshots.flatMap(sn =>
-      (sn \ "snapshot-id").extractOpt[Long]) :+ 0L).max + 1
-
-  /** The state an Iceberg row-level write starts from: a table with a
-    * current snapshot, its schema and default partition spec (see
+  /** The state an Iceberg data-writing commit starts from: a table (its
+    * current snapshot, or -1 for an append to a table with none), its
+    * schema and default partition spec (see
     * [[partitionSpecInfo]]), and the sequence number, snapshot id and
     * attempt uuid of the snapshot the write commits. */
   private final case class RowTarget(table: String, base: String,
@@ -2690,7 +2640,9 @@ object IcebergWriter {
       specId: Int, partStructFields: Seq[StructField],
       partFieldIds: Seq[Int], parts: Seq[PartField], specJson: String) {
     val newSeq: Long = st.lastSeq + 1
-    val snapId: Long = nextSnapshotId(st)
+    /** One past every snapshot on record. */
+    val snapId: Long = (st.snapshots.flatMap(sn =>
+      (sn \ "snapshot-id").extractOpt[Long]) :+ 0L).max + 1
     val attempt: String = java.util.UUID.randomUUID().toString
     val priorNext: Long =
       (st.meta \ "next-row-id").extractOpt[Long].getOrElse(0L)
@@ -2704,21 +2656,31 @@ object IcebergWriter {
 
   /** Load a [[RowTarget]]: directed unless the format version is one of
     * `fvs` (`what` names the write) and a current snapshot exists
-    * (`nothingTo` finishes that message); `specOp` names the write in
-    * the partition-spec guard. */
+    * (`nothingTo` finishes that message; None accepts a table with no
+    * snapshot, as appends do); `specOp` names the write in the
+    * partition-spec guard. A CREATE passes its metadata fields as
+    * `create`: the target then starts from that in-memory initial state
+    * instead of the table's latest metadata. */
   private def rowTarget(spark: SparkSession, table: String, what: String,
-      fvs: Seq[Int], nothingTo: String, specOp: String): RowTarget = {
+      fvs: Seq[Int], nothingTo: Option[String], specOp: String,
+      create: Option[Seq[(String, String)]] = None): RowTarget = {
     val base = table.stripSuffix("/")
     val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
     val fs = new Path(base).getFileSystem(conf)
-    val st = loadState(spark, fs, base)
+    val st = create.fold(loadState(spark, fs, base)) { fields =>
+      TableState(JsonMethods.parse(fields.map { case (k, v) =>
+        s""""$k": $v""" }.mkString("{", ", ", "}")), fields, 0L, Nil, 0L, Nil)
+    }
     val fv = (st.meta \ "format-version").extract[Int]
     if (!fvs.contains(fv)) throw UnsupportedWrite(
-      s"$table: $what format-version ${fvs.mkString(" or ")} " +
-        s"(table is $fv)")
+      s"$table: $what format-version ${fvs.mkString(" or ")}, not " +
+        s"format-version $fv")
     val currentId = (st.meta \ "current-snapshot-id").extractOpt[Long]
-      .filter(_ != -1L).getOrElse(throw UnsupportedWrite(
-        s"$table: no current snapshot — nothing to $nothingTo"))
+      .filter(_ != -1L).getOrElse(nothingTo match {
+        case None => -1L
+        case Some(op) => throw UnsupportedWrite(
+          s"$table: no current snapshot — nothing to $op")
+      })
     val schemaNode = IcebergTable.currentSchemaJson(st.meta)
     val schema = IcebergTable.structOf(schemaNode)
     val (specId, partStructFields, partFieldIds, parts, specJson) =
@@ -2775,9 +2737,7 @@ object IcebergWriter {
 
   /** The spec's canonical transform spelling — plural legacy forms
     * (years/months/days/hours) fold to the singular every PartField
-    * consumer matches on. Shared by partitionSpecInfo and the
-    * equality-delete routing, so a legacy-spelled spec never silently
-    * loses the scoped route. */
+    * consumer matches on. */
   private def canonTransform(t: String): String = t match {
     case "years" => "year"
     case "months" => "month"
@@ -2967,250 +2927,114 @@ object IcebergWriter {
     filesWithTuple
   }
 
+  /** The metadata fields of a CREATE: `schema` with top-level ids
+    * 1..n, the `partitionBy` spec (see [[parsePartitionBy]]; spec-id 0,
+    * field ids from 1000), and every other field the v2 spec marks
+    * REQUIRED — column/partition-id high-water marks, properties, the
+    * default (empty) sort order — so stock metadata parsers accept the
+    * json. */
+  private def createFields(table: String, schema: StructType,
+      partitionBy: Seq[String], fv: Int): Seq[(String, String)] = {
+    val parts = parsePartitionBy(partitionBy)
+    parts.foreach { pf =>
+      if (!schema.fieldNames.contains(pf.source)) throw UnsupportedWrite(
+        s"$table: partition source column '${pf.source}' is not in the " +
+          "schema")
+    }
+    val (schemaJson, lastColId) = schemaJsonOf(schema)
+    val specFields = parts.zipWithIndex.map { case (pf, i) =>
+      s"""{"name": "${pf.name}", "transform": "${pf.transform}", """ +
+        s""""source-id": ${schema.fieldNames.indexOf(pf.source) + 1}, """ +
+        s""""field-id": ${1000 + i}}"""
+    }.mkString(", ")
+    Seq(
+      "format-version" -> fv.toString,
+      "table-uuid" -> s""""${java.util.UUID.randomUUID()}"""",
+      "location" -> s""""${table.stripSuffix("/")}"""",
+      "last-column-id" -> lastColId.toString,
+      "last-partition-id" -> (999 + parts.size).toString,
+      "properties" -> "{}",
+      "schemas" -> s"[$schemaJson]",
+      "current-schema-id" -> "0",
+      "partition-specs" -> s"""[{"spec-id": 0, "fields": [$specFields]}]""",
+      "default-spec-id" -> "0",
+      "sort-orders" -> """[{"order-id": 0, "fields": []}]""",
+      "default-sort-order-id" -> "0")
+  }
+
+  /** `t` with `tail` appended to its schema — ADDITIVE evolution: old
+    * fields verbatim (their ids are the table's contract), new field ids
+    * continuing from the last-column-id high-water mark, and a schema-id
+    * past every schema ever declared (spec rule — ids are never reused);
+    * the commit carries the grown schemas list. */
+  private def withTail(t: RowTarget, tail: Seq[StructField]): RowTarget = {
+    val meta = t.st.meta
+    val allSchemas = (meta \ "schemas").extractOpt[Seq[JValue]]
+      .getOrElse(Seq(meta \ "schema"))
+    val lastCol = (meta \ "last-column-id").extractOpt[Int].getOrElse {
+      allSchemas.flatMap(s => (s \ "fields").extractOpt[Seq[JValue]]
+        .getOrElse(Nil).flatMap(f => (f \ "id").extractOpt[Int]))
+        .foldLeft(0)(math.max)
+    }
+    val newSchemaId = allSchemas.flatMap(s =>
+      (s \ "schema-id").extractOpt[Int]).foldLeft(0)(math.max) + 1
+    val oldFields = JsonMethods.compact(JsonMethods.render(
+      JsonMethods.parse(t.schemaJson) \ "fields"))
+      .stripPrefix("[").stripSuffix("]")
+    var nextId = lastCol
+    def evolId(): Int = { nextId += 1; nextId }
+    val newFields = tail.map { f =>
+      s"""{"id": ${evolId()}, "name": "${f.name}", "required": false, """ +
+        s""""type": ${icebergTypeJson(f.dataType, () => evolId())}}"""
+    }.mkString(", ")
+    val schemaJson = s"""{"type": "struct", "schema-id": $newSchemaId, """ +
+      s""""fields": [$oldFields, $newFields]}"""
+    val schemas = (allSchemas.map(s =>
+      JsonMethods.compact(JsonMethods.render(s))) :+ schemaJson).mkString(", ")
+    t.copy(schema = StructType(t.schema.fields ++ tail),
+      schemaJson = schemaJson,
+      st = t.st.copy(carried = t.st.carried.filterNot { case (k, _) =>
+        Set("schemas", "current-schema-id", "last-column-id")(k)
+      } ++ Seq("schemas" -> s"[$schemas]",
+        "current-schema-id" -> newSchemaId.toString,
+        "last-column-id" -> nextId.toString)))
+  }
+
   /** Append `df` to (or create) the Iceberg table at `table` as one new
-    * snapshot. Returns the snapshot id. `partitionBy` (CREATE only —
-    * appends inherit the table's spec) builds an IDENTITY partition
-    * spec: data files keep the partition columns (Iceberg's hidden-
-    * partitioning model), one file set per touched partition tuple, the
-    * manifest records each file's `partition` struct, and
-    * [[IcebergTable.readPartitions]] pruning works on the result.
-    * `mergeSchema = true` permits ADDITIVE schema evolution: new
-    * NULLABLE trailing columns append a new schema (ids continuing from
-    * `last-column-id`, schema-id bumped) and older files read them as
-    * null. `formatVersion` (CREATE only) may be 3: v3 tables maintain
-    * the metadata-level row-lineage bookkeeping (`next-row-id` advanced
-    * per commit, snapshot `first-row-id`) and their row-level deletes
-    * emit Puffin deletion vectors. Flat primitive schemas; non-identity
-    * transforms directed. */
+    * `append` snapshot. Returns the snapshot id. `partitionBy` (CREATE
+    * only — appends inherit the table's default spec, every transform
+    * [[partitionSpecInfo]] reads) takes the [[parsePartitionBy]]
+    * entries: data files keep the partition source columns (Iceberg's
+    * hidden-partitioning model), one file set per touched partition
+    * tuple, and the manifest records each file's `partition` struct.
+    * `mergeSchema = true` permits ADDITIVE schema evolution (see
+    * [[TableCommit.appendTail]] and [[withTail]]). `formatVersion`
+    * (CREATE only) may be 3: v3 tables maintain the metadata-level
+    * row-lineage bookkeeping (`next-row-id` advanced per commit, snapshot
+    * `first-row-id`) and their row-level deletes emit Puffin deletion
+    * vectors. The files go through [[imageManifest]] and the commit
+    * through [[commitRowLevel]] like every other data-writing commit: an
+    * empty append places no file and still commits a snapshot, and a
+    * failed one reclaims what it placed. */
   def writeAppend(spark: SparkSession, df: DataFrame, table: String,
       partitionBy: Seq[String] = Nil, mergeSchema: Boolean = false,
       formatVersion: Int = 2): Long = {
     if (formatVersion != 2 && formatVersion != 3) throw UnsupportedWrite(
       s"$table: format-version $formatVersion (2 or 3)")
-    val base = table.stripSuffix("/")
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    val fs = new Path(base).getFileSystem(conf)
-    val metaDir = new Path(s"$base/metadata")
-    val exists = fs.exists(metaDir) &&
-      fs.listStatus(metaDir).exists(_.getPath.getName.endsWith(".metadata.json"))
-
-    // prior state: schema check, snapshot log, last sequence, prior
-    // manifest-list rows to carry forward
-    var lastSeq = 0L
-    var metaVersion = 0L
-    var snapshots: Seq[JValue] = Nil
-    var priorManifests: Seq[ManifestFile] = Nil
-    var schemaJson: String = null
-    var createLastColId: Int = 0
-    var inheritedParts: Option[Seq[PartField]] = None
-    var specId: Int = 0
-    var tableFv: Int = formatVersion
-    var priorNextRow: Long = 0L
-    // the INHERITED spec's own JSON + partition field ids — an append to
-    // an existing table must re-emit the table's actual spec, never a
-    // regenerated one (source-ids from df ordinals and 1000+i field ids
-    // would be wrong on schema-evolved or spec-evolved tables)
-    var inheritedSpecJson: Option[String] = None
-    var inheritedFieldIds: Seq[Int] = Nil
-    // every metadata field this writer does not manage carries forward
-    // VERBATIM (properties, refs, sort-orders, snapshot-log, …) — an
-    // append must never silently erase table state it did not parse
-    var carried: Seq[(String, String)] = Nil
-    if (exists) {
-      val st = loadState(spark, fs, base)
-      val meta = st.meta
-      val fv = (meta \ "format-version").extract[Int]
-      if (fv != 2 && fv != 3) throw UnsupportedWrite(
-        s"$table: appending to a format-version $fv table is not " +
-          "implemented (v2/v3 only — a v1 target would be silently " +
-          "upgraded)")
-      tableFv = fv
-      priorNextRow = (meta \ "next-row-id").extractOpt[Long].getOrElse(0L)
-      carried = st.carried
-      lastSeq = st.lastSeq
-      snapshots = st.snapshots
-      metaVersion = st.metaVersion
-      priorManifests = st.priorManifests
-      // appends INHERIT the table's default spec; a
-      // default-spec-id that resolves to nothing is a directed error
-      // (falling through to an unpartitioned append would write files
-      // the partition-filtered reads silently drop)
-      val defaultSpecId = (meta \ "default-spec-id").extractOpt[Int]
-        .getOrElse(0)
-      val specs = (meta \ "partition-specs").extractOpt[Seq[JValue]]
-        .getOrElse(Nil)
-      val spec = specs
-        .find(sp => (sp \ "spec-id").extractOpt[Int].contains(defaultSpecId))
-      if (spec.isEmpty && specs.nonEmpty) throw UnsupportedWrite(
-        s"$table: default-spec-id $defaultSpecId is not in partition-specs")
-      specId = defaultSpecId
-      val specFields = spec.toSeq
-        .flatMap(sp => (sp \ "fields").extractOpt[Seq[JValue]].getOrElse(Nil))
-      // the schema's id -> name map resolves each spec field's SOURCE
-      // column (a foreign spec may name the field differently)
-      val idToName: Map[Int, String] =
-        (IcebergTable.currentSchemaJson(meta) \ "fields")
-          .extractOpt[Seq[JValue]].getOrElse(Nil).flatMap { f =>
-            for (id <- (f \ "id").extractOpt[Int];
-              n <- (f \ "name").extractOpt[String]) yield id -> n
-          }.toMap
-      inheritedParts = Some(specFields.map { f =>
-        val transform = (f \ "transform").extractOpt[String].getOrElse("")
-        val name = (f \ "name").extractOpt[String].getOrElse(
-          throw UnsupportedWrite(s"$table: a spec field has no name"))
-        val source = (f \ "source-id").extractOpt[Int]
-          .flatMap(idToName.get).getOrElse(name)
-        // accept both spec spellings (year) and the plural legacy form
-        // (years) some writers emit
-        val canon = transform match {
-          case "years" => "year"
-          case "months" => "month"
-          case "days" => "day"
-          case "hours" => "hour"
-          case other => other
-        }
-        canon match {
-          case "identity" | BucketT(_) | TruncT(_) |
-            "year" | "month" | "day" | "hour" =>
-            PartField(name, source, canon)
-          case other => throw UnsupportedWrite(
-            s"$table: appending through a '$other' partition transform " +
-              "is not implemented (identity, bucket[N], truncate[W], " +
-              "year/month/day/hour)")
-        }
-      })
-      inheritedSpecJson = spec.map(sp =>
-        JsonMethods.compact(JsonMethods.render(sp \ "fields")))
-      inheritedFieldIds = specFields.zipWithIndex.map { case (f, i) =>
-        (f \ "field-id").extractOpt[Int].getOrElse(1000 + i)
-      }
-      val schemasNode = IcebergTable.currentSchemaJson(meta)
-      val existing = IcebergTable.structOf(schemasNode)
-      if (sameSchema(existing, df.schema))
-        schemaJson = JsonMethods.compact(JsonMethods.render(schemasNode))
-      else additiveTail(existing, df.schema) match {
-        case Some(tail) if mergeSchema =>
-          // ADDITIVE evolution: old fields verbatim (their ids are the
-          // table's contract), new field ids continue from the
-          // last-column-id high-water mark, schema-id bumps past every
-          // schema ever declared (spec rule — ids are never reused)
-          val allSchemas = (meta \ "schemas").extractOpt[Seq[JValue]]
-            .getOrElse(Seq(meta \ "schema"))
-          val lastCol = (meta \ "last-column-id").extractOpt[Int]
-            .getOrElse {
-              allSchemas.flatMap(s => (s \ "fields")
-                .extractOpt[Seq[JValue]].getOrElse(Nil)
-                .flatMap(f => (f \ "id").extractOpt[Int]))
-                .foldLeft(0)(math.max)
-            }
-          val newSchemaId = allSchemas.flatMap(s =>
-            (s \ "schema-id").extractOpt[Int]).foldLeft(0)(math.max) + 1
-          val oldFields = JsonMethods.compact(JsonMethods.render(
-            schemasNode \ "fields")).stripPrefix("[").stripSuffix("]")
-          var nextEvolId = lastCol
-          def evolId(): Int = { nextEvolId += 1; nextEvolId }
-          val newFields = tail.map { f =>
-            val id = evolId()
-            s"""{"id": $id, "name": "${f.name}", """ +
-              s""""required": false, """ +
-              s""""type": ${icebergTypeJson(f.dataType, () => evolId())}}"""
-          }.mkString(", ")
-          schemaJson =
-            s"""{"type": "struct", "schema-id": $newSchemaId, """ +
-              s""""fields": [$oldFields, $newFields]}"""
-          val schemasListJson = (allSchemas.map(s =>
-            JsonMethods.compact(JsonMethods.render(s))) :+ schemaJson)
-            .mkString(", ")
-          carried = carried.filterNot { case (k, _) =>
-            Set("schemas", "current-schema-id", "last-column-id")(k)
-          } ++ Seq(
-            "schemas" -> s"[$schemasListJson]",
-            "current-schema-id" -> newSchemaId.toString,
-            "last-column-id" -> nextEvolId.toString)
-        case Some(_) => throw UnsupportedWrite(
-          s"$table: append schema adds trailing columns — pass " +
-            "mergeSchema=true to evolve the table schema additively")
-        case None => throw UnsupportedWrite(
-          s"$table: append schema ${df.schema.simpleString} != table " +
-            s"schema ${existing.simpleString} (only ADDITIVE evolution " +
-            "— new nullable trailing columns with mergeSchema=true — " +
-            "is implemented)")
-      }
-    } else {
-      val (sj, lastId) = schemaJsonOf(df.schema)
-      schemaJson = sj
-      createLastColId = lastId
+    val metaDir = new Path(s"${table.stripSuffix("/")}/metadata")
+    val fs = metaDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val exists = fs.exists(metaDir) && fs.listStatus(metaDir)
+      .exists(_.getPath.getName.endsWith(".metadata.json"))
+    val t0 = rowTarget(spark, table, "appends target", Seq(2, 3), None,
+      "appending", create = if (exists) None
+        else Some(createFields(table, df.schema, partitionBy, formatVersion)))
+    val tail = appendTail(table, t0.schema, df.schema, mergeSchema)
+    val t = if (tail.isEmpty) t0 else withTail(t0, tail)
+    t.partStructFields.foreach(f => partitionAvroType(f.dataType)) // directed early
+    reclaiming(t.fs) { written =>
+      commitRowLevel(t, "append", Seq(imageManifest(spark, t, df, written)),
+        written.toSeq)
     }
-
-    val parts: Seq[PartField] =
-      inheritedParts.getOrElse(parsePartitionBy(partitionBy))
-    parts.foreach { pf =>
-      if (!df.schema.fieldNames.contains(pf.source)) throw UnsupportedWrite(
-        s"$table: partition source column '${pf.source}' is not in the " +
-          "schema")
-    }
-    val partFields = parts.map(pf =>
-      StructField(pf.name, pf.valueType(df.schema)))
-    partFields.foreach(f => partitionAvroType(f.dataType)) // directed early
-    val appendIdFields = idFieldsOf(schemaJson)
-    val filesWithTuple = writeIdentityPartitioned(spark, df, base,
-      parts, table, fs, conf,
-      fieldIds = idPathsOf(schemaJson))
-    val files = filesWithTuple.map(_._1)
-    val fileSC = files.map(f => statsCells(f._2, appendIdFields, conf))
-    val counts = fileSC.map(_._2)
-    val newSeq = lastSeq + 1
-    val snapIds = snapshots.flatMap(sn =>
-      (sn \ "snapshot-id").extractOpt[Long])
-    val snapId = (snapIds :+ 0L).max + 1
-    val ts = System.currentTimeMillis()
-
-    // new manifest: ADDED entries with the explicit data sequence. File
-    // names carry a PER-ATTEMPT uuid (as Iceberg's own writers do) — a
-    // deterministic name would let a losing concurrent appender
-    // overwrite, then clean up, files the winner's commit references.
-    val attempt = java.util.UUID.randomUUID().toString
-    val manifestPath = s"$base/metadata/m-$attempt.avro"
-    val createdSpecJson = {
-      val sf = parts.zipWithIndex.map { case (pf, i) =>
-        val srcId = df.schema.fieldNames.indexOf(pf.source) + 1
-        s"""{"name": "${pf.name}", "transform": "${pf.transform}",
-             "source-id": $srcId, "field-id": ${1000 + i}}"""
-      }.mkString(", ")
-      s"[$sf]"
-    }
-    val specFieldsJson = inheritedSpecJson.getOrElse(createdSpecJson)
-    // v3 row lineage: each data file's first_row_id carves its range
-    // from the snapshot's first-row-id (a row's id = first + position)
-    writeDataManifest(manifestPath, partFields, inheritedFieldIds,
-      filesWithTuple, fileSC, newSeq, priorNextRow, tableFv, conf,
-      manifestMeta(schemaJson, specFieldsJson, specId, "data", tableFv))
-    val createFields: Seq[(String, String)] = Seq(
-      "format-version" -> formatVersion.toString,
-      "table-uuid" -> s""""${java.util.UUID.randomUUID()}"""",
-      "location" -> s""""$base"""",
-      // every field the v2 spec marks required, so stock metadata
-      // parsers accept the json: column/partition-id high-water marks,
-      // properties, and the default (empty) sort order
-      "last-column-id" -> createLastColId.toString,
-      "last-partition-id" -> (999 + parts.size).toString,
-      "properties" -> "{}",
-      "schemas" -> s"[$schemaJson]",
-      "current-schema-id" -> "0",
-      "partition-specs" ->
-        s"""[{"spec-id": 0, "fields": $createdSpecJson}]""",
-      "default-spec-id" -> "0",
-      "sort-orders" -> """[{"order-id": 0, "fields": []}]""",
-      "default-sort-order-id" -> "0")
-    commitSnapshot(fs, conf, base, table, snapId, newSeq, ts, "append",
-      Seq(NewManifest(manifestPath, 0, files.size, counts.sum)),
-      attempt, specId,
-      if (exists) carried else createFields,
-      snapshots, priorManifests, metaVersion, files.map(_._2),
-      fv = tableFv,
-      rowLineage = if (tableFv == 3)
-        Some((priorNextRow, priorNextRow + counts.sum)) else None)
-    snapId
   }
 
   /** Resolve a DOTTED column path through the struct levels of a
@@ -3911,7 +3735,7 @@ object IcebergWriter {
     // a dangling spec-0 reference would break stock readers on tables
     // whose empty spec evolved to a nonzero id
     val t = rowTarget(spark, table, "row-level deletes target", Seq(2, 3),
-      "delete from", "deleting")
+      Some("delete from"), "deleting")
     if (t.fv == 3) writeDeleteV3(spark, t, condition)
     else reclaiming(t.fs) { written =>
       // ONE scan: the matching rows are written straight to positional
@@ -3960,34 +3784,15 @@ object IcebergWriter {
     * Returns the new snapshot id. */
   def writeEqualityDelete(spark: SparkSession, table: String,
       keys: DataFrame): Long = {
-    val base = table.stripSuffix("/")
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    val fs = new Path(base).getFileSystem(conf)
-    val st = loadState(spark, fs, base)
-    val meta = st.meta
-    val fv = (meta \ "format-version").extract[Int]
-    if (fv != 2 && fv != 3) throw UnsupportedWrite(
-      s"$table: equality deletes target format-version 2 or 3 " +
-        s"(table is $fv)")
-    val currentId = (meta \ "current-snapshot-id").extractOpt[Long]
-      .filter(_ != -1L).getOrElse(throw UnsupportedWrite(
-        s"$table: no current snapshot — nothing to delete from"))
-    val newSeq = st.lastSeq + 1
-    val attempt = java.util.UUID.randomUUID().toString
-    eqDeleteArtifacts(spark, table, base, fs, conf, st, keys, newSeq,
-      attempt, fv) match {
-      case None => currentId // empty key set: no-op, no empty snapshot
-      case Some((man, manSpec, carried, dataFiles)) =>
-        val snapId = nextSnapshotId(st)
-        val ts = System.currentTimeMillis()
-        val priorNext = (meta \ "next-row-id").extractOpt[Long]
-          .getOrElse(0L)
-        commitSnapshot(fs, conf, base, table, snapId, newSeq, ts,
-          "delete", Seq(man), attempt, manSpec, carried, st.snapshots,
-          st.priorManifests, st.metaVersion, dataFiles,
-          fv = fv,
-          rowLineage = if (fv == 3) Some((priorNext, priorNext)) else None)
-        snapId
+    val t = rowTarget(spark, table, "equality deletes target", Seq(2, 3),
+      Some("delete from"), "equality deletes")
+    reclaiming(t.fs) { written =>
+      eqDeleteArtifacts(spark, t, keys, written) match {
+        case None => t.currentId // empty key set: no-op, no empty snapshot
+        case Some((man, carried)) =>
+          commitRowLevel(t, "delete", Seq(man), written.toSeq,
+            carried = Some(carried))
+      }
     }
   }
 
@@ -4015,7 +3820,7 @@ object IcebergWriter {
   def writeMergeByKey(spark: SparkSession, table: String,
       source: DataFrame, keys: Seq[String]): Long = {
     val t = rowTarget(spark, table, "equality-delete merges target",
-      Seq(2, 3), "merge into", "MERGE")
+      Seq(2, 3), Some("merge into"), "MERGE")
     requireMergeInput(table, t.schema, source, keys)
     // ONE evaluation of the source plan — the delete keys and the
     // appended images must agree even for a non-deterministic source
@@ -4023,14 +3828,11 @@ object IcebergWriter {
       t.conf, t.currentId) { (src, _, written) =>
       requireUniqueKeys(table, src, keys, "one key cannot take two images")
       // kill half: one equality delete of the source keys — O(source)
-      val eq = eqDeleteArtifacts(spark, table, t.base, t.fs, t.conf, t.st,
-        src.select(keys.map(col): _*), t.newSeq, t.attempt, t.fv)
-      eq.foreach { case (man, _, _, files) => written ++= files :+ man.path }
+      val eq = eqDeleteArtifacts(spark, t, src.select(keys.map(col): _*),
+        written)
       // append half: every source row, partition-grouped
       commitRowLevel(t, "overwrite", imageManifest(spark, t, src, written) +:
-        eq.toSeq.map { case (man, manSpec, _, _) =>
-          man.copy(specId = Some(manSpec)) },
-        written.toSeq, carried = eq.map(_._3))
+        eq.map(_._1).toSeq, written.toSeq, carried = eq.map(_._2))
     }
   }
 
@@ -4041,23 +3843,20 @@ object IcebergWriter {
     * any scan root — the null-cast guard and the committed delete file
     * must see the SAME rows even for a non-deterministic key source),
     * writes the (possibly partition-scoped) delete files, and writes
-    * their content=2 manifest at `newSeq`. Returns None for an empty
-    * key set; else (the delete manifest, the manifest-list spec id,
-    * the carried metadata fields — extended with a freshly registered
-    * unpartitioned spec on the global route — and the data files to
-    * clean on a lost commit race). */
-  private def eqDeleteArtifacts(spark: SparkSession, table: String,
-      base: String, fs: FileSystem, conf: Configuration, st: TableState,
-      keys: DataFrame, newSeq: Long, attempt: String, fv: Int)
-      : Option[(NewManifest, Int, Seq[(String, String)], Seq[String])] = {
+    * their content=2 manifest at the target's new sequence; every file
+    * goes to `written`. Returns None for an empty key set; else (the
+    * delete manifest, carrying its manifest-list spec id, and the
+    * metadata fields the commit carries — extended with a freshly
+    * registered unpartitioned spec on the global route). */
+  private def eqDeleteArtifacts(spark: SparkSession, t: RowTarget,
+      keys: DataFrame, written: mutable.ArrayBuffer[String])
+      : Option[(NewManifest, Seq[(String, String)])] = {
     import org.apache.spark.sql.functions.{col => fcol}
-    val meta = st.meta
-    val schemaNode = IcebergTable.currentSchemaJson(meta)
-    val schema = IcebergTable.structOf(schemaNode)
+    val (table, base, fs, conf, schema) = (t.table, t.base, t.fs, t.conf,
+      t.schema)
     if (keys.columns.isEmpty) throw UnsupportedWrite(
       s"$table: the equality-delete key frame has no columns")
-    val schemaJson = JsonMethods.compact(JsonMethods.render(schemaNode))
-    val idByName = idFieldsOf(schemaJson)
+    val idByName = idFieldsOf(t.schemaJson)
       .map { case (id, f) => f.name -> id }.toMap
     val eqIds: Seq[Int] = keys.columns.toSeq.map { c =>
       if (!schema.fieldNames.contains(c)) throw UnsupportedWrite(
@@ -4066,44 +3865,22 @@ object IcebergWriter {
         s"$table: no field id for equality key '$c'"))
     }
     // ------------------------------------------- partitioned-table routing
-    val specs = (meta \ "partition-specs").extractOpt[Seq[JValue]]
-      .getOrElse(Nil)
-    val defSpecId = (meta \ "default-spec-id").extractOpt[Int].getOrElse(0)
-    val defSpec = specs.find(sp =>
-      (sp \ "spec-id").extractOpt[Int].contains(defSpecId))
-    if (specs.nonEmpty && defSpec.isEmpty) throw UnsupportedWrite(
-      s"$table: default-spec-id $defSpecId is not in partition-specs")
-    val specFieldsJ = defSpec.toSeq.flatMap(sp =>
-      (sp \ "fields").extractOpt[Seq[JValue]].getOrElse(Nil))
-    val partitioned = specFieldsJ.nonEmpty
-    val nameById = idByName.map(_.swap)
+    val partitioned = t.parts.nonEmpty
     // the scoped route needs every partition field DERIVABLE from the
-    // key columns: a resolvable source column that IS a key, through a
-    // transform this writer computes (the same PartField family the
-    // data-file writer uses — equal inputs produce equal dir tuples,
-    // so the delete scope string matches the data file's by
-    // construction)
+    // key columns: a source column that IS a key, through a transform
+    // this writer computes (the same PartField family the data-file
+    // writer uses — equal inputs produce equal dir tuples, so the
+    // delete scope string matches the data file's by construction)
     val partsOpt: Option[Seq[PartField]] =
-      if (!partitioned) Some(Nil)
-      else {
-        val resolved = specFieldsJ.map { f =>
-          for {
-            n <- (f \ "name").extractOpt[String]
-            t <- (f \ "transform").extractOpt[String].map(canonTransform)
-            src <- (f \ "source-id").extractOpt[Int].flatMap(nameById.get)
-            if keys.columns.contains(src)
-            pf = PartField(n, src, t)
-            if scala.util.Try(pf.valueCol(schema)).isSuccess
-          } yield pf
-        }
-        if (resolved.forall(_.isDefined)) Some(resolved.flatten) else None
-      }
+      if (t.parts.forall(pf => keys.columns.contains(pf.source) &&
+        scala.util.Try(pf.valueCol(schema)).isSuccess)) Some(t.parts)
+      else None
     val scoped = partitioned && partsOpt.exists(_.nonEmpty) && {
       // every active data file must sit under the DEFAULT spec — a
       // scoped delete never matches a foreign spec's scope string
       val scopes = IcebergTable.activeDataScopes(spark, table)
       scopes.forall { case (_, sc) =>
-        sc.nonEmpty && sc.takeWhile(_ != ':') == defSpecId.toString }
+        sc.nonEmpty && sc.takeWhile(_ != ':') == t.specId.toString }
     }
     val parts: Seq[PartField] = if (scoped) partsOpt.get else Nil
     // ONE materialization of the caller's key plan (tmp parquet under
@@ -4114,7 +3891,7 @@ object IcebergWriter {
     // silently-nulled key, which would null-safely delete unrelated
     // null rows. The key frame is O(keys) by design, so the extra
     // write is small.
-    val written: Seq[((String, String, Long), Long, Seq[Any])] =
+    val files: Seq[((String, String, Long), Long, Seq[Any])] =
       materialize(keys, s"$base/metadata", conf) { (matKeys, _) =>
         // typed to the table's own column types, deduplicated — two equal
         // key rows must not double-count or bloat the delete file. A cast
@@ -4153,7 +3930,7 @@ object IcebergWriter {
         val src =
           if (untaggableKey) src0
           else {
-            val idPaths = idPathsOf(schemaJson)
+            val idPaths = idPathsOf(t.schemaJson)
             src0.select(src0.schema.fields.toIndexedSeq
               .map(f => tagIdCol(f, idPaths)): _*)
           }
@@ -4165,32 +3942,26 @@ object IcebergWriter {
           if (scoped)
             writeIdentityPartitioned(spark, src, base, parts, table, fs, conf)
           else writeData(src, base, Nil, "data", conf).map(f => (f, Nil))
+        written ++= filesWithTuple.map(_._1._2)
         val cts = rowCounts(filesWithTuple.map(_._1._2), conf)
-        filesWithTuple.zip(cts).map { case ((f, t), n) => (f, n, t) }
+        filesWithTuple.zip(cts).map { case ((f, tuple), n) => (f, n, tuple) }
       }
-    if (written.map(_._2).sum == 0) { // empty key set: no artifacts
-      cleanup(fs, written.map(_._1._2))
-      return None
-    }
-    val nonEmpty = written.filter(_._2 > 0)
-    cleanup(fs, written.filter(_._2 == 0).map(_._1._2))
+    val (nonEmpty, empty) = files.partition(_._2 > 0)
+    cleanup(fs, empty.map(_._1._2))
+    if (nonEmpty.isEmpty) return None // empty key set: no artifacts
     // the manifest's spec: the default spec (scoped / unpartitioned
     // table), or an UNPARTITIONED spec for a global file on a
     // partitioned table — reused when one is already registered,
     // registered fresh (spec-id max+1, default-spec-id unchanged)
     // otherwise, in the same commit as the delete snapshot
-    var carried = st.carried
+    var carried = t.st.carried
+    val specs = (t.st.meta \ "partition-specs").extractOpt[Seq[JValue]]
+      .getOrElse(Nil)
     val (manSpecId, manSpecJson, partStructFields, partFieldIds) =
-      if (!partitioned) (defSpecId, "[]", Nil, Nil)
-      else if (scoped) {
-        val sfJson = JsonMethods.compact(JsonMethods.render(
-          defSpec.get \ "fields"))
-        val psf = parts.map(pf =>
-          StructField(pf.name, pf.valueType(schema), nullable = true))
-        val pids = specFieldsJ.zipWithIndex.map { case (f, i) =>
-          (f \ "field-id").extractOpt[Int].getOrElse(1000 + i) }
-        (defSpecId, sfJson, psf, pids)
-      } else specs.find(sp =>
+      if (!partitioned) (t.specId, "[]", Nil, Nil)
+      else if (scoped)
+        (t.specId, t.specJson, t.partStructFields, t.partFieldIds)
+      else specs.find(sp =>
         (sp \ "fields").extractOpt[Seq[JValue]].exists(_.isEmpty)) match {
         case Some(sp) => ((sp \ "spec-id").extract[Int], "[]", Nil, Nil)
         case None =>
@@ -4209,20 +3980,20 @@ object IcebergWriter {
             else carried :+ ("partition-specs" -> s"[$specsJson]"))
           (newId, "[]", Nil, Nil)
       }
-    val manifestPath = s"$base/metadata/m-$attempt-eqdel.avro"
+    val manifestPath = s"$base/metadata/m-${t.attempt}-eqdel.avro"
     AvroOcf.write(manifestPath,
       manifestAvroSchema(partStructFields, partFieldIds,
         withEqualityIds = true),
-      nonEmpty.map { case ((_, abs, size), n, t) =>
+      nonEmpty.map { case ((_, abs, size), n, tuple) =>
         // content 2: equality deletes; the trailing cell is the ids list
-        Seq(1, newSeq, Seq(2, abs, "PARQUET", t, n, size) ++
+        Seq(1, t.newSeq, Seq(2, abs, "PARQUET", tuple, n, size) ++
           noStatsCells ++ Seq(eqIds))
       }, conf = conf,
-      meta = manifestMeta(schemaJson, manSpecJson, manSpecId, "deletes",
-        fv))
+      meta = manifestMeta(t.schemaJson, manSpecJson, manSpecId, "deletes",
+        t.fv))
+    written += manifestPath
     Some((NewManifest(manifestPath, 1, nonEmpty.size,
-      nonEmpty.map(_._2).sum), manSpecId, carried,
-      nonEmpty.map(_._1._2)))
+      nonEmpty.map(_._2).sum, specId = Some(manSpecId)), carried))
   }
   /** The v2 kill encoding of every Iceberg row-level write: matching
     * rows (`keyed` must carry `__row_path`/`__row_pos`) become
@@ -4609,7 +4380,7 @@ object IcebergWriter {
   def writeMerge(spark: SparkSession, table: String, source: DataFrame,
       keys: Seq[String]): Long = {
     val t = rowTarget(spark, table, "positional-delete merges target",
-      Seq(2), "merge into", "MERGE")
+      Seq(2), Some("merge into"), "MERGE")
     requireMergeInput(table, t.schema, source, keys)
     rowLevelWrite(images(source, t.imageSchema), s"${t.base}/metadata",
       t.conf, t.currentId) { (src, _, written) =>
@@ -4650,7 +4421,7 @@ object IcebergWriter {
       set: Map[String, org.apache.spark.sql.Column],
       maxUpdatedRows: Long = 10000000L): Long = {
     val t = rowTarget(spark, table, "row-level updates target", Seq(2, 3),
-      "update", "row-level updates")
+      Some("update"), "row-level updates")
     requireColumns(table, t.schema, "SET column", set.keys)
     // v3 updates kill by deletion vector; prior DVs on the touched
     // files (and any live v2 positional deletes) merge through the
@@ -4712,7 +4483,7 @@ object IcebergWriter {
       targetFileBytes: Long = 128L << 20,
       zorderBy: Seq[String] = Nil): Long = {
     val t = rowTarget(spark, table, "compaction targets", Seq(2, 3),
-      "compact", "compaction")
+      Some("compact"), "compaction")
     val (schema, parts) = (t.schema, t.parts)
     // output sizing from the CURRENT data files' stats — O(files)
     val dataPaths = IcebergTable.activeDataScopes(spark, table).map(_._1)
@@ -4745,24 +4516,16 @@ object IcebergWriter {
       // write emits ~one file per (task, tuple) instead of one per
       // (task, tuple) x tasks
       else rows.repartition(nOut, parts.map(_.valueCol(schema)): _*)
-    val filesWithTuple = writeIdentityPartitioned(spark, packed, t.base,
-      parts, table, t.fs, t.conf, fieldIds = idPathsOf(t.schemaJson))
-    val rwIdFields = idFieldsOf(t.schemaJson)
-    val fileSC = filesWithTuple.map(f =>
-      statsCells(f._1._2, rwIdFields, t.conf))
-    val manifestPath = s"${t.base}/metadata/m-${t.attempt}.avro"
     // v3 row lineage: the rewritten files take FRESH id ranges — this
     // compaction does not materialize per-row ids, so identity does not
     // survive it (readWithRowIds serves the fresh ranges); the Delta
-    // twin's materialized-column preservation is the OPTIMIZE path
-    writeDataManifest(manifestPath, t.partStructFields, t.partFieldIds,
-      filesWithTuple, fileSC, t.newSeq, t.priorNext, t.fv, t.conf,
-      t.manifestMetaOf("data"))
-    // no prior manifests: the replace snapshot's list names ONLY the
+    // twin's materialized-column preservation is the OPTIMIZE path. No
+    // prior manifests: the replace snapshot's list names ONLY the
     // compacted manifest — that IS the operation's semantics
-    commitRowLevel(t, "replace", Seq(NewManifest(manifestPath, 0,
-      filesWithTuple.size, fileSC.map(_._2).sum)),
-      filesWithTuple.map(_._1._2), prior = Some(Nil))
+    reclaiming(t.fs) { written =>
+      commitRowLevel(t, "replace", Seq(imageManifest(spark, t, packed, written)),
+        written.toSeq, prior = Some(Nil))
+    }
   }
 
   /** Expire all but the newest `keepLast` snapshots: the metadata json

@@ -53,8 +53,7 @@ object NetCDF3Reader {
         if (collapses(v, strlenDims)) StringType else DoubleType)))
   }
 
-  def readLongFormat(spark: SparkSession, path: String,
-      partitions: Int = 0): DataFrame = {
+  def readLongFormat(spark: SparkSession, path: String): DataFrame = {
     val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
     val head = {
       // header lives at the front; probe enough bytes to parse it
@@ -126,8 +125,7 @@ object NetCDF3Reader {
     val isTimeDim = hyperDims.map(d => coordVars.get(d.name).exists(_.epochSecondsTime))
 
     val dim0 = shape.head
-    val nPart = if (partitions > 0) partitions
-      else math.min(dim0, spark.sparkContext.defaultParallelism)
+    val nPart = math.min(dim0, spark.sparkContext.defaultParallelism)
     val ranges = (0 until nPart).map { p =>
       val lo = (dim0.toLong * p / nPart).toInt
       val hi = (dim0.toLong * (p + 1) / nPart).toInt
@@ -195,12 +193,8 @@ object NetCDF3Reader {
             val coordCells: Seq[Any] = coordsLocal.indices.map { ci =>
               val pos = if (ci == 0) t else idx(ci - 1)
               val c = coordsLocal(ci)(pos)
-              if (isTimeLocal(ci)) {
-                if (c.isNaN) null
-                else java.time.LocalDateTime.ofEpochSecond(
-                  math.floor(c).toLong, ((c - math.floor(c)) * 1e9).toInt,
-                  java.time.ZoneOffset.UTC)
-              } else java.lang.Double.valueOf(c)
+              if (isTimeLocal(ci)) graft.sources.CfTime.timestamp(c)
+              else java.lang.Double.valueOf(c)
             }
             val auxCells: Seq[Any] = auxData.zip(auxLocal).zip(auxShapes).map {
               case ((arr, (_, dIdx)), sh) =>

@@ -53,8 +53,7 @@ object NetCDF4Reader {
 
   private def baseName(path: String): String = path.split('/').last
 
-  def readLongFormat(spark: SparkSession, path: String,
-      partitions: Int = 0): DataFrame = {
+  def readLongFormat(spark: SparkSession, path: String): DataFrame = {
     val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
@@ -187,8 +186,8 @@ object NetCDF4Reader {
       case Some(pl) => pl.chunks.map(_.offsets)
     }
 
-    val nPart = if (partitions > 0) partitions
-      else math.max(1, math.min(cells.size, spark.sparkContext.defaultParallelism))
+    val nPart =
+      math.max(1, math.min(cells.size, spark.sparkContext.defaultParallelism))
     val pathLocal = path
     val shapeLocal = shape
     val chunkLocal = chunkDims
@@ -291,12 +290,8 @@ object NetCDF4Reader {
               while (k < rank) { gi += gIdx(k) * strides(k); k += 1 }
               val coordCells: Seq[Any] = coordsLocal.indices.map { ci =>
                 val c = coordsLocal(ci)(gIdx(ci))
-                if (isTimeLocal(ci)) {
-                  if (c.isNaN) null
-                  else java.time.LocalDateTime.ofEpochSecond(
-                    math.floor(c).toLong, ((c - math.floor(c)) * 1e9).toInt,
-                    java.time.ZoneOffset.UTC)
-                } else java.lang.Double.valueOf(c)
+                if (isTimeLocal(ci)) graft.sources.CfTime.timestamp(c)
+                else java.lang.Double.valueOf(c)
               }
               def cellOf(col: AnyRef, idx: Int): Any = col match {
                 case ds: Array[Double] =>

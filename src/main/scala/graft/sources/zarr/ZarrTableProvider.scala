@@ -390,7 +390,7 @@ class ZarrPartitionReader(p: ZarrInputPartition) extends PartitionReader[Interna
         val c = p.coords(dim)(globalBase(dim) + cursor(dim))
         row(i) =
           if (p.coordIsTime(dim)) {
-            if (c.isNaN) null else java.lang.Long.valueOf(math.round(c * 1e6))
+            if (c.isNaN) null else java.lang.Long.valueOf(graft.sources.CfTime.micros(c))
           } else java.lang.Double.valueOf(c)
       }
       i += 1

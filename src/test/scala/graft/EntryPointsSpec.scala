@@ -9,8 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Rules every driver and dev entry point keeps: one session factory, one
   * JSON string escaper for the artifacts the driver parses, one scan core
-  * for the table formats' row keys, kill sets and parquet footers, and one
-  * walk over a GRIB file's messages. */
+  * for the table formats' row keys, kill sets and parquet footers, one
+  * walk over a GRIB file's messages, and one write core per table format. */
 class EntryPointsSpec extends AnyFunSuite {
 
   test("no session is built outside GraftSession") {
@@ -61,5 +61,38 @@ class EntryPointsSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"walk GRIB messages through GribIndex and read through GribReader: ${offenders.mkString(", ")}")
+  }
+
+  test("data-writing commits go through the write core") {
+    val lines = Files.readAllLines(
+      Paths.get("src/main/scala/graft/sources/TableWriters.scala")).asScala.toSeq
+    val objectDecl = """^object (\w+)""".r
+    val memberDecl =
+      """^  (?:private(?:\[\w+\])? )?(?:final )?(?:case class|class|lazy val|val|def) (\w+)""".r
+    // (enclosing object, enclosing member) of every line
+    val owners = lines.scanLeft(("", "")) { case ((obj, mem), l) =>
+      objectDecl.findFirstMatchIn(l) match {
+        case Some(m) => (m.group(1), "")
+        case None => (obj, memberDecl.findFirstMatchIn(l).map(_.group(1)).getOrElse(mem))
+      }
+    }.tail
+    def users(token: String, inObject: Option[String]): Set[String] =
+      lines.zip(owners).collect {
+        case (l, (obj, mem)) if l.contains(token) && inObject.forall(_ == obj) => mem
+      }.toSet
+    // token, object scope, the members allowed to name it: its definition
+    // and its one core caller
+    val rules = Seq(
+      ("commitSnapshot(", None, Set("commitSnapshot", "commitRowLevel")),
+      ("writeDataManifest(", None, Set("writeDataManifest", "imageManifest")),
+      ("statsFieldsWithCounts(", None, Set("statsFieldsWithCounts", "placeData")),
+      ("writeData(", Some("DeltaWriter"), Set("placeData", "cdcActions")))
+    val offenders = rules.collect {
+      case (token, obj, allowed) if users(token, obj) != allowed =>
+        s"$token in ${users(token, obj).toSeq.sorted.mkString(", ")}"
+    }
+    assert(offenders.isEmpty,
+      s"write through placeData/imageManifest and commit through commitLog/" +
+        s"commitRowLevel: ${offenders.mkString("; ")}")
   }
 }

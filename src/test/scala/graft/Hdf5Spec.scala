@@ -94,6 +94,19 @@ class Hdf5Spec extends SparkSpec {
     assert(fills == (0 until 60).count(_ % 17 == 0))
   }
 
+  test("time coordinates round to the microsecond") {
+    val p = tmp("ms.nc")
+    HW.write(p, Seq(
+      HW.VarSpec("time", Seq("time"), Seq(2),
+        Seq(1700000000001.0, 1700000000300.0), dtype = "f8",
+        units = Some("milliseconds since 1970-01-01")),
+      HW.VarSpec("v", Seq("time"), Seq(2), Seq(1.0, 2.0), dtype = "f8")))
+    val times = NetCDF4Reader.readLongFormat(spark, p).orderBy($"time")
+      .select(date_format($"time", "HH:mm:ss.SSSSSS")).as[String].collect()
+    // truncation read the doubles' representation error: .000999, .299999
+    assert(times.toSeq == Seq("22:13:20.001000", "22:13:20.300000"))
+  }
+
   test("chunked + deflate + shuffle: same values, one task unit per chunk") {
     val flat = tmp("flat.nc")
     writeWeather(flat, chunks = None)

@@ -148,8 +148,9 @@ class NetCDF3Spec extends SparkSpec {
   }
 
   test("reads are distributed across outer-dimension ranges") {
-    val parts = NetCDF3Reader.readLongFormat(spark, file, partitions = 3)
-    assert(parts.rdd.getNumPartitions == 3)
+    val parts = NetCDF3Reader.readLongFormat(spark, file)
+    assert(parts.rdd.getNumPartitions ==
+      math.min(nt, spark.sparkContext.defaultParallelism))
     assert(parts.count() == nt * ny * nx)
     assert(parts.agg(round(sum($"d2m"), 6)).head().getDouble(0) ==
       df.agg(round(sum($"d2m"), 6)).head().getDouble(0))
@@ -182,6 +183,21 @@ class NetCDF3Spec extends SparkSpec {
     // the regression: 1.6s used round(1.6)=2 for the seconds AND re-added the
     // 0.6 fraction, yielding 02.600 instead of 01.600
     assert(times.toSeq == Seq("00.500", "01.600"))
+  }
+
+  test("time coordinates round to the microsecond") {
+    val path = java.nio.file.Files.createTempDirectory("nc3ms").toString + "/ms.nc"
+    NW.write(path,
+      dims = Seq(NW.DimSpec("time", 2, record = true)),
+      vars = Seq(
+        NW.VarSpec("time", Seq("time"), NetCDF3.NC_DOUBLE,
+          Seq(1700000000001.0, 1700000000300.0),
+          attrs = Seq("units" -> "milliseconds since 1970-01-01")),
+        NW.VarSpec("v", Seq("time"), NetCDF3.NC_DOUBLE, Seq(1.0, 2.0))))
+    val times = NetCDF3Reader.readLongFormat(spark, path).orderBy($"time")
+      .select(date_format($"time", "HH:mm:ss.SSSSSS")).as[String].collect()
+    // truncation read the doubles' representation error: .000999, .299999
+    assert(times.toSeq == Seq("22:13:20.001000", "22:13:20.300000"))
   }
 
   test("NC_CHAR variables collapse the trailing strlen dim into StringType columns") {

@@ -18,6 +18,16 @@ class TableWritersSpec extends SparkSpec {
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("writer").toString
 
+  /** The `.parquet` files under `table`, outside its `metaDir`. */
+  private def dataFiles(table: String, metaDir: String): Seq[String] = {
+    val root = java.nio.file.Paths.get(table)
+    val it = java.nio.file.Files.walk(root).iterator()
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .filter(p => p.toString.endsWith(".parquet") &&
+        !root.relativize(p).startsWith(metaDir))
+      .map(_.toString).toSeq
+  }
+
   test("delta writer: create partitioned, append, read back, time travel") {
     val table = tmp()
     val batch1 = Seq((1L, "t1", "en"), (2L, "t2", "en"), (3L, "t3", "de"))
@@ -3151,6 +3161,8 @@ class TableWritersSpec extends SparkSpec {
       DeltaWriter.writeAppend(spark, Seq(Tuple1(1L)).toDF("id"), t3)
     }
     assert(eRt.getMessage.contains("unparseable"), eRt.getMessage)
+    // …and the failed append reclaims the data file it placed
+    assert(dataFiles(t3, "_delta_log").isEmpty, dataFiles(t3, "_delta_log"))
     // Iceberg v1 tables: schema-only changes are directed (their
     // metadata requires the top-level `schema` this writer drops)
     val t4 = tmp()
@@ -3762,5 +3774,35 @@ class TableWritersSpec extends SparkSpec {
       System.currentTimeMillis() + 1000).count() == 2)
     val eI2 = intercept[Exception](IcebergTable.readAsOf(spark, it, 1L))
     assert(eI2.getMessage.contains("predates"), eI2.getMessage)
+  }
+
+  test("appends go through the write core: an empty append places no " +
+    "data file and still commits, both formats") {
+    val one = Seq((1L, "a")).toDF("id", "text")
+    val none = one.filter($"id" < 0L)
+    val d = tmp()
+    assert(DeltaWriter.writeAppend(spark, one, d) == 0L)
+    assert(DeltaWriter.writeAppend(spark, none, d) == 1L)
+    assert(dataFiles(d, "_delta_log").size == 1, dataFiles(d, "_delta_log"))
+    assert(DeltaTable.read(spark, d).count() == 1)
+    val i = tmp()
+    val s1 = IcebergWriter.writeAppend(spark, one, i)
+    val s2 = IcebergWriter.writeAppend(spark, none, i)
+    assert(s2 != s1 && IcebergTable.currentSnapshotId(spark, i).contains(s2))
+    assert(dataFiles(i, "metadata").size == 1, dataFiles(i, "metadata"))
+    assert(IcebergTable.read(spark, i).count() == 1)
+    // a CREATE from an empty frame is typed and empty, with no data file
+    val de = tmp()
+    assert(DeltaWriter.writeAppend(spark, none, de) == 0L)
+    assert(dataFiles(de, "_delta_log").isEmpty, dataFiles(de, "_delta_log"))
+    val dRead = DeltaTable.read(spark, de)
+    assert(dRead.schema.map(f => (f.name, f.dataType)) ==
+      one.schema.map(f => (f.name, f.dataType)) && dRead.count() == 0)
+    val ie = tmp()
+    IcebergWriter.writeAppend(spark, none, ie)
+    assert(dataFiles(ie, "metadata").isEmpty, dataFiles(ie, "metadata"))
+    val iRead = IcebergTable.read(spark, ie)
+    assert(iRead.schema.map(f => (f.name, f.dataType)) ==
+      one.schema.map(f => (f.name, f.dataType)) && iRead.count() == 0)
   }
 }
