@@ -957,16 +957,18 @@ object ZarrMeta {
   }
 
   /** Decode one chunk file into doubles (scale/offset applied; missing and
-    * NaN become Double.NaN). Absent chunk files yield fill_value. */
+    * NaN become Double.NaN). An absent chunk file reads as cells holding
+    * fill_value, decoded like stored ones. */
   def readChunk(conf: Configuration, store: String, meta: ArrayMeta,
       chunkIdx: Seq[Int]): Array[Double] = {
     val n = meta.chunks.product
     // filters re-type the stored buffer, so the decompressed size is the
     // ENCODED dtype's width, not the array dtype's
     val encBytes = n * dtypeBytes(meta.encodedDtype)
+    val dec = new CellDecoder(meta)
     chunkRaw(conf, store, meta, chunkIdx, encBytes) match {
-      case None => Array.fill(n)(meta.fillValue.getOrElse(Double.NaN))
-      case Some(raw) => untranspose(decode(raw, meta, n), meta)
+      case None => Array.fill(n)(dec.fill)
+      case Some(raw) => untranspose(dec.decode(raw, n), meta)
     }
   }
 
@@ -1456,40 +1458,68 @@ object ZarrMeta {
     else sign * (1024 + frac) * math.pow(2, exp - 25)
   }
 
-  private def decode(bytes: Array[Byte], meta: ArrayMeta, n: Int): Array[Double] = {
-    val order =
-      if (meta.dtype.startsWith(">")) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN
-    val bb = ByteBuffer.wrap(bytes).order(order)
-    val out = new Array[Double](n)
-    var i = 0
-    while (i < n) {
-      val raw: Double = meta.dtype.drop(1) match {
-        case "f8" => bb.getDouble(i * 8)
-        case "f4" => bb.getFloat(i * 4).toDouble
-        case "f2" => halfToDouble(bb.getShort(i * 2) & 0xffff)
-        case "i8" => bb.getLong(i * 8).toDouble
-        case "i4" => bb.getInt(i * 4).toDouble
-        case "i2" => bb.getShort(i * 2).toDouble
-        case "i1" => bb.get(i).toDouble
+  /** One array's element decode, chosen once per chunk: the dtype code and
+    * byte order pick the raw element loop, and missing, scale and offset
+    * are unboxed. A stored cell and an absent chunk's fill value both go
+    * through [[cell]]. */
+  private final class CellDecoder(meta: ArrayMeta) {
+    private val code = codeOf(meta.dtype)
+    private val isDatetime = code.startsWith("M8[") || code.startsWith("m8[")
+    private val hasMissing = meta.missingValue.isDefined
+    private val missing = meta.missingValue.getOrElse(0.0)
+    private val scale = meta.scaleFactor.getOrElse(1.0)
+    private val offset = meta.addOffset.getOrElse(0.0)
+
+    /** Missing and NaN become Double.NaN; anything else is scaled. */
+    def cell(raw: Double): Double =
+      if ((hasMissing && raw == missing) || raw.isNaN) Double.NaN
+      else raw * scale + offset
+
+    /** The fill value as a stored cell holding it would read: NaT fills
+      * of datetime64 arrays become NaN like a stored NaT. */
+    def fill: Double = meta.fillValue match {
+      case Some(f) if isDatetime && f == Long.MinValue.toDouble => Double.NaN
+      case Some(f) => cell(f)
+      case None => Double.NaN
+    }
+
+    def decode(bytes: Array[Byte], n: Int): Array[Double] = {
+      val bb = ByteBuffer.wrap(bytes).order(orderOf(meta.dtype))
+      val out = new Array[Double](n)
+      var i = 0
+      // raw values first, then masking and scaling in one plain loop: two
+      // tight loops run faster than one that does both
+      code match {
+        case "f8" => while (i < n) { out(i) = bb.getDouble(i * 8); i += 1 }
+        case "f4" => while (i < n) { out(i) = bb.getFloat(i * 4).toDouble; i += 1 }
+        case "f2" => while (i < n) { out(i) = halfToDouble(bb.getShort(i * 2) & 0xffff); i += 1 }
+        case "i8" => while (i < n) { out(i) = bb.getLong(i * 8).toDouble; i += 1 }
+        case "i4" => while (i < n) { out(i) = bb.getInt(i * 4).toDouble; i += 1 }
+        case "i2" => while (i < n) { out(i) = bb.getShort(i * 2).toDouble; i += 1 }
+        case "i1" => while (i < n) { out(i) = bb.get(i).toDouble; i += 1 }
         case "u8" => // top bit set would wrap; real u8 coords/data stay < 2^63
-          val v = bb.getLong(i * 8)
-          if (v >= 0) v.toDouble else (v & Long.MaxValue).toDouble + 9.223372036854776e18
-        case "u4" => (bb.getInt(i * 4) & 0xffffffffL).toDouble
-        case "u2" => (bb.getShort(i * 2) & 0xffff).toDouble
-        case "u1" => (bb.get(i) & 0xff).toDouble
-        case "b1" => if (bb.get(i) == 0) 0.0 else 1.0 // numpy bool masks
-        case m if m.startsWith("M8[") || m.startsWith("m8[") =>
+          while (i < n) {
+            val v = bb.getLong(i * 8)
+            out(i) = if (v >= 0) v.toDouble else (v & Long.MaxValue).toDouble + 9.223372036854776e18
+            i += 1
+          }
+        case "u4" => while (i < n) { out(i) = (bb.getInt(i * 4) & 0xffffffffL).toDouble; i += 1 }
+        case "u2" => while (i < n) { out(i) = (bb.getShort(i * 2) & 0xffff).toDouble; i += 1 }
+        case "u1" => while (i < n) { out(i) = (bb.get(i) & 0xff).toDouble; i += 1 }
+        case "b1" => while (i < n) { out(i) = if (bb.get(i) == 0) 0.0 else 1.0; i += 1 } // numpy bool masks
+        case _ if isDatetime =>
           // datetime64/timedelta64 counts; NaT is Long.MinValue → NaN
-          val v = bb.getLong(i * 8)
-          if (v == Long.MinValue) Double.NaN else v.toDouble
-        case other => throw new UnsupportedOperationException(
+          while (i < n) {
+            val v = bb.getLong(i * 8)
+            out(i) = if (v == Long.MinValue) Double.NaN else v.toDouble
+            i += 1
+          }
+        case _ => throw new UnsupportedOperationException(
           s"zarr dtype '${meta.dtype}' (array ${meta.name})")
       }
-      out(i) =
-        if (meta.missingValue.contains(raw) || raw.isNaN) Double.NaN
-        else raw * meta.scaleFactor.getOrElse(1.0) + meta.addOffset.getOrElse(0.0)
-      i += 1
+      i = 0
+      while (i < n) { out(i) = cell(out(i)); i += 1 }
+      out
     }
-    out
   }
 }

@@ -5,15 +5,16 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableColumnVector}
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
 import ZarrMeta.{ArrayMeta, Store}
 
@@ -32,9 +33,11 @@ import ZarrMeta.{ArrayMeta, Store}
   * Scale design: one input partition per (filter-surviving) chunk of the
   * hypercube — reads parallelize over the chunk grid with no driver-side
   * data movement; coordinate vectors (small by construction) ride inside
-  * the partition descriptors. Cell-level coordinate ranges are applied in
-  * the reader; Spark re-applies the full residual predicate, so pushdown is
-  * a pure pruning optimization, never a correctness dependency.
+  * the partition descriptors. The read is columnar ([[ZarrColumnarReader]]):
+  * each partition decodes its chunks once and fills column vectors over its
+  * window, the chunk cut to the pushed coordinate index ranges, in C order.
+  * Spark re-applies the full residual predicate, so pushdown is a pure
+  * pruning optimization, never a correctness dependency.
   */
 class ZarrTableProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "zarr"
@@ -217,7 +220,11 @@ class ZarrScan(store: Store, required: StructType, pushed: Array[Filter])
     val neededVars = (store.dataVars ++ store.auxVars)
       .filter(v => required.fieldNames.contains(v.name))
     val dimIdx = store.dims.zipWithIndex.toMap
-    val tconf = graft.sources.TaskConf(ZarrTableProvider.sessionConf())
+    // every partition is serialized into its own task, so the effective
+    // Hadoop conf (about 70 KB) rides one broadcast per scan: an executor
+    // deserializes and builds it once, not once per task
+    val tconf = org.apache.spark.sql.SparkSession.active.sparkContext
+      .broadcast(graft.sources.TaskConf(ZarrTableProvider.sessionConf()))
     tuples.map { t =>
       // reference stores: narrow each var's chunk index to this
       // partition's cell window, so the task closure ships O(window)
@@ -253,150 +260,200 @@ final case class ZarrInputPartition(
     coordIsTime: Array[Boolean],
     vars: Array[ArrayMeta],
     outputCols: Array[String],
-    tconf: graft.sources.TaskConf) extends InputPartition
+    tconf: Broadcast[graft.sources.TaskConf]) extends InputPartition
 
 class ZarrReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new ZarrPartitionReader(partition.asInstanceOf[ZarrInputPartition])
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
+  // Spark reads through createColumnarReader whenever every partition is
+  // columnar, and every zarr partition is
+  override def createReader(partition: InputPartition): Nothing =
+    throw new UnsupportedOperationException(
+      "the zarr scan is columnar: read it through createColumnarReader")
+  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] =
+    new ZarrColumnarReader(partition.asInstanceOf[ZarrInputPartition])
 }
 
-class ZarrPartitionReader(p: ZarrInputPartition) extends PartitionReader[InternalRow] {
-  private val conf = p.tconf.value
-  private val nDims = p.dims.length
+object ZarrColumnarReader {
+  /** Rows per batch: the vectors are allocated once per partition. */
+  val BatchRows = 4096
+}
 
-  /** Per-var chunk access. The partition grid is the HEAD data var's chunk
-    * grid; a var chunked identically (the normal xarray layout — every
-    * same-shape var shares one chunk scheme) reads exactly one chunk, as
-    * before. A var with a DIFFERENT chunk grid resolves each global cell
-    * through its own grid, caching decoded chunks — the cache is bounded by
-    * the var-chunks overlapping this partition's hyper-rectangle, so memory
-    * stays O(partition extent / var chunk extent) decoded chunks. */
-  private final class VarChunks(v: ArrayMeta) {
-    // AUXILIARY vars (2-D lat/lon beside 3-D data) carry a strict dim
-    // subset: each of its axes maps to the matching store dim, and cells
-    // index by that subset of the row cursor
-    private val dimsIdx: Array[Int] = v.dims.map(d => p.dims.indexOf(d)).toArray
-    private val nVDims = dimsIdx.length
-    private val sameGrid = nVDims == nDims &&
-      java.util.Arrays.equals(v.chunks.toArray, p.chunks)
-    private var single: AnyRef = _
-    private var cache: java.util.HashMap[java.util.List[Integer], AnyRef] = _
-    private def load(idx: Seq[Int]): AnyRef =
-      if (ZarrMeta.isStringMeta(v))
-        ZarrMeta.readChunkStrings(conf, p.storePath, v, idx)
-      else ZarrMeta.readChunk(conf, p.storePath, v, idx)
-    /** Raw cell (Double, String, or null) at the reader's global cursor. */
-    def value(globalBase: Array[Int], cursor: Array[Int]): Any = {
-      if (sameGrid) {
-        if (single == null) single = load(p.chunkIdx.toSeq)
-        var li = 0
-        var d = 0
-        while (d < nDims) { li = li * p.chunks(d) + cursor(d); d += 1 }
-        cell(single, li)
+/** Reads one partition's window (its chunk ∩ the pushed index ranges) in C
+  * order into reused column vectors. Along the last dimension a window row
+  * is a contiguous run of cells, so each column fills a run at a time: a
+  * coordinate by index arithmetic, a variable on the partition's chunk grid
+  * by copying from its decoded chunk. */
+class ZarrColumnarReader(p: ZarrInputPartition) extends PartitionReader[ColumnarBatch] {
+  import ZarrColumnarReader.BatchRows
+
+  private val conf = p.tconf.value.value
+  private val nDims = p.dims.length
+  private val last = nDims - 1
+  private val base = Array.tabulate(nDims)(d => p.chunkIdx(d) * p.chunks(d))
+  // the window, inclusive global indices per dim; never empty, because
+  // planning emits only the chunks that overlap the pushed ranges
+  private val lo = Array.tabulate(nDims)(d => math.max(base(d), p.rangeLo(d)))
+  private val hi = Array.tabulate(nDims)(d => math.min(
+    math.min(base(d) + p.chunks(d), p.shape(d)) - 1, p.rangeHi(d)))
+  // C-order strides of a decoded chunk on the partition's grid
+  private val stride = Array.tabulate(nDims)(d => p.chunks.drop(d + 1).product)
+
+  // cursor: global index of every dim above the last, and of the next
+  // cell along the last
+  private val cur = lo.clone()
+  private var inner = lo(last)
+  private var done = false
+
+  private def load(v: ArrayMeta, idx: Seq[Int]): AnyRef =
+    if (ZarrMeta.isStringMeta(v))
+      ZarrMeta.readChunkStrings(conf, p.storePath, v, idx).map(s =>
+        if (s == null) null else s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    else ZarrMeta.readChunk(conf, p.storePath, v, idx)
+
+  /** Writes cell `li` of a decoded chunk (doubles or UTF-8 strings). */
+  private def put(vec: WritableColumnVector, row: Int, data: AnyRef, li: Int): Unit =
+    data match {
+      case ds: Array[Double] =>
+        if (ds(li).isNaN) vec.putNull(row) else vec.putDouble(row, ds(li))
+      case bs: Array[Array[Byte]] =>
+        if (bs(li) == null) vec.putNull(row) else vec.putByteArray(row, bs(li))
+    }
+
+  /** One output column: fills `take` rows from `row` on, for the cells at
+    * the cursor's run along the last dim. */
+  private abstract class Column(val dataType: DataType) {
+    def fill(vec: WritableColumnVector, row: Int, take: Int): Unit
+  }
+
+  private final class DoubleCoord(d: Int) extends Column(DoubleType) {
+    private val coord = p.coords(d)
+    def fill(vec: WritableColumnVector, row: Int, take: Int): Unit =
+      if (d == last) vec.putDoubles(row, take, coord, inner)
+      else vec.putDoubles(row, take, coord(cur(d)))
+  }
+
+  /** A time axis maps through CfTime once per window index; NaT is null. */
+  private final class TimeCoord(d: Int) extends Column(TimestampNTZType) {
+    private val nat = Array.tabulate(hi(d) - lo(d) + 1)(i => p.coords(d)(lo(d) + i).isNaN)
+    private val micros = Array.tabulate(hi(d) - lo(d) + 1)(i =>
+      if (nat(i)) 0L else graft.sources.CfTime.micros(p.coords(d)(lo(d) + i)))
+    def fill(vec: WritableColumnVector, row: Int, take: Int): Unit =
+      if (d == last) {
+        var i = 0
+        while (i < take) {
+          val w = inner - lo(d) + i
+          if (nat(w)) vec.putNull(row + i) else vec.putLong(row + i, micros(w))
+          i += 1
+        }
       } else {
-        if (cache == null) cache = new java.util.HashMap()
-        val vIdx = new Array[Int](nVDims)
-        val key = new java.util.ArrayList[Integer](nVDims)
+        val w = cur(d) - lo(d)
+        if (nat(w)) vec.putNulls(row, take) else vec.putLongs(row, take, micros(w))
+      }
+  }
+
+  private def varType(v: ArrayMeta): DataType =
+    if (ZarrMeta.isStringMeta(v)) StringType else DoubleType
+
+  /** A variable on the partition's chunk grid reads its one chunk. */
+  private final class SameGridVar(v: ArrayMeta) extends Column(varType(v)) {
+    private var data: AnyRef = _
+    def fill(vec: WritableColumnVector, row: Int, take: Int): Unit = {
+      if (data == null) data = load(v, p.chunkIdx.toSeq)
+      var off = inner - base(last)
+      var d = 0
+      while (d < last) { off += (cur(d) - base(d)) * stride(d); d += 1 }
+      data match {
+        case ds: Array[Double] =>
+          vec.putDoubles(row, take, ds, off)
+          var i = 0
+          while (i < take) { if (ds(off + i).isNaN) vec.putNull(row + i); i += 1 }
+        case _ =>
+          var i = 0
+          while (i < take) { put(vec, row + i, data, off + i); i += 1 }
+      }
+    }
+  }
+
+  /** A variable on another chunk grid, or an auxiliary variable over a
+    * subset of the dims, resolves each cell through its own grid. Decoded
+    * chunks are cached in a dense array over the var-chunks the window
+    * overlaps, keyed by their linear index. */
+  private final class OtherGridVar(v: ArrayMeta) extends Column(varType(v)) {
+    private val dimsIdx = v.dims.map(d => p.dims.indexOf(d)).toArray
+    private val vch = v.chunks.toArray
+    private val n = dimsIdx.length
+    private val cacheLo = Array.tabulate(n)(j => lo(dimsIdx(j)) / vch(j))
+    private val cacheN = Array.tabulate(n)(j => hi(dimsIdx(j)) / vch(j) - cacheLo(j) + 1)
+    private val cache = new Array[AnyRef](cacheN.product)
+    private val vIdx = new Array[Int](n)
+    def fill(vec: WritableColumnVector, row: Int, take: Int): Unit = {
+      var i = 0
+      while (i < take) {
+        var key = 0
         var li = 0
         var j = 0
-        while (j < nVDims) {
+        while (j < n) {
           val d = dimsIdx(j)
-          val g = globalBase(d) + cursor(d)
-          vIdx(j) = g / v.chunks(j)
-          key.add(Integer.valueOf(vIdx(j)))
-          li = li * v.chunks(j) + g % v.chunks(j)
+          val g = if (d == last) inner + i else cur(d)
+          vIdx(j) = g / vch(j)
+          key = key * cacheN(j) + (vIdx(j) - cacheLo(j))
+          li = li * vch(j) + (g - vIdx(j) * vch(j))
           j += 1
         }
-        var chunk = cache.get(key)
-        if (chunk == null) { chunk = load(vIdx.toSeq); cache.put(key, chunk) }
-        cell(chunk, li)
+        if (cache(key) == null) cache(key) = load(v, vIdx.toSeq)
+        put(vec, row + i, cache(key), li)
+        i += 1
       }
-    }
-    private def cell(chunk: AnyRef, li: Int): Any = chunk match {
-      case ds: Array[Double] => ds(li)
-      case ss: Array[String] => ss(li)
     }
   }
 
-  private var varData: Array[VarChunks] = _
-  // output accessors: >=0 -> var index, (-1-d) -> coord of dim d
-  private val accessors: Array[Int] = p.outputCols.map { c =>
+  private val columns: Array[Column] = p.outputCols.map { c =>
     val d = p.dims.indexOf(c)
-    if (d >= 0) -1 - d else p.vars.indexWhere(_.name == c)
-  }
-
-  // local C-order iteration over the chunk, bounded by shape + pushed ranges
-  private val localShape = new Array[Int](nDims)
-  private val globalBase = new Array[Int](nDims)
-  private val cursor = new Array[Int](nDims)
-  private var started = false
-  private var finished = false
-  locally {
-    var d = 0
-    while (d < nDims) {
-      globalBase(d) = p.chunkIdx(d) * p.chunks(d)
-      localShape(d) = math.min(p.chunks(d), p.shape(d) - globalBase(d))
-      d += 1
-    }
-  }
-
-  private def inRange: Boolean = {
-    var d = 0
-    while (d < nDims) {
-      val g = globalBase(d) + cursor(d)
-      if (g < p.rangeLo(d) || g > p.rangeHi(d)) return false
-      d += 1
-    }
-    true
-  }
-
-  private def advance(): Boolean = {
-    if (!started) { started = true }
+    if (d >= 0) { if (p.coordIsTime(d)) new TimeCoord(d) else new DoubleCoord(d) }
     else {
-      var d = nDims - 1
-      var carry = true
-      while (carry && d >= 0) {
-        cursor(d) += 1
-        if (cursor(d) < localShape(d)) carry = false
-        else { cursor(d) = 0; d -= 1 }
-      }
-      if (carry) { finished = true; return false }
+      val v = p.vars.find(_.name == c).get
+      val sameGrid = v.dims.map(p.dims.indexOf(_)) == p.dims.indices &&
+        v.chunks == p.chunks.toSeq
+      if (sameGrid) new SameGridVar(v) else new OtherGridVar(v)
     }
-    true
   }
 
-  override def next(): Boolean = {
-    if (finished) return false
-    if (varData == null) varData = p.vars.map(new VarChunks(_))
-    while (advance()) if (inRange) return true
+  private val vectors = OnHeapColumnVector.allocateColumns(BatchRows,
+    StructType(p.outputCols.zip(columns).map { case (c, col) => StructField(c, col.dataType) }))
+  private val batch = new ColumnarBatch(vectors.toArray[ColumnVector])
+
+  /** Moves the cursor to the next run; false past the window's end. */
+  private def advanceOuter(): Boolean = {
+    var d = last - 1
+    while (d >= 0) {
+      cur(d) += 1
+      if (cur(d) <= hi(d)) return true
+      cur(d) = lo(d)
+      d -= 1
+    }
     false
   }
 
-  override def get(): InternalRow = {
-    val row = new Array[Any](accessors.length)
-    var i = 0
-    while (i < accessors.length) {
-      val a = accessors(i)
-      if (a >= 0) {
-        row(i) = varData(a).value(globalBase, cursor) match {
-          case v: Double =>
-            if (v.isNaN) null else java.lang.Double.valueOf(v)
-          case s: String =>
-            org.apache.spark.unsafe.types.UTF8String.fromString(s)
-          case _ => null
-        }
-      } else {
-        val dim = -1 - a
-        val c = p.coords(dim)(globalBase(dim) + cursor(dim))
-        row(i) =
-          if (p.coordIsTime(dim)) {
-            if (c.isNaN) null else java.lang.Long.valueOf(graft.sources.CfTime.micros(c))
-          } else java.lang.Double.valueOf(c)
+  override def next(): Boolean = {
+    if (done) return false
+    vectors.foreach(_.reset())
+    var filled = 0
+    while (filled < BatchRows && !done) {
+      val take = math.min(BatchRows - filled, hi(last) - inner + 1)
+      var c = 0
+      while (c < columns.length) { columns(c).fill(vectors(c), filled, take); c += 1 }
+      filled += take
+      inner += take
+      if (inner > hi(last)) {
+        inner = lo(last)
+        done = !advanceOuter()
       }
-      i += 1
     }
-    new GenericInternalRow(row)
+    batch.setNumRows(filled)
+    true
   }
 
-  override def close(): Unit = { varData = null }
+  override def get(): ColumnarBatch = batch
+
+  override def close(): Unit = batch.close()
 }

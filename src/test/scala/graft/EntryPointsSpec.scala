@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Rules every driver and dev entry point keeps: one session factory, one
   * JSON string escaper for the artifacts the driver parses, one scan core
   * for the table formats' row keys, kill sets and parquet footers, one
-  * walk over a GRIB file's messages, and one write core per table format. */
+  * walk over a GRIB file's messages, one write core per table format, and a
+  * columnar Zarr scan. */
 class EntryPointsSpec extends AnyFunSuite {
 
   test("no session is built outside GraftSession") {
@@ -94,5 +95,17 @@ class EntryPointsSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"write through placeData/imageManifest and commit through commitLog/" +
         s"commitRowLevel: ${offenders.mkString("; ")}")
+  }
+
+  test("the Zarr scan is columnar") {
+    val zarr = Files.walk(Paths.get("src/main/scala/graft/sources/zarr")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val offenders = for {
+      p <- zarr
+      text = Files.readString(p)
+      t <- Seq("PartitionReader[InternalRow]", "GenericInternalRow") if text.contains(t)
+    } yield s"$p: $t"
+    assert(offenders.isEmpty,
+      s"fill column vectors in ZarrColumnarReader instead: ${offenders.mkString(", ")}")
   }
 }

@@ -1478,4 +1478,210 @@ class ZarrSourceSpec extends SparkSpec {
     // aux columns prune away when not selected
     assert(df.select("time", "sst").columns.toSeq == Seq("time", "sst"))
   }
+
+  test("an absent chunk reads its fill value decoded like a stored cell") {
+    // zarr-python omits chunks that hold only the fill value, so an absent
+    // chunk must read exactly as a stored all-fill chunk does: masked,
+    // then scaled
+    val dir = java.nio.file.Files.createTempDirectory("zarrfill").toString + "/s.zarr"
+    def put(rel: String, bytes: Array[Byte]): Unit = {
+      val f = new java.io.File(dir, rel)
+      f.getParentFile.mkdirs()
+      java.nio.file.Files.write(f.toPath, bytes)
+    }
+    def putS(rel: String, s: String): Unit = put(rel, s.getBytes("UTF-8"))
+    putS("x/.zarray",
+      """{"zarr_format": 2, "shape": [4], "chunks": [4], "dtype": "<f8",
+        | "compressor": null, "fill_value": null, "filters": null, "order": "C"}""".stripMargin)
+    putS("x/.zattrs", """{"_ARRAY_DIMENSIONS": ["x"]}""")
+    val xb = java.nio.ByteBuffer.allocate(32).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    (0 until 4).foreach(i => xb.putDouble(i.toDouble))
+    put("x/0", xb.array())
+    def i2(vals: Short*): Array[Byte] = {
+      val b = java.nio.ByteBuffer.allocate(2 * vals.size).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      vals.foreach(v => b.putShort(v))
+      b.array()
+    }
+    // packed: fill 0 decodes to 0 * 0.5 + 100
+    putS("v/.zarray",
+      """{"zarr_format": 2, "shape": [4], "chunks": [2], "dtype": "<i2",
+        | "compressor": null, "fill_value": 0, "filters": null, "order": "C"}""".stripMargin)
+    putS("v/.zattrs",
+      """{"_ARRAY_DIMENSIONS": ["x"], "scale_factor": 0.5, "add_offset": 100}""")
+    put("v/0", i2(0, 0)) // v/1 absent
+    // the fill is the missing value: the absent chunk reads as nulls
+    putS("w/.zarray",
+      """{"zarr_format": 2, "shape": [4], "chunks": [2], "dtype": "<i2",
+        | "compressor": null, "fill_value": -1, "filters": null, "order": "C"}""".stripMargin)
+    putS("w/.zattrs", """{"_ARRAY_DIMENSIONS": ["x"], "missing_value": -1}""")
+    put("w/0", i2(-1, 3)) // w/1 absent
+    val rows = spark.read.format("zarr").load(dir).orderBy($"x").collect()
+    assert(rows.map(_.getAs[Double]("v")).toSeq == Seq(100.0, 100.0, 100.0, 100.0))
+    assert(rows.map(r => Option(r.getAs[java.lang.Double]("w")).map(_.doubleValue)).toSeq ==
+      Seq(None, Some(3.0), None, None))
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val v = graft.sources.zarr.ZarrMeta.open(conf, dir).dataVars.find(_.name == "v").get
+    assert(graft.sources.zarr.ZarrMeta.readChunk(conf, dir, v, Seq(1)).toSeq ==
+      graft.sources.zarr.ZarrMeta.readChunk(conf, dir, v, Seq(0)).toSeq)
+  }
+
+  test("every decoded dtype reads its hand-computed values in both byte orders") {
+    import java.nio.{ByteBuffer, ByteOrder}
+    import graft.sources.zarr.ZarrMeta
+    val nan = Double.NaN
+    // (dtype code, element width, writer of the raw elements, scale_factor,
+    // add_offset, missing_value, expected decoded cells)
+    final case class Case(code: String, width: Int, raw: ByteBuffer => Unit,
+        sf: Option[Double], ao: Option[Double], mv: Option[Double], want: Seq[Double])
+    def longs(vs: Long*): ByteBuffer => Unit = b => vs.foreach(b.putLong)
+    def ints(vs: Int*): ByteBuffer => Unit = b => vs.foreach(b.putInt)
+    def shorts(vs: Int*): ByteBuffer => Unit = b => vs.foreach(v => b.putShort(v.toShort))
+    def bytes(vs: Int*): ByteBuffer => Unit = b => vs.foreach(v => b.put(v.toByte))
+    val cases = Seq(
+      // no scale attributes: -0.0 * 1.0 + 0.0 reads as +0.0
+      Case("f8", 8, b => Seq(1.5, -0.0, nan, -1e300).foreach(b.putDouble(_)), None, None, None,
+        Seq(1.5, 0.0, nan, -1e300)),
+      Case("f4", 4, b => Seq(0.25f, -0.0f, Float.NaN, -3.5f).foreach(b.putFloat(_)), None, None, None,
+        Seq(0.25, 0.0, nan, -3.5)),
+      // 1.0, smallest subnormal 2^-24, largest subnormal 1023 * 2^-24, -0.0,
+      // largest normal, -inf, NaN
+      Case("f2", 2, shorts(0x3c00, 0x0001, 0x03ff, 0x8000, 0x7bff, 0xfc00, 0x7e00), None, None, None,
+        Seq(1.0, 5.9604644775390625e-8, 6.097555160522461e-5, 0.0, 65504.0,
+          Double.NegativeInfinity, nan)),
+      Case("i8", 8, longs(-5L, Long.MaxValue), None, None, None, Seq(-5.0, 9.223372036854775807e18)),
+      Case("i4", 4, ints(Int.MinValue, 7), None, None, None, Seq(-2147483648.0, 7.0)),
+      Case("i2", 2, shorts(-32768, 32767), None, None, None, Seq(-32768.0, 32767.0)),
+      Case("i1", 1, bytes(-128, 127), None, None, None, Seq(-128.0, 127.0)),
+      // the top bit: 2^64 - 1 and 2^63 read unsigned
+      Case("u8", 8, longs(-1L, Long.MinValue, 5L), None, None, None,
+        Seq(1.8446744073709552e19, 9.223372036854775808e18, 5.0)),
+      Case("u4", 4, ints(-1, 3), None, None, None, Seq(4294967295.0, 3.0)),
+      Case("u2", 2, shorts(0xffff, 3), None, None, None, Seq(65535.0, 3.0)),
+      Case("u1", 1, bytes(0xff, 3), None, None, None, Seq(255.0, 3.0)),
+      Case("b1", 1, bytes(0, 1, 2), None, None, None, Seq(0.0, 1.0, 1.0)),
+      // NaT is Long.MinValue
+      Case("M8[s]", 8, longs(1700000000L, Long.MinValue), None, None, None, Seq(1.7e9, nan)),
+      Case("m8[s]", 8, longs(-60L, Long.MinValue), None, None, None, Seq(-60.0, nan)),
+      // missing_value masks before scale and offset apply
+      Case("i2", 2, shorts(-999, 4, 0), Some(0.5), Some(10.0), Some(-999.0), Seq(nan, 12.0, 10.0)),
+      // numeric equality: missing_value 0 masks -0.0 too
+      Case("f8", 8, b => Seq(-0.0, 0.0, 2.0).foreach(b.putDouble(_)), None, None, Some(0.0),
+        Seq(nan, nan, 2.0)))
+    val dir = java.nio.file.Files.createTempDirectory("zarrdtypes").toString
+    val conf = new org.apache.hadoop.conf.Configuration()
+    for ((c, i) <- cases.zipWithIndex; (marker, order) <- Seq(
+        "<" -> ByteOrder.LITTLE_ENDIAN, ">" -> ByteOrder.BIG_ENDIAN)) {
+      val n = c.want.size
+      val name = s"a$i${if (marker == "<") "le" else "be"}"
+      val bb = ByteBuffer.allocate(n * c.width).order(order)
+      c.raw(bb)
+      assert(bb.position() == bb.capacity(), s"${c.code}: raw cells fill the chunk")
+      val f = new java.io.File(dir, s"$name/0")
+      f.getParentFile.mkdirs()
+      java.nio.file.Files.write(f.toPath, bb.array())
+      val meta = ZarrMeta.ArrayMeta(name, Seq(n), Seq(n), marker + c.code, None, None,
+        Seq("x"), c.sf, c.ao, c.mv, None)
+      val got = ZarrMeta.readChunk(conf, dir, meta, Seq(0))
+      assert(got.toSeq.map(java.lang.Double.doubleToLongBits) ==
+        c.want.map(java.lang.Double.doubleToLongBits),
+        s"$marker${c.code}: ${got.toSeq} != ${c.want}")
+    }
+  }
+
+  test("zarr rows match a C-order walk over readChunk across grids, windows and types") {
+    import graft.sources.zarr.ZarrMeta
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    // 5 x 7 x 9 with edge chunks on every axis; latitude descends; the
+    // 360_day axis holds day 59 = Feb 30, which Gregorian cannot represent
+    val (nt3, ny3, nx3) = (5, 7, 9)
+    val dir = java.nio.file.Files.createTempDirectory("zarrparity").toString + "/p.zarr"
+    def cube(f: (Int, Int, Int) => Double): Seq[Double] =
+      for (t <- 0 until nt3; y <- 0 until ny3; x <- 0 until nx3) yield f(t, y, x)
+    ZW.write(dir, Seq(
+      ZW.VarSpec("time", Seq("time"), Seq(nt3), Seq(2), "<f8", (57 until 57 + nt3).map(_.toDouble),
+        units = Some("days since 2000-01-01"), calendar = Some("360_day")),
+      ZW.VarSpec("latitude", Seq("latitude"), Seq(ny3), Seq(3), "<f8",
+        (0 until ny3).map(y => 30.0 - 10.0 * y)),
+      ZW.VarSpec("longitude", Seq("longitude"), Seq(nx3), Seq(4), "<f8",
+        (0 until nx3).map(x => 10.0 * x)),
+      // the partition grid: packed int16 with missing_value cells
+      ZW.VarSpec("a", Seq("time", "latitude", "longitude"), Seq(nt3, ny3, nx3), Seq(2, 3, 4),
+        "<i2", cube((t, y, x) => if ((t + 2 * y + x) % 5 == 0) -999 else 100 * t + 10 * y + x),
+        compressor = Some("zlib"), scaleFactor = Some(0.25), addOffset = Some(-3.0),
+        missingValue = Some(-999)),
+      // another chunk grid, NaN cells
+      ZW.VarSpec("b", Seq("time", "latitude", "longitude"), Seq(nt3, ny3, nx3), Seq(3, 2, 5),
+        "<f8", cube((t, y, x) => if ((t * y + x) % 4 == 1) Double.NaN else 1000.0 * t + 10 * y + 0.5 * x)),
+      ZW.VarSpec("c", Seq("time", "latitude", "longitude"), Seq(nt3, ny3, nx3), Seq(2, 3, 4),
+        "|O", Nil, sdata = for (t <- 0 until nt3; y <- 0 until ny3; x <- 0 until nx3)
+          yield if (x == y) "" else s"c$t.$y.$x", compressor = Some("zlib")),
+      // auxiliary: a 2-D field over (latitude, longitude) on its own grid
+      ZW.VarSpec("elev", Seq("latitude", "longitude"), Seq(ny3, nx3), Seq(2, 3), "<f4",
+        for (y <- 0 until ny3; x <- 0 until nx3) yield 1.5 * y - 0.25 * x)))
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val st = ZarrMeta.open(conf, dir)
+    assert(st.dataVars.map(_.name) == Seq("a", "b", "c") && st.auxVars.map(_.name) == Seq("elev"))
+    assert(st.coords("time")(2).isNaN)
+    val cols = st.dims ++ Seq("a", "b", "c", "elev")
+    val metas = (st.dataVars ++ st.auxVars).map(m => m.name -> m).toMap
+    val chunkCache = scala.collection.mutable.Map[(String, Seq[Int]), AnyRef]()
+    def cell(col: String, g: Seq[Int]): Any = st.dims.indexOf(col) match {
+      case d if d >= 0 =>
+        val c = st.coords(col)(g(d))
+        if (st.coordMeta(col).epochSecondsTime) graft.sources.CfTime.timestamp(c) else c
+      case _ =>
+        val v = metas(col)
+        val vg = v.dims.map(d => g(st.dims.indexOf(d)))
+        val idx = vg.zip(v.chunks).map { case (i, c) => i / c }
+        val li = vg.zip(v.chunks).foldLeft(0) { case (acc, (i, c)) => acc * c + i % c }
+        chunkCache.getOrElseUpdate((col, idx),
+          if (ZarrMeta.isStringMeta(v)) ZarrMeta.readChunkStrings(conf, dir, v, idx)
+          else ZarrMeta.readChunk(conf, dir, v, idx)) match {
+          case ds: Array[Double] => if (ds(li).isNaN) null else ds(li)
+          case ss: Array[String] => ss(li)
+        }
+    }
+    def product(ranges: Seq[Seq[Int]]): Seq[Seq[Int]] =
+      ranges.foldLeft(Seq(Seq.empty[Int]))((acc, r) => for (a <- acc; i <- r) yield a :+ i)
+    // partitions in C order over the head grid's chunks, each one's window
+    // cells in C order
+    def expected(lo: Seq[Int], hi: Seq[Int], select: Seq[String]): Seq[Seq[Any]] = {
+      val grid = st.dataVars.head.chunks
+      for {
+        ci <- product(grid.indices.map(d => lo(d) / grid(d) to hi(d) / grid(d)))
+        g <- product(grid.indices.map(d =>
+          math.max(lo(d), ci(d) * grid(d)) to math.min(hi(d), (ci(d) + 1) * grid(d) - 1)))
+      } yield select.map(cell(_, g))
+    }
+    def bits(row: Seq[Any]): Seq[Any] = row.map {
+      case d: Double => java.lang.Double.doubleToLongBits(d)
+      case o => o
+    }
+    def scanRows(p: SparkPlan): Seq[Long] = p match {
+      case a: AdaptiveSparkPlanExec => scanRows(a.executedPlan)
+      case s: QueryStageExec => scanRows(s.plan)
+      case b: BatchScanExec => Seq(b.metrics("numOutputRows").value)
+      case o => o.children.flatMap(scanRows)
+    }
+    val windows = Seq(
+      (lit(true), Seq(0, 0, 0), Seq(nt3 - 1, ny3 - 1, nx3 - 1)),
+      // latitude 20..-10 is indices 1..4 across the chunk edge at 3;
+      // longitude 20..60 is indices 2..6 across the edge at 4
+      ($"latitude" <= 20.0 && $"latitude" > -20.0 && $"longitude" >= 20.0 && $"longitude" < 70.0,
+        Seq(0, 1, 2), Seq(nt3 - 1, 4, 6)),
+      ($"latitude" === 0.0 && $"longitude".between(30.0, 50.0), Seq(0, 3, 3), Seq(nt3 - 1, 3, 5)))
+    for ((pred, lo, hi) <- windows; select <- Seq(cols, Seq("elev", "c", "longitude", "b"))) {
+      val df = spark.read.format("zarr").load(dir).where(pred).select(select.map(col): _*)
+      val got = df.collect().map(r => bits(r.toSeq)).toSeq
+      val want = expected(lo, hi, select).map(bits)
+      assert(got.size == want.size, s"$pred: rows")
+      got.zip(want).zipWithIndex.foreach { case ((g, w), i) =>
+        assert(g == w, s"$pred ${select.mkString(",")}: row $i")
+      }
+      val cells = lo.indices.map(d => hi(d) - lo(d) + 1).product
+      assert(scanRows(df.queryExecution.executedPlan) == Seq(cells.toLong), s"$pred: numOutputRows")
+    }
+  }
 }
