@@ -1,7 +1,10 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.functions._
 
 /** Document deduplication for the training-data pipeline surface: exact,
@@ -448,9 +451,25 @@ object Dedup {
     // (spark.sparkContext.setCheckpointDir), generations checkpoint there
     // instead, so at real scale a lost executor replays from durable
     // storage rather than killing the job.
+    //
+    // A lazy reliable generation's RDD is persisted too, as localCheckpoint
+    // does: its files are written by a second job after the action, which
+    // would otherwise recompute the whole round (and the jump self-join's
+    // sides would each compute `p` again). Persisting the frame would not
+    // do: AQE materializes a cached frame as a query stage of its own, with
+    // its own partitioning. Released once the round's action has run.
     val reliable = nodes.sparkSession.sparkContext.getCheckpointDir.isDefined
+    val persisted = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
     def ckpt(df: DataFrame, eager: Boolean): DataFrame =
-      if (reliable) df.checkpoint(eager) else df.localCheckpoint(eager)
+      if (!reliable) df.localCheckpoint(eager)
+      else {
+        val c = df.checkpoint(eager)
+        if (!eager) c.queryExecution.logical match {
+          case r: LogicalRDD => persisted += r.rdd.persist(StorageLevel.MEMORY_AND_DISK)
+          case _ =>
+        }
+        c
+      }
     var labels = ckpt(nodes
       .select(col(idCol).as("id"), col(idCol).as("cluster")), eager = true)
     val clusterType = labels.schema("cluster").dataType
@@ -505,6 +524,8 @@ object Dedup {
       // action materializes the lazy checkpoint chain above
       val changed = next.filter(col("cluster") =!= col("prev")).count()
       aux.foreach(_.unpersist()) // p's blocks served the jump; next stands alone
+      persisted.foreach(_.unpersist(blocking = false))
+      persisted.clear()
       labels.unpersist()
       labels = next
       done = changed == 0

@@ -12,6 +12,8 @@ import graft.functions.{DotProduct, HaversineDistance, SquaredDistance}
   *  - [[TimeBucketRule]]: `time_date|time_month|time_year` bucketing sugar;
   *  - [[XqlAggNamingRule]]: thread-local-gated `{func}_{var}` aggregate
   *    naming for WxSql queries ([[XqlRules.withAggNaming]]);
+  *  - [[FixedOffsetTruncRule]] (optimizer): `date_trunc` under a
+  *    fixed-offset zone, with the NTZ casts around it, as long arithmetic;
   *  - `haversine_km`: the custom codegen scalar [[HaversineDistance]]
   *    available from SQL.
   *
@@ -24,6 +26,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectResolutionRule(_ => GeoPredicateRule)
     e.injectResolutionRule(_ => TimeBucketRule)
     e.injectResolutionRule(_ => XqlAggNamingRule)
+    e.injectOptimizerRule(_ => FixedOffsetTruncRule)
     e.injectFunction((
       org.apache.spark.sql.catalyst.FunctionIdentifier("haversine_km"),
       new ExpressionInfo(classOf[HaversineDistance].getName, "haversine_km"),

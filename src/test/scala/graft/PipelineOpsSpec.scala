@@ -340,31 +340,58 @@ class DedupSpec extends SparkSpec {
   test("connectedComponents labels match under reliable and local checkpoints") {
     // with a SparkContext checkpoint directory configured the loop upgrades
     // every generation from localCheckpoint to a reliable checkpoint — the
-    // fault-tolerant mode for real-scale runs; labels must be identical
-    val nodes = Seq(0L, 1L, 2L, 3L, 4L, 5L, 9L).toDF("doc_id")
-    val pairs = Seq((0L, 1L), (1L, 2L), (2L, 3L), (4L, 5L)).toDF("id_a", "id_b")
-    val local = Dedup.connectedComponents(nodes, "doc_id", pairs)
-      .as[(Long, Long)].collect().toMap
+    // fault-tolerant mode for real-scale runs; labels must be identical,
+    // and so must the work: a lazy reliable checkpoint is written by a
+    // second job, which must read the persisted generation, not recompute
+    // its aggregate (and the pointer jump's self-join sides) from shuffle
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    import org.apache.spark.sql.{DataFrame, GraftBusDrain}
     val sc = spark.sparkContext
-    val dir = java.nio.file.Files.createTempDirectory("cc-ckpt").toString
-    sc.setCheckpointDir(dir)
-    try {
-      val reliable = Dedup.connectedComponents(nodes, "doc_id", pairs)
-        .as[(Long, Long)].collect().toMap
-      assert(reliable == local,
-        s"reliable-checkpoint labels diverged: $reliable vs $local")
-      assert(local == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 0L,
-        4L -> 4L, 5L -> 4L, 9L -> 9L))
-    } finally {
-      // SparkContext has no public unset; clear the shared session's dir so
-      // later suites keep exercising the localCheckpoint path. A missing
-      // setter must fail here: every later suite would otherwise run only
-      // the reliable-checkpoint path without saying so
-      val reset = sc.getClass.getMethods.find(_.getName == "checkpointDir_$eq")
-      assert(reset.isDefined, "SparkContext.checkpointDir_= not found")
-      reset.get.invoke(sc, None)
-      assert(sc.getCheckpointDir.isEmpty)
+    val shuffleRead = new java.util.concurrent.atomic.AtomicLong(0)
+    val listener = new SparkListener {
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        Option(t.taskMetrics).foreach(m => shuffleRead.addAndGet(m.shuffleReadMetrics.recordsRead))
     }
+    // labels and shuffle records read of one call
+    def run(nodes: DataFrame, pairs: DataFrame): (Map[Long, Long], Long) = {
+      GraftBusDrain(sc)
+      val before = shuffleRead.get()
+      val labels = Dedup.connectedComponents(nodes, "doc_id", pairs)
+        .as[(Long, Long)].collect().toMap
+      GraftBusDrain(sc)
+      (labels, shuffleRead.get() - before)
+    }
+    val small = (Seq(0L, 1L, 2L, 3L, 4L, 5L, 9L).toDF("doc_id"),
+      Seq((0L, 1L), (1L, 2L), (2L, 3L), (4L, 5L)).toDF("id_a", "id_b"))
+    // a 12-hop chain runs past the four plain rounds into the pointer jump
+    val chain = ((0L to 12L).toDF("doc_id"), (0L until 12L).map(i => (i, i + 1)).toDF("id_a", "id_b"))
+    val graphs = Seq(small, chain)
+    sc.addSparkListener(listener)
+    try {
+      val local = graphs.map { case (n, p) => run(n, p) }
+      assert(local.head._1 == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 0L,
+        4L -> 4L, 5L -> 4L, 9L -> 9L))
+      assert(local(1)._1 == (0L to 12L).map(_ -> 0L).toMap)
+      val dir = java.nio.file.Files.createTempDirectory("cc-ckpt").toString
+      sc.setCheckpointDir(dir)
+      try {
+        val reliable = graphs.map { case (n, p) => run(n, p) }
+        for (((l, lRead), (r, rRead)) <- local.zip(reliable)) {
+          assert(r == l, s"reliable-checkpoint labels diverged: $r vs $l")
+          assert(rRead == lRead,
+            s"reliable mode read $rRead shuffle records where local mode read $lRead")
+        }
+      } finally {
+        // SparkContext has no public unset; clear the shared session's dir so
+        // later suites keep exercising the localCheckpoint path. A missing
+        // setter must fail here: every later suite would otherwise run only
+        // the reliable-checkpoint path without saying so
+        val reset = sc.getClass.getMethods.find(_.getName == "checkpointDir_$eq")
+        assert(reset.isDefined, "SparkContext.checkpointDir_= not found")
+        reset.get.invoke(sc, None)
+        assert(sc.getCheckpointDir.isEmpty)
+      }
+    } finally sc.removeSparkListener(listener)
   }
 
   test("relational minhash and connectedComponents accept STRING doc ids") {
