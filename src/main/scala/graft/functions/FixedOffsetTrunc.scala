@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
-import org.apache.spark.sql.types.{DataType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.DataType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `date_trunc(level, ts)` under a fixed-offset zone as long arithmetic:
@@ -13,22 +13,20 @@ import org.apache.spark.unsafe.types.UTF8String
   * and a TIMESTAMP_NTZ <-> TIMESTAMP cast around it through
   * `LocalDateTime.atZone`.
   *
-  * `localIn`: the child is TIMESTAMP_NTZ, i.e. already local time (an
-  * absorbed NTZ -> TIMESTAMP cast); `localOut`: the result is TIMESTAMP_NTZ
-  * (an absorbed TIMESTAMP -> NTZ cast on top). Built only by
+  * `inOffset`: seconds from the child to local time (0 when the child is
+  * TIMESTAMP_NTZ, an absorbed NTZ -> TIMESTAMP cast); `outOffset`: seconds
+  * from the truncated local time back to the result (0 when `dataType` is
+  * TIMESTAMP_NTZ, an absorbed TIMESTAMP -> NTZ cast on top). Built only by
   * [[graft.plans.FixedOffsetTruncRule]]; nullable like the `date_trunc` it
   * replaces, so the plan's schema does not change.
   */
-case class FixedOffsetTrunc(child: Expression, level: Int, offsetSeconds: Int,
-    localIn: Boolean, localOut: Boolean) extends UnaryExpression {
+case class FixedOffsetTrunc(child: Expression, level: Int, inOffset: Long, outOffset: Long,
+    dataType: DataType) extends UnaryExpression {
 
-  override def dataType: DataType = if (localOut) TimestampNTZType else TimestampType
   override def nullable: Boolean = true
   override def prettyName: String = "fixed_offset_trunc"
 
-  @transient private lazy val inOffset: Long = if (localIn) 0L else offsetSeconds.toLong
-  @transient private lazy val outOffset: Long = if (localOut) 0L else offsetSeconds.toLong
-  @transient private lazy val unitMicros: Long = FixedOffsetTrunc.unitMicros(level)
+  private val unitMicros: Long = FixedOffsetTrunc.unitMicros(level)
 
   override protected def nullSafeEval(micros: Any): Any =
     FixedOffsetTrunc.compute(micros.asInstanceOf[Long], level, unitMicros, inOffset, outOffset)

@@ -34,14 +34,14 @@ object FixedOffsetTruncRule extends Rule[LogicalPlan] {
   }
 
   /** The offset in seconds of a zone without DST. */
-  private def fixedOffset(tz: Option[String]): Option[Int] = tz.map(DateTimeUtils.getZoneId)
+  private def fixedOffset(tz: Option[String]): Option[Long] = tz.map(DateTimeUtils.getZoneId)
     .map(_.getRules).filter(_.isFixedOffset)
-    .map(_.getOffset(java.time.Instant.EPOCH).getTotalSeconds)
+    .map(_.getOffset(java.time.Instant.EPOCH).getTotalSeconds.toLong)
 
   private val rewrite: PartialFunction[Expression, Expression] = {
     case Cast(Fixed(f), TimestampNTZType, tz, mode) if mode != EvalMode.TRY &&
-        fixedOffset(tz).contains(f.offsetSeconds) =>
-      f.copy(localOut = true)
+        fixedOffset(tz).contains(f.outOffset) =>
+      f.copy(outOffset = 0L, dataType = TimestampNTZType)
     case Fixed(f) => f
   }
 
@@ -52,8 +52,8 @@ object FixedOffsetTruncRule extends Rule[LogicalPlan] {
         for (level <- FixedOffsetTrunc.levelOf(unit); off <- fixedOffset(tz)) yield ts match {
           case Cast(local, TimestampType, castTz, mode) if local.dataType == TimestampNTZType &&
               mode != EvalMode.TRY && fixedOffset(castTz).contains(off) =>
-            FixedOffsetTrunc(local, level, off, localIn = true, localOut = false)
-          case _ => FixedOffsetTrunc(ts, level, off, localIn = false, localOut = false)
+            FixedOffsetTrunc(local, level, 0L, off, TimestampType)
+          case _ => FixedOffsetTrunc(ts, level, off, off, TimestampType)
         }
       case _ => None
     }

@@ -3,19 +3,22 @@
 
 Usage:
   python3 tools/ab.py PARENT_DIR CHANGE_DIR --workload xql_era5 --seeds 301-310 \
-      [--seconds 20] [--out runs.jsonl] [--warmup 300 | --no-warmup] [--control]
+      [--out runs.jsonl] [--control]
 
 Each directory is a full checkout of the repository (for example
-`git archive <rev> | tar -x -C <dir>`). One warm-up run per side builds the
-program and generates the inputs; then, for each seed, both sides run
-`perfbench/run.py --trace 0`, the side that goes first alternating from seed
-to seed. Every run's JSON line goes to `--out` (one JSON object per line,
+`git archive <rev> | tar -x -C <dir>`). One warm-up run per side (seed 300)
+builds the program and generates its inputs; then, for each seed, both sides
+run `perfbench/run.py --seconds 20 --trace 0`, the side that goes first
+alternating from seed to seed. The run length and the warm-up are fixed, so
+every A/B measures the same thing. Every run's JSON line goes to `--out` (one JSON object per line,
 with its side, seed, order and the per-shape medians the run printed). The
 per-run table, each side's median and quartiles of the end-to-end metrics,
 the per-pair win counts and the per-shape medians are printed at the end.
 
 `--control` runs the parent's code on both sides: the change side runs from
 a fresh copy of PARENT_DIR at `CHANGE_DIR.control` instead of CHANGE_DIR.
+That directory is replaced only if an earlier `--control` made it (it holds
+the marker file `.ab-control`); any other directory there stops the tool.
 A workload that runs no changed code can still move between two checkout
 directories; this measures that gap before a move is put down to a change.
 
@@ -33,6 +36,9 @@ import sys
 
 METRICS = [("setup_s", "lower"), ("primary_s", "lower"), ("secondary_s", "lower"),
            ("ops_per_s", "higher"), ("peak_rss_mb", "lower")]
+SECONDS = 20
+WARMUP_SEED = 300
+CONTROL_MARKER = ".ab-control"
 SHAPE = re.compile(r"^\[perfbench\] shape (\S+) p50 ([0-9.eE+-]+) s n=(\d+)")
 
 
@@ -44,10 +50,10 @@ def seeds_of(text):
     return out
 
 
-def run(checkout, workload, seed, seconds):
+def run(checkout, workload, seed):
     """One untraced run: its JSON result and the shape medians it printed."""
     p = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload,
-                        "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+                        "--seed", str(seed), "--seconds", str(SECONDS), "--trace", "0"],
                        cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
     lines = p.stdout.splitlines()
     if p.returncode != 0 or not lines or not lines[-1].startswith("{"):
@@ -70,9 +76,14 @@ def quartiles(xs):
     return q[0], statistics.median(xs), q[2]
 
 
-def copy_checkout(src, dst):
-    shutil.rmtree(dst, ignore_errors=True)
+def copy_control(src, dst):
+    """A fresh copy of checkout `src` at `dst`, replacing only an earlier copy."""
+    if os.path.lexists(dst):
+        if not os.path.isfile(os.path.join(dst, CONTROL_MARKER)):
+            sys.exit(f"{dst} exists and is not a copy made by --control; move it away first")
+        shutil.rmtree(dst)
     shutil.copytree(src, dst, ignore=shutil.ignore_patterns(".work", "target", ".git"))
+    open(os.path.join(dst, CONTROL_MARKER), "w").close()
 
 
 def main():
@@ -81,10 +92,7 @@ def main():
     ap.add_argument("change")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, help="e.g. 301-310 or 301,303,305")
-    ap.add_argument("--seconds", type=int, default=20)
     ap.add_argument("--out", default="ab_runs.jsonl")
-    ap.add_argument("--warmup", type=int, default=300, help="seed of the warm-up runs")
-    ap.add_argument("--no-warmup", action="store_true")
     ap.add_argument("--control", action="store_true",
                     help="run the parent's code on both sides")
     a = ap.parse_args()
@@ -92,25 +100,24 @@ def main():
     sides = {"parent": os.path.abspath(a.parent), "change": os.path.abspath(a.change)}
     if a.control:
         sides["change"] = sides["change"] + ".control"
-        copy_checkout(sides["parent"], sides["change"])
+        copy_control(sides["parent"], sides["change"])
     for d in sides.values():
         if not os.path.exists(os.path.join(d, "perfbench", "run.py")):
             sys.exit(f"{d}: not a checkout with perfbench/run.py")
 
     bad = []
-    if not a.no_warmup:
-        for side, d in sides.items():
-            res, _ = run(d, a.workload, a.warmup, a.seconds)
-            print(f"warm-up {side} seed {a.warmup}: correct={res.get('correct')}", flush=True)
-            if not res.get("correct"):
-                bad.append(f"warm-up {side} seed {a.warmup}")
+    for side, d in sides.items():
+        res, _ = run(d, a.workload, WARMUP_SEED)
+        print(f"warm-up {side} seed {WARMUP_SEED}: correct={res.get('correct')}", flush=True)
+        if not res.get("correct"):
+            bad.append(f"warm-up {side} seed {WARMUP_SEED}")
 
     rows = []
     with open(a.out, "w") as out:
         for i, seed in enumerate(seeds_of(a.seeds)):
             order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
             for pos, side in enumerate(order):
-                res, shapes = run(sides[side], a.workload, seed, a.seconds)
+                res, shapes = run(sides[side], a.workload, seed)
                 row = {"side": side, "seed": seed, "first": pos == 0,
                        "dir": os.path.basename(sides[side]), "shapes": shapes, **res}
                 rows.append(row)
