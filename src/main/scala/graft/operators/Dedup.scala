@@ -458,8 +458,19 @@ object Dedup {
     // sides would each compute `p` again). Persisting the frame would not
     // do: AQE materializes a cached frame as a query stage of its own, with
     // its own partitioning. Released once the round's action has run.
-    val reliable = nodes.sparkSession.sparkContext.getCheckpointDir.isDefined
+    val sc = nodes.sparkSession.sparkContext
+    val reliable = sc.getCheckpointDir.isDefined
     val persisted = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
+    // a superseded generation's reliable checkpoint files: nothing reads
+    // them once the next generation is materialized, and the checkpoint
+    // dir would otherwise keep one full label table per round
+    def dropCheckpoint(df: DataFrame): Unit = df.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.getCheckpointFile.foreach { f =>
+        val p = new org.apache.hadoop.fs.Path(f)
+        p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
+      }
+      case _ =>
+    }
     def ckpt(df: DataFrame, eager: Boolean): DataFrame =
       if (!reliable) df.localCheckpoint(eager)
       else {
@@ -527,6 +538,7 @@ object Dedup {
       persisted.foreach(_.unpersist(blocking = false))
       persisted.clear()
       labels.unpersist()
+      if (reliable) (labels +: aux.toSeq).foreach(dropCheckpoint)
       labels = next
       done = changed == 0
       it += 1

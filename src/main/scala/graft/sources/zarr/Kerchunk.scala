@@ -63,7 +63,6 @@ object Kerchunk {
             }
         }
       val entries = Seq.newBuilder[(String, String)]
-      entries += ".zgroup" -> ("\"" + escape("""{"zarr_format": 2}""") + "\"")
       meta.datasets.foreach { ds =>
         val name = baseName(ds.path)
         if (!ds.dtype.isNumeric)
@@ -73,9 +72,7 @@ object Kerchunk {
           if (dimByAddr.contains(ds.objAddr)) Seq(name) else dimsOf(ds)
         entries ++= datasetEntries(read, ds, name, dims, target)
       }
-      val body = entries.result().map { case (k, v) => s""""$k": $v""" }
-        .mkString(", ")
-      s"""{"version": 1, "refs": {$body}}"""
+      refsJson(entries.result())
     } finally in.close()
   }
 
@@ -214,7 +211,6 @@ object Kerchunk {
     }
 
     val entries = Seq.newBuilder[(String, String)]
-    entries += ".zgroup" -> jsonQ("""{"zarr_format": 2}""")
 
     // ---- data variables: re-keyed chunk references
     first.dataVars.map(_.name).foreach { name =>
@@ -419,33 +415,41 @@ object Kerchunk {
       entries ++= inlineF8Coord(d, vals, epochTime = isTime)
     }
 
-    val body = entries.result().map { case (k, v) => s""""$k": $v""" }
-      .mkString(", ")
-    s"""{"version": 1, "refs": {$body}}"""
+    refsJson(entries.result())
   }
 
-  private def jsonQ(s: String): String = "\"" + escape(s) + "\""
+  /** A ReferenceFileSystem v1 document: the root group, then `entries`
+    * (key -> JSON value). */
+  private def refsJson(entries: Seq[(String, String)]): String =
+    ((".zgroup" -> jsonQ(ZarrMeta.renderZgroup)) +: entries)
+      .map { case (k, v) => s""""$k": $v""" }
+      .mkString("""{"version": 1, "refs": {""", ", ", "}}")
+
+  /** A JSON document (or any text) as a refs-json string value. */
+  private def jsonQ(s: String): String = ZarrMeta.jsonString(s)
+
+  /** A `[uri, offset, length]` chunk reference. */
+  private def ref(uri: String, off: Long, len: Long): String =
+    s"[${ZarrMeta.jsonString(uri)}, $off, $len]"
+
+  /** An array's `.zarray` and `.zattrs` as refs entries. */
+  private def arrayEntries(name: String, zarray: String, dims: Seq[String],
+      attrs: Seq[(String, String)] = Nil): Seq[(String, String)] = Seq(
+    s"$name/.zarray" -> jsonQ(zarray),
+    s"$name/.zattrs" -> jsonQ(ZarrMeta.renderZattrs(dims, attrs)))
 
   /** A 1-D coordinate axis inlined into the refs json as one base64 <f8
     * chunk (O(axis) doubles of metadata). `epochTime` axes declare the
     * epoch base so the reader renders timestamps. */
   private def inlineF8Coord(dim: String, vals: Array[Double],
       epochTime: Boolean): Seq[(String, String)] = {
-    val bb = java.nio.ByteBuffer.allocate(vals.length * 8)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    vals.foreach(bb.putDouble)
-    val b64 = java.util.Base64.getEncoder.encodeToString(bb.array())
-    val za =
-      s"""{"zarr_format": 2, "shape": [${vals.length}], """ +
-        s""""chunks": [${vals.length}], "dtype": "<f8", """ +
-        """"compressor": null, "filters": null, "fill_value": "NaN", """ +
-        """"order": "C"}"""
-    val units =
-      if (epochTime) """, "units": "seconds since 1970-01-01"""" else ""
-    Seq(
-      s"$dim/.zarray" -> jsonQ(za),
-      s"$dim/.zattrs" -> jsonQ(s"""{"_ARRAY_DIMENSIONS": ["$dim"]$units}"""),
-      s"$dim/0" -> jsonQ(s"base64:$b64"))
+    val b64 = java.util.Base64.getEncoder.encodeToString(
+      ZarrMeta.encodeChunk("<f8", vals, None, crc32c = false))
+    arrayEntries(dim,
+      ZarrMeta.renderZarray(Seq(vals.length), Seq(vals.length), "<f8", "null", "\"NaN\"", "null"),
+      Seq(dim),
+      if (epochTime) Seq("units" -> jsonQ("seconds since 1970-01-01")) else Nil) :+
+      (s"$dim/0" -> jsonQ(s"base64:$b64"))
   }
 
   /** Index a GRIB file (edition 1, 2, or MIXED — long reanalysis archives
@@ -601,7 +605,6 @@ object Kerchunk {
     val tIdx = times.zipWithIndex.toMap
 
     val entries = Seq.newBuilder[(String, String)]
-    entries += ".zgroup" -> jsonQ("""{"zarr_format": 2}""")
     entries ++= inlineF8Coord("time", times.map(_.toDouble).toArray,
       epochTime = true)
     val (dimY, dimX) =
@@ -616,16 +619,11 @@ object Kerchunk {
     def auxLatLon(fp: String): Unit = {
       val (off0, len0) = (all.head._1, all.head._2)
       Seq("latitude", "longitude").foreach { cn =>
-        val za =
-          s"""{"zarr_format": 2, "shape": [${g0.nj}, ${g0.ni}], """ +
-            s""""chunks": [${g0.nj}, ${g0.ni}], "dtype": "<f8", """ +
-            s""""compressor": {"id": "grib", "coord": "$cn"}, """ +
-            """"filters": null, "fill_value": "NaN", "order": "C"}"""
-        entries += s"$cn/.zarray" -> jsonQ(za)
-        entries += s"$cn/.zattrs" -> jsonQ(
-          s"""{"_ARRAY_DIMENSIONS": ["$dimY", "$dimX"], """ +
-            s""""grid_mapping": "${escape(fp)}"}""")
-        entries += s"$cn/0.0" -> s"""["${escape(target)}", $off0, $len0]"""
+        entries ++= arrayEntries(cn,
+          ZarrMeta.renderZarray(Seq(g0.nj, g0.ni), Seq(g0.nj, g0.ni), "<f8",
+            s"""{"id": "grib", "coord": "$cn"}""", "\"NaN\"", "null"),
+          Seq(dimY, dimX), Seq("grid_mapping" -> jsonQ(fp)))
+        entries += s"$cn/0.0" -> ref(target, off0, len0)
       }
     }
     proj0 match {
@@ -648,24 +646,17 @@ object Kerchunk {
         require(dups.size == 1,
           s"$path: $name has ${dups.size} fields at valid time $t")
       }
-      val za =
-        s"""{"zarr_format": 2, "shape": [${times.size}, ${g0.nj}, ${g0.ni}], """ +
-          s""""chunks": [1, ${g0.nj}, ${g0.ni}], "dtype": "<f8", """ +
-          s""""compressor": {"id": "grib", "var": "${escape(k._1)}", """ +
-          s""""level_name": "${escape(k._2)}", "level": ${k._3}, """ +
-          s""""step": "${escape(k._4)}"}, """ +
-          """"filters": null, "fill_value": "NaN", "order": "C"}"""
-      entries += s"$name/.zarray" -> jsonQ(za)
-      entries += s"$name/.zattrs" -> jsonQ(
-        s"""{"_ARRAY_DIMENSIONS": ["time", "$dimY", "$dimX"]}""")
+      val codec = s"""{"id": "grib", "var": ${jsonQ(k._1)}, """ +
+        s""""level_name": ${jsonQ(k._2)}, "level": ${k._3}, "step": ${jsonQ(k._4)}}"""
+      entries ++= arrayEntries(name,
+        ZarrMeta.renderZarray(Seq(times.size, g0.nj, g0.ni), Seq(1, g0.nj, g0.ni), "<f8",
+          codec, "\"NaN\"", "null"),
+        Seq("time", dimY, dimX))
       us.foreach { case (off, len, u) =>
-        entries += s"$name/${tIdx(u.validTimeEpochSec)}.0.0" ->
-          s"""["${escape(target)}", $off, $len]"""
+        entries += s"$name/${tIdx(u.validTimeEpochSec)}.0.0" -> ref(target, off, len)
       }
     }
-    val body = entries.result().map { case (k, v) => s""""$k": $v""" }
-      .mkString(", ")
-    s"""{"version": 1, "refs": {$body}}"""
+    refsJson(entries.result())
   }
 
   /** Index a GeoTIFF into a reference store: strips/tiles become zarr
@@ -735,7 +726,6 @@ object Kerchunk {
           })
       }
     val entries = Seq.newBuilder[(String, String)]
-    entries += ".zgroup" -> jsonQ("""{"zarr_format": 2}""")
     // coordinate axes from the affine (pixel centers). Geographic 4326
     // axes ARE degrees and take lat/lon names; PROJECTED models (UTM,
     // Lambert, polar stereo, Web-Mercator COGs — the HRRR-derived shape)
@@ -751,25 +741,16 @@ object Kerchunk {
       Array.tabulate(m.height)(m.modelY), epochTime = false)
     entries ++= inlineF8Coord(xName,
       Array.tabulate(m.width)(m.modelX), epochTime = false)
-    val dimPrefix = if (withTime) "1, " else ""
-    val za =
-      s"""{"zarr_format": 2, "shape": [$dimPrefix${m.height}, ${m.width}], """ +
-        s""""chunks": [$dimPrefix$chunkH, $chunkW], "dtype": "$dtype", """ +
-        s""""compressor": $compressor, "filters": null, """ +
-        s""""fill_value": ${if (dtype.startsWith("<f")) "\"NaN\"" else "0"}, """ +
-        """"order": "C"}"""
-    entries += "band_1/.zarray" -> jsonQ(za)
-    val namePrefix = if (withTime) "\"time\", " else ""
-    entries += "band_1/.zattrs" ->
-      jsonQ(s"""{"_ARRAY_DIMENSIONS": [$namePrefix"$yName", "$xName"]}""")
+    val lead = if (withTime) Seq(1) else Nil
+    entries ++= arrayEntries("band_1",
+      ZarrMeta.renderZarray(lead ++ Seq(m.height, m.width), lead ++ Seq(chunkH, chunkW),
+        dtype, compressor, if (dtype.startsWith("<f")) "\"NaN\"" else "0", "null"),
+      (if (withTime) Seq("time") else Nil) ++ Seq(yName, xName))
     val keyPrefix = if (withTime) "0." else ""
     blocks.foreach { case (row, colChunk, off, len) =>
-      entries += s"band_1/$keyPrefix$row.$colChunk" ->
-        s"""["${escape(target)}", $off, $len]"""
+      entries += s"band_1/$keyPrefix$row.$colChunk" -> ref(target, off, len)
     }
-    val body = entries.result().map { case (k, v) => s""""$k": $v""" }
-      .mkString(", ")
-    s"""{"version": 1, "refs": {$body}}"""
+    refsJson(entries.result())
   }
 
   private def datasetEntries(read: (Long, Int) => Array[Byte],
@@ -823,7 +804,7 @@ object Kerchunk {
     val (chunks, chunkEntries) = ds.layout match {
       case Hdf5.Contiguous(addr, size) =>
         val key = if (shape.isEmpty) "0" else shape.map(_ => "0").mkString(".")
-        (shape, Seq(s"$name/$key" -> s"""["${escape(uri)}", $addr, $size]"""))
+        (shape, Seq(s"$name/$key" -> ref(uri, addr, size)))
       case Hdf5.Compact(data) =>
         val key = if (shape.isEmpty) "0" else shape.map(_ => "0").mkString(".")
         val b64 = java.util.Base64.getEncoder.encodeToString(data)
@@ -835,44 +816,29 @@ object Kerchunk {
             s"$name: chunk with partial filter mask ${r.filterMask}")
           val idx = r.offsets.zip(ck.chunkDims)
             .map { case (o, c) => (o / c).toString }.mkString(".")
-          s"$name/$idx" -> s"""["${escape(uri)}", ${r.addr}, ${r.nBytes}]"""
+          s"$name/$idx" -> ref(uri, r.addr, r.nBytes)
         }
         (ck.chunkDims, es)
     }
-    val fill = if (dt.clazz == 1) "\"NaN\"" else "0"
-    val za =
-      s"""{"zarr_format": 2, "shape": [${shape.mkString(", ")}], """ +
-        s""""chunks": [${chunks.mkString(", ")}], "dtype": "$dtype", """ +
-        s""""compressor": $compressor, "filters": $filters, """ +
-        s""""fill_value": $fill, "order": "C"}"""
-    val attrPairs = Seq.newBuilder[String]
-    attrPairs += s""""_ARRAY_DIMENSIONS": [${
-      dims.map(d => s""""$d"""").mkString(", ")}]"""
+    val attrPairs = Seq.newBuilder[(String, String)]
     def num(k: String): Option[Double] = ds.attrs.get(k).collect {
       case d: Double => d
       case s: Seq[_] if s.nonEmpty => s.head.asInstanceOf[Double]
     }
     def str(k: String): Option[String] =
       ds.attrs.get(k).collect { case s: String => s }
-    num("scale_factor").foreach(v => attrPairs += s""""scale_factor": $v""")
-    num("add_offset").foreach(v => attrPairs += s""""add_offset": $v""")
+    num("scale_factor").foreach(v => attrPairs += "scale_factor" -> v.toString)
+    num("add_offset").foreach(v => attrPairs += "add_offset" -> v.toString)
     num("missing_value").orElse(num("_FillValue"))
-      .foreach(v => attrPairs += s""""missing_value": ${fmtNum(v)}""")
-    str("units").foreach(v => attrPairs += s""""units": "${escape(v)}"""")
-    str("calendar").foreach(v => attrPairs += s""""calendar": "${escape(v)}"""")
-    val zattrs = attrPairs.result().mkString("{", ", ", "}")
-    Seq(
-      s"$name/.zarray" -> ("\"" + escape(za) + "\""),
-      s"$name/.zattrs" -> ("\"" + escape(zattrs) + "\"")) ++ chunkEntries
+      .foreach(v => attrPairs += "missing_value" -> fmtNum(v))
+    str("units").foreach(v => attrPairs += "units" -> jsonQ(v))
+    str("calendar").foreach(v => attrPairs += "calendar" -> jsonQ(v))
+    arrayEntries(name,
+      ZarrMeta.renderZarray(shape, chunks, dtype, compressor,
+        if (dt.clazz == 1) "\"NaN\"" else "0", filters),
+      dims, attrPairs.result()) ++ chunkEntries
   }
 
   private def fmtNum(v: Double): String =
     if (v.isNaN) "\"NaN\"" else v.toString
-
-  private def escape(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c => c.toString
-    }
 }

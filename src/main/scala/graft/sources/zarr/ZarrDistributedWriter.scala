@@ -1,23 +1,22 @@
 package graft.sources.zarr
 
-import java.io.ByteArrayOutputStream
-import java.nio.{ByteBuffer, ByteOrder}
-import java.util.zip.Deflater
+import scala.reflect.ClassTag
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.HashPartitioner
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, TimestampNTZType, TimestampType}
 
-/** DISTRIBUTED Zarr v2 store writer: the scale path for S15 (the reference's
+/** DISTRIBUTED Zarr store writer: the scale path for S15 (the reference's
   * ChunksToZarr, weather_mv regrid.py:128-162). Takes a long-format
   * hypercube frame (one row per grid point: dim columns + data-variable
   * columns) and writes an xarray-convention store where
   *
-  *  - the DRIVER only derives the (small) coordinate axes and writes
-  *    metadata (.zgroup / .zarray / .zattrs / coordinate arrays);
+  *  - the DRIVER only derives the (small) coordinate axes, in one job, and
+  *    writes metadata and the coordinate arrays;
   *  - rows are keyed by their chunk tuple and hash-partitioned, and each
   *    TASK encodes + writes exactly its own chunk files — memory per task
   *    is bounded by chunks.product, never by the dataset.
@@ -27,231 +26,196 @@ import org.apache.spark.sql.types.{StringType, TimestampNTZType, TimestampType}
   * epoch-second f8 axes with the `seconds since 1970-01-01` units
   * convention, so a round-trip through [[ZarrTableProvider]] restores
   * TIMESTAMP_NTZ. Duplicate rows for one cell resolve last-write-wins.
+  * String columns write as `|O` vlen-utf8 (v2) or the `string` data type
+  * (v3); their null cells encode as "". Metadata, chunk encoding and the
+  * shard layout come from [[ZarrMeta]].
   */
 object ZarrDistributedWriter {
 
-  /** DISTRIBUTED Zarr v3 writer, optionally SHARDED (`sharding_indexed`):
-    * with `shard` set, inner chunks pack into one object per shard — the v3
-    * feature that keeps a 100 TB store at sane object counts (a 1 PB-era
-    * store with 1 MiB chunks is a billion objects unsharded; sharding
-    * divides that by `shard.product / chunks.product`). One task builds
-    * each (variable, shard): its inner chunks are hash-grouped to it, so
-    * task memory is bounded by the shard size, never the dataset. The
-    * driver writes only the root `zarr.json` (with inline
-    * `consolidated_metadata`) and the coordinate arrays. */
+  /** Zarr v2 store: `.zgroup`, per-array `.zarray`/`.zattrs`, and
+    * `.zmetadata`; `compressor` is `zlib` or None. */
+  def write(df: DataFrame, storePath: String, dims: Seq[String],
+      chunks: Seq[Int], compressor: Option[String] = Some("zlib")): Unit =
+    writeStore(df, storePath, dims, chunks, v3 = false, None, compressor)
+
+  /** Zarr v3 store, optionally SHARDED (`sharding_indexed`): with `shard`
+    * set, inner chunks pack into one object per shard — the v3 feature
+    * that keeps a 100 TB store at sane object counts (a 1 PB-era store with
+    * 1 MiB chunks is a billion objects unsharded; sharding divides that by
+    * `shard.product / chunks.product`). One task builds each (variable,
+    * shard): its inner chunks are hash-grouped to it, so task memory is
+    * bounded by the shard size, never the dataset. The root `zarr.json`
+    * carries inline `consolidated_metadata`; `compressor` is `gzip` or
+    * None. */
   def writeV3(df: DataFrame, storePath: String, dims: Seq[String],
       chunks: Seq[Int], shard: Option[Seq[Int]] = None,
-      compressor: Option[String] = Some("gzip")): Unit = {
+      compressor: Option[String] = Some("gzip")): Unit =
+    writeStore(df, storePath, dims, chunks, v3 = true, shard, compressor)
+
+  private def writeStore(df: DataFrame, storePath: String, dims: Seq[String],
+      chunks: Seq[Int], v3: Boolean, shard: Option[Seq[Int]],
+      compressor: Option[String]): Unit = {
     require(dims.nonEmpty && dims.size == chunks.size, "dims and chunks must align")
-    shard.foreach(sh => require(sh.zip(chunks).forall { case (s, c) => s % c == 0 },
-      s"inner chunks $chunks must evenly divide shard $sh"))
-    require(compressor.forall(_ == "gzip"), "v3 writer compresses with gzip or null")
+    val codec = if (v3) "gzip" else "zlib"
+    require(compressor.forall(_ == codec), s"this writer compresses with $codec or null")
     val spark = df.sparkSession
     val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
+    // TIMESTAMP_NTZ has no direct double cast; route through TIMESTAMP
+    // (session is UTC) -> epoch seconds
     val isTimeDim: Seq[Boolean] = dims.map { d =>
       df.schema(d).dataType match {
         case TimestampNTZType | TimestampType => true
         case _ => false
       }
     }
-    val allVars = df.columns.filterNot(dims.contains).toSeq
-    // string columns write as the v3 `string` data type + vlen-utf8 codec
-    // (zarr-python 3's native form) in a separate column-pruned pass;
-    // sharding composes with them because the sharding_indexed index is
-    // (offset, nbytes) per inner chunk — variable-length inner chunks are
-    // exactly what it addresses
-    val stringVars = allVars.filter(v => df.schema(v).dataType == StringType)
-    val dataVars = allVars.filterNot(stringVars.contains)
-    def axis(d: String, i: Int): org.apache.spark.sql.Column =
-      if (isTimeDim(i)) col(d).cast("timestamp").cast("double") else col(d).cast("double")
-    val coords: Seq[Array[Double]] = dims.zipWithIndex.map { case (d, i) =>
-      df.select(axis(d, i).as("__a")).distinct().orderBy(col("__a"))
-        .collect().map(_.getDouble(0))
+    val axes = dims.zip(isTimeDim).map { case (d, t) =>
+      (if (t) col(d).cast("timestamp") else col(d)).cast("double")
     }
+    val coords = deriveAxes(df.select(axes: _*))
     val shape = coords.map(_.length)
+    val vars = df.columns.filterNot(dims.contains).toSeq
+    val (stringVars, numVars) = vars.partition(v => df.schema(v).dataType == StringType)
 
-    // driver: coordinate arrays (one chunk each) + all metadata in the root
-    val nodes = Seq.newBuilder[(String, String)]
-    dims.zipWithIndex.foreach { case (d, i) =>
-      val j = arrayJsonV3(Seq(shape(i)), Seq(shape(i)), None, None, Seq(d),
-        units = if (isTimeDim(i)) Some("seconds since 1970-01-01") else None)
-      writeText(conf, s"$storePath/$d/zarr.json", j)
-      writeBytes(conf, s"$storePath/$d/c/0", encodeF8(coords(i)))
-      nodes += d -> j
-    }
-    dataVars.foreach { v =>
-      val j = arrayJsonV3(shape, chunks, shard, compressor, dims, None)
-      writeText(conf, s"$storePath/$v/zarr.json", j)
-      nodes += v -> j
-    }
-    stringVars.foreach { v =>
-      val j = arrayJsonV3(shape, chunks, shard, compressor, dims, None,
-        string = true)
-      writeText(conf, s"$storePath/$v/zarr.json", j)
-      nodes += v -> j
-    }
-    writeText(conf, s"$storePath/zarr.json",
-      nodes.result().map { case (k, j) => s""""$k": $j""" }.mkString(
-        """{"zarr_format": 3, "node_type": "group", "attributes": {},
-          | "consolidated_metadata": {"kind": "inline", "must_understand": false,
-          | "metadata": {""".stripMargin, ", ", "}}}"))
-
-    // tasks: aggregate (var, inner-chunk) buffers, ENCODE them (f8+gzip or
-    // vlen-utf8+gzip), then write either one object per inner chunk or one
-    // indexed object per shard — numeric and string variables share the
-    // write path because a shard index addresses opaque byte extents
-    val tconf = graft.sources.TaskConf(conf)
-    val storeLocal = storePath
-    val compLocal = compressor
-    val encoded: org.apache.spark.rdd.RDD[((String, String), Array[Byte])] = {
-      val varsLocal = dataVars.toIndexedSeq
-      val num =
-        if (dataVars.isEmpty) None
-        else Some(chunkBuffers(df.drop(stringVars: _*), dims, chunks, coords, axis)
-          .map { case ((vi, key), values) =>
-            ((varsLocal(vi), key), maybeGzip(encodeF8(values), compLocal))
-          })
-      val sVarsLocal = stringVars.toIndexedSeq
-      val str =
-        if (stringVars.isEmpty) None
-        else Some(stringChunkBuffers(df, dims, stringVars, chunks, coords, axis)
-          .map { case ((vi, key), cells) =>
-            ((sVarsLocal(vi), key),
-              maybeGzip(ZarrMeta.encodeVlenUtf8(cells), compLocal))
-          })
-      (num, str) match {
-        case (Some(a), Some(b)) => a.union(b)
-        case (Some(a), None) => a
-        case (None, Some(b)) => b
-        case (None, None) => return
+    // driver: every array's metadata, the coordinate arrays (one chunk
+    // each) and the root document
+    val v2Meta = Seq.newBuilder[(String, String, String)]
+    val v3Meta = Seq.newBuilder[(String, String)]
+    def array(name: String, arrayDims: Seq[String], arrayShape: Seq[Int],
+        arrayChunks: Seq[Int], dtype: String, attrs: Seq[(String, String)],
+        comp: Option[String], arrayShard: Option[Seq[Int]]): Unit =
+      if (v3) {
+        val j = ZarrMeta.renderZarrJson(arrayShape, arrayChunks, dtype, comp, arrayDims,
+          attrs, arrayShard, crc32c = false, sep = "/")
+        writeText(conf, s"$storePath/$name/zarr.json", j)
+        v3Meta += name -> j
+      } else {
+        val za = ZarrMeta.renderZarray(arrayShape, arrayChunks, dtype, comp)
+        val zat = ZarrMeta.renderZattrs(arrayDims, attrs)
+        writeText(conf, s"$storePath/$name/.zarray", za)
+        writeText(conf, s"$storePath/$name/.zattrs", zat)
+        v2Meta += ((name, za, zat))
       }
+    dims.zipWithIndex.foreach { case (d, i) =>
+      val units =
+        if (isTimeDim(i)) Seq("units" -> ZarrMeta.jsonString("seconds since 1970-01-01"))
+        else Nil
+      array(d, Seq(d), Seq(shape(i)), Seq(shape(i)), "<f8", units, None, None)
+      writeBytes(conf, s"$storePath/$d/${if (v3) "c/0" else "0"}",
+        ZarrMeta.encodeChunk("<f8", coords(i), None, crc32c = false))
     }
+    vars.foreach { v =>
+      array(v, dims, shape, chunks, if (stringVars.contains(v)) "|O" else "<f8", Nil,
+        compressor, shard)
+    }
+    if (v3) writeText(conf, s"$storePath/zarr.json", ZarrMeta.renderV3Group(v3Meta.result()))
+    else {
+      writeText(conf, s"$storePath/.zgroup", ZarrMeta.renderZgroup)
+      writeText(conf, s"$storePath/.zmetadata", ZarrMeta.renderZmetadata(v2Meta.result()))
+    }
+
+    // tasks: (variable, chunk) buffers, encoded; numeric and string
+    // variables aggregate in separate column-pruned passes, so the numeric
+    // pass keeps its primitive Double buffers
+    val num = numVars.toIndexedSeq
+    val str = stringVars.toIndexedSeq
+    val encoded: Seq[RDD[((String, String), Array[Byte])]] = Seq(
+      if (num.isEmpty) None
+      else Some(chunkBuffers[Double](df, axes, num.map(col(_).cast("double")), chunks,
+          coords, Double.NaN, !_.isNaN, _.getDouble(_))
+        .map { case ((vi, key), cells) =>
+          ((num(vi), key), ZarrMeta.encodeChunk("<f8", cells, compressor, crc32c = false))
+        }),
+      if (str.isEmpty) None
+      else Some(chunkBuffers[String](df, axes, str.map(col), chunks, coords, null,
+          _ != null, _.getString(_))
+        .map { case ((vi, key), cells) =>
+          ((str(vi), key), ZarrMeta.encodeChunk("|O", cells, compressor, crc32c = false))
+        })).flatten
+    if (encoded.isEmpty) return
+    val tconf = graft.sources.TaskConf(conf)
+    val store = storePath
+    val all = spark.sparkContext.union(encoded)
     shard match {
       case None =>
-        encoded.foreachPartition {
-          it: Iterator[((String, String), Array[Byte])] =>
-            val c = tconf.value
-            it.foreach { case ((v, key), raw) =>
-              writeBytes(c, s"$storeLocal/$v/c/${key.replace(".", "/")}", raw)
-            }
+        all.foreachPartition { it: Iterator[((String, String), Array[Byte])] =>
+          val c = tconf.value
+          it.foreach { case ((v, key), raw) =>
+            writeBytes(c, if (v3) s"$store/$v/c/${key.replace(".", "/")}" else s"$store/$v/$key",
+              raw)
+          }
         }
       case Some(sh) =>
         val per = sh.zip(chunks).map { case (s, c) => s / c }.toIndexedSeq
-        val nDims = dims.size
-        encoded
+        all
           .map { case ((v, key), raw) =>
             val ci = key.split('.').map(_.toInt)
-            val shardIdx = Array.tabulate(nDims)(i => ci(i) / per(i))
-            var linear = 0L
-            var i = 0
-            while (i < nDims) { linear = linear * per(i) + ci(i) % per(i); i += 1 }
-            ((v, shardIdx.mkString(".")), (linear, raw))
+            val shardIdx = ci.indices.map(i => ci(i) / per(i))
+            val linear = ci.indices.foldLeft(0) { (acc, i) => acc * per(i) + ci(i) % per(i) }
+            ((v, shardIdx.mkString("/")), (linear, raw))
           }
           .groupByKey() // one (var, shard) group per task: memory = shard size
           .foreachPartition {
-            it: Iterator[((String, String), Iterable[(Long, Array[Byte])])] =>
+            it: Iterator[((String, String), Iterable[(Int, Array[Byte])])] =>
               val c = tconf.value
-              val innerCount = per.product
               it.foreach { case ((v, shardKey), inners) =>
                 val present = inners.toMap
-                val body = new ByteArrayOutputStream()
-                val index = ByteBuffer.allocate(innerCount * 16 + 4)
-                  .order(ByteOrder.LITTLE_ENDIAN)
-                (0L until innerCount).foreach { linear =>
-                  present.get(linear) match {
-                    case Some(enc) =>
-                      index.putLong(body.size().toLong)
-                      index.putLong(enc.length.toLong)
-                      body.write(enc)
-                    case None => // absent inner chunk: 2^64-1 sentinel
-                      index.putLong(-1L); index.putLong(-1L)
-                  }
-                }
-                val crc = new java.util.zip.CRC32C()
-                crc.update(index.array(), 0, innerCount * 16)
-                index.putInt(crc.getValue.toInt)
-                body.write(index.array())
-                writeBytes(c, s"$storeLocal/$v/c/" +
-                  shardKey.replace(".", "/"), body.toByteArray)
+                writeBytes(c, s"$store/$v/c/$shardKey",
+                  ZarrMeta.packShard((0 until per.product).map(present.get)))
               }
           }
     }
   }
 
-  private def maybeGzip(raw: Array[Byte], comp: Option[String]): Array[Byte] =
-    comp match {
-      case Some("gzip") =>
-        val bos = new ByteArrayOutputStream()
-        val g = new java.util.zip.GZIPOutputStream(bos)
-        g.write(raw); g.close()
-        bos.toByteArray
-      case _ => raw
+  /** Every axis's distinct values, ascending, from ONE job: each task
+    * collects its partition's values per axis, the driver merges them.
+    * −0.0 folds into 0.0 and NaNs into one NaN sorted last, as Spark's
+    * `distinct` + `orderBy` give them. */
+  private def deriveAxes(axes: DataFrame): Seq[Array[Double]] = {
+    val n = axes.columns.length
+    val perTask = axes.rdd.mapPartitions { rows =>
+      val seen = Array.fill(n)(scala.collection.mutable.HashSet.empty[Long])
+      rows.foreach { r =>
+        var i = 0
+        while (i < n) {
+          if (!r.isNullAt(i)) {
+            val v = r.getDouble(i)
+            seen(i) += java.lang.Double.doubleToLongBits(if (v == 0.0) 0.0 else v)
+          }
+          i += 1
+        }
+      }
+      Iterator.single(seen)
+    }.collect()
+    (0 until n).map { i =>
+      val a = perTask.iterator.flatMap(_(i)).toSet.toArray.map(java.lang.Double.longBitsToDouble)
+      java.util.Arrays.sort(a)
+      a
     }
-
-  private def arrayJsonV3(shape: Seq[Int], chunks: Seq[Int],
-      shard: Option[Seq[Int]], comp: Option[String], dims: Seq[String],
-      units: Option[String], string: Boolean = false): String = {
-    val arrayToBytes =
-      if (string) """{"name": "vlen-utf8"}"""
-      else """{"name": "bytes", "configuration": {"endian": "little"}}"""
-    val inner = Seq(Some(arrayToBytes),
-      comp.map(_ => """{"name": "gzip", "configuration": {"level": 6}}""")).flatten
-    val codecs = shard match {
-      case None => inner
-      case Some(_) => Seq(
-        s"""{"name": "sharding_indexed", "configuration": {
-           |  "chunk_shape": [${chunks.mkString(", ")}],
-           |  "codecs": [${inner.mkString(", ")}],
-           |  "index_codecs": [{"name": "bytes", "configuration": {"endian": "little"}},
-           |                   {"name": "crc32c"}],
-           |  "index_location": "end"}}""".stripMargin)
-    }
-    val gridChunks = shard.getOrElse(chunks)
-    val attrs = units.map(u => s""""units": "$u"""").toSeq
-    s"""{"zarr_format": 3, "node_type": "array",
-       | "shape": [${shape.mkString(", ")}],
-       | "data_type": "${if (string) "string" else "float64"}",
-       | "chunk_grid": {"name": "regular",
-       |   "configuration": {"chunk_shape": [${gridChunks.mkString(", ")}]}},
-       | "chunk_key_encoding": {"name": "default",
-       |   "configuration": {"separator": "/"}},
-       | "fill_value": ${if (string) "\"\"" else "\"NaN\""},
-       | "codecs": [${codecs.mkString(", ")}],
-       | "attributes": {${attrs.mkString(", ")}},
-       | "dimension_names": [${dims.map("\"" + _ + "\"").mkString(", ")}]}"""
-      .stripMargin
   }
 
-  /** The shared keyed-aggregation core: one (variable, inner-chunk-key)
-    * buffer per populated chunk, NaN-filled, last-write-wins on overlap. */
-  private def chunkBuffers(df: DataFrame, dims: Seq[String], chunks: Seq[Int],
-      coords: Seq[Array[Double]],
-      axis: (String, Int) => org.apache.spark.sql.Column)
-      : org.apache.spark.rdd.RDD[((Int, String), Array[Double])] = {
-    val spark = df.sparkSession
-    val dataVars = df.columns.filterNot(dims.contains).toSeq
+  /** The keyed aggregation both passes share: one (variable index,
+    * chunk key) buffer per populated chunk, `empty`-filled, last write
+    * wins where two rows land on one cell. */
+  private def chunkBuffers[T: ClassTag](df: DataFrame, axes: Seq[Column],
+      values: Seq[Column], chunks: Seq[Int], coords: Seq[Array[Double]], empty: T,
+      present: T => Boolean, cell: (Row, Int) => T): RDD[((Int, String), Array[T])] = {
+    val sc = df.sparkSession.sparkContext
     val chunkProd = chunks.product
-    val dimIndex: Seq[Map[Double, Int]] = coords.map(_.zipWithIndex.toMap)
-    val bcIdx = spark.sparkContext.broadcast(dimIndex)
+    val bcIdx = sc.broadcast(coords.map(_.zipWithIndex.toMap))
     val chunksLocal = chunks.toIndexedSeq
-    val nDims = dims.size
-    val varsLocal = dataVars.toIndexedSeq
-    val shape = coords.map(_.length)
-    val nChunksUpper = shape.zip(chunks)
-      .map { case (s, c) => (s + c - 1) / c }.product * math.max(varsLocal.size, 1)
-    val projected = df.select(
-      dims.zipWithIndex.map { case (d, i) => axis(d, i) } ++
-        dataVars.map(v => col(v).cast("double")): _*)
-    projected.rdd.flatMap { row =>
+    val nDims = axes.size
+    val nVars = values.size
+    val nChunksUpper = coords.map(_.length).zip(chunks)
+      .map { case (s, c) => (s + c - 1) / c }.product * math.max(nVars, 1)
+    df.select(axes ++ values: _*).rdd.flatMap { row =>
       val (key, localLinear) = cellIndex(row, nDims, bcIdx.value, chunksLocal)
-      varsLocal.indices.iterator.filterNot(vi => row.isNullAt(nDims + vi)).map { vi =>
-        ((vi, key), (localLinear, row.getDouble(nDims + vi)))
+      (0 until nVars).iterator.filterNot(vi => row.isNullAt(nDims + vi)).map { vi =>
+        ((vi, key), (localLinear, cell(row, nDims + vi)))
       }
-    }.aggregateByKey(null: Array[Double],
-      new HashPartitioner(math.min(nChunksUpper,
-        spark.sparkContext.defaultParallelism * 4)))(
+    }.aggregateByKey(null: Array[T],
+      new HashPartitioner(math.min(nChunksUpper, sc.defaultParallelism * 4)))(
       (acc, kv) => {
-        val a = if (acc == null) Array.fill(chunkProd)(Double.NaN) else acc
+        val a = if (acc == null) Array.fill(chunkProd)(empty) else acc
         a(kv._1) = kv._2
         a
       },
@@ -260,114 +224,15 @@ object ZarrDistributedWriter {
         else if (b == null) a
         else {
           var i = 0
-          while (i < a.length) { if (!b(i).isNaN) a(i) = b(i); i += 1 }
+          while (i < a.length) { if (present(b(i))) a(i) = b(i); i += 1 }
           a
         }
       })
   }
 
-  def write(df: DataFrame, storePath: String, dims: Seq[String],
-      chunks: Seq[Int], compressor: Option[String] = Some("zlib")): Unit = {
-    require(dims.nonEmpty && dims.size == chunks.size, "dims and chunks must align")
-    val spark = df.sparkSession
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-
-    val isTimeDim: Seq[Boolean] = dims.map { d =>
-      df.schema(d).dataType match {
-        case TimestampNTZType | TimestampType => true
-        case _ => false
-      }
-    }
-    val allVars = df.columns.filterNot(dims.contains).toSeq
-    // string columns write as |O + vlen-utf8 (xarray's string encoding) in
-    // a SEPARATE column-pruned pass, so the numeric hot path keeps its
-    // specialized (Int, Double) shuffle records; missing/null cells encode
-    // as "" (zarr v2 object arrays have no null string)
-    val stringVars = allVars.filter(v => df.schema(v).dataType == StringType)
-    val dataVars = allVars.filterNot(stringVars.contains)
-
-    // TIMESTAMP_NTZ has no direct double cast; route through TIMESTAMP
-    // (session is UTC) -> epoch seconds
-    def axis(d: String, i: Int): org.apache.spark.sql.Column =
-      if (isTimeDim(i)) col(d).cast("timestamp").cast("double") else col(d).cast("double")
-
-    // 1. coordinate axes: distinct + sorted, driver-side (they ARE small —
-    // hypercube axes, not the hypercube)
-    val coords: Seq[Array[Double]] = dims.zipWithIndex.map { case (d, i) =>
-      df.select(axis(d, i).as("__a")).distinct().orderBy(col("__a"))
-        .collect().map(_.getDouble(0))
-    }
-    val shape = coords.map(_.length)
-
-    // 2. metadata + coordinate arrays (driver)
-    writeText(conf, s"$storePath/.zgroup", """{"zarr_format": 2}""")
-    val consolidated = Seq.newBuilder[(String, String)]
-    consolidated += ".zgroup" -> """{"zarr_format": 2}"""
-    dims.zipWithIndex.foreach { case (d, i) =>
-      val za = zarrayJson(Seq(shape(i)), Seq(shape(i)), compressor = None)
-      val zat = zattrsJson(Seq(d),
-        units = if (isTimeDim(i)) Some("seconds since 1970-01-01") else None)
-      writeText(conf, s"$storePath/$d/.zarray", za)
-      writeText(conf, s"$storePath/$d/.zattrs", zat)
-      consolidated += s"$d/.zarray" -> za
-      consolidated += s"$d/.zattrs" -> zat
-      writeBytes(conf, s"$storePath/$d/0", encodeF8(coords(i)))
-    }
-    (dataVars.map((_, "<f8")) ++ stringVars.map((_, "|O"))).foreach { case (v, dt) =>
-      val za = zarrayJson(shape, chunks, compressor, dtype = dt)
-      val zat = zattrsJson(dims)
-      writeText(conf, s"$storePath/$v/.zarray", za)
-      writeText(conf, s"$storePath/$v/.zattrs", zat)
-      consolidated += s"$v/.zarray" -> za
-      consolidated += s"$v/.zattrs" -> zat
-    }
-    // consolidated metadata (zarr v2 convention): external readers (and our
-    // own open()) plan the whole store from ONE object read
-    writeText(conf, s"$storePath/.zmetadata",
-      consolidated.result()
-        .map { case (k, v) => s""""$k": $v""" }
-        .mkString("{\"metadata\": {", ", ", "}, \"zarr_consolidated_format\": 1}"))
-
-    // 3. distributed chunk encode+write (tasks get the session Hadoop conf)
-    val tconf = graft.sources.TaskConf(conf)
-    val varsLocal = dataVars.toIndexedSeq
-    val storeLocal = storePath
-    val compLocal = compressor
-    if (dataVars.nonEmpty)
-      chunkBuffers(df.drop(stringVars: _*), dims, chunks, coords, axis)
-        .foreachPartition { it: Iterator[((Int, String), Array[Double])] =>
-          val conf = tconf.value
-          it.foreach { case ((vi, key), values) =>
-            val raw = encodeF8(values)
-            val out = compLocal match {
-              case Some("zlib") => deflate(raw)
-              case _ => raw
-            }
-            writeBytes(conf, s"$storeLocal/${varsLocal(vi)}/$key", out)
-          }
-        }
-    if (stringVars.nonEmpty) {
-      val sVarsLocal = stringVars.toIndexedSeq
-      stringChunkBuffers(df, dims, stringVars, chunks, coords, axis)
-        .foreachPartition { it: Iterator[((Int, String), Array[String])] =>
-          val conf = tconf.value
-          it.foreach { case ((vi, key), cells) =>
-            val raw = ZarrMeta.encodeVlenUtf8(cells)
-            val out = compLocal match {
-              case Some("zlib") => deflate(raw)
-              case _ => raw
-            }
-            writeBytes(conf, s"$storeLocal/${sVarsLocal(vi)}/$key", out)
-          }
-        }
-    }
-  }
-
-  /** (chunk key, local linear index) of one row's grid point — the ONE
-    * copy of the chunk-index math; the numeric and string cell pipelines
-    * both call it so they cannot drift. */
-  private def cellIndex(row: org.apache.spark.sql.Row, nDims: Int,
-      idx: Seq[Map[Double, Int]], chunks: IndexedSeq[Int]): (String, Int) = {
+  /** (chunk key, local linear index) of one row's grid point. */
+  private def cellIndex(row: Row, nDims: Int, idx: Seq[Map[Double, Int]],
+      chunks: IndexedSeq[Int]): (String, Int) = {
     val gidx = new Array[Int](nDims)
     var i = 0
     while (i < nDims) { gidx(i) = idx(i)(row.getDouble(i)); i += 1 }
@@ -380,96 +245,6 @@ object ZarrDistributedWriter {
       i += 1
     }
     (chunkIdx.mkString("."), localLinear)
-  }
-
-  /** String-var counterpart of [[chunkBuffers]]: null-filled string cell
-    * buffers per (variable, chunk key); the projection carries ONLY the
-    * dims + string columns, so the scan prunes everything else. */
-  private def stringChunkBuffers(df: DataFrame, dims: Seq[String],
-      stringVars: Seq[String], chunks: Seq[Int], coords: Seq[Array[Double]],
-      axis: (String, Int) => org.apache.spark.sql.Column)
-      : org.apache.spark.rdd.RDD[((Int, String), Array[String])] = {
-    val spark = df.sparkSession
-    val chunkProd = chunks.product
-    val dimIndex: Seq[Map[Double, Int]] = coords.map(_.zipWithIndex.toMap)
-    val bcIdx = spark.sparkContext.broadcast(dimIndex)
-    val chunksLocal = chunks.toIndexedSeq
-    val nDims = dims.size
-    val varsLocal = stringVars.toIndexedSeq
-    val shape = coords.map(_.length)
-    val nChunksUpper = shape.zip(chunks)
-      .map { case (s, c) => (s + c - 1) / c }.product * math.max(varsLocal.size, 1)
-    val projected = df.select(
-      dims.zipWithIndex.map { case (d, i) => axis(d, i) } ++
-        stringVars.map(col): _*)
-    projected.rdd.flatMap { row =>
-      val (key, localLinear) = cellIndex(row, nDims, bcIdx.value, chunksLocal)
-      varsLocal.indices.iterator.filterNot(vi => row.isNullAt(nDims + vi)).map { vi =>
-        ((vi, key), (localLinear, row.getString(nDims + vi)))
-      }
-    }.aggregateByKey(null: Array[String],
-      new HashPartitioner(math.min(nChunksUpper,
-        spark.sparkContext.defaultParallelism * 4)))(
-      (acc, kv) => {
-        val a = if (acc == null) new Array[String](chunkProd) else acc
-        a(kv._1) = kv._2
-        a
-      },
-      (a, b) => {
-        if (a == null) b
-        else if (b == null) a
-        else {
-          var i = 0
-          while (i < a.length) { if (b(i) != null) a(i) = b(i); i += 1 }
-          a
-        }
-      })
-  }
-
-
-
-  private def zarrayJson(shape: Seq[Int], chunks: Seq[Int],
-      compressor: Option[String], dtype: String = "<f8"): String = {
-    val comp = compressor match {
-      case Some("zlib") => """{"id": "zlib", "level": 6}"""
-      case None => "null"
-      case Some(o) => throw new UnsupportedOperationException(s"compressor $o")
-    }
-    // fill_value "NaN" (the Zarr v2 JSON encoding for an IEEE NaN fill), not
-    // null: this writer deliberately skips wholly-absent chunks, and
-    // zarr-python/xarray treat null as 'no fill' — absent chunks would read
-    // back as undefined data there instead of the NaN the sparse layout means
-    val (fill, filters) =
-      if (dtype == "|O") ("null", """[{"id": "vlen-utf8"}]""")
-      else ("\"NaN\"", "null")
-    s"""{"zarr_format": 2, "shape": [${shape.mkString(", ")}],
-       | "chunks": [${chunks.mkString(", ")}], "dtype": "$dtype",
-       | "compressor": $comp, "fill_value": $fill, "order": "C",
-       | "filters": $filters}""".stripMargin
-  }
-
-  private def zattrsJson(dims: Seq[String], units: Option[String] = None): String = {
-    val fields = Seq(
-      Some(s""""_ARRAY_DIMENSIONS": [${dims.map("\"" + _ + "\"").mkString(", ")}]"""),
-      units.map(u => s""""units": "$u"""")).flatten
-    fields.mkString("{", ", ", "}")
-  }
-
-  private def encodeF8(values: Array[Double]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(values.length * 8).order(ByteOrder.LITTLE_ENDIAN)
-    values.foreach(bb.putDouble)
-    bb.array()
-  }
-
-  private def deflate(bytes: Array[Byte]): Array[Byte] = {
-    val d = new Deflater(6)
-    d.setInput(bytes)
-    d.finish()
-    val out = new ByteArrayOutputStream()
-    val buf = new Array[Byte](64 * 1024)
-    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-    d.end()
-    out.toByteArray
   }
 
   private def writeText(conf: Configuration, path: String, s: String): Unit =

@@ -32,6 +32,11 @@ import org.json4s.jackson.JsonMethods
   * `dimension_names`, numeric/"NaN" fill values, inline
   * `consolidated_metadata` (zarr-python 3's successor to `.zmetadata`),
   * and the same CDL attribute conventions.
+  *
+  * Write side: the one renderer of v2/v3 array, group and consolidated
+  * metadata (`render*`), the one chunk encoder ([[encodeChunk]]) and the
+  * shard packer ([[packShard]], beside its reader) that [[ZarrWriter]],
+  * [[ZarrDistributedWriter]] and [[Kerchunk]] share.
   */
 object ZarrMeta {
 
@@ -1165,6 +1170,223 @@ object ZarrMeta {
         Some(raw)
       }
     } finally in.close()
+  }
+
+  /** One shard object of the `sharding_indexed` codec as both v3 writers
+    * lay it out, the inverse of [[readShardEntry]]: the encoded inner
+    * chunks (C-order over the shard's inner grid, `None` = absent) back to
+    * back, then the u64-LE (offset, nbytes) index with 2^64-1 for absent
+    * chunks, then the index's CRC-32C. */
+  def packShard(inner: Seq[Option[Array[Byte]]]): Array[Byte] = {
+    val body = new java.io.ByteArrayOutputStream()
+    val index = ByteBuffer.allocate(inner.size * 16 + 4).order(ByteOrder.LITTLE_ENDIAN)
+    inner.foreach {
+      case Some(enc) =>
+        index.putLong(body.size().toLong).putLong(enc.length.toLong)
+        body.write(enc)
+      case None => index.putLong(-1L).putLong(-1L)
+    }
+    index.putInt(crc32c(index.array(), inner.size * 16))
+    body.write(index.array())
+    body.toByteArray
+  }
+
+  // ---- write side: the metadata every writer and Kerchunk scan renders,
+  // and the one chunk encoder
+
+  /** The v2 root group (`.zgroup`). */
+  def renderZgroup: String = """{"zarr_format": 2}"""
+
+  /** A v2 `.zarray`. `compressor`, `fill` and `filters` are JSON text, so a
+    * scan's own codec objects (Kerchunk's `{"id": "grib", ...}`) pass
+    * through unchanged. */
+  def renderZarray(shape: Seq[Int], chunks: Seq[Int], dtype: String,
+      compressor: String, fill: String, filters: String): String =
+    s"""{"zarr_format": 2, "shape": [${shape.mkString(", ")}], """ +
+      s""""chunks": [${chunks.mkString(", ")}], "dtype": "$dtype", """ +
+      s""""compressor": $compressor, "fill_value": $fill, "order": "C", """ +
+      s""""filters": $filters}"""
+
+  /** A v2 `.zarray` as the writers declare it: the compressor by name
+    * (`zlib`, `zstd`, or `blosc` with the numcodecs lz4 byte-shuffle
+    * profile), the "NaN" fill for float dtypes (absent chunks read as
+    * missing in xarray too) and null otherwise, and the object dtype's
+    * vlen-utf8 filter as numcodecs declares it. */
+  def renderZarray(shape: Seq[Int], chunks: Seq[Int], dtype: String,
+      compressor: Option[String]): String = {
+    val comp = compressor match {
+      case None => "null"
+      case Some("zlib") => """{"id": "zlib", "level": 6}"""
+      case Some("zstd") => """{"id": "zstd", "level": 5}"""
+      case Some("blosc") =>
+        """{"id": "blosc", "cname": "lz4", "clevel": 5, "shuffle": 1, "blocksize": 0}"""
+      case Some(o) => throw new UnsupportedOperationException(s"compressor $o")
+    }
+    renderZarray(shape, chunks, dtype, comp,
+      if (dtype.startsWith("<f")) "\"NaN\"" else "null",
+      if (dtype == "|O") """[{"id": "vlen-utf8"}]""" else "null")
+  }
+
+  /** A v2 `.zattrs`: xarray's `_ARRAY_DIMENSIONS`, then `attrs` (values
+    * are JSON text). */
+  def renderZattrs(dims: Seq[String], attrs: Seq[(String, String)] = Nil): String =
+    ((s""""_ARRAY_DIMENSIONS": ${dims.map(jsonString).mkString("[", ", ", "]")}""") +:
+      attrs.map { case (k, v) => s""""$k": $v""" }).mkString("{", ", ", "}")
+
+  /** v2 consolidated metadata (`.zmetadata`): the root group and every
+    * (name, `.zarray`, `.zattrs`), so one read plans the whole store. */
+  def renderZmetadata(arrays: Seq[(String, String, String)]): String =
+    ((".zgroup" -> renderZgroup) +: arrays.flatMap { case (name, za, zat) =>
+      Seq(s"$name/.zarray" -> za, s"$name/.zattrs" -> zat)
+    }).map { case (k, j) => s""""$k": $j""" }
+      .mkString("{\"metadata\": {", ", ", "}, \"zarr_consolidated_format\": 1}")
+
+  /** A v3 array `zarr.json` as the writers declare it: regular grid over
+    * `shard` (or `chunks`), `default` chunk keys with `sep`, `bytes` little
+    * endian (`vlen-utf8` for `|O`), then the named `compressor` (`gzip`,
+    * `zstd`, `blosc`) and `crc32c`; with `shard` those codecs sit inside
+    * `sharding_indexed`, whose index carries a crc32c. The fill is "" for
+    * strings, "NaN" for floats, 0 otherwise; `attrs` values are JSON text. */
+  def renderZarrJson(shape: Seq[Int], chunks: Seq[Int], dtype: String,
+      compressor: Option[String], dims: Seq[String], attrs: Seq[(String, String)],
+      shard: Option[Seq[Int]], crc32c: Boolean, sep: String): String = {
+    val dataType = dtype match {
+      case "<f8" => "float64"
+      case "<f4" => "float32"
+      case "<i8" => "int64"
+      case "<i4" => "int32"
+      case "<i2" => "int16"
+      case "<u1" | "|u1" => "uint8"
+      case "|b1" => "bool"
+      case "|O" => "string"
+      case o => throw new UnsupportedOperationException(s"v3 writer dtype $o")
+    }
+    val bytesCodec = """{"name": "bytes", "configuration": {"endian": "little"}}"""
+    val inner = Seq(
+      Some(if (dtype == "|O") """{"name": "vlen-utf8"}""" else bytesCodec),
+      compressor.map {
+        case "gzip" => """{"name": "gzip", "configuration": {"level": 6}}"""
+        case "zstd" => """{"name": "zstd", "configuration": {"level": 0, "checksum": false}}"""
+        case "blosc" =>
+          s"""{"name": "blosc", "configuration": {"cname": "lz4", "clevel": 5, """ +
+            s""""shuffle": "shuffle", "typesize": ${typesize(dtype)}, "blocksize": 0}}"""
+        case o => throw new UnsupportedOperationException(s"v3 writer codec $o")
+      },
+      if (crc32c) Some("""{"name": "crc32c"}""") else None).flatten
+    val codecs = shard match {
+      case None => inner
+      case Some(sh) =>
+        require(sh.zip(chunks).forall { case (s, c) => s % c == 0 },
+          s"inner chunks $chunks must evenly divide shard $sh")
+        Seq(s"""{"name": "sharding_indexed", "configuration": {""" +
+          s""""chunk_shape": [${chunks.mkString(", ")}], "codecs": [${inner.mkString(", ")}], """ +
+          s""""index_codecs": [$bytesCodec, {"name": "crc32c"}], "index_location": "end"}}""")
+    }
+    val fill = if (dtype == "|O") "\"\"" else if (dtype.startsWith("<f")) "\"NaN\"" else "0"
+    s"""{"zarr_format": 3, "node_type": "array", "shape": [${shape.mkString(", ")}], """ +
+      s""""data_type": "$dataType", "chunk_grid": {"name": "regular", "configuration": """ +
+      s"""{"chunk_shape": [${shard.getOrElse(chunks).mkString(", ")}]}}, """ +
+      s""""chunk_key_encoding": {"name": "default", "configuration": {"separator": "$sep"}}, """ +
+      s""""fill_value": $fill, "codecs": [${codecs.mkString(", ")}], """ +
+      s""""attributes": {${attrs.map { case (k, v) => s""""$k": $v""" }.mkString(", ")}}, """ +
+      s""""dimension_names": ${dims.map(jsonString).mkString("[", ", ", "]")}}"""
+  }
+
+  /** The v3 root group with every array's `zarr.json` inline as
+    * `consolidated_metadata` (zarr-python 3's successor to `.zmetadata`). */
+  def renderV3Group(arrays: Seq[(String, String)]): String =
+    arrays.map { case (k, j) => s""""$k": $j""" }.mkString(
+      """{"zarr_format": 3, "node_type": "group", "attributes": {}, """ +
+        """"consolidated_metadata": {"kind": "inline", "must_understand": false, "metadata": {""",
+      ", ", "}}}")
+
+  /** A JSON string literal: quotes and backslashes escaped. */
+  private[zarr] def jsonString(s: String): String =
+    s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c => c.toString
+    }.mkString("\"", "", "\"")
+
+  /** One encoded chunk: `cells` (C-order over the whole chunk shape, edge
+    * chunks padded) packed little endian as `dtype`, compressed with the
+    * named `compressor` (`zlib` deflate, `gzip`, `zstd`, or `blosc` lz4
+    * with byte shuffle), then with `crc32c` the v3 checksum trailer. */
+  def encodeChunk(dtype: String, cells: Array[Double], compressor: Option[String],
+      crc32c: Boolean): Array[Byte] = {
+    val bb = ByteBuffer.allocate(cells.length * dtypeBytes(dtype)).order(ByteOrder.LITTLE_ENDIAN)
+    dtype match {
+      case "<f8" => cells.foreach(bb.putDouble)
+      case "<f4" => cells.foreach(v => bb.putFloat(v.toFloat))
+      case "<i8" => cells.foreach(v => bb.putLong(v.toLong))
+      case "<i4" => cells.foreach(v => bb.putInt(v.toInt))
+      case "<i2" => cells.foreach(v => bb.putShort(v.toShort))
+      case "<u1" | "|u1" => cells.foreach(v => bb.put(v.toInt.toByte))
+      case "|b1" => cells.foreach(v => bb.put(if (v != 0.0) 1.toByte else 0.toByte))
+      case o => throw new UnsupportedOperationException(s"zarr writer dtype $o")
+    }
+    compressChunk(bb.array(), typesize(dtype), compressor, crc32c)
+  }
+
+  /** [[encodeChunk]] for string cells: `|O` as vlen-utf8 (null cells as
+    * ""), `|S<n>` as NUL-padded fixed-width bytes. */
+  def encodeChunk(dtype: String, cells: Array[String], compressor: Option[String],
+      crc32c: Boolean): Array[Byte] = {
+    val raw =
+      if (dtype == "|O") encodeVlenUtf8(cells)
+      else {
+        val w = dtypeBytes(dtype)
+        val out = new Array[Byte](cells.length * w)
+        cells.zipWithIndex.foreach { case (s, i) =>
+          val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+          require(b.length <= w, s"'$s' (${b.length} bytes) exceeds $dtype width $w")
+          System.arraycopy(b, 0, out, i * w, b.length)
+        }
+        out
+      }
+    compressChunk(raw, typesize(dtype), compressor, crc32c)
+  }
+
+  // blosc's shuffle width: vlen buffers have no fixed element width, and
+  // typesize 1 is what numcodecs uses for object arrays
+  private def typesize(dtype: String): Int = if (dtype == "|O") 1 else dtypeBytes(dtype)
+
+  private def compressChunk(raw: Array[Byte], typesize: Int, compressor: Option[String],
+      crc32c: Boolean): Array[Byte] = {
+    val out = compressor match {
+      case None => raw
+      case Some("zlib") => deflate(raw)
+      case Some("gzip") =>
+        val bos = new java.io.ByteArrayOutputStream()
+        val g = new java.util.zip.GZIPOutputStream(bos)
+        g.write(raw); g.close()
+        bos.toByteArray
+      case Some("zstd") => Zstd.compressStore(raw)
+      case Some("blosc") => Blosc.compress(raw, typesize, shuffle = true)
+      case Some(o) => throw new UnsupportedOperationException(s"compressor $o")
+    }
+    if (!crc32c) out
+    else {
+      val c = this.crc32c(out, out.length)
+      out ++ Array[Byte](c.toByte, (c >>> 8).toByte, (c >>> 16).toByte, (c >>> 24).toByte)
+    }
+  }
+
+  private def crc32c(bytes: Array[Byte], len: Int): Int = {
+    val crc = new java.util.zip.CRC32C()
+    crc.update(bytes, 0, len)
+    crc.getValue.toInt
+  }
+
+  private def deflate(bytes: Array[Byte]): Array[Byte] = {
+    val d = new java.util.zip.Deflater(6)
+    d.setInput(bytes)
+    d.finish()
+    val out = new java.io.ByteArrayOutputStream()
+    val buf = new Array[Byte](64 * 1024)
+    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
+    d.end()
+    out.toByteArray
   }
 
   /** Read an entire (possibly multi-chunk) array — used for coordinates. */

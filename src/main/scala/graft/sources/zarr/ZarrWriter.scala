@@ -1,17 +1,16 @@
 package graft.sources.zarr
 
-import java.io.{ByteArrayOutputStream, File, FileOutputStream}
-import java.nio.{ByteBuffer, ByteOrder}
-import java.util.zip.Deflater
+import java.io.{File, FileOutputStream}
 
 /** Minimal Zarr v2 writer (S15: `ChunksToZarr`, weather_mv regrid.py:128-162
   * writes regridded chunks to a Zarr store). Writes xarray-convention
-  * stores (`_ARRAY_DIMENSIONS`) with raw, zlib, or blosc-lz4 chunks — enough to
-  * round-trip through [[ZarrTableProvider]] and to build test fixtures
-  * without zarr-python in the environment.
+  * stores (`_ARRAY_DIMENSIONS`) with raw, zlib, zstd or blosc-lz4 chunks —
+  * enough to round-trip through [[ZarrTableProvider]] and to build test
+  * fixtures without zarr-python in the environment. Metadata, chunk
+  * encoding and shard layout come from [[ZarrMeta]].
   *
   * Local-filesystem only: fixture/test scale. The distributed write path
-  * for hypercube data remains the partitioned parquet write (Splitter).
+  * is [[ZarrDistributedWriter]].
   */
 object ZarrWriter {
 
@@ -38,16 +37,20 @@ object ZarrWriter {
   def write(storePath: String, vars: Seq[VarSpec]): Unit = {
     val root = new File(storePath)
     root.mkdirs()
-    writeString(new File(root, ".zgroup"), """{"zarr_format": 2}""")
-    val entries = (".zgroup" -> """{"zarr_format": 2}""") +:
-      vars.flatMap { v =>
-        val (za, zat) = writeArray(root, v)
-        Seq(s"${v.name}/.zarray" -> za, s"${v.name}/.zattrs" -> zat)
+    writeString(new File(root, ".zgroup"), ZarrMeta.renderZgroup)
+    val metas = vars.map { v =>
+      val dir = arrayDir(root, v)
+      val za = ZarrMeta.renderZarray(v.shape, v.chunks, v.dtype, v.compressor)
+      val zat = ZarrMeta.renderZattrs(v.dims, attrs(v))
+      writeString(new File(dir, ".zarray"), za)
+      writeString(new File(dir, ".zattrs"), zat)
+      cartesian(grid(v.shape, v.chunks)).foreach { chunkIdx =>
+        writeBytes(new File(dir, chunkIdx.mkString(".")), encode(v, chunkIdx, crc32c = false))
       }
+      (v.name, za, zat)
+    }
     // consolidated metadata: one read plans the whole store
-    writeString(new File(root, ".zmetadata"),
-      entries.map { case (k, j) => s""""$k": $j""" }
-        .mkString("{\"metadata\": {", ", ", "}, \"zarr_consolidated_format\": 1}"))
+    writeString(new File(root, ".zmetadata"), ZarrMeta.renderZmetadata(metas))
   }
 
   /** Minimal Zarr V3 writer (spec: zarr-specs v3.0): root `zarr.json` group
@@ -55,296 +58,93 @@ object ZarrWriter {
     * chunk grid, `default` chunk-key encoding with `sep`, `bytes` little +
     * optional `gzip` codec, `dimension_names`), chunk files under
     * `name/c<sep>0<sep>1`. Fixture scale, same VarSpec surface as v2
-    * (`compressor = Some("gzip")` selects the gzip codec). */
+    * (`compressor = Some("gzip")` selects the gzip codec). With `shard`,
+    * all-NaN float inner chunks are left out of their shard. */
   def writeV3(storePath: String, vars: Seq[VarSpec], sep: String = "/"): Unit = {
     val root = new File(storePath)
     root.mkdirs()
-    val arrayJsons = vars.map { v =>
-      val isStringVar = v.dtype == "|O"
-      require((if (isStringVar) v.sdata else v.data).size == v.shape.product,
-        s"${v.name}: data size != shape product")
-      // sharded string arrays work: string inner chunks are never "all
-      // missing" (the f8-only NaN elision below), so every inner chunk
-      // encodes and the index stays dense
-      val dir = new File(root, v.name)
-      dir.mkdirs()
-      val dt = v.dtype match {
-        case "<f8" => "float64"
-        case "<f4" => "float32"
-        case "<i8" => "int64"
-        case "<i4" => "int32"
-        case "<i2" => "int16"
-        case "<u1" | "|u1" => "uint8"
-        case "|b1" => "bool"
-        case "|O" => "string" // variable-length strings, vlen-utf8 codec
-        case o => throw new UnsupportedOperationException(s"v3 writer dtype $o")
-      }
-      val arrayToBytes =
-        if (dt == "string") """{"name": "vlen-utf8"}"""
-        else """{"name": "bytes", "configuration": {"endian": "little"}}"""
-      val innerCodecs = Seq(Some(arrayToBytes),
-        v.compressor.map {
-          case "gzip" => """{"name": "gzip", "configuration": {"level": 6}}"""
-          case "zstd" => """{"name": "zstd", "configuration": {"level": 0, "checksum": false}}"""
-          case "blosc" =>
-            val ts = if (v.dtype == "|O") 1 else ZarrMeta.dtypeBytes(v.dtype)
-            s"""{"name": "blosc", "configuration": {"cname": "lz4", "clevel": 5,
-               | "shuffle": "shuffle", "typesize": $ts,
-               | "blocksize": 0}}""".stripMargin
-          case o => throw new UnsupportedOperationException(s"v3 writer codec $o")
-        },
-        if (v.crc32c) Some("""{"name": "crc32c"}""") else None).flatten
-      val codecs = v.shard match {
-        case None => innerCodecs
-        case Some(sh) =>
-          require(sh.zip(v.chunks).forall { case (s, c) => s % c == 0 },
-            s"${v.name}: inner chunks ${v.chunks} must evenly divide shard $sh")
-          Seq(s"""{"name": "sharding_indexed", "configuration": {
-             |  "chunk_shape": [${v.chunks.mkString(", ")}],
-             |  "codecs": [${innerCodecs.mkString(", ")}],
-             |  "index_codecs": [{"name": "bytes", "configuration": {"endian": "little"}},
-             |                   {"name": "crc32c"}],
-             |  "index_location": "end"}}""".stripMargin)
-      }
-      val attrs = Seq(
-        v.scaleFactor.map(x => s""""scale_factor": $x"""),
-        v.addOffset.map(x => s""""add_offset": $x"""),
-        v.missingValue.map(x => s""""missing_value": ${fmtMissing(x, v.dtype)}"""),
-        v.units.map(u => s""""units": "$u""""),
-        v.calendar.map(c => s""""calendar": "$c"""")).flatten
-      val fillJson =
-        if (isStringVar) "\"\""
-        else if (v.dtype.startsWith("<f")) "\"NaN\"" else "0"
-      val gridChunks = v.shard.getOrElse(v.chunks)
-      val j =
-        s"""{"zarr_format": 3, "node_type": "array",
-           | "shape": [${v.shape.mkString(", ")}], "data_type": "$dt",
-           | "chunk_grid": {"name": "regular",
-           |   "configuration": {"chunk_shape": [${gridChunks.mkString(", ")}]}},
-           | "chunk_key_encoding": {"name": "default",
-           |   "configuration": {"separator": "$sep"}},
-           | "fill_value": $fillJson,
-           | "codecs": [${codecs.mkString(", ")}],
-           | "attributes": {${attrs.mkString(", ")}},
-           | "dimension_names": [${v.dims.map("\"" + _ + "\"").mkString(", ")}]}"""
-          .stripMargin
+    val metas = vars.map { v =>
+      val dir = arrayDir(root, v)
+      val j = ZarrMeta.renderZarrJson(v.shape, v.chunks, v.dtype, v.compressor, v.dims,
+        attrs(v), v.shard, v.crc32c, sep)
       writeString(new File(dir, "zarr.json"), j)
-      def encodeInner(chunkIdx: Seq[Int]): Array[Byte] = {
-        val bytes =
-          if (isStringVar) encodeStringChunk(v, chunkIdx) else encodeChunk(v, chunkIdx)
-        val typesize = if (isStringVar) 1 else ZarrMeta.dtypeBytes(v.dtype)
-        val out = v.compressor match {
-          case Some("gzip") => gzip(bytes)
-          case Some("zstd") => Zstd.compressStore(bytes)
-          case Some("blosc") => Blosc.compress(bytes, typesize, shuffle = true)
-          case _ => bytes
-        }
-        if (!v.crc32c) out
-        else { // crc32c codec: trailing 4-byte LE CRC-32C over the chunk
-          val crc = new java.util.zip.CRC32C()
-          crc.update(out, 0, out.length)
-          val c = crc.getValue
-          out ++ Array[Byte](c.toByte, (c >>> 8).toByte, (c >>> 16).toByte,
-            (c >>> 24).toByte)
-        }
-      }
       def writeKey(keyIdx: Seq[Int], out: Array[Byte]): Unit = {
         val f = new File(dir, ("c" +: keyIdx.map(_.toString)).mkString(sep))
         f.getParentFile.mkdirs()
-        val fos = new FileOutputStream(f)
-        try fos.write(out) finally fos.close()
+        writeBytes(f, out)
       }
       v.shard match {
         case None =>
-          val grid = v.shape.zip(v.chunks).map { case (s, c) => (s + c - 1) / c }
-          cartesian(grid.map(g => 0 until g)).foreach { chunkIdx =>
-            writeKey(chunkIdx, encodeInner(chunkIdx))
+          cartesian(grid(v.shape, v.chunks)).foreach { chunkIdx =>
+            writeKey(chunkIdx, encode(v, chunkIdx, v.crc32c))
           }
         case Some(sh) =>
-          // shard objects: encoded inner chunks concatenated, trailing
-          // u64-LE (offset, nbytes) index in inner C-order + crc32c;
-          // all-NaN inner chunks are omitted (index entry 2^64-1)
-          val shardGrid = v.shape.zip(sh).map { case (s, c) => (s + c - 1) / c }
           val per = sh.zip(v.chunks).map { case (o, c) => o / c }
-          cartesian(shardGrid.map(g => 0 until g)).foreach { shardIdx =>
-            val body = new ByteArrayOutputStream()
-            val index = ByteBuffer.allocate(per.product * 16 + 4)
-              .order(ByteOrder.LITTLE_ENDIAN)
-            cartesian(per.map(p => 0 until p)).foreach { inner =>
-              val globalChunk = shardIdx.zip(per).zip(inner)
-                .map { case ((s, p), i) => s * p + i }
-              val allMissing = v.dtype.startsWith("<f") && {
-                val starts = globalChunk.zip(v.chunks).map { case (g, c) => g * c }
-                cartesian(v.chunks.map(c => 0 until c)).forall { local =>
-                  val global = starts.zip(local).map { case (s, l) => s + l }
-                  val in = global.zip(v.shape).forall { case (g, s) => g < s }
-                  !in || v.data(linearIndex(global, v.shape)).isNaN
-                }
-              }
-              if (allMissing) { index.putLong(-1L); index.putLong(-1L) }
-              else {
-                val enc = encodeInner(globalChunk)
-                index.putLong(body.size().toLong); index.putLong(enc.length.toLong)
-                body.write(enc)
-              }
-            }
-            val crc = new java.util.zip.CRC32C()
-            crc.update(index.array(), 0, per.product * 16)
-            index.putInt(crc.getValue.toInt)
-            body.write(index.array())
-            writeKey(shardIdx, body.toByteArray)
+          cartesian(grid(v.shape, sh)).foreach { shardIdx =>
+            writeKey(shardIdx, ZarrMeta.packShard(cartesian(per).map { inner =>
+              val chunkIdx = shardIdx.zip(per).zip(inner).map { case ((s, p), i) => s * p + i }
+              val allMissing = v.dtype.startsWith("<f") &&
+                cells(v, chunkIdx).forall(_.forall(v.data(_).isNaN))
+              if (allMissing) None else Some(encode(v, chunkIdx, v.crc32c))
+            }))
           }
       }
       v.name -> j
     }
-    writeString(new File(root, "zarr.json"),
-      arrayJsons.map { case (k, j) => s""""$k": $j""" }
-        .mkString(
-          """{"zarr_format": 3, "node_type": "group", "attributes": {},
-            | "consolidated_metadata": {"kind": "inline", "must_understand": false,
-            | "metadata": {""".stripMargin,
-          ", ", "}}}"))
+    writeString(new File(root, "zarr.json"), ZarrMeta.renderV3Group(metas))
   }
 
-  private def gzip(bytes: Array[Byte]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val g = new java.util.zip.GZIPOutputStream(bos)
-    g.write(bytes); g.close()
-    bos.toByteArray
-  }
-
-  /** Writes one array; returns its (.zarray, .zattrs) JSON for
-    * consolidation. */
-  private def writeArray(root: File, v: VarSpec): (String, String) = {
-    val isString = v.dtype == "|O" || v.dtype.drop(1).startsWith("S")
-    require((if (isString) v.sdata else v.data).size == v.shape.product,
+  /** The array's directory, after checking its data covers its shape. */
+  private def arrayDir(root: File, v: VarSpec): File = {
+    require((if (isString(v)) v.sdata else v.data).size == v.shape.product,
       s"${v.name}: data size != shape product")
     val dir = new File(root, v.name)
     dir.mkdirs()
-    val compressorJson = v.compressor match {
-      case Some("zlib") => """{"id": "zlib", "level": 6}"""
-      case Some("zstd") => """{"id": "zstd", "level": 5}"""
-      // the numcodecs default profile: lz4, byte-shuffle
-      case Some("blosc") =>
-        """{"id": "blosc", "cname": "lz4", "clevel": 5, "shuffle": 1, "blocksize": 0}"""
-      case None => "null"
-      case Some(o) => throw new UnsupportedOperationException(s"compressor $o")
-    }
-    // float arrays declare the NaN fill (Zarr v2 JSON encoding "NaN") for
-    // parity with the distributed writer and xarray stores; int/coord
-    // arrays keep null (NaN is not representable in their dtype)
-    val fillJson = if (v.dtype.startsWith("<f")) "\"NaN\"" else "null"
-    // object dtype needs the vlen-utf8 object codec as filters[0], exactly
-    // as numcodecs/xarray declare it
-    val filtersJson =
-      if (v.dtype == "|O") """[{"id": "vlen-utf8"}]""" else "null"
-    val za =
-      s"""{"zarr_format": 2, "shape": [${v.shape.mkString(", ")}],
-         | "chunks": [${v.chunks.mkString(", ")}], "dtype": "${v.dtype}",
-         | "compressor": $compressorJson, "fill_value": $fillJson, "order": "C",
-         | "filters": $filtersJson}""".stripMargin
-    writeString(new File(dir, ".zarray"), za)
-    val attrs = Seq(
-      Some(s""""_ARRAY_DIMENSIONS": [${v.dims.map("\"" + _ + "\"").mkString(", ")}]"""),
-      v.scaleFactor.map(x => s""""scale_factor": $x"""),
-      v.addOffset.map(x => s""""add_offset": $x"""),
-      v.missingValue.map(x => s""""missing_value": ${fmtMissing(x, v.dtype)}"""),
-      v.units.map(u => s""""units": "$u""""),
-      v.calendar.map(c => s""""calendar": "$c"""")).flatten
-    val zat = attrs.mkString("{", ", ", "}")
-    writeString(new File(dir, ".zattrs"), zat)
-
-    val grid = v.shape.zip(v.chunks).map { case (s, c) => (s + c - 1) / c }
-    cartesian(grid.map(g => 0 until g)).foreach { chunkIdx =>
-      val bytes =
-        if (isString) encodeStringChunk(v, chunkIdx) else encodeChunk(v, chunkIdx)
-      // vlen buffers have no fixed element width; shuffle at typesize 1 is
-      // the numcodecs behavior for object arrays under blosc
-      val typesize = if (v.dtype == "|O") 1 else ZarrMeta.dtypeBytes(v.dtype)
-      val out = v.compressor match {
-        case Some("zlib") => deflate(bytes)
-        case Some("zstd") => Zstd.compressStore(bytes)
-        case Some("blosc") => Blosc.compress(bytes, typesize, shuffle = true)
-        case _ => bytes
-      }
-      val fos = new FileOutputStream(new File(dir, chunkIdx.mkString(".")))
-      try fos.write(out) finally fos.close()
-    }
-    (za, zat)
+    dir
   }
 
-  /** Encode one chunk of a string variable: `|O` as the numcodecs VLenUTF8
-    * layout (u32-LE item count, per item u32-LE length + UTF-8 bytes),
-    * `|S<n>` as NUL-padded fixed-width cells. Out-of-bounds edge-chunk
-    * cells encode as empty strings, matching zarr's padded edge chunks. */
-  private def encodeStringChunk(v: VarSpec, chunkIdx: Seq[Int]): Array[Byte] = {
-    val cells: Seq[String] = cartesian(v.chunks.map(c => 0 until c)).map { local =>
+  private def isString(v: VarSpec): Boolean =
+    v.dtype == "|O" || v.dtype.drop(1).startsWith("S")
+
+  private def attrs(v: VarSpec): Seq[(String, String)] = Seq(
+    v.scaleFactor.map(x => "scale_factor" -> x.toString),
+    v.addOffset.map(x => "add_offset" -> x.toString),
+    v.missingValue.map(x => "missing_value" ->
+      (if (v.dtype.startsWith("<i") || v.dtype.endsWith("u1")) x.toLong.toString else x.toString)),
+    v.units.map(u => "units" -> ZarrMeta.jsonString(u)),
+    v.calendar.map(c => "calendar" -> ZarrMeta.jsonString(c))).flatten
+
+  /** The array index of every cell of one chunk, C-order over the full
+    * chunk shape; `None` past the array's edge (zarr pads edge chunks). */
+  private def cells(v: VarSpec, chunkIdx: Seq[Int]): Seq[Option[Int]] =
+    cartesian(v.chunks).map { local =>
       val global = chunkIdx.zip(local).zip(v.chunks).map { case ((ci, l), c) => ci * c + l }
-      val inBounds = global.zip(v.shape).forall { case (g, s) => g < s }
-      if (!inBounds) "" else v.sdata(linearIndex(global, v.shape))
+      if (global.zip(v.shape).exists { case (g, s) => g >= s }) None
+      else Some(global.zip(v.shape).foldLeft(0) { case (acc, (g, s)) => acc * s + g })
     }
-    if (v.dtype == "|O") {
-      ZarrMeta.encodeVlenUtf8(cells.toArray)
-    } else {
-      val w = ZarrMeta.dtypeBytes(v.dtype)
-      val out = new Array[Byte](cells.size * w)
-      cells.zipWithIndex.foreach { case (s, i) =>
-        val b = s.getBytes("UTF-8")
-        require(b.length <= w,
-          s"${v.name}: '$s' (${b.length} bytes) exceeds ${v.dtype} width $w")
-        System.arraycopy(b, 0, out, i * w, b.length)
-      }
-      out
-    }
+
+  /** One encoded chunk; padding cells hold 0 (numeric) or "" (strings). */
+  private def encode(v: VarSpec, chunkIdx: Seq[Int], crc32c: Boolean): Array[Byte] = {
+    val idx = cells(v, chunkIdx)
+    if (isString(v))
+      ZarrMeta.encodeChunk(v.dtype, idx.map(_.fold("")(v.sdata(_))).toArray, v.compressor, crc32c)
+    else
+      ZarrMeta.encodeChunk(v.dtype, idx.map(_.fold(0.0)(v.data(_))).toArray, v.compressor, crc32c)
   }
 
-  private def fmtMissing(x: Double, dtype: String): String =
-    if (dtype.startsWith("<i") || dtype.endsWith("u1")) x.toLong.toString else x.toString
+  private def grid(shape: Seq[Int], chunks: Seq[Int]): Seq[Int] =
+    shape.zip(chunks).map { case (s, c) => (s + c - 1) / c }
 
-  /** Full-chunk-size buffer (zarr pads edge chunks); cells beyond the array
-    * bounds get the raw value 0. */
-  private def encodeChunk(v: VarSpec, chunkIdx: Seq[Int]): Array[Byte] = {
-    val n = v.chunks.product
-    val width = ZarrMeta.dtypeBytes(v.dtype)
-    val bb = ByteBuffer.allocate(n * width).order(ByteOrder.LITTLE_ENDIAN)
-    cartesian(v.chunks.map(c => 0 until c)).foreach { local =>
-      val global = chunkIdx.zip(local).zip(v.chunks).map { case ((ci, l), c) => ci * c + l }
-      val inBounds = global.zip(v.shape).forall { case (g, s) => g < s }
-      val value = if (!inBounds) 0.0 else v.data(linearIndex(global, v.shape))
-      v.dtype match {
-        case "<f8" => bb.putDouble(value)
-        case "<f4" => bb.putFloat(value.toFloat)
-        case "<i8" => bb.putLong(value.toLong)
-        case "<i4" => bb.putInt(value.toInt)
-        case "<i2" => bb.putShort(value.toShort)
-        case "<u1" | "|u1" => bb.put(value.toInt.toByte)
-        case "|b1" => bb.put(if (value != 0.0) 1.toByte else 0.toByte)
-      }
-    }
-    bb.array()
-  }
-
-  private def linearIndex(global: Seq[Int], shape: Seq[Int]): Int =
-    global.zip(shape).foldLeft(0) { case (acc, (g, s)) => acc * s + g }
-
-  private def cartesian(ranges: Seq[Range]): Seq[Seq[Int]] =
-    ranges.foldLeft(Seq(Seq.empty[Int])) { (acc, r) =>
-      for (t <- acc; x <- r) yield t :+ x
+  /** Every index of a grid of extents `dims`, C-order. */
+  private def cartesian(dims: Seq[Int]): Seq[Seq[Int]] =
+    dims.foldLeft(Seq(Seq.empty[Int])) { (acc, n) =>
+      for (t <- acc; x <- 0 until n) yield t :+ x
     }
 
-  private def deflate(bytes: Array[Byte]): Array[Byte] = {
-    val d = new Deflater(6)
-    d.setInput(bytes)
-    d.finish()
-    val out = new ByteArrayOutputStream()
-    val buf = new Array[Byte](64 * 1024)
-    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-    d.end()
-    out.toByteArray
-  }
+  private def writeString(f: File, s: String): Unit = writeBytes(f, s.getBytes("UTF-8"))
 
-  private def writeString(f: File, s: String): Unit = {
+  private def writeBytes(f: File, b: Array[Byte]): Unit = {
     val fos = new FileOutputStream(f)
-    try fos.write(s.getBytes("UTF-8")) finally fos.close()
+    try fos.write(b) finally fos.close()
   }
 }

@@ -10,8 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Rules every driver and dev entry point keeps: one session factory, one
   * JSON string escaper for the artifacts the driver parses, one scan core
   * for the table formats' row keys, kill sets and parquet footers, one
-  * walk over a GRIB file's messages, one write core per table format, and a
-  * columnar Zarr scan. */
+  * walk over a GRIB file's messages, one write core per table format, a
+  * columnar Zarr scan, and one Zarr metadata renderer and shard packer. */
 class EntryPointsSpec extends AnyFunSuite {
 
   test("no session is built outside GraftSession") {
@@ -107,5 +107,20 @@ class EntryPointsSpec extends AnyFunSuite {
     } yield s"$p: $t"
     assert(offenders.isEmpty,
       s"fill column vectors in ZarrColumnarReader instead: ${offenders.mkString(", ")}")
+  }
+
+  test("Zarr metadata is rendered only in ZarrMeta") {
+    val sources = Files.walk(Paths.get("src/main/scala/graft/sources")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "ZarrMeta.scala")
+      .toSeq
+    val offenders = for {
+      p <- sources
+      text = Files.readString(p)
+      t <- Seq("zarr_format") ++
+        (if (p.toString.contains("/zarr/")) Seq("new java.util.zip.CRC32C") else Nil)
+      if text.contains(t)
+    } yield s"${p.getFileName}: $t"
+    assert(offenders.isEmpty,
+      s"render Zarr metadata and pack shards through ZarrMeta: ${offenders.mkString(", ")}")
   }
 }

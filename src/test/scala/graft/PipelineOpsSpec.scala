@@ -343,7 +343,8 @@ class DedupSpec extends SparkSpec {
     // fault-tolerant mode for real-scale runs; labels must be identical,
     // and so must the work: a lazy reliable checkpoint is written by a
     // second job, which must read the persisted generation, not recompute
-    // its aggregate (and the pointer jump's self-join sides) from shuffle
+    // its aggregate (and the pointer jump's self-join sides) from shuffle.
+    // Each call leaves one generation on disk: the one its labels read
     import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
     import org.apache.spark.sql.{DataFrame, GraftBusDrain}
     val sc = spark.sparkContext
@@ -352,14 +353,26 @@ class DedupSpec extends SparkSpec {
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
         Option(t.taskMetrics).foreach(m => shuffleRead.addAndGet(m.shuffleReadMetrics.recordsRead))
     }
-    // labels and shuffle records read of one call
-    def run(nodes: DataFrame, pairs: DataFrame): (Map[Long, Long], Long) = {
+    // the rdd-* generation directories under the reliable checkpoint dir
+    def generations(): Set[String] = sc.getCheckpointDir.toSeq.flatMap { d =>
+      val p = new org.apache.hadoop.fs.Path(d)
+      p.getFileSystem(sc.hadoopConfiguration).listStatus(p).toSeq
+        .map(_.getPath.toString).filter(_.split('/').last.startsWith("rdd-"))
+    }.toSet
+    // labels, shuffle records read, the generation directories the call
+    // left behind, and the one the returned frame reads
+    def run(nodes: DataFrame, pairs: DataFrame)
+        : (Map[Long, Long], Long, Set[String], Option[String]) = {
       GraftBusDrain(sc)
       val before = shuffleRead.get()
-      val labels = Dedup.connectedComponents(nodes, "doc_id", pairs)
-        .as[(Long, Long)].collect().toMap
+      val gensBefore = generations()
+      val out = Dedup.connectedComponents(nodes, "doc_id", pairs)
+      val labels = out.as[(Long, Long)].collect().toMap
       GraftBusDrain(sc)
-      (labels, shuffleRead.get() - before)
+      val returned = out.queryExecution.logical.collectFirst {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.getCheckpointFile
+      }.flatten
+      (labels, shuffleRead.get() - before, generations() -- gensBefore, returned)
     }
     val small = (Seq(0L, 1L, 2L, 3L, 4L, 5L, 9L).toDF("doc_id"),
       Seq((0L, 1L), (1L, 2L), (2L, 3L), (4L, 5L)).toDF("id_a", "id_b"))
@@ -369,6 +382,7 @@ class DedupSpec extends SparkSpec {
     sc.addSparkListener(listener)
     try {
       val local = graphs.map { case (n, p) => run(n, p) }
+      assert(local.forall(_._3.isEmpty))
       assert(local.head._1 == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 0L,
         4L -> 4L, 5L -> 4L, 9L -> 9L))
       assert(local(1)._1 == (0L to 12L).map(_ -> 0L).toMap)
@@ -376,10 +390,14 @@ class DedupSpec extends SparkSpec {
       sc.setCheckpointDir(dir)
       try {
         val reliable = graphs.map { case (n, p) => run(n, p) }
-        for (((l, lRead), (r, rRead)) <- local.zip(reliable)) {
+        for (((l, lRead, _, _), (r, rRead, left, returned)) <- local.zip(reliable)) {
           assert(r == l, s"reliable-checkpoint labels diverged: $r vs $l")
           assert(rRead == lRead,
             s"reliable mode read $rRead shuffle records where local mode read $lRead")
+          // superseded generations are deleted; the returned one is kept
+          assert(returned.isDefined, "the returned labels read no reliable checkpoint")
+          assert(left == returned.toSet,
+            s"the call left ${left.size} generation directories: ${left.toSeq.sorted}")
         }
       } finally {
         // SparkContext has no public unset; clear the shared session's dir so

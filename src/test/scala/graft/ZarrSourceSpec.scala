@@ -909,6 +909,43 @@ class ZarrSourceSpec extends SparkSpec {
     assert(objects(outSh, "t2m") == 4)
   }
 
+  test("distributed writer derives every axis in one Spark job") {
+    import graft.sources.zarr.ZarrDistributedWriter
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.GraftBusDrain
+    val sc = spark.sparkContext
+    val withLabels = ds.withColumn("station", concat(lit("st-"), $"latitude".cast("string")))
+    val dims = Seq("time", "latitude", "longitude")
+    // the call sites of the jobs one write runs; the chunk writes are its
+    // foreachPartition jobs, every other job derives axes
+    def sites(write: String => Unit): Seq[String] = {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          seen.add(e.stageInfos.maxBy(_.stageId).name) // the action's call site
+      }
+      GraftBusDrain(sc)
+      sc.addSparkListener(listener)
+      try {
+        write(java.nio.file.Files.createTempDirectory("zarrjobs").toString + "/j.zarr")
+        GraftBusDrain(sc)
+      } finally sc.removeSparkListener(listener)
+      seen.toArray(Array.empty[String]).toSeq
+    }
+    val counts = Seq[(String, String => Unit)](
+      "v2" -> (out => ZarrDistributedWriter.write(withLabels, out, dims, Seq(2, 3, 4))),
+      "v3" -> (out => ZarrDistributedWriter.writeV3(withLabels, out, dims, Seq(2, 3, 4))),
+      "v3 sharded" -> (out => ZarrDistributedWriter.writeV3(withLabels, out, dims,
+        Seq(2, 3, 4), shard = Some(Seq(4, 3, 8))))).map { case (name, write) =>
+      val all = sites(write)
+      val axis = all.count(!_.startsWith("foreachPartition"))
+      println(s"[jobs] distributed $name write of ${dims.size} dims: " +
+        s"$axis axis-derivation jobs, ${all.size} jobs in all")
+      name -> axis
+    }
+    assert(counts.forall(_._2 == 1), s"axis-derivation jobs per write: $counts")
+  }
+
   test("distributed writer encodes absent cells as nulls (sparse input)") {
     import graft.sources.zarr.ZarrDistributedWriter
     val out = java.nio.file.Files.createTempDirectory("zarrs").toString + "/sparse.zarr"

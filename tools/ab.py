@@ -10,7 +10,19 @@ Each directory is a full checkout of the repository (for example
 builds the program and generates its inputs; then, for each seed, both sides
 run `perfbench/run.py --seconds 20 --trace 0`, the side that goes first
 alternating from seed to seed. The run length and the warm-up are fixed, so
-every A/B measures the same thing. Every run's JSON line goes to `--out` (one JSON object per line,
+every A/B measures the same thing.
+
+Both sides run from ONE path: before each run, warm-up included, the side's
+checkout is renamed to `ab.run` beside PARENT_DIR, run there, and renamed
+back (also when the run fails or the tool is interrupted). The same code in
+two directories can time differently, and absolute paths reach the inputs'
+metadata; one path takes both out of the comparison. The tool refuses to
+start if `ab.run` exists (an interrupted A/B may have left a checkout
+there: move it back first) or if a checkout is on another filesystem than
+`ab.run`, where a rename would be a copy. A cached build that points at
+another path is dropped, so the warm-up rebuilds it at `ab.run`.
+
+Every run's JSON line goes to `--out` (one JSON object per line,
 with its side, seed, order and the per-shape medians the run printed). The
 per-run table, each side's median and quartiles of the end-to-end metrics,
 the per-pair win counts and the per-shape medians are printed at the end.
@@ -39,6 +51,7 @@ METRICS = [("setup_s", "lower"), ("primary_s", "lower"), ("secondary_s", "lower"
 SECONDS = 20
 WARMUP_SEED = 300
 CONTROL_MARKER = ".ab-control"
+RUN_DIR = "ab.run"
 SHAPE = re.compile(r"^\[perfbench\] shape (\S+) p50 ([0-9.eE+-]+) s n=(\d+)")
 
 
@@ -50,11 +63,17 @@ def seeds_of(text):
     return out
 
 
-def run(checkout, workload, seed):
-    """One untraced run: its JSON result and the shape medians it printed."""
-    p = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload,
-                        "--seed", str(seed), "--seconds", str(SECONDS), "--trace", "0"],
-                       cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
+def run(checkout, run_path, workload, seed):
+    """One untraced run of `checkout`, moved to `run_path` while it runs: its
+    JSON result and the shape medians it printed."""
+    os.rename(checkout, run_path)
+    try:
+        p = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload,
+                            "--seed", str(seed), "--seconds", str(SECONDS), "--trace", "0"],
+                           cwd=run_path, stdout=subprocess.PIPE, stderr=subprocess.PIPE,
+                           text=True)
+    finally:
+        os.rename(run_path, checkout)
     lines = p.stdout.splitlines()
     if p.returncode != 0 or not lines or not lines[-1].startswith("{"):
         sys.stderr.write(p.stderr[-4000:])
@@ -98,16 +117,29 @@ def main():
     a = ap.parse_args()
 
     sides = {"parent": os.path.abspath(a.parent), "change": os.path.abspath(a.change)}
+    run_path = os.path.join(os.path.dirname(sides["parent"]), RUN_DIR)
+    if os.path.lexists(run_path):
+        sys.exit(f"{run_path} exists: an interrupted A/B may have left a checkout there; "
+                 "move it back to its own path first")
     if a.control:
         sides["change"] = sides["change"] + ".control"
         copy_control(sides["parent"], sides["change"])
     for d in sides.values():
         if not os.path.exists(os.path.join(d, "perfbench", "run.py")):
             sys.exit(f"{d}: not a checkout with perfbench/run.py")
+        if os.stat(d).st_dev != os.stat(os.path.dirname(run_path)).st_dev:
+            sys.exit(f"{d} is not on the filesystem of {run_path}")
+        # run.py caches the build's absolute classpath
+        cp = os.path.join(d, "perfbench", ".work", "build", "classpath")
+        if os.path.exists(cp):
+            with open(cp) as f:
+                stale = run_path + os.sep not in f.read()
+            if stale:
+                os.remove(cp)
 
     bad = []
     for side, d in sides.items():
-        res, _ = run(d, a.workload, WARMUP_SEED)
+        res, _ = run(d, run_path, a.workload, WARMUP_SEED)
         print(f"warm-up {side} seed {WARMUP_SEED}: correct={res.get('correct')}", flush=True)
         if not res.get("correct"):
             bad.append(f"warm-up {side} seed {WARMUP_SEED}")
@@ -117,7 +149,7 @@ def main():
         for i, seed in enumerate(seeds_of(a.seeds)):
             order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
             for pos, side in enumerate(order):
-                res, shapes = run(sides[side], a.workload, seed)
+                res, shapes = run(sides[side], run_path, a.workload, seed)
                 row = {"side": side, "seed": seed, "first": pos == 0,
                        "dir": os.path.basename(sides[side]), "shapes": shapes, **res}
                 rows.append(row)
