@@ -152,7 +152,7 @@ object ArrowIpc {
           s"uint64 value ${java.lang.Long.toUnsignedString(raw)} exceeds Long")
         raw
       case x: Float2Vector =>
-        graft.sources.zarr.ZarrMeta.halfToDouble(x.get(i) & 0xffff)
+        CfDecode.halfToDouble(x.get(i) & 0xffff)
       case x: Float4Vector => x.get(i).toDouble
       case x: Float8Vector => x.get(i)
       case x: VarCharVector => new String(x.get(i), "UTF-8")

@@ -91,7 +91,7 @@ object Npy {
     (h.typeChar, n) match {
       case ('f', 8) => java.lang.Double.longBitsToDouble(bits)
       case ('f', 4) => java.lang.Float.intBitsToFloat(bits.toInt).toDouble
-      case ('f', 2) => halfToDouble(bits.toInt)
+      case ('f', 2) => CfDecode.halfToDouble(bits.toInt)
       case ('i', 1) => bits.toByte.toDouble
       case ('i', 2) => bits.toShort.toDouble
       case ('i', 4) => bits.toInt.toDouble
@@ -104,9 +104,6 @@ object Npy {
       case (c, w) => throw UnsupportedNpy(s"dtype $c$w")
     }
   }
-
-  private def halfToDouble(h: Int): Double =
-    graft.sources.zarr.ZarrMeta.halfToDouble(h)
 
   // ------------------------------------------------------------- readers
 

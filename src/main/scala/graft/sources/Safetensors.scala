@@ -78,7 +78,7 @@ object Safetensors {
   }
 
   private def half(h: Int): Double =
-    graft.sources.zarr.ZarrMeta.halfToDouble(h)
+    CfDecode.halfToDouble(h)
 
   /** Parse the header: tensor table + the absolute byte offset of the
     * data buffer. `__metadata__` is skipped (free-form string map). */

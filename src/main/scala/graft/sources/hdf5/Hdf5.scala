@@ -53,6 +53,12 @@ object Hdf5 {
       members: Seq[Member] = Nil, base: Option[Dtype] = None,
       arrayDims: Seq[Int] = Nil) {
     def isNumeric: Boolean = clazz == 0 || clazz == 1
+    /** The numpy dtype of a numeric type ("<f8", ">i2", "<u1"). */
+    def numpy: String = (if (littleEndian) "<" else ">") + ((clazz, size) match {
+      case (1, 2 | 4 | 8) => s"f$size"
+      case (0, 1 | 2 | 4 | 8) => s"${if (signed) "i" else "u"}$size"
+      case _ => throw UnsupportedHdf5(s"numeric dtype class $clazz, $size bytes")
+    })
     /** Fixed-length (class 3) or variable-length (class 9 with vlen-type
       * "string", resolved through the global heap) character data. */
     def isString: Boolean = clazz == 3 || (clazz == 9 && vlenString)

@@ -49,7 +49,7 @@ object Hdf5Writer {
       addOffset: Option[Double] = None,
       fillValue: Option[Double] = None,
       units: Option[String] = None,
-      extraAttrs: Seq[(String, String)] = Nil, // extra string attrs
+      extraAttrs: Seq[(String, Any)] = Nil, // extra attrs: String, Double or Seq[Double]
       denseAttrs: Boolean = false,             // store attrs densely (0x15)
       chunkBtreeFanout: Int = 256,             // chunk B-tree entries/node
       // "btree1" = layout v3 + v1 chunk B-tree (pre-1.10 HDF5);
@@ -1033,6 +1033,9 @@ object Hdf5Writer {
     def dblAttr(name: String, x: Double): Array[Byte] =
       attr(name, datatypeMsg("f8"), dataspaceMsg(Nil),
         b64(java.lang.Double.doubleToLongBits(x)))
+    def dblsAttr(name: String, xs: Seq[Double]): Array[Byte] =
+      attr(name, datatypeMsg("f8"), dataspaceMsg(Seq(xs.size)),
+        xs.toArray.flatMap(x => b64(java.lang.Double.doubleToLongBits(x))))
     def intAttr(name: String, x: Int): Array[Byte] =
       attr(name, datatypeMsg("i4"), dataspaceMsg(Nil), b32(x.toLong))
 
@@ -1428,7 +1431,12 @@ object Hdf5Writer {
       v.scaleFactor.foreach(s => attrBodies += dblAttr("scale_factor", s))
       v.addOffset.foreach(o => attrBodies += dblAttr("add_offset", o))
       v.fillValue.foreach(f => attrBodies += dblAttr("_FillValue", f))
-      v.extraAttrs.foreach { case (n, s) => attrBodies += strAttr(n, s) }
+      v.extraAttrs.foreach {
+        case (n, s: String) => attrBodies += strAttr(n, s)
+        case (n, x: Double) => attrBodies += dblAttr(n, x)
+        case (n, xs: Seq[_]) => attrBodies += dblsAttr(n, xs.map(_.asInstanceOf[Double]))
+        case (n, o) => throw new IllegalArgumentException(s"attribute $n: ${o.getClass}")
+      }
       v.vlsAttrs.foreach { case (n, s) =>
         val b = s.getBytes("UTF-8")
         val ga = writeGcol(Seq(b))

@@ -16,8 +16,8 @@ import org.apache.hadoop.fs.Path
   * Layout: `CDF\x01|\x02|\x05` magic, numrecs, dim list, global attributes,
   * variable list (name, dimids, attributes, type, vsize, begin offset),
   * then big-endian data — fixed-size variables as contiguous blocks, record
-  * variables interleaved per record. CDL conventions honored:
-  * `scale_factor`, `add_offset`, `missing_value`/`_FillValue`, and
+  * variables interleaved per record. CDL conventions honored: the CF
+  * mask and scale ([[graft.sources.CfDecode]]), and
   * CF `units = "<unit> since <datetime>"` time coordinates (standard
   * calendars; see [[graft.sources.CfTime]]).
   */
@@ -31,24 +31,29 @@ object NetCDF3 {
       vsize: Int,
       begin: Long,
       attrs: Map[String, Any]) {
-    def scaleFactor: Double = num(attrs.get("scale_factor")).getOrElse(1.0)
-    def addOffset: Double = num(attrs.get("add_offset")).getOrElse(0.0)
-    def missing: Option[Double] =
-      num(attrs.get("missing_value")).orElse(num(attrs.get("_FillValue")))
+    /** The CF mask and scale of the stored elements. */
+    lazy val cf: graft.sources.CfDecode = graft.sources.CfDecode.of(attrs)
+    /** The numpy dtype of the big-endian stored elements (NC_CHAR reads as
+      * its signed byte codes). */
+    def dtype: String = ">" + (ncType match {
+      case NC_BYTE | NC_CHAR => "i1"
+      case NC_SHORT => "i2"
+      case NC_INT => "i4"
+      case NC_FLOAT => "f4"
+      case NC_DOUBLE => "f8"
+      case NC_UBYTE => "u1"
+      case NC_USHORT => "u2"
+      case NC_UINT => "u4"
+      case NC_INT64 => "i8"
+      case NC_UINT64 => "u8"
+      case other => throw new UnsupportedOperationException(s"nc_type $other")
+    })
     /** CF time units ("<unit> since <datetime>", standard calendars). */
     def timeUnits: Option[graft.sources.CfTime.Units] =
       graft.sources.CfTime.parse(
         attrs.get("units").collect { case s: String => s },
         attrs.get("calendar").collect { case s: String => s })
     def epochSecondsTime: Boolean = timeUnits.isDefined
-    private def num(v: Option[Any]): Option[Double] = v.collect {
-      case d: Double => d
-      case f: Float => f.toDouble
-      case i: Int => i.toDouble
-      case s: Short => s.toDouble
-      case b: Byte => b.toDouble
-      case l: Long => l.toDouble
-    }
   }
   final case class Header(numRecs: Int, dims: Seq[Dim], gattrs: Map[String, Any],
       vars: Seq[Var], recSize: Long)
@@ -205,42 +210,5 @@ object NetCDF3 {
         ((bytes.length - recStart) / recSize).toInt
       }
     Header(numRecs, dims, gattrs, vars, recSize)
-  }
-
-  /** Decode one variable entirely into doubles (C-order across its dims,
-    * record dim included), applying scale/offset and missing masking. */
-  def readVar(bytes: Array[Byte], h: Header, v: Var): Array[Double] = {
-    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.BIG_ENDIAN)
-    val isRec = v.dimIds.headOption.exists(h.dims(_).isRecord)
-    val shape = v.dimIds.map(i => if (h.dims(i).isRecord) h.numRecs else h.dims(i).size)
-    val n = if (shape.isEmpty) 1 else shape.product
-    val perRec = if (isRec) n / math.max(h.numRecs, 1) else n
-    val w = typeBytes(v.ncType)
-    val out = new Array[Double](n)
-    var i = 0
-    while (i < n) {
-      val offset: Long =
-        if (isRec) v.begin + (i / perRec).toLong * h.recSize + (i % perRec).toLong * w
-        else v.begin + i.toLong * w
-      val raw: Double = v.ncType match {
-        case NC_DOUBLE => bb.getDouble(offset.toInt)
-        case NC_FLOAT => bb.getFloat(offset.toInt).toDouble
-        case NC_INT => bb.getInt(offset.toInt).toDouble
-        case NC_SHORT => bb.getShort(offset.toInt).toDouble
-        case NC_BYTE | NC_CHAR => bb.get(offset.toInt).toDouble
-        case NC_UBYTE => (bb.get(offset.toInt) & 0xff).toDouble
-        case NC_USHORT => (bb.getShort(offset.toInt) & 0xffff).toDouble
-        case NC_UINT => (bb.getInt(offset.toInt) & 0xffffffffL).toDouble
-        case NC_INT64 => bb.getLong(offset.toInt).toDouble
-        case NC_UINT64 =>
-          val l = bb.getLong(offset.toInt)
-          if (l >= 0) l.toDouble else l.toDouble + 1.8446744073709552e19
-      }
-      out(i) =
-        if (v.missing.contains(raw) || raw.isNaN) Double.NaN
-        else raw * v.scaleFactor + v.addOffset
-      i += 1
-    }
-    out
   }
 }

@@ -115,7 +115,7 @@ object NetCDF3Reader {
           }
         } else in.readFully(v.begin, raw)
         // CF time coords convert to epoch seconds here, once
-        n -> graft.sources.CfTime.convert(decodeSlice(raw, v, len), v.timeUnits)
+        n -> graft.sources.CfTime.convert(v.cf.decode(raw, v.dtype, len), v.timeUnits)
       } finally in.close()
     }
     val shape: Seq[Int] = hyperDims.map(d => if (d.isRecord) head.numRecs else d.size)
@@ -159,7 +159,7 @@ object NetCDF3Reader {
             val n = sh.product
             val buf = new Array[Byte](n * typeBytes(v.ncType))
             in.readFully(v.begin, buf)
-            decodeSlice(buf, v, n)
+            v.cf.decode(buf, v.dtype, n)
         }
         def rawSlice(v: Var, bytesPerPoint: Int, t: Int): Array[Byte] = {
           val isRec = v.dimIds.headOption.exists(headLocal.dims(_).isRecord)
@@ -180,7 +180,7 @@ object NetCDF3Reader {
               val cut = s.indexOf('\u0000')
               if (cut >= 0) s.substring(0, cut) else s
             }
-          } else decodeSlice(rawSlice(v, w(vi), t), v, perSlice)
+          } else v.cf.decode(rawSlice(v, w(vi), t), v.dtype, perSlice)
         }
         (lo until hi).iterator.flatMap { t =>
           val slices = varsLocal.zipWithIndex.map { case (v, vi) => sliceOf(v, vi, t) }
@@ -222,33 +222,5 @@ object NetCDF3Reader {
         }
       }
     spark.createDataFrame(rdd, schema)
-  }
-
-  /** Decode a contiguous big-endian span of one variable. */
-  def decodeSlice(buf: Array[Byte], v: Var, n: Int): Array[Double] = {
-    val bb = java.nio.ByteBuffer.wrap(buf).order(java.nio.ByteOrder.BIG_ENDIAN)
-    val out = new Array[Double](n)
-    var i = 0
-    while (i < n) {
-      val raw: Double = v.ncType match {
-        case NC_DOUBLE => bb.getDouble(i * 8)
-        case NC_FLOAT => bb.getFloat(i * 4).toDouble
-        case NC_INT => bb.getInt(i * 4).toDouble
-        case NC_SHORT => bb.getShort(i * 2).toDouble
-        case NC_BYTE | NC_CHAR => bb.get(i).toDouble
-        case NC_UBYTE => (bb.get(i) & 0xff).toDouble
-        case NC_USHORT => (bb.getShort(i * 2) & 0xffff).toDouble
-        case NC_UINT => (bb.getInt(i * 4) & 0xffffffffL).toDouble
-        case NC_INT64 => bb.getLong(i * 8).toDouble
-        case NC_UINT64 =>
-          val l = bb.getLong(i * 8)
-          if (l >= 0) l.toDouble else l.toDouble + 1.8446744073709552e19
-      }
-      out(i) =
-        if (v.missing.contains(raw) || raw.isNaN) Double.NaN
-        else raw * v.scaleFactor + v.addOffset
-      i += 1
-    }
-    out
   }
 }

@@ -120,6 +120,9 @@ object NetCDF3Writer {
           out.writeInt(NetCDF3.NC_SHORT); cnt(1); out.writeShort(s); out.writeShort(0)
         case l: Long =>
           out.writeInt(NetCDF3.NC_INT64); cnt(1); out.writeLong(l)
+        case xs: Seq[_] if xs.forall(_.isInstanceOf[Short]) => // NC_SHORT list
+          out.writeInt(NetCDF3.NC_SHORT); cnt(xs.size)
+          xs.foreach(x => out.writeShort(x.asInstanceOf[Short].toInt)); padTo4(out, 2 * xs.size)
         case other =>
           throw new UnsupportedOperationException(s"attr type ${other.getClass}")
       }

@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
+import graft.sources.CfDecode
 import graft.sources.hdf5.Hdf5
 import graft.sources.hdf5.Hdf5.{Chunked, Contiguous, DatasetMeta, UnsupportedHdf5}
 
@@ -18,8 +19,9 @@ import graft.sources.hdf5.Hdf5.{Chunked, Contiguous, DatasetMeta, UnsupportedHdf
   * netCDF-4 conventions honored: dimension-scale datasets
   * (`CLASS=DIMENSION_SCALE`) name the dims, `DIMENSION_LIST` attaches them
   * to variables (resolved through the HDF5 global heap; falls back to
-  * `_Netcdf4Dimid`-ordered size matching when absent), CDL decode attrs
-  * (`scale_factor`/`add_offset`/`_FillValue`/`missing_value`) and
+  * `_Netcdf4Dimid`-ordered size matching when absent), the CF mask and
+  * scale ([[graft.sources.CfDecode]]; a chunk that was never written reads
+  * as the declared fill value, decoded like a stored chunk) and
   * CF `"<unit> since <datetime>"` time coordinates (standard calendars;
   * [[graft.sources.CfTime]]).
   *
@@ -32,20 +34,13 @@ object NetCDF4Reader {
   private final case class VarPlan(
       name: String,
       ds: DatasetMeta,
-      chunks: Seq[Hdf5.ChunkRef],
+      chunks: Map[Seq[Long], Hdf5.ChunkRef], // allocated chunks by offsets
       // indices of this var's dims within the hypercube dims — identity
       // for data variables; a strict subsequence for AUXILIARY coordinate
       // variables (curvilinear 2-D lat/lon over [y, x] beside 3-D data)
-      dimsIdx: Seq[Int]) extends Serializable {
+      dimsIdx: Seq[Int],
+      cf: CfDecode) extends Serializable {
     def shapeInts: Seq[Int] = ds.shape.map(_.toInt)
-    def scaleFactor: Double = num(ds.attrs.get("scale_factor")).getOrElse(1.0)
-    def addOffset: Double = num(ds.attrs.get("add_offset")).getOrElse(0.0)
-    def missing: Option[Double] =
-      num(ds.attrs.get("missing_value")).orElse(num(ds.attrs.get("_FillValue")))
-    private def num(v: Option[Any]): Option[Double] = v.collect {
-      case d: Double => d
-      case s: Seq[_] if s.nonEmpty => s.head.asInstanceOf[Double]
-    }
   }
 
   private def isDimScale(d: DatasetMeta): Boolean =
@@ -164,7 +159,8 @@ object NetCDF4Reader {
           finally in2.close()
         case _ => Nil
       }
-      VarPlan(baseName(v.path), v, chunks, dIdx)
+      VarPlan(baseName(v.path), v, chunks.map(r => r.offsets -> r).toMap, dIdx,
+        CfDecode.of(v.attrs))
     }
     // Task cells come from the FIRST chunked var's grid (the head grid).
     // Vars chunked on a DIFFERENT grid resolve each cell through their own
@@ -179,11 +175,10 @@ object NetCDF4Reader {
       pl.ds.layout.isInstanceOf[Chunked] && pl.dimsIdx.size == maxRank)
     val chunkDims: Seq[Int] = headChunked
       .map(_.ds.layout.asInstanceOf[Chunked].chunkDims).getOrElse(shape)
-    // task units: chunk offsets present in the head var's map
+    // task units: every cell of the head grid, allocated or not
     // (all-contiguous = one synthetic all-zeros offset)
-    val cells: Seq[Seq[Long]] = headChunked match {
-      case None => Seq(shape.map(_ => 0L))
-      case Some(pl) => pl.chunks.map(_.offsets)
+    val cells: Seq[Seq[Long]] = shape.zip(chunkDims).foldLeft(Seq(Seq.empty[Long])) {
+      case (acc, (s, c)) => for (o <- acc; k <- 0L until s by c) yield o :+ k
     }
 
     val nPart =
@@ -217,8 +212,20 @@ object NetCDF4Reader {
             Seq(Hdf5.decodeOpaque(de, pl.ds.dtype, n))
           else if (pl.ds.dtype.isFixedArray)
             Seq(Hdf5.decodeFixedArrays(de, pl.ds.dtype, n))
-          else Seq(applyCdl(Hdf5.decodeValues(de, pl.ds.dtype, n), pl))
+          else Seq(pl.cf.decode(de, pl.ds.dtype.numpy, n))
         }
+        // a chunk that was never written holds the declared fill value
+        def chunk(pl: VarPlan, off: Seq[Long], n: Int): Seq[AnyRef] =
+          pl.chunks.get(off) match {
+            case Some(ref) =>
+              decodeAny(pl, read(ref.addr, ref.nBytes.toInt), n, ref.filterMask)
+            case None =>
+              val fill = CfDecode.fillValue(pl.ds.attrs).filter(_ => pl.ds.dtype.isNumeric)
+                .getOrElse(throw UnsupportedHdf5(s"${pl.name}: chunk at " +
+                  s"${off.mkString("[", ", ", "]")} was never written and the " +
+                  "variable declares no numeric fill value"))
+              Seq(Array.fill(n)(pl.cf.cell(fill)))
+          }
         // contiguous/compact vars decode whole ONCE per partition and index
         // by global C-order position (cells from a chunked sibling's grid
         // index into them globally)
@@ -258,11 +265,7 @@ object NetCDF4Reader {
             plansLocal.map { pl =>
               pl.ds.layout match {
                 case ck: Chunked if ck.chunkDims == chunkLocal =>
-                  val ref = pl.chunks.find(_.offsets == cellOffsets).getOrElse(
-                    throw UnsupportedHdf5(s"${pl.name}: missing chunk at $cellOffsets"))
-                  val n = chunkLocal.product
-                  Left((decodeAny(pl, read(ref.addr, ref.nBytes.toInt), n,
-                    ref.filterMask), false))
+                  Left((chunk(pl, cellOffsets, chunkLocal.product), false))
                 case ck: Chunked => Right(ck.chunkDims)
                 case _ => Left((whole(pl), true))
               }
@@ -330,10 +333,7 @@ object NetCDF4Reader {
                   val cacheKey = (pl.name, vOff)
                   var cols = ownGridCache.get(cacheKey)
                   if (cols == null) {
-                    val ref = pl.chunks.find(_.offsets == vOff).getOrElse(
-                      throw UnsupportedHdf5(s"${pl.name}: missing chunk at $vOff"))
-                    cols = decodeAny(pl, read(ref.addr, ref.nBytes.toInt),
-                      cdims.product, ref.filterMask)
+                    cols = chunk(pl, vOff, cdims.product)
                     ownGridCache.put(cacheKey, cols)
                   }
                   var vli = 0
@@ -380,21 +380,5 @@ object NetCDF4Reader {
       case Hdf5.Compact(data) =>
         Hdf5.decodeValues(data, d.dtype, n)
     }
-  }
-
-  private def applyCdl(vals: Array[Double], pl: VarPlan): Array[Double] = {
-    val sf = pl.scaleFactor
-    val ao = pl.addOffset
-    val miss = pl.missing
-    if (sf == 1.0 && ao == 0.0 && miss.isEmpty) return vals
-    var i = 0
-    while (i < vals.length) {
-      val raw = vals(i)
-      vals(i) =
-        if (miss.contains(raw) || raw.isNaN) Double.NaN
-        else raw * sf + ao
-      i += 1
-    }
-    vals
   }
 }

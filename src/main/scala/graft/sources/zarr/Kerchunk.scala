@@ -3,6 +3,7 @@ package graft.sources.zarr
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
+import graft.sources.CfDecode
 import graft.sources.hdf5.Hdf5
 import graft.sources.hdf5.Hdf5.{DatasetMeta, UnsupportedHdf5}
 
@@ -744,7 +745,7 @@ object Kerchunk {
     val lead = if (withTime) Seq(1) else Nil
     entries ++= arrayEntries("band_1",
       ZarrMeta.renderZarray(lead ++ Seq(m.height, m.width), lead ++ Seq(chunkH, chunkW),
-        dtype, compressor, if (dtype.startsWith("<f")) "\"NaN\"" else "0", "null"),
+        dtype, compressor, if (dtype.startsWith("<f")) "\"NaN\"" else "null", "null"),
       (if (withTime) Seq("time") else Nil) ++ Seq(yName, xName))
     val keyPrefix = if (withTime) "0." else ""
     blocks.foreach { case (row, colChunk, off, len) =>
@@ -757,16 +758,8 @@ object Kerchunk {
       ds: DatasetMeta, name: String, dims: Seq[String],
       uri: String): Seq[(String, String)] = {
     val dt = ds.dtype
-    val endian = if (dt.littleEndian) "<" else ">"
-    val dtype = (dt.clazz, dt.size, dt.signed) match {
-      case (1, 4, _) => s"${endian}f4"
-      case (1, 8, _) => s"${endian}f8"
-      case (1, 2, _) => s"${endian}f2"
-      case (0, w, true) => s"${endian}i$w"
-      case (0, w, false) => s"${endian}u$w"
-      case _ => throw UnsupportedHdf5(s"$name: unmapped numeric dtype " +
-        s"(class ${dt.clazz}, ${dt.size} bytes)")
-    }
+    val dtype =
+      try dt.numpy catch { case e: UnsupportedHdf5 => throw UnsupportedHdf5(s"$name: ${e.detail}") }
     // netCDF-4's conventional pipeline: optional shuffle (id 2) then ONE
     // compressor — deflate (1) maps to the zarr zlib codec, and the
     // registered zstd (32015, bare frames) and blosc (32001,
@@ -820,23 +813,20 @@ object Kerchunk {
         }
         (ck.chunkDims, es)
     }
-    val attrPairs = Seq.newBuilder[(String, String)]
-    def num(k: String): Option[Double] = ds.attrs.get(k).collect {
-      case d: Double => d
-      case s: Seq[_] if s.nonEmpty => s.head.asInstanceOf[Double]
-    }
-    def str(k: String): Option[String] =
-      ds.attrs.get(k).collect { case s: String => s }
-    num("scale_factor").foreach(v => attrPairs += "scale_factor" -> v.toString)
-    num("add_offset").foreach(v => attrPairs += "add_offset" -> v.toString)
-    num("missing_value").orElse(num("_FillValue"))
-      .foreach(v => attrPairs += "missing_value" -> fmtNum(v))
-    str("units").foreach(v => attrPairs += "units" -> jsonQ(v))
-    str("calendar").foreach(v => attrPairs += "calendar" -> jsonQ(v))
+    // the CF attributes pass through as the source declares them (scalars
+    // or lists); an integer array's fill is its declared fill value, null
+    // without one, so no stored value is masked that the source keeps
+    val attrPairs = CfDecode.Keys.flatMap(k => ds.attrs.get(k).collect {
+      case d: Double => k -> fmtNum(d)
+      case xs: Seq[_] if xs.forall(_.isInstanceOf[Double]) =>
+        k -> xs.map(d => fmtNum(d.asInstanceOf[Double])).mkString("[", ", ", "]")
+    }) ++ Seq("units", "calendar").flatMap(k =>
+      ds.attrs.get(k).collect { case s: String => k -> jsonQ(s) })
     arrayEntries(name,
       ZarrMeta.renderZarray(shape, chunks, dtype, compressor,
-        if (dt.clazz == 1) "\"NaN\"" else "0", filters),
-      dims, attrPairs.result()) ++ chunkEntries
+        if (dt.clazz == 1) "\"NaN\""
+        else CfDecode.fillValue(ds.attrs).fold("null")(_.toLong.toString), filters),
+      dims, attrPairs) ++ chunkEntries
   }
 
   private def fmtNum(v: Double): String =

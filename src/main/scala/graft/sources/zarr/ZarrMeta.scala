@@ -8,6 +8,9 @@ import org.apache.hadoop.fs.Path
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
+import graft.sources.CfDecode
+import graft.sources.CfDecode.codeOf
+
 /** Zarr v2 AND v3 store metadata + chunk IO (public specs: zarr-specs v2 and
   * v3; layouts as produced by xarray/zarr-python 2.x and 3.x — the
   * reference's storage format, weather_mv/test_data/test_data.zarr).
@@ -19,8 +22,9 @@ import org.json4s.jackson.JsonMethods
   * zlib, zstd (zarr-python 2.x's DEFAULT compressor — decoded by
   * [[Blosc]]), `filters` chains of numcodecs Delta / FixedScaleOffset /
   * Quantize / AsType (decoded in inverse list order, buffer re-typed per
-  * stage), `.zattrs` conventions `_ARRAY_DIMENSIONS` (xarray),
-  * `scale_factor`, `add_offset`, `missing_value`, and
+  * stage), `.zattrs` conventions `_ARRAY_DIMENSIONS` (xarray), the CF mask and
+  * scale attributes ([[graft.sources.CfDecode]], which also masks the v2
+  * `fill_value`), and
   * `units: "seconds since 1970-01-01"` for epoch time coordinates.
   *
   * Supported surface (v3, sniffed by the root `zarr.json`): regular chunk
@@ -48,9 +52,8 @@ object ZarrMeta {
       compressor: Option[String],
       fillValue: Option[Double],
       dims: Seq[String],
-      scaleFactor: Option[Double],
-      addOffset: Option[Double],
-      missingValue: Option[Double],
+      // the CF mask and scale, built once from the attributes
+      cf: CfDecode,
       // CF time units ("<unit> since <datetime>", standard calendars):
       // parsed once so coord vectors convert to epoch seconds at load
       timeUnits: Option[graft.sources.CfTime.Units],
@@ -269,29 +272,28 @@ object ZarrMeta {
           "is not a filter list")
     }
     val units = (attrs \ "units").extractOpt[String].getOrElse("")
+    // Zarr v2 encodes non-finite float fills as the JSON STRINGS "NaN" /
+    // "Infinity" / "-Infinity" — handle those before the numeric case.
+    // String arrays (|O / |S / |U) carry STRING fills (zarr-python 3
+    // writes "" for v2 string arrays) — never a number
+    val fill = (za \ "fill_value") match {
+      case _ if {
+        val dt = (za \ "dtype").extract[String]
+        dt == "|O" || isStringDtype(dt)
+      } => None
+      case JString(s) => Some(java.lang.Double.parseDouble(s))
+      case JNull | JNothing => None
+      case v => v.extractOpt[Double]
+    }
     ArrayMeta(
       name = name,
       shape = (za \ "shape").extract[Seq[Int]],
       chunks = (za \ "chunks").extract[Seq[Int]],
       dtype = (za \ "dtype").extract[String],
       compressor = compressor,
-      // Zarr v2 encodes non-finite float fills as the JSON STRINGS "NaN" /
-      // "Infinity" / "-Infinity" — handle those before the numeric case.
-      // String arrays (|O / |S / |U) carry STRING fills (zarr-python 3
-      // writes "" for v2 string arrays) — never a number
-      fillValue = (za \ "fill_value") match {
-        case _ if {
-          val dt = (za \ "dtype").extract[String]
-          dt == "|O" || isStringDtype(dt)
-        } => None
-        case JString(s) => Some(java.lang.Double.parseDouble(s))
-        case JNull | JNothing => None
-        case v => v.extractOpt[Double]
-      },
+      fillValue = fill,
       dims = (attrs \ "_ARRAY_DIMENSIONS").extractOpt[Seq[String]].getOrElse(Nil),
-      scaleFactor = (attrs \ "scale_factor").extractOpt[Double],
-      addOffset = (attrs \ "add_offset").extractOpt[Double],
-      missingValue = (attrs \ "missing_value").extractOpt[Double],
+      cf = CfDecode.of(attrMap(attrs), fill),
       // numpy datetime64 ("<M8[ns]") carries its epoch encoding in the
       // dtype itself (pandas/zarr-python direct writes, no CF attrs):
       // synthesize the equivalent CF units; explicit units attrs win.
@@ -441,9 +443,8 @@ object ZarrMeta {
       },
       filters = if (dt == "O") Seq(V2Filter.VlenUtf8) else Nil,
       dims = (j \ "dimension_names").extractOpt[Seq[String]].getOrElse(Nil),
-      scaleFactor = (attrs \ "scale_factor").extractOpt[Double],
-      addOffset = (attrs \ "add_offset").extractOpt[Double],
-      missingValue = (attrs \ "missing_value").extractOpt[Double],
+      // a v3 fill_value is mandatory, so xarray does not mask it
+      cf = CfDecode.of(attrMap(attrs)),
       timeUnits = graft.sources.CfTime.parse(Some(units).filter(_.nonEmpty),
         (attrs \ "calendar").extractOpt[String]),
       v3DefaultKeys = ckeName == "default",
@@ -453,6 +454,11 @@ object ZarrMeta {
       shardIndexCrc = indexCrc,
       transposeOrder = transpose,
       v3DataCrc32c = dataCrc)
+  }
+
+  private def attrMap(attrs: JValue): Map[String, Any] = attrs match {
+    case o: JObject => o.values
+    case _ => Map.empty
   }
 
   /** List array names (children with a .zarray) of a store directory. */
@@ -961,19 +967,22 @@ object ZarrMeta {
     }
   }
 
-  /** Decode one chunk file into doubles (scale/offset applied; missing and
-    * NaN become Double.NaN). An absent chunk file reads as cells holding
-    * fill_value, decoded like stored ones. */
+  /** Decode one chunk file into doubles through the array's
+    * [[CfDecode]]. An absent chunk file reads as cells holding fill_value,
+    * decoded like stored ones. */
   def readChunk(conf: Configuration, store: String, meta: ArrayMeta,
       chunkIdx: Seq[Int]): Array[Double] = {
     val n = meta.chunks.product
     // filters re-type the stored buffer, so the decompressed size is the
     // ENCODED dtype's width, not the array dtype's
     val encBytes = n * dtypeBytes(meta.encodedDtype)
-    val dec = new CellDecoder(meta)
     chunkRaw(conf, store, meta, chunkIdx, encBytes) match {
-      case None => Array.fill(n)(dec.fill)
-      case Some(raw) => untranspose(dec.decode(raw, n), meta)
+      case None =>
+        // a datetime64 NaT fill reads NaN, as a stored NaT does
+        val nat = codeOf(meta.dtype).matches("[Mm]8\\[.*") &&
+          meta.fillValue.contains(Long.MinValue.toDouble)
+        Array.fill(n)(if (nat) Double.NaN else meta.fillValue.fold(Double.NaN)(meta.cf.cell))
+      case Some(raw) => untranspose(meta.cf.decode(raw, meta.dtype, n), meta)
     }
   }
 
@@ -1433,11 +1442,6 @@ object ZarrMeta {
     case _ => throw new UnsupportedOperationException(s"zarr dtype '$dtype'")
   }
 
-  /** numpy dtype string → bare type code (strips the `< > | =` byte-order
-    * marker; numcodecs filter configs carry any of them). */
-  private def codeOf(dtype: String): String =
-    dtype.dropWhile(c => c == '<' || c == '>' || c == '|' || c == '=')
-
   private def orderOf(dtype: String): ByteOrder =
     if (dtype.startsWith(">")) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN
 
@@ -1668,80 +1672,5 @@ object ZarrMeta {
     }
     inf.end()
     out
-  }
-
-  /** IEEE 754 binary16 → double (sign, 5-bit exponent, 10-bit fraction). */
-  private[graft] def halfToDouble(h: Int): Double = {
-    val sign = if ((h & 0x8000) != 0) -1.0 else 1.0
-    val exp = (h >> 10) & 0x1f
-    val frac = h & 0x3ff
-    if (exp == 0x1f) { if (frac == 0) sign * Double.PositiveInfinity else Double.NaN }
-    else if (exp == 0) sign * frac * 5.960464477539063e-8 // 2^-24 subnormals
-    else sign * (1024 + frac) * math.pow(2, exp - 25)
-  }
-
-  /** One array's element decode, chosen once per chunk: the dtype code and
-    * byte order pick the raw element loop, and missing, scale and offset
-    * are unboxed. A stored cell and an absent chunk's fill value both go
-    * through [[cell]]. */
-  private final class CellDecoder(meta: ArrayMeta) {
-    private val code = codeOf(meta.dtype)
-    private val isDatetime = code.startsWith("M8[") || code.startsWith("m8[")
-    private val hasMissing = meta.missingValue.isDefined
-    private val missing = meta.missingValue.getOrElse(0.0)
-    private val scale = meta.scaleFactor.getOrElse(1.0)
-    private val offset = meta.addOffset.getOrElse(0.0)
-
-    /** Missing and NaN become Double.NaN; anything else is scaled. */
-    def cell(raw: Double): Double =
-      if ((hasMissing && raw == missing) || raw.isNaN) Double.NaN
-      else raw * scale + offset
-
-    /** The fill value as a stored cell holding it would read: NaT fills
-      * of datetime64 arrays become NaN like a stored NaT. */
-    def fill: Double = meta.fillValue match {
-      case Some(f) if isDatetime && f == Long.MinValue.toDouble => Double.NaN
-      case Some(f) => cell(f)
-      case None => Double.NaN
-    }
-
-    def decode(bytes: Array[Byte], n: Int): Array[Double] = {
-      val bb = ByteBuffer.wrap(bytes).order(orderOf(meta.dtype))
-      val out = new Array[Double](n)
-      var i = 0
-      // raw values first, then masking and scaling in one plain loop: two
-      // tight loops run faster than one that does both
-      code match {
-        case "f8" => while (i < n) { out(i) = bb.getDouble(i * 8); i += 1 }
-        case "f4" => while (i < n) { out(i) = bb.getFloat(i * 4).toDouble; i += 1 }
-        case "f2" => while (i < n) { out(i) = halfToDouble(bb.getShort(i * 2) & 0xffff); i += 1 }
-        case "i8" => while (i < n) { out(i) = bb.getLong(i * 8).toDouble; i += 1 }
-        case "i4" => while (i < n) { out(i) = bb.getInt(i * 4).toDouble; i += 1 }
-        case "i2" => while (i < n) { out(i) = bb.getShort(i * 2).toDouble; i += 1 }
-        case "i1" => while (i < n) { out(i) = bb.get(i).toDouble; i += 1 }
-        case "u8" => // top bit set would wrap; real u8 coords/data stay < 2^63
-          while (i < n) {
-            val v = bb.getLong(i * 8)
-            out(i) = if (v >= 0) v.toDouble else (v & Long.MaxValue).toDouble + 9.223372036854776e18
-            i += 1
-          }
-        case "u4" => while (i < n) { out(i) = (bb.getInt(i * 4) & 0xffffffffL).toDouble; i += 1 }
-        case "u2" => while (i < n) { out(i) = (bb.getShort(i * 2) & 0xffff).toDouble; i += 1 }
-        case "u1" => while (i < n) { out(i) = (bb.get(i) & 0xff).toDouble; i += 1 }
-        case "b1" => while (i < n) { out(i) = if (bb.get(i) == 0) 0.0 else 1.0; i += 1 } // numpy bool masks
-        case _ if isDatetime =>
-          // datetime64/timedelta64 counts; NaT is Long.MinValue → NaN
-          while (i < n) {
-            val v = bb.getLong(i * 8)
-            out(i) = if (v == Long.MinValue) Double.NaN else v.toDouble
-            i += 1
-          }
-        case _ => throw new UnsupportedOperationException(
-          s"zarr dtype '${meta.dtype}' (array ${meta.name})")
-      }
-      i = 0
-      while (i < n) { out(i) = cell(out(i)); i += 1 }
-      out
-    }
   }
 }

@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * JSON string escaper for the artifacts the driver parses, one scan core
   * for the table formats' row keys, kill sets and parquet footers, one
   * walk over a GRIB file's messages, one write core per table format, a
-  * columnar Zarr scan, and one Zarr metadata renderer and shard packer. */
+  * columnar Zarr scan, one Zarr metadata renderer and shard packer, and
+  * one CF decode. */
 class EntryPointsSpec extends AnyFunSuite {
 
   test("no session is built outside GraftSession") {
@@ -122,5 +123,21 @@ class EntryPointsSpec extends AnyFunSuite {
     } yield s"${p.getFileName}: $t"
     assert(offenders.isEmpty,
       s"render Zarr metadata and pack shards through ZarrMeta: ${offenders.mkString(", ")}")
+  }
+
+  test("CF mask and scale attributes are read only in CfDecode") {
+    // writers declare the attributes; every reader and scan decodes (or
+    // passes them through) by CfDecode
+    val keys = Seq("scale_factor", "add_offset", "_FillValue", "missing_value").map(k => s"\"$k\"")
+    val main = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val offenders = for {
+      p <- main
+      name = p.getFileName.toString if name != "CfDecode.scala" && !name.endsWith("Writer.scala")
+      text = Files.readString(p)
+      k <- keys if text.contains(k)
+    } yield s"$name: $k"
+    assert(offenders.isEmpty,
+      s"decode CF attributes through graft.sources.CfDecode: ${offenders.mkString(", ")}")
   }
 }

@@ -45,7 +45,7 @@ class NetCDF3Spec extends SparkSpec {
     assert(h.dims.map(_.name) == Seq("time", "latitude", "longitude"))
     assert(h.dims.head.isRecord)
     val sw = h.vars.find(_.name == "swvl1").get
-    assert(sw.scaleFactor == 0.25 && sw.addOffset == 100.0)
+    assert(sw.cf.scale == 0.25 && sw.cf.offset == 100.0)
     assert(h.vars.find(_.name == "time").get.epochSecondsTime)
   }
 

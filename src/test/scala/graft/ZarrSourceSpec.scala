@@ -1539,7 +1539,8 @@ class ZarrSourceSpec extends SparkSpec {
       vals.foreach(v => b.putShort(v))
       b.array()
     }
-    // packed: fill 0 decodes to 0 * 0.5 + 100
+    // packed, no _FillValue: the v2 fill_value 0 masks, as xarray's Zarr
+    // backend makes it the _FillValue
     putS("v/.zarray",
       """{"zarr_format": 2, "shape": [4], "chunks": [2], "dtype": "<i2",
         | "compressor": null, "fill_value": 0, "filters": null, "order": "C"}""".stripMargin)
@@ -1553,13 +1554,16 @@ class ZarrSourceSpec extends SparkSpec {
     putS("w/.zattrs", """{"_ARRAY_DIMENSIONS": ["x"], "missing_value": -1}""")
     put("w/0", i2(-1, 3)) // w/1 absent
     val rows = spark.read.format("zarr").load(dir).orderBy($"x").collect()
-    assert(rows.map(_.getAs[Double]("v")).toSeq == Seq(100.0, 100.0, 100.0, 100.0))
+    assert(rows.map(r => Option(r.getAs[java.lang.Double]("v"))).toSeq == Seq(None, None, None, None))
     assert(rows.map(r => Option(r.getAs[java.lang.Double]("w")).map(_.doubleValue)).toSeq ==
       Seq(None, Some(3.0), None, None))
     val conf = new org.apache.hadoop.conf.Configuration()
     val v = graft.sources.zarr.ZarrMeta.open(conf, dir).dataVars.find(_.name == "v").get
-    assert(graft.sources.zarr.ZarrMeta.readChunk(conf, dir, v, Seq(1)).toSeq ==
-      graft.sources.zarr.ZarrMeta.readChunk(conf, dir, v, Seq(0)).toSeq)
+    // bit for bit: both chunks now read NaN, which == never equals
+    assert(graft.sources.zarr.ZarrMeta.readChunk(conf, dir, v, Seq(1)).toSeq
+      .map(java.lang.Double.doubleToLongBits) ==
+      graft.sources.zarr.ZarrMeta.readChunk(conf, dir, v, Seq(0)).toSeq
+      .map(java.lang.Double.doubleToLongBits))
   }
 
   test("every decoded dtype reads its hand-computed values in both byte orders") {
@@ -1567,9 +1571,10 @@ class ZarrSourceSpec extends SparkSpec {
     import graft.sources.zarr.ZarrMeta
     val nan = Double.NaN
     // (dtype code, element width, writer of the raw elements, scale_factor,
-    // add_offset, missing_value, expected decoded cells)
+    // add_offset, missing_value, expected decoded cells, further attributes)
     final case class Case(code: String, width: Int, raw: ByteBuffer => Unit,
-        sf: Option[Double], ao: Option[Double], mv: Option[Double], want: Seq[Double])
+        sf: Option[Double], ao: Option[Double], mv: Option[Double], want: Seq[Double],
+        attrs: Map[String, Any] = Map.empty)
     def longs(vs: Long*): ByteBuffer => Unit = b => vs.foreach(b.putLong)
     def ints(vs: Int*): ByteBuffer => Unit = b => vs.foreach(b.putInt)
     def shorts(vs: Int*): ByteBuffer => Unit = b => vs.foreach(v => b.putShort(v.toShort))
@@ -1603,7 +1608,13 @@ class ZarrSourceSpec extends SparkSpec {
       Case("i2", 2, shorts(-999, 4, 0), Some(0.5), Some(10.0), Some(-999.0), Seq(nan, 12.0, 10.0)),
       // numeric equality: missing_value 0 masks -0.0 too
       Case("f8", 8, b => Seq(-0.0, 0.0, 2.0).foreach(b.putDouble(_)), None, None, Some(0.0),
-        Seq(nan, nan, 2.0)))
+        Seq(nan, nan, 2.0)),
+      // every value of a missing_value list masks
+      Case("i2", 2, shorts(-9, -8, 4), Some(0.5), Some(10.0), None, Seq(nan, nan, 12.0),
+        Map("missing_value" -> List(-9, -8))),
+      // _FillValue and a different missing_value both mask
+      Case("i2", 2, shorts(-1, -9, 0), None, None, Some(-9.0), Seq(nan, nan, 0.0),
+        Map("_FillValue" -> -1.0)))
     val dir = java.nio.file.Files.createTempDirectory("zarrdtypes").toString
     val conf = new org.apache.hadoop.conf.Configuration()
     for ((c, i) <- cases.zipWithIndex; (marker, order) <- Seq(
@@ -1617,7 +1628,8 @@ class ZarrSourceSpec extends SparkSpec {
       f.getParentFile.mkdirs()
       java.nio.file.Files.write(f.toPath, bb.array())
       val meta = ZarrMeta.ArrayMeta(name, Seq(n), Seq(n), marker + c.code, None, None,
-        Seq("x"), c.sf, c.ao, c.mv, None)
+        Seq("x"), graft.sources.CfDecode.of(Seq("scale_factor" -> c.sf, "add_offset" -> c.ao,
+          "missing_value" -> c.mv).collect { case (k, Some(v)) => k -> v }.toMap ++ c.attrs), None)
       val got = ZarrMeta.readChunk(conf, dir, meta, Seq(0))
       assert(got.toSeq.map(java.lang.Double.doubleToLongBits) ==
         c.want.map(java.lang.Double.doubleToLongBits),

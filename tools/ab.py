@@ -29,8 +29,11 @@ the per-pair win counts and the per-shape medians are printed at the end.
 
 `--control` runs the parent's code on both sides: the change side runs from
 a fresh copy of PARENT_DIR at `CHANGE_DIR.control` instead of CHANGE_DIR.
-That directory is replaced only if an earlier `--control` made it (it holds
-the marker file `.ab-control`); any other directory there stops the tool.
+The copy includes the build (`target/`) and perfbench's inputs and caches
+(`perfbench/.work`), so both sides start from the same state and do the
+same warm-up. That directory is replaced only if an earlier `--control`
+made it (it holds the marker file `.ab-control`); any other directory there
+stops the tool.
 A workload that runs no changed code can still move between two checkout
 directories; this measures that gap before a move is put down to a change.
 
@@ -96,12 +99,13 @@ def quartiles(xs):
 
 
 def copy_control(src, dst):
-    """A fresh copy of checkout `src` at `dst`, replacing only an earlier copy."""
+    """A fresh copy of checkout `src` at `dst`, builds and caches included,
+    replacing only an earlier copy."""
     if os.path.lexists(dst):
         if not os.path.isfile(os.path.join(dst, CONTROL_MARKER)):
             sys.exit(f"{dst} exists and is not a copy made by --control; move it away first")
         shutil.rmtree(dst)
-    shutil.copytree(src, dst, ignore=shutil.ignore_patterns(".work", "target", ".git"))
+    shutil.copytree(src, dst, symlinks=True, ignore=shutil.ignore_patterns(".git"))
     open(os.path.join(dst, CONTROL_MARKER), "w").close()
 
 
