@@ -193,32 +193,6 @@ object Grib1 {
       ((mant >> 16) & 0xff).toByte, ((mant >> 8) & 0xff).toByte, (mant & 0xff).toByte)
   }
 
-  /** Unpack `n` big-endian unsigned integers of `bits` width starting at bit
-    * 0 of `data`. bits == 0 means a constant field (all X_k = 0). */
-  def unpackBits(data: Array[Byte], bits: Int, n: Int): Array[Long] = {
-    val out = new Array[Long](n)
-    if (bits == 0) return out
-    var bitPos = 0L
-    var k = 0
-    while (k < n) {
-      var v = 0L
-      var taken = 0
-      while (taken < bits) {
-        val byteIdx = (bitPos >> 3).toInt
-        val bitInByte = (bitPos & 7).toInt
-        val avail = 8 - bitInByte
-        val take = math.min(avail, bits - taken)
-        val chunk = (u8(data, byteIdx) >> (avail - take)) & ((1 << take) - 1)
-        v = (v << take) | chunk
-        taken += take
-        bitPos += take
-      }
-      out(k) = v
-      k += 1
-    }
-    out
-  }
-
   // ---------------------------------------------------------------- tables
 
   /** GRIB1 table 4: forecast time units, in seconds. */
@@ -512,27 +486,25 @@ object Grib1 {
     parseMessage((off, len) => java.util.Arrays.copyOfRange(
       buf, off.toInt, off.toInt + len), base.toLong)
 
-  /** Decode the packed values of `m` given its raw data (and bitmap) bytes:
-    * X_k -> (R + X_k * 2^E) / 10^D, bitmap zeros -> NaN. Returned in grid
-    * scan order (row-major j, i). */
+  /** Decode the values of `m` given its raw data (and bitmap) bytes, grid
+    * scan order (row-major j, i): the template produces the X of the
+    * present points and [[GribPacking]] masks, checks and scales them. */
   def decodeValues(m: Message, data: Array[Byte], bitmap: Array[Byte]): Array[Double] =
     if (m.spectral.isDefined) {
       // simple spectral (grid type 50): the (0,0) real part leads the data
       // span as an IBM float of the DECIMAL-SCALED value; the remaining
-      // 2I - 1 coefficients are simple-packed
-      val n = m.nPoints
-      val out = new Array[Double](n)
-      out(0) = ibmFloat(data, 0) / math.pow(10.0, m.decimalScale)
-      val packed = decodePacked(m.refValue, m.binaryScale, m.decimalScale,
-        m.bitsPerValue, n - 1,
-        java.util.Arrays.copyOfRange(data, 4, data.length), null)
-      System.arraycopy(packed, 0, out, 1, n - 1)
-      out
-    } else if (m.secondOrder)
-      decodeSecondOrder(m, data, if (m.bitmapOffset >= 0) bitmap else null)
-    else
-      decodePacked(m.refValue, m.binaryScale, m.decimalScale, m.bitsPerValue,
-        m.nPoints, data, if (m.bitmapOffset >= 0) bitmap else null)
+      // 2I - 1 coefficients are simple-packed after it
+      val pts = new GribPacking.Points("GRIB1 spectral packing", m.nPoints - 1, null)
+      (ibmFloat(data, 0) / math.pow(10.0, m.decimalScale)) +:
+        pts.scatter(pts.unpack(data, m.bitsPerValue, 32), m.refValue, m.binaryScale,
+          m.decimalScale)
+    } else {
+      val pts = new GribPacking.Points(
+        if (m.secondOrder) "GRIB1 second-order packing" else "GRIB1 simple packing",
+        m.nPoints, if (m.bitmapOffset >= 0) bitmap else null)
+      pts.scatter(if (m.secondOrder) secondOrderXs(m, data, pts)
+        else pts.unpack(data, m.bitsPerValue), m.refValue, m.binaryScale, m.decimalScale)
+    }
 
   /** WMO second-order (complex) grid-point packing, secondary-bitmap
     * variant (Manual on Codes, GRIB1 BDS octets 12-21 + Code Table 11):
@@ -541,98 +513,36 @@ object Grib1 {
     * each) begin at octet N1, second-order deviations (per-group widths
     * from octet 22) at octet N2; X = FO(group) + SO(point). `bds` is the
     * whole Binary Data Section. */
-  private def decodeSecondOrder(m: Message, bds: Array[Byte],
-      bitmap: Array[Byte]): Array[Double] = {
+  private def secondOrderXs(m: Message, bds: Array[Byte],
+      pts: GribPacking.Points): Array[Long] = {
     val n1 = u16(bds, 11)
     val ext = u8(bds, 13)
     val n2 = u16(bds, 14)
     val p1 = u16(bds, 16)
     val p2 = u16(bds, 18)
-    val present: Array[Boolean] =
-      if (bitmap != null)
-        Array.tabulate(m.nPoints)(k => (u8(bitmap, k >> 3) & (0x80 >> (k & 7))) != 0)
-      else null
-    val nPresent = if (present == null) m.nPoints else present.count(identity)
-    if (p2 != nPresent)
-      throw UnsupportedGrib(s"second-order P2 $p2 != $nPresent present points")
-    if (nPresent == 0) return Array.fill(m.nPoints)(Double.NaN)
+    if (p2 != pts.count)
+      throw UnsupportedGrib(s"second-order P2 $p2 != ${pts.count} present points")
+    if (pts.count == 0) return Array.emptyLongArray
     val sameWidth = (ext & 0x10) == 0
     val widths: Array[Int] =
       if (sameWidth) Array.fill(p1)(u8(bds, 21))
       else Array.tabulate(p1)(g => u8(bds, 21 + g))
-    val sbOff = if (sameWidth) 22 else 21 + p1
-    def groupStarts(k: Int): Boolean =
-      (u8(bds, sbOff + (k >> 3)) & (0x80 >> (k & 7))) != 0
-    val fo = unpackBits(java.util.Arrays.copyOfRange(bds, n1 - 1, bds.length),
-      m.bitsPerValue, p1)
-    var soPos = (n2 - 1).toLong * 8
-    def readSo(bits: Int): Long = {
-      var v = 0L
-      var i = 0
-      while (i < bits) {
-        v = (v << 1) | ((bds((soPos >> 3).toInt) >> (7 - (soPos & 7)).toInt) & 1)
-        soPos += 1
-        i += 1
-      }
-      v
-    }
-    val dDiv = math.pow(10.0, m.decimalScale)
-    val eFactor = math.pow(2.0, m.binaryScale)
-    val out = new Array[Double](m.nPoints)
+    val starts = GribPacking.mask("GRIB1 second-order secondary bitmap", bds,
+      if (sameWidth) 22 else 21 + p1, pts.count)
+    val lengths = new Array[Long](p1)
     var g = -1
-    var xi = 0
-    var k = 0
-    while (k < m.nPoints) {
-      if (present == null || present(k)) {
-        if (groupStarts(xi)) g += 1
-        if (g < 0 || g >= p1)
-          throw UnsupportedGrib(s"secondary bitmap walks outside the $p1 groups")
-        val x = fo(g) + readSo(widths(g))
-        out(k) = (m.refValue + x * eFactor) / dDiv
-        xi += 1
-      } else out(k) = Double.NaN
-      k += 1
+    starts.foreach { start =>
+      if (start) g += 1
+      if (g < 0 || g >= p1)
+        throw UnsupportedGrib(s"secondary bitmap walks outside the $p1 groups")
+      lengths(g) += 1
     }
     if (g != p1 - 1)
       throw UnsupportedGrib(s"secondary bitmap used ${g + 1} of $p1 groups")
-    out
-  }
-
-  /** Shared fixed-point decode for BOTH editions: X -> (R + X * 2^E) / 10^D
-    * (divide, not multiply by 10^-D: IEEE division is correctly rounded, so
-    * integer-scaled fixtures decode exactly); bitmap zeros -> NaN. */
-  def decodePacked(refValue: Double, binaryScale: Int, decimalScale: Int,
-      bitsPerValue: Int, nPoints: Int, data: Array[Byte],
-      bitmap: Array[Byte]): Array[Double] = {
-    val dDiv = math.pow(10.0, decimalScale)
-    val eFactor = math.pow(2.0, binaryScale)
-    val out = new Array[Double](nPoints)
-    if (bitmap != null) {
-      val present = new Array[Boolean](nPoints)
-      var nPresent = 0
-      var k = 0
-      while (k < nPoints) {
-        present(k) = (u8(bitmap, k >> 3) & (0x80 >> (k & 7))) != 0
-        if (present(k)) nPresent += 1
-        k += 1
-      }
-      val xs = unpackBits(data, bitsPerValue, nPresent)
-      var xi = 0
-      k = 0
-      while (k < nPoints) {
-        out(k) =
-          if (present(k)) { val v = (refValue + xs(xi) * eFactor) / dDiv; xi += 1; v }
-          else Double.NaN
-        k += 1
-      }
-    } else {
-      val xs = unpackBits(data, bitsPerValue, nPoints)
-      var k = 0
-      while (k < nPoints) {
-        out(k) = (refValue + xs(k) * eFactor) / dDiv
-        k += 1
-      }
-    }
-    out
+    if ((n1 - 1) * 8L + p1.toLong * m.bitsPerValue > (n2 - 1) * 8L)
+      throw UnsupportedGrib(s"second-order first-order values at N1 $n1 overrun N2 $n2")
+    val refs = GribPacking.unpack(
+      new GribPacking.BitCursor(bds, (n1 - 1) * 8L), m.bitsPerValue, p1)
+    pts.ungroup(new GribPacking.BitCursor(bds, (n2 - 1) * 8L), refs, widths, lengths)
   }
 }

@@ -10,7 +10,8 @@ import org.apache.hadoop.fs.Path
   * reader and the mover pipeline — the same role NetCDF3Writer plays for the
   * NetCDF path. Binary scale is fixed at 0 and the reference value is the
   * (integer) minimum of the scaled values, so round(v * 10^D) survives the
-  * pack/unpack cycle exactly.
+  * pack/unpack cycle exactly; a reference the IBM float would round is
+  * refused ([[GribPacking.quantize]]).
   */
 object Grib1Writer {
 
@@ -215,16 +216,12 @@ object Grib1Writer {
   }
 
   private def bmsBytes(f: FieldSpec): Array[Byte] = {
-    val n = f.values.size
-    val bodyBytes = (n + 7) / 8
-    val len = 6 + bodyBytes
-    val b = new Array[Byte](len)
-    put24(b, 0, len)
-    b(3) = (bodyBytes * 8 - n).toByte  // unused trailing bits
+    val body = GribPacking.bitmap(f.values.map(!_.isNaN))
+    val b = new Array[Byte](6 + body.length)
+    put24(b, 0, b.length)
+    b(3) = (body.length * 8 - f.values.size).toByte // unused trailing bits
     putU16(b, 4, 0)                    // bitmap follows (no predefined table)
-    f.values.zipWithIndex.foreach { case (v, k) =>
-      if (!v.isNaN) b(6 + (k >> 3)) = (b(6 + (k >> 3)) | (0x80 >> (k & 7))).toByte
-    }
+    System.arraycopy(body, 0, b, 6, body.length)
     b
   }
 
@@ -232,6 +229,26 @@ object Grib1Writer {
     if (f.spectralT >= 0) bdsSpectral(f)
     else if (f.secondOrder) bdsSecondOrder(f)
     else bdsSimple(f)
+
+  /** BDS: length, flags (with the unused trailing bits in the low nibble),
+    * binary scale E = 0, R as an IBM float and the bits per value, then
+    * `body` from octet 12. */
+  private def bds(flags: Int, ref: Long, bits: Int, body: Array[Byte]): Array[Byte] = {
+    val b = new Array[Byte](11 + body.length)
+    put24(b, 0, b.length)
+    b(3) = flags.toByte
+    putS16(b, 4, 0)
+    System.arraycopy(Grib1.toIbmFloat(ref.toDouble), 0, b, 6, 4)
+    b(10) = bits.toByte
+    System.arraycopy(body, 0, b, 11, body.length)
+    b
+  }
+
+  private def bdsSimple(f: FieldSpec): Array[Byte] = {
+    val q = GribPacking.quantize(f.values, f.decimalScale, f.bitsPerValue, edition = 1)
+    val w = new GribPacking.BitWriter().putAll(q.xs, f.bitsPerValue)
+    bds(w.padBits, q.ref, f.bitsPerValue, w.toByteArray)
+  }
 
   /** Simple spectral BDS (flag 0x80): the decimal-scaled (0,0) real part as
     * an IBM float at octets 12-15, then the remaining coefficients
@@ -241,35 +258,10 @@ object Grib1Writer {
     require(f.values.size == (t + 1) * (t + 2),
       s"${f.values.size} values for truncation T=$t (${(t + 1) * (t + 2)} expected)")
     require(!f.values.exists(_.isNaN), "spectral fields carry no bitmap")
-    val dFactor = math.pow(10.0, f.decimalScale)
-    val scaled = f.values.drop(1).map(v => math.round(v * dFactor))
-    val ref = if (scaled.isEmpty) 0L else scaled.min
-    val xs = scaled.map(_ - ref)
-    require(xs.forall(x => x >= 0 && x < (1L << math.min(f.bitsPerValue, 62))),
-      s"value range needs more than ${f.bitsPerValue} bits")
-    val dataBits = xs.size.toLong * f.bitsPerValue
-    val dataBytes = ((dataBits + 7) / 8).toInt
-    val len = 15 + dataBytes
-    val b = new Array[Byte](len)
-    put24(b, 0, len)
-    b(3) = (0x80 | ((dataBytes * 8 - dataBits) & 0x0f)).toByte
-    putS16(b, 4, 0)                                   // binary scale E = 0
-    System.arraycopy(Grib1.toIbmFloat(ref.toDouble), 0, b, 6, 4)
-    b(10) = f.bitsPerValue.toByte
-    System.arraycopy(Grib1.toIbmFloat(f.values.head * dFactor), 0, b, 11, 4)
-    var bitPos = 0L
-    xs.foreach { x =>
-      var i = f.bitsPerValue - 1
-      while (i >= 0) {
-        if (((x >> i) & 1L) != 0) {
-          val idx = 15 + (bitPos >> 3).toInt
-          b(idx) = (b(idx) | (0x80 >> (bitPos & 7).toInt)).toByte
-        }
-        bitPos += 1
-        i -= 1
-      }
-    }
-    b
+    val q = GribPacking.quantize(f.values.drop(1), f.decimalScale, f.bitsPerValue, edition = 1)
+    val w = new GribPacking.BitWriter().putAll(q.xs, f.bitsPerValue)
+    bds(0x80 | w.padBits, q.ref, f.bitsPerValue,
+      Grib1.toIbmFloat(f.values.head * math.pow(10.0, f.decimalScale)) ++ w.toByteArray)
   }
 
   /** WMO second-order packing, secondary-bitmap variant (mirrors
@@ -277,100 +269,30 @@ object Grib1Writer {
     * reference (first-order values) + per-group widths, one secondary-bitmap
     * bit per present point marking group starts, N1/N2 octet pointers. */
   private def bdsSecondOrder(f: FieldSpec): Array[Byte] = {
-    val dFactor = math.pow(10.0, f.decimalScale)
-    val present = f.values.filterNot(_.isNaN)
-    val scaled = present.map(v => math.round(v * dFactor))
-    val n = scaled.size
-    val ref = if (scaled.isEmpty) 0L else scaled.min
-    val xs = scaled.map(_ - ref).toArray
-    val L = math.max(2, f.groupSize)
-    val ng = math.max(1, (n + L - 1) / L)
-    val groups = (0 until ng).map { g =>
-      val slice = xs.slice(g * L, math.min(g * L + L, n))
-      val fo = if (slice.isEmpty) 0L else slice.min
-      val span = if (slice.isEmpty) 0L else slice.max - fo
-      val width = if (span == 0) 0 else 64 - java.lang.Long.numberOfLeadingZeros(span)
-      (fo, width, slice.map(_ - fo))
-    }
-    require(groups.forall(_._2 <= 255), "group deviation span too wide")
-    val foBits = {
-      val m = groups.map(_._1).max
-      if (m == 0) 1 else (64 - java.lang.Long.numberOfLeadingZeros(m)).toInt
-    }
-    val sbBytes = (n + 7) / 8
-    val foBytes = (ng * foBits + 7) / 8
-    val soBits = groups.map(g => g._2.toLong * g._3.length).sum
-    val soBytes = ((soBits + 7) / 8).toInt
-    val n1 = 21 + ng + sbBytes + 1            // 1-indexed octet of FO values
-    val n2 = n1 + foBytes                     // 1-indexed octet of SO values
+    val q = GribPacking.quantize(f.values, f.decimalScale, 64, edition = 1)
+    val n = q.xs.length
+    val groups = GribPacking.groups(q.xs, f.groupSize)
+    val ng = groups.size
+    require(groups.forall(_.width <= 255), "group deviation span too wide")
+    val foBits = math.max(1, GribPacking.bitWidth(groups.map(_.ref).max))
+    val n1 = 21 + ng + (n + 7) / 8 + 1        // 1-indexed octet of FO values
+    val n2 = n1 + (ng * foBits + 7) / 8       // 1-indexed octet of SO values
     require(n2 <= 65535, "second-order BDS exceeds the u16 N1/N2 pointers")
-    val len = (n2 - 1) + soBytes
-    val b = new Array[Byte](len)
-    put24(b, 0, len)
+    val w = new GribPacking.BitWriter()
+      .put(n1, 16)
+      .put(0x20 | 0x10, 8)                    // secondary bitmap + per-group widths
+      .put(n2, 16)
+      .put(ng, 16)                            // P1
+      .put(n, 16)                             // P2
+      .put(0, 8)
+    groups.foreach(g => w.put(g.width, 8))
+    groups.foreach(g => g.offsets.indices.foreach(i => w.put(if (i == 0) 1 else 0, 1)))
+    w.align()
+    groups.foreach(g => w.put(g.ref, foBits))
+    w.align()
+    groups.foreach(g => w.putAll(g.offsets, g.width))
     // flags: bit 2 second-order + bit 4 extended flags; low nibble = unused
-    b(3) = (0x40 | 0x10 | ((soBytes * 8 - soBits) & 0x0f)).toByte
-    putS16(b, 4, 0)                           // binary scale E = 0
-    System.arraycopy(Grib1.toIbmFloat(ref.toDouble), 0, b, 6, 4)
-    b(10) = foBits.toByte                     // bits per first-order value
-    putU16(b, 11, n1)
-    b(13) = (0x20 | 0x10).toByte              // secondary bitmap + per-group widths
-    putU16(b, 14, n2)
-    putU16(b, 16, ng)                         // P1
-    putU16(b, 18, n)                          // P2
-    b(20) = 0
-    groups.zipWithIndex.foreach { case ((_, w, _), g) => b(21 + g) = w.toByte }
-    var k = 0
-    while (k < n) {                           // secondary bitmap: group starts
-      if (k % L == 0) b(21 + ng + (k >> 3)) =
-        (b(21 + ng + (k >> 3)) | (0x80 >> (k & 7))).toByte
-      k += 1
-    }
-    var bit = (n1 - 1).toLong * 8
-    def putBits(v: Long, bits: Int): Unit = {
-      var i = bits - 1
-      while (i >= 0) {
-        if (((v >> i) & 1L) != 0)
-          b((bit >> 3).toInt) = (b((bit >> 3).toInt) | (0x80 >> (bit & 7).toInt)).toByte
-        bit += 1
-        i -= 1
-      }
-    }
-    groups.foreach(g => putBits(g._1, foBits))
-    bit = (n2 - 1).toLong * 8
-    groups.foreach { case (_, w, devs) => if (w > 0) devs.foreach(putBits(_, w)) }
-    b
-  }
-
-  private def bdsSimple(f: FieldSpec): Array[Byte] = {
-    val dFactor = math.pow(10.0, f.decimalScale)
-    val present = f.values.filterNot(_.isNaN)
-    val scaled = present.map(v => math.round(v * dFactor))
-    val ref = if (scaled.isEmpty) 0L else scaled.min
-    val xs = scaled.map(_ - ref)
-    require(xs.forall(x => x >= 0 && (f.bitsPerValue == 64 || x < (1L << f.bitsPerValue))),
-      s"value range needs more than ${f.bitsPerValue} bits")
-    val dataBits = xs.size.toLong * f.bitsPerValue
-    val dataBytes = ((dataBits + 7) / 8).toInt
-    val len = 11 + dataBytes
-    val b = new Array[Byte](len)
-    put24(b, 0, len)
-    b(3) = ((dataBytes * 8 - dataBits) & 0x0f).toByte // flags 0 + unused bits
-    putS16(b, 4, 0)                                   // binary scale E = 0
-    System.arraycopy(Grib1.toIbmFloat(ref.toDouble), 0, b, 6, 4)
-    b(10) = f.bitsPerValue.toByte
-    var bitPos = 0L
-    xs.foreach { x =>
-      var i = f.bitsPerValue - 1
-      while (i >= 0) {
-        if (((x >> i) & 1L) != 0) {
-          val idx = 11 + (bitPos >> 3).toInt
-          b(idx) = (b(idx) | (0x80 >> (bitPos & 7).toInt)).toByte
-        }
-        bitPos += 1
-        i -= 1
-      }
-    }
-    b
+    bds(0x40 | 0x10 | w.padBits, q.ref, foBits, w.toByteArray)
   }
 
   private def writeU24(o: ByteArrayOutputStream, v: Int): Unit = {

@@ -765,22 +765,25 @@ object Grib2 {
     (fields.result(), total)
   }
 
-  /** Decode a field's packed values (bitmap zeros -> NaN), grid scan order.
-    * Simple packing shares the fixed-point math with edition 1
-    * ([[Grib1.decodePacked]]); templates 5.2/5.3 decode groups here. */
-  def decodeValues(f: Field, data: Array[Byte], bitmap: Array[Byte]): Array[Double] =
-    f.reprTemplate match {
-      case 0 =>
-        Grib1.decodePacked(f.refValue, f.binaryScale, f.decimalScale, f.bitsPerValue,
-          f.nPoints, data, if (f.bitmapOffset >= 0) bitmap else null)
-      case 2 | 3 => decodeComplex(f, data, bitmap)
-      case 4 => decodeIeee(f, data, bitmap)
-      case 40 => decodeJpeg2000(f, data, bitmap)
-      case 41 => decodePng(f, data, bitmap)
-      case 42 => decodeCcsds(f, data, bitmap)
-      case 50 | 51 => decodeSpectral(f, data)
+  /** Decode a field's values (bitmap zeros -> NaN), grid scan order: the
+    * template produces the X of the present points (IEEE: their values)
+    * and [[GribPacking]] masks, checks and scales them. */
+  def decodeValues(f: Field, data: Array[Byte], bitmap: Array[Byte]): Array[Double] = {
+    val t = f.reprTemplate
+    if (t == 50 || t == 51) return decodeSpectral(f, data)
+    val pts = new GribPacking.Points(s"template 5.$t", f.nPoints,
+      if (f.bitmapOffset >= 0) bitmap else null)
+    val xs = t match {
+      case 0 => pts.unpack(data, f.bitsPerValue)
+      case 2 | 3 => complexXs(f, data, pts)
+      case 4 => return pts.place(ieeeValues(f, data, pts))
+      case 40 => Jpeg2000.decode(data).samples
+      case 41 => Png.decode(data).samples
+      case 42 => ccsdsXs(f, data, pts)
       case other => throw UnsupportedGrib(s"data representation template 5.$other")
     }
+    pts.scatter(xs, f.refValue, f.binaryScale, f.decimalScale)
+  }
 
   /** Templates 7.50/7.51: spherical-harmonic coefficient values, stream
     * order m = 0..M, n = m..M, (re, im) pairs.
@@ -793,116 +796,55 @@ object Grib2 {
     val sp = f.spectral.getOrElse(
       throw UnsupportedGrib("spectral data without 3.50/5.50 context"))
     val nVals = sp.nValues
+    if (sp.template == 51 && sp.subPrecision != 1)
+      throw UnsupportedGrib(
+        s"spectral subset precision code ${sp.subPrecision} (1 = IEEE-32)")
+    // 5.50 packs every value but the first; 5.51 every value after its subset
+    val (nPacked, startBit) =
+      if (sp.template == 50) (nVals - 1, 0L) else (math.max(0, nVals - sp.ts), sp.ts * 32L)
+    val pts = new GribPacking.Points(s"template 5.${sp.template}", nPacked, null)
+    val packed = pts.scatter(pts.unpack(data, f.bitsPerValue, startBit), f.refValue,
+      f.binaryScale, f.decimalScale)
+    if (sp.template == 50) return sp.realPart00 +: packed
     val out = new Array[Double](nVals)
-    sp.template match {
-      case 50 =>
-        out(0) = sp.realPart00
-        val packed = Grib1.decodePacked(f.refValue, f.binaryScale,
-          f.decimalScale, f.bitsPerValue, nVals - 1, data, null)
-        System.arraycopy(packed, 0, out, 1, nVals - 1)
-      case 51 =>
-        if (sp.subPrecision != 1)
-          throw UnsupportedGrib(
-            s"spectral subset precision code ${sp.subPrecision} (1 = IEEE-32)")
-        val packedVals = nVals - sp.ts
-        val packed =
-          if (packedVals > 0)
-            Grib1.decodePacked(f.refValue, f.binaryScale, f.decimalScale,
-              f.bitsPerValue, packedVals,
-              java.util.Arrays.copyOfRange(data, sp.ts * 4, data.length), null)
-          else Array.empty[Double]
-        var vi = 0; var si = 0; var pi = 0
-        var m = 0
-        while (m <= sp.m) {
-          var n = m
-          while (n <= sp.m) {
-            val inSub = n <= sp.subT
-            var c = 0
-            while (c < 2) {
-              if (inSub) { out(vi) = ieee32(data, si * 4); si += 1 }
-              else {
-                out(vi) = packed(pi) / math.pow(n.toDouble * (n + 1), sp.laplacianP)
-                pi += 1
-              }
-              vi += 1; c += 1
-            }
-            n += 1
+    var vi = 0; var si = 0; var pi = 0
+    var m = 0
+    while (m <= sp.m) {
+      var n = m
+      while (n <= sp.m) {
+        val inSub = n <= sp.subT
+        var c = 0
+        while (c < 2) {
+          if (inSub) { out(vi) = ieee32(data, si * 4); si += 1 }
+          else {
+            out(vi) = packed(pi) / math.pow(n.toDouble * (n + 1), sp.laplacianP)
+            pi += 1
           }
-          m += 1
+          vi += 1; c += 1
         }
-        if (si != sp.ts)
-          throw UnsupportedGrib(s"spectral subset carries $si values, Ts = ${sp.ts}")
+        n += 1
+      }
+      m += 1
     }
+    if (si != sp.ts)
+      throw UnsupportedGrib(s"spectral subset carries $si values, Ts = ${sp.ts}")
     out
   }
 
   /** Template 7.4: raw big-endian IEEE floats (32- or 64-bit per the
-    * section-5 precision code) for the PRESENT points, raster order —
-    * no reference/scale fixed-point step applies. */
-  private def decodeIeee(f: Field, data: Array[Byte],
-      bitmap: Array[Byte]): Array[Double] = {
+    * section-5 precision code) of the present points, raster order; no
+    * reference/scale step applies. */
+  private def ieeeValues(f: Field, data: Array[Byte],
+      pts: GribPacking.Points): Array[Double] = {
     val bytesPer = f.bitsPerValue / 8
-    val present: Array[Boolean] =
-      if (f.bitmapOffset >= 0 && bitmap != null)
-        Array.tabulate(f.nPoints)(k => (u8(bitmap, k >> 3) & (0x80 >> (k & 7))) != 0)
-      else null
-    val nPresent = if (present == null) f.nPoints else present.count(identity)
-    if (data.length < nPresent * bytesPer)
-      throw UnsupportedGrib(
-        s"IEEE packing carries ${data.length / bytesPer} values for $nPresent points")
-    val out = new Array[Double](f.nPoints)
-    var xi = 0
-    var i = 0
-    while (i < f.nPoints) {
-      out(i) =
-        if (present == null || present(i)) {
-          val off = xi * bytesPer
-          val v =
-            if (bytesPer == 4) java.lang.Float.intBitsToFloat(
-              ((data(off) & 0xff) << 24) | ((data(off + 1) & 0xff) << 16) |
-                ((data(off + 2) & 0xff) << 8) | (data(off + 3) & 0xff)).toDouble
-            else java.lang.Double.longBitsToDouble(
-              (0 until 8).foldLeft(0L)((acc, k) => (acc << 8) | (data(off + k) & 0xffL)))
-          xi += 1
-          v
-        } else Double.NaN
-      i += 1
-    }
-    out
+    pts.cover(data.length / bytesPer)
+    val bb = java.nio.ByteBuffer.wrap(data)
+    Array.tabulate(pts.count)(i =>
+      if (bytesPer == 4) bb.getFloat(i * 4).toDouble else bb.getDouble(i * 8))
   }
 
-  /** Template 7.40: the payload is a JPEG 2000 codestream; samples in
-    * raster order are the scaled X values of the PRESENT points (same
-    * bitmap semantics as simple/PNG packing). */
-  private def decodeJpeg2000(f: Field, data: Array[Byte],
-      bitmap: Array[Byte]): Array[Double] = {
-    val img = Jpeg2000.decode(data)
-    val present: Array[Boolean] =
-      if (f.bitmapOffset >= 0 && bitmap != null)
-        Array.tabulate(f.nPoints)(k => (u8(bitmap, k >> 3) & (0x80 >> (k & 7))) != 0)
-      else null
-    val nPresent = if (present == null) f.nPoints else present.count(identity)
-    if (img.samples.length < nPresent)
-      throw UnsupportedGrib(
-        s"JPEG2000 packing carries ${img.samples.length} samples for $nPresent points")
-    val dDiv = math.pow(10.0, f.decimalScale)
-    val eFactor = math.pow(2.0, f.binaryScale)
-    val out = new Array[Double](f.nPoints)
-    var xi = 0
-    var i = 0
-    while (i < f.nPoints) {
-      out(i) =
-        if (present == null || present(i)) {
-          val v = (f.refValue + img.samples(xi) * eFactor) / dDiv; xi += 1; v
-        } else Double.NaN
-      i += 1
-    }
-    out
-  }
-
-  /** Template 7.42: AEC-coded scaled X values of the present points. */
-  private def decodeCcsds(f: Field, data: Array[Byte],
-      bitmap: Array[Byte]): Array[Double] = {
+  /** Template 7.42: AEC-coded X of the present points. */
+  private def ccsdsXs(f: Field, data: Array[Byte], pts: GribPacking.Points): Array[Long] = {
     val (flags, blockSize, rsi) = f.ccsds.getOrElse(
       throw UnsupportedGrib("CCSDS field without coding parameters"))
     if ((flags & 1) != 0)
@@ -910,152 +852,42 @@ object Grib2 {
     if ((flags & 16) != 0)
       throw UnsupportedGrib(
         "CCSDS restricted coding option (flag 16) — low-range ID tables not implemented")
-    val present: Array[Boolean] =
-      if (f.bitmapOffset >= 0 && bitmap != null)
-        Array.tabulate(f.nPoints)(k => (u8(bitmap, k >> 3) & (0x80 >> (k & 7))) != 0)
-      else null
-    val nPresent = if (present == null) f.nPoints else present.count(identity)
-    val xs = Ccsds.decode(data,
-      Ccsds.Params(f.bitsPerValue, blockSize, rsi, preprocess = (flags & 8) != 0),
-      nPresent)
-    val dDiv = math.pow(10.0, f.decimalScale)
-    val eFactor = math.pow(2.0, f.binaryScale)
-    val out = new Array[Double](f.nPoints)
-    var xi = 0
-    var i = 0
-    while (i < f.nPoints) {
-      out(i) =
-        if (present == null || present(i)) {
-          val v = (f.refValue + xs(xi) * eFactor) / dDiv; xi += 1; v
-        } else Double.NaN
-      i += 1
-    }
-    out
-  }
-
-  /** Template 7.41: the payload is a PNG image; pixels in raster order are
-    * the scaled X values of the PRESENT points (bitmap zeros are not
-    * encoded, matching simple packing's bitmap semantics). */
-  private def decodePng(f: Field, data: Array[Byte],
-      bitmap: Array[Byte]): Array[Double] = {
-    val img = Png.decode(data)
-    val present: Array[Boolean] =
-      if (f.bitmapOffset >= 0 && bitmap != null)
-        Array.tabulate(f.nPoints)(k => (u8(bitmap, k >> 3) & (0x80 >> (k & 7))) != 0)
-      else null
-    val nPresent = if (present == null) f.nPoints else present.count(identity)
-    if (img.samples.length < nPresent)
-      throw UnsupportedGrib(
-        s"PNG packing carries ${img.samples.length} pixels for $nPresent points")
-    val dDiv = math.pow(10.0, f.decimalScale)
-    val eFactor = math.pow(2.0, f.binaryScale)
-    val out = new Array[Double](f.nPoints)
-    var xi = 0
-    var i = 0
-    while (i < f.nPoints) {
-      out(i) =
-        if (present == null || present(i)) {
-          val v = (f.refValue + img.samples(xi) * eFactor) / dDiv; xi += 1; v
-        } else Double.NaN
-      i += 1
-    }
-    out
-  }
-
-  /** MSB-first bit cursor over a section-7 payload. */
-  private[grib] final class BitReader(b: Array[Byte]) {
-    private var pos = 0L
-    def read(bits: Int): Long = {
-      var v = 0L
-      var i = 0
-      while (i < bits) {
-        v = (v << 1) | ((b((pos >> 3).toInt) >> (7 - (pos & 7)).toInt) & 1)
-        pos += 1
-        i += 1
-      }
-      v
-    }
-    /** GRIB2 signed descriptors are sign-magnitude: top bit is the sign. */
-    def readSignMagnitude(octets: Int): Long = {
-      val raw = read(octets * 8)
-      val signBit = 1L << (octets * 8 - 1)
-      if ((raw & signBit) != 0) -(raw & (signBit - 1)) else raw
-    }
+    Ccsds.decode(data,
+      Ccsds.Params(f.bitsPerValue, blockSize, rsi, preprocess = (flags & 8) != 0), pts.count)
   }
 
   /** Templates 7.2/7.3: [5.3 extra descriptors:] initial value(s) + overall
     * minimum, then NG group references / widths / scaled lengths, then the
-    * per-group packed increments. X = groupRef + increment (+ the spatial-
-    * differencing recurrence for 5.3); Y = (R + X * 2^E) / 10^D. */
-  private def decodeComplex(f: Field, data: Array[Byte],
-      bitmap: Array[Byte]): Array[Double] = {
+    * groups' packed increments ([[GribPacking.Points.ungroup]]); 5.3 then
+    * integrates its spatial differences back into X. */
+  private def complexXs(f: Field, data: Array[Byte], pts: GribPacking.Points): Array[Long] = {
     val cp = f.complex.getOrElse(
       throw UnsupportedGrib("complex field without packing parameters"))
-    val present: Array[Boolean] =
-      if (f.bitmapOffset >= 0 && bitmap != null)
-        Array.tabulate(f.nPoints)(k => (u8(bitmap, k >> 3) & (0x80 >> (k & 7))) != 0)
-      else null
-    val nPresent = if (present == null) f.nPoints else present.count(identity)
-    val r = new BitReader(data)
+    val c = new GribPacking.BitCursor(data, 0)
     val order = cp.spatialOrder
-    val initial = new Array[Long](order)
-    var gmin = 0L
-    if (order > 0) {
-      var i = 0
-      while (i < order) { initial(i) = r.readSignMagnitude(cp.extraOctets); i += 1 }
-      gmin = r.readSignMagnitude(cp.extraOctets)
-    }
-    val refs = Array.fill(cp.ng)(r.read(f.bitsPerValue))
-    val widths = Array.fill(cp.ng)(cp.groupWidthRef + r.read(cp.groupWidthBits).toInt)
+    val initial = Array.fill(order)(c.readSignMagnitude(cp.extraOctets))
+    val gmin = if (order > 0) c.readSignMagnitude(cp.extraOctets) else 0L
+    val refs = GribPacking.unpack(c, f.bitsPerValue, cp.ng)
+    val widths = Array.fill(cp.ng)(cp.groupWidthRef + c.read(cp.groupWidthBits).toInt)
     val lengths = Array.tabulate(cp.ng) { g =>
-      val scaled = r.read(cp.groupLengthBits)
+      val scaled = c.read(cp.groupLengthBits)
       if (g == cp.ng - 1) cp.lastGroupLength
       else cp.groupLengthRef + scaled * cp.groupLengthInc
     }
-    val xs = new Array[Long](nPresent)
-    var k = 0
-    var g = 0
-    while (g < cp.ng) {
-      val len = lengths(g).toInt
-      val w = widths(g)
-      var j = 0
-      while (j < len && k < nPresent) {
-        xs(k) = refs(g) + (if (w == 0) 0L else r.read(w))
-        k += 1
-        j += 1
-      }
-      g += 1
-    }
-    if (k != nPresent)
-      throw UnsupportedGrib(s"complex packing groups cover $k of $nPresent points")
+    val xs = pts.ungroup(c, refs, widths, lengths)
     if (order > 0) {
       // first `order` values come from the extra descriptors verbatim; the
       // rest add the overall minimum back and integrate the differences
+      val n = xs.length
       var i = 0
-      while (i < math.min(order, nPresent)) { xs(i) = initial(i); i += 1 }
-      var k2 = order
-      while (k2 < nPresent) {
-        val d = xs(k2) + gmin
-        xs(k2) = if (order == 1) d + xs(k2 - 1) else d + 2 * xs(k2 - 1) - xs(k2 - 2)
-        k2 += 1
+      while (i < math.min(order, n)) { xs(i) = initial(i); i += 1 }
+      var k = order
+      while (k < n) {
+        val d = xs(k) + gmin
+        xs(k) = if (order == 1) d + xs(k - 1) else d + 2 * xs(k - 1) - xs(k - 2)
+        k += 1
       }
     }
-    val dDiv = math.pow(10.0, f.decimalScale)
-    val eFactor = math.pow(2.0, f.binaryScale)
-    val out = new Array[Double](f.nPoints)
-    if (present == null) {
-      var i = 0
-      while (i < f.nPoints) { out(i) = (f.refValue + xs(i) * eFactor) / dDiv; i += 1 }
-    } else {
-      var xi = 0
-      var i = 0
-      while (i < f.nPoints) {
-        out(i) =
-          if (present(i)) { val v = (f.refValue + xs(xi) * eFactor) / dDiv; xi += 1; v }
-          else Double.NaN
-        i += 1
-      }
-    }
-    out
+    xs
   }
 }

@@ -8,8 +8,9 @@ import org.apache.hadoop.fs.Path
 /** Minimal GRIB edition 2 writer (grid template 3.0, product templates
   * 4.0/4.8, data template 5.0 simple packing, optional bitmap) — fixture
   * role, like [[Grib1Writer]] for edition 1. The reference value is the
-  * integer minimum of the scaled values encoded as IEEE float32 (exact
-  * below 2^24), so round(v * 10^D) survives the pack/unpack cycle. */
+  * integer minimum of the scaled values encoded as IEEE float32 (one that
+  * float32 would round is refused, [[GribPacking.quantize]]), so
+  * round(v * 10^D) survives the pack/unpack cycle. */
 object Grib2Writer {
 
   final case class FieldSpec(
@@ -150,7 +151,7 @@ object Grib2Writer {
     b(71) = 0                        // scan mode: +i, -j
     putS32(b, 72, math.round(r.southPoleLat * 1e6))
     putS32(b, 76, math.round(r.southPoleLon * 1e6))
-    putU32(b, 80, java.lang.Float.floatToIntBits(r.angle.toFloat) & 0xffffffffL)
+    putFloat(b, 80, r.angle)
     b
   }
 
@@ -193,7 +194,7 @@ object Grib2Writer {
         putS32(b, 38, 0)                       // reference latitude 0
         putS32(b, 42, math.round(t.lon0 * 1e6))
         b(46) = 0x08
-        putU32(b, 47, java.lang.Float.floatToIntBits(1.0f).toLong & 0xffffffffL)
+        putFloat(b, 47, 1.0)
         putS32(b, 51, 0); putS32(b, 55, 0)     // XR / YR
         b(59) = (if (f.dyMeters >= 0) 0x40 else 0).toByte // scan
         putU32(b, 60, math.round(f.dxMeters * 100))
@@ -400,6 +401,32 @@ object Grib2Writer {
           "diff, 4 IEEE, 40 JPEG2000, 41 PNG, 42 CCSDS, 50/51 spectral)")
     }
 
+  /** Section 5 of `len` octets with the head every packed template 5.x
+    * shares: the number of packed values, the template, R as an IEEE
+    * float, binary scale E = 0, D and the bits per value. */
+  private def section5(len: Int, template: Int, q: GribPacking.Quantized,
+      decimalScale: Int, bits: Int): Array[Byte] = {
+    val s5 = new Array[Byte](len)
+    putU32(s5, 0, len); s5(4) = 5
+    putU32(s5, 5, q.xs.length)       // count of values actually packed (bitmap-aware)
+    putU16(s5, 9, template)
+    putFloat(s5, 11, q.ref.toDouble)
+    putS16(s5, 15, 0)                // binary scale E = 0
+    putS16(s5, 17, decimalScale)
+    s5(19) = bits.toByte
+    s5
+  }
+
+  private def section7(body: Array[Byte]): Array[Byte] = {
+    val s7 = new Array[Byte](5 + body.length)
+    putU32(s7, 0, s7.length); s7(4) = 7
+    System.arraycopy(body, 0, s7, 5, body.length)
+    s7
+  }
+
+  private def quantize(f: FieldSpec, values: Seq[Double], bits: Int): GribPacking.Quantized =
+    GribPacking.quantize(values, f.decimalScale, bits, edition = 2)
+
   /** Templates 5.50/7.50 and 5.51/7.51: spherical-harmonic coefficients.
     * 5.50 keeps the (0,0) real part in section 5 and simple-packs the rest;
     * 5.51 stores the n <= subTruncation subset as IEEE-32 and simple-packs
@@ -411,51 +438,14 @@ object Grib2Writer {
     require(f.values.size == 2 * nCoeff,
       s"${f.values.size} values for truncation T=$t (${2 * nCoeff} expected)")
     require(!f.values.exists(_.isNaN), "spectral fields carry no bitmap")
-    val dFactor = math.pow(10.0, f.decimalScale)
-
-    def packBits(xs: Seq[Long]): Array[Byte] = {
-      val dataBits = xs.size.toLong * f.bitsPerValue
-      val body = new Array[Byte](((dataBits + 7) / 8).toInt)
-      var bitPos = 0L
-      xs.foreach { x =>
-        var i = f.bitsPerValue - 1
-        while (i >= 0) {
-          if (((x >> i) & 1L) != 0)
-            body((bitPos >> 3).toInt) =
-              (body((bitPos >> 3).toInt) | (0x80 >> (bitPos & 7).toInt)).toByte
-          bitPos += 1
-          i -= 1
-        }
-      }
-      body
-    }
-    def refAndXs(vals: Seq[Double]): (Long, Seq[Long]) = {
-      val scaled = vals.map(v => math.round(v * dFactor))
-      val ref = if (scaled.isEmpty) 0L else scaled.min
-      require(math.abs(ref) < (1L << 24), "reference value must stay float32-exact")
-      val xs = scaled.map(_ - ref)
-      require(xs.forall(x => x >= 0 && x < (1L << math.min(f.bitsPerValue, 62))),
-        s"value range needs more than ${f.bitsPerValue} bits")
-      (ref, xs)
-    }
+    def packed(q: GribPacking.Quantized) =
+      new GribPacking.BitWriter().putAll(q.xs, f.bitsPerValue).toByteArray
 
     if (f.packing == 50) {
-      val (ref, xs) = refAndXs(f.values.drop(1))
-      val s5 = new Array[Byte](24)
-      putU32(s5, 0, 24); s5(4) = 5
-      putU32(s5, 5, xs.size)
-      putU16(s5, 9, 50)
-      putU32(s5, 11, java.lang.Float.floatToIntBits(ref.toFloat).toLong & 0xffffffffL)
-      putS16(s5, 15, 0)              // binary scale E = 0
-      putS16(s5, 17, f.decimalScale)
-      s5(19) = f.bitsPerValue.toByte
-      putU32(s5, 20,
-        java.lang.Float.floatToIntBits(f.values.head.toFloat).toLong & 0xffffffffL)
-      val body = packBits(xs)
-      val s7 = new Array[Byte](5 + body.length)
-      putU32(s7, 0, s7.length); s7(4) = 7
-      System.arraycopy(body, 0, s7, 5, body.length)
-      (s5, s7)
+      val q = quantize(f, f.values.drop(1), f.bitsPerValue)
+      val s5 = section5(24, 50, q, f.decimalScale, f.bitsPerValue)
+      putFloat(s5, 20, f.values.head)
+      (s5, section7(packed(q)))
     } else { // 5.51
       val sub = f.subTruncation
       require(sub >= 0 && sub <= t, s"sub-truncation $sub for T=$t")
@@ -478,105 +468,56 @@ object Grib2Writer {
         }
         m += 1
       }
-      val (ref, xs) = refAndXs(packVals.toSeq)
-      val s5 = new Array[Byte](35)
-      putU32(s5, 0, 35); s5(4) = 5
-      putU32(s5, 5, xs.size)
-      putU16(s5, 9, 51)
-      putU32(s5, 11, java.lang.Float.floatToIntBits(ref.toFloat).toLong & 0xffffffffL)
-      putS16(s5, 15, 0)              // binary scale E = 0
-      putS16(s5, 17, f.decimalScale)
-      s5(19) = f.bitsPerValue.toByte
+      val q = quantize(f, packVals.toSeq, f.bitsPerValue)
+      val s5 = section5(35, 51, q, f.decimalScale, f.bitsPerValue)
       putS32(s5, 20, math.round(f.laplacianP * 1e6))
       putU16(s5, 24, sub); putU16(s5, 26, sub); putU16(s5, 28, sub)
       putU32(s5, 30, subVals.size)
       s5(34) = 1                     // subset precision: IEEE-32
-      val body = new Array[Byte](subVals.size * 4) ++ packBits(xs.toSeq)
-      subVals.zipWithIndex.foreach { case (v, k) =>
-        putU32(body, k * 4,
-          java.lang.Float.floatToIntBits(v.toFloat).toLong & 0xffffffffL)
-      }
-      val s7 = new Array[Byte](5 + body.length)
-      putU32(s7, 0, s7.length); s7(4) = 7
-      System.arraycopy(body, 0, s7, 5, body.length)
-      (s5, s7)
+      val subset = new Array[Byte](subVals.size * 4)
+      subVals.zipWithIndex.foreach { case (v, k) => putFloat(subset, k * 4, v) }
+      (s5, section7(subset ++ packed(q)))
     }
   }
 
+  /** The image shape of PNG and JPEG 2000 packing: the grid when nothing is
+    * missing (ni x nj), else one row of the present points. */
+  private def imageShape(f: FieldSpec, q: GribPacking.Quantized): (Int, Int) =
+    if (q.xs.length == f.values.size) (f.ni, f.nj) else (math.max(q.xs.length, 1), 1)
+
   /** Template 5.40/7.40: scaled X values as a lossless JPEG 2000
-    * codestream, present points in raster order. Grid-shaped when nothing
-    * is missing (ni x nj image), else one nPresent x 1 row — matching the
-    * PNG-packing layout convention. */
+    * codestream, present points in raster order. */
   private def jpeg57(f: FieldSpec): (Array[Byte], Array[Byte]) = {
-    val dFactor = math.pow(10.0, f.decimalScale)
-    val present = f.values.filterNot(_.isNaN)
-    val scaled = present.map(v => math.round(v * dFactor))
-    val ref = if (scaled.isEmpty) 0L else scaled.min
-    val xs = scaled.map(_ - ref).toArray
-    require(xs.forall(x => x >= 0 && x < (1L << math.min(f.bitsPerValue, 62))),
-      s"value range needs more than ${f.bitsPerValue} bits")
-    require(math.abs(ref) < (1L << 24), "reference value must stay float32-exact")
-    val (w, h) =
-      if (present.size == f.values.size) (f.ni, f.nj) else (math.max(xs.length, 1), 1)
+    val q = quantize(f, f.values, f.bitsPerValue)
+    val (w, h) = imageShape(f, q)
     val levels = { // openjpeg-style default, capped for small grids
       val m = math.min(w, h)
       if (m >= 32) 5 else math.max(0, 31 - Integer.numberOfLeadingZeros(math.max(m, 1)))
     }
     val j2k =
-      if (xs.isEmpty) Jpeg2000.encode(1, 1, f.bitsPerValue, Array(0L), 0)
-      else Jpeg2000.encode(w, h, f.bitsPerValue, xs, levels)
-
-    val s5 = new Array[Byte](23)
-    putU32(s5, 0, 23); s5(4) = 5
-    putU32(s5, 5, xs.length)
-    putU16(s5, 9, 40)                // template 5.40 JPEG2000
-    putU32(s5, 11, java.lang.Float.floatToIntBits(ref.toFloat).toLong & 0xffffffffL)
-    putS16(s5, 15, 0)                // binary scale E = 0
-    putS16(s5, 17, f.decimalScale)
-    s5(19) = f.bitsPerValue.toByte
+      if (q.xs.isEmpty) Jpeg2000.encode(1, 1, f.bitsPerValue, Array(0L), 0)
+      else Jpeg2000.encode(w, h, f.bitsPerValue, q.xs, levels)
+    val s5 = section5(23, 40, q, f.decimalScale, f.bitsPerValue)
     s5(20) = 0                       // floating-point values
     s5(21) = 0                       // lossless
     s5(22) = 255.toByte              // target ratio: n/a
-
-    val s7 = new Array[Byte](5 + j2k.length)
-    putU32(s7, 0, s7.length); s7(4) = 7
-    System.arraycopy(j2k, 0, s7, 5, j2k.length)
-    (s5, s7)
+    (s5, section7(j2k))
   }
 
   /** Template 5.42/7.42: AEC-coded scaled X values (eccodes-style
     * parameters: preprocess+MSB flags, block size 32, RSI 128). */
   private def ccsds57(f: FieldSpec): (Array[Byte], Array[Byte]) = {
-    val dFactor = math.pow(10.0, f.decimalScale)
-    val present = f.values.filterNot(_.isNaN)
-    val scaled = present.map(v => math.round(v * dFactor))
-    val ref = if (scaled.isEmpty) 0L else scaled.min
-    val xs = scaled.map(_ - ref).toArray
-    require(xs.forall(x => x >= 0 && x < (1L << math.min(f.bitsPerValue, 62))),
-      s"value range needs more than ${f.bitsPerValue} bits")
-    require(math.abs(ref) < (1L << 24), "reference value must stay float32-exact")
+    val q = quantize(f, f.values, f.bitsPerValue)
     val (blockSize, rsi, flags) = (32, 128, 4 | 8) // MSB + preprocess
     val coded = Ccsds.encode(
-      if (xs.isEmpty) Array(0L) else xs,
+      if (q.xs.isEmpty) Array(0L) else q.xs,
       Ccsds.Params(f.bitsPerValue, blockSize, rsi, preprocess = true))
-
-    val s5 = new Array[Byte](25)
-    putU32(s5, 0, 25); s5(4) = 5
-    putU32(s5, 5, xs.length)
-    putU16(s5, 9, 42)                // template 5.42 CCSDS
-    putU32(s5, 11, java.lang.Float.floatToIntBits(ref.toFloat).toLong & 0xffffffffL)
-    putS16(s5, 15, 0)                // binary scale E = 0
-    putS16(s5, 17, f.decimalScale)
-    s5(19) = f.bitsPerValue.toByte
+    val s5 = section5(25, 42, q, f.decimalScale, f.bitsPerValue)
     s5(20) = 0                       // original field type: floating point
     s5(21) = flags.toByte
     s5(22) = blockSize.toByte
     putU16(s5, 23, rsi)
-
-    val s7 = new Array[Byte](5 + coded.length)
-    putU32(s7, 0, s7.length); s7(4) = 7
-    System.arraycopy(coded, 0, s7, 5, coded.length)
-    (s5, s7)
+    (s5, section7(coded))
   }
 
   /** Template 5.4/7.4: raw big-endian IEEE floats of the present points —
@@ -595,59 +536,15 @@ object Grib2Writer {
     putU32(s5, 5, present.size)
     putU16(s5, 9, 4)                 // template 5.4
     s5(11) = prec.toByte
-    val bytesPer = f.bitsPerValue / 8
-    val s7 = new Array[Byte](5 + present.size * bytesPer)
-    putU32(s7, 0, s7.length); s7(4) = 7
-    present.zipWithIndex.foreach { case (v, k) =>
-      val off = 5 + k * bytesPer
-      if (prec == 1)
-        putU32(s7, off, java.lang.Float.floatToIntBits(v.toFloat).toLong & 0xffffffffL)
-      else {
-        val bits = java.lang.Double.doubleToLongBits(v)
-        var i = 0
-        while (i < 8) { s7(off + i) = ((bits >>> (56 - 8 * i)) & 0xff).toByte; i += 1 }
-      }
-    }
-    (s5, s7)
+    val body = java.nio.ByteBuffer.allocate(present.size * f.bitsPerValue / 8)
+    present.foreach(v => if (prec == 1) body.putFloat(v.toFloat) else body.putDouble(v))
+    (s5, section7(body.array()))
   }
 
   private def simple57(f: FieldSpec): (Array[Byte], Array[Byte]) = {
-    val dFactor = math.pow(10.0, f.decimalScale)
-    val present = f.values.filterNot(_.isNaN)
-    val scaled = present.map(v => math.round(v * dFactor))
-    val ref = if (scaled.isEmpty) 0L else scaled.min
-    val xs = scaled.map(_ - ref)
-    require(xs.forall(x => x >= 0 && (f.bitsPerValue == 64 || x < (1L << f.bitsPerValue))),
-      s"value range needs more than ${f.bitsPerValue} bits")
-    require(math.abs(ref) < (1L << 24), "reference value must stay float32-exact")
-
-    val s5 = new Array[Byte](21)
-    putU32(s5, 0, 21); s5(4) = 5
-    putU32(s5, 5, xs.size) // count of values actually packed (bitmap-aware)
-    putU16(s5, 9, 0)                 // template 5.0
-    putU32(s5, 11, java.lang.Float.floatToIntBits(ref.toFloat).toLong & 0xffffffffL)
-    putS16(s5, 15, 0)                // binary scale E = 0
-    putS16(s5, 17, f.decimalScale)
-    s5(19) = f.bitsPerValue.toByte
-    s5(20) = 0                       // floating-point values
-
-    val dataBits = xs.size.toLong * f.bitsPerValue
-    val dataBytes = ((dataBits + 7) / 8).toInt
-    val s7 = new Array[Byte](5 + dataBytes)
-    putU32(s7, 0, s7.length); s7(4) = 7
-    var bitPos = 0L
-    xs.foreach { x =>
-      var i = f.bitsPerValue - 1
-      while (i >= 0) {
-        if (((x >> i) & 1L) != 0) {
-          val idx = 5 + (bitPos >> 3).toInt
-          s7(idx) = (s7(idx) | (0x80 >> (bitPos & 7).toInt)).toByte
-        }
-        bitPos += 1
-        i -= 1
-      }
-    }
-    (s5, s7)
+    val q = quantize(f, f.values, f.bitsPerValue)
+    (section5(21, 0, q, f.decimalScale, f.bitsPerValue),
+      section7(new GribPacking.BitWriter().putAll(q.xs, f.bitsPerValue).toByteArray))
   }
 
   /** Templates 5.2/5.3 + 7.2/7.3: fixed-size groups of `groupSize`, per-group
@@ -657,13 +554,9 @@ object Grib2Writer {
   private def complex57(f: FieldSpec): (Array[Byte], Array[Byte]) = {
     val order = if (f.packing == 3) f.spatialOrder else 0
     require(order == 0 || order == 1 || order == 2, s"spatial order $order")
-    val dFactor = math.pow(10.0, f.decimalScale)
-    val present = f.values.filterNot(_.isNaN)
-    val scaled = present.map(v => math.round(v * dFactor))
-    val n = scaled.size
-    val ref = if (scaled.isEmpty) 0L else scaled.min
-    require(math.abs(ref) < (1L << 24), "reference value must stay float32-exact")
-    val xs = scaled.map(_ - ref).toArray
+    val q = quantize(f, f.values, 64)
+    val xs = q.xs
+    val n = xs.length
 
     // 5.3: difference the X sequence, keep the first `order` values verbatim
     // as extra descriptors, shift the rest by the overall minimum
@@ -683,129 +576,58 @@ object Grib2Writer {
         (0 until n).map(k => if (k < order) 0L else d(k) - gmin).toArray
       }
 
-    val groupSize = math.max(2, f.groupSize)
-    val ng = math.max(1, (n + groupSize - 1) / groupSize)
-    val groups = (0 until ng).map { g =>
-      val lo = g * groupSize
-      val hi = math.min(lo + groupSize, n)
-      val slice = work.slice(lo, hi)
-      val gref = if (slice.isEmpty) 0L else slice.min
-      val span = if (slice.isEmpty) 0L else slice.max - gref
-      val width = if (span == 0) 0 else 64 - java.lang.Long.numberOfLeadingZeros(span)
-      (gref, width, hi - lo, slice.map(_ - gref))
-    }
-    val refBits = {
-      val m = groups.map(_._1).max
-      if (m == 0) 1 else 64 - java.lang.Long.numberOfLeadingZeros(m)
-    }
-    require(groups.forall(_._2 <= 255) && refBits <= 255, "group span too wide")
+    val groups = GribPacking.groups(work, f.groupSize)
+    val refBits = math.max(1, GribPacking.bitWidth(groups.map(_.ref).max))
+    require(groups.forall(_.width <= 255) && refBits <= 255, "group span too wide")
 
     val extraOctets = 4
-    val s5 = new Array[Byte](if (order > 0) 49 else 47)
-    putU32(s5, 0, s5.length); s5(4) = 5
-    putU32(s5, 5, n)
-    putU16(s5, 9, if (order > 0) 3 else 2)
-    putU32(s5, 11, java.lang.Float.floatToIntBits(ref.toFloat).toLong & 0xffffffffL)
-    putS16(s5, 15, 0)                // binary scale E = 0
-    putS16(s5, 17, f.decimalScale)
-    s5(19) = refBits.toByte          // bits per group reference
+    val s5 = section5(if (order > 0) 49 else 47, if (order > 0) 3 else 2, q,
+      f.decimalScale, refBits)       // bits per group reference
     s5(20) = 0                       // floating-point original values
     s5(21) = 1                       // general group splitting
     s5(22) = 0                       // no missing-value management (bitmap)
     putU32(s5, 23, 0); putU32(s5, 27, 0) // missing substitutes unused
-    putU32(s5, 31, ng)
+    putU32(s5, 31, groups.size)
     s5(35) = 0                       // group width reference
     s5(36) = 8                       // bits per group width (stored direct)
-    putU32(s5, 37, groupSize)        // group length reference
+    putU32(s5, 37, GribPacking.groupLength(f.groupSize)) // group length reference
     s5(41) = 1                       // length increment
-    putU32(s5, 42, groups.last._3)   // true length of last group
+    putU32(s5, 42, groups.last.offsets.length) // true length of last group
     s5(46) = 8                       // bits per scaled group length
     if (order > 0) { s5(47) = order.toByte; s5(48) = extraOctets.toByte }
 
-    val o = new java.io.ByteArrayOutputStream()
-    var bitBuf = 0L
-    var bitCnt = 0
-    def putBits(v: Long, bits: Int): Unit = {
-      var i = bits - 1
-      while (i >= 0) {
-        bitBuf = (bitBuf << 1) | ((v >> i) & 1L)
-        bitCnt += 1
-        if (bitCnt == 8) { o.write(bitBuf.toInt & 0xff); bitBuf = 0; bitCnt = 0 }
-        i -= 1
-      }
-    }
-    def putSignMagnitude(v: Long): Unit = {
-      val raw = if (v < 0) (1L << (extraOctets * 8 - 1)) | -v else v
-      putBits(raw, extraOctets * 8)
-    }
+    val w = new GribPacking.BitWriter
     if (order > 0) {
-      initial.foreach(putSignMagnitude)
-      putSignMagnitude(gmin)
+      initial.foreach(w.putSignMagnitude(_, extraOctets))
+      w.putSignMagnitude(gmin, extraOctets)
     }
-    groups.foreach(g => putBits(g._1, refBits))
-    groups.foreach(g => putBits(g._2.toLong, 8))
-    groups.foreach(_ => putBits(0L, 8)) // scaled lengths: all = reference
-    groups.foreach { case (_, width, _, offsets) =>
-      if (width > 0) offsets.foreach(putBits(_, width))
-    }
-    if (bitCnt > 0) o.write(((bitBuf << (8 - bitCnt)) & 0xff).toInt)
-    val body = o.toByteArray
-    val s7 = new Array[Byte](5 + body.length)
-    putU32(s7, 0, s7.length); s7(4) = 7
-    System.arraycopy(body, 0, s7, 5, body.length)
-    (s5, s7)
+    groups.foreach(g => w.put(g.ref, refBits))
+    groups.foreach(g => w.put(g.width, 8))
+    groups.foreach(_ => w.put(0L, 8)) // scaled lengths: all = reference
+    groups.foreach(g => w.putAll(g.offsets, g.width))
+    (s5, section7(w.toByteArray))
   }
 
   /** Template 5.41/7.41: scaled X values PNG-encoded, present points in
-    * raster order. Grid-shaped when nothing is missing (ni x nj image),
-    * else one nPresent x 1 row — either is legal; [[Grib2.decodeValues]]
-    * consumes pixels in raster order. */
+    * raster order ([[imageShape]]); [[Grib2.decodeValues]] consumes pixels
+    * in raster order. */
   private def png57(f: FieldSpec): (Array[Byte], Array[Byte]) = {
-    val dFactor = math.pow(10.0, f.decimalScale)
-    val present = f.values.filterNot(_.isNaN)
-    val scaled = present.map(v => math.round(v * dFactor))
-    val ref = if (scaled.isEmpty) 0L else scaled.min
-    val xs = scaled.map(_ - ref).toArray
-    require(xs.forall(x => x >= 0 && x < (1L << math.min(f.bitsPerValue, 62))),
-      s"value range needs more than ${f.bitsPerValue} bits")
-    require(math.abs(ref) < (1L << 24), "reference value must stay float32-exact")
-    val (w, h) =
-      if (present.size == f.values.size) (f.ni, f.nj) else (math.max(xs.length, 1), 1)
+    val q = quantize(f, f.values, f.bitsPerValue)
+    val (w, h) = imageShape(f, q)
     val png =
-      if (xs.isEmpty) Png.encode(1, 1, f.bitsPerValue, Array(0L))
-      else Png.encode(w, h, f.bitsPerValue, xs)
-
-    val s5 = new Array[Byte](21)
-    putU32(s5, 0, 21); s5(4) = 5
-    putU32(s5, 5, xs.length)
-    putU16(s5, 9, 41)                // template 5.41 PNG
-    putU32(s5, 11, java.lang.Float.floatToIntBits(ref.toFloat).toLong & 0xffffffffL)
-    putS16(s5, 15, 0)                // binary scale E = 0
-    putS16(s5, 17, f.decimalScale)
-    s5(19) = f.bitsPerValue.toByte
-    s5(20) = 0                       // floating-point values
-
-    val s7 = new Array[Byte](5 + png.length)
-    putU32(s7, 0, s7.length); s7(4) = 7
-    System.arraycopy(png, 0, s7, 5, png.length)
-    (s5, s7)
+      if (q.xs.isEmpty) Png.encode(1, 1, f.bitsPerValue, Array(0L))
+      else Png.encode(w, h, f.bitsPerValue, q.xs)
+    (section5(21, 41, q, f.decimalScale, f.bitsPerValue), section7(png))
   }
 
   private def section6(f: FieldSpec, missing: Boolean): Array[Byte] = {
-    if (!missing) {
-      val b = new Array[Byte](6)
-      putU32(b, 0, 6); b(4) = 6; b(5) = 255.toByte
-      b
-    } else {
-      val n = f.values.size
-      val bodyBytes = (n + 7) / 8
-      val b = new Array[Byte](6 + bodyBytes)
-      putU32(b, 0, b.length); b(4) = 6; b(5) = 0
-      f.values.zipWithIndex.foreach { case (v, k) =>
-        if (!v.isNaN) b(6 + (k >> 3)) = (b(6 + (k >> 3)) | (0x80 >> (k & 7))).toByte
-      }
-      b
-    }
+    val body =
+      if (missing) GribPacking.bitmap(f.values.map(!_.isNaN)) else Array.emptyByteArray
+    val b = new Array[Byte](6 + body.length)
+    putU32(b, 0, b.length); b(4) = 6
+    b(5) = (if (missing) 0 else 255).toByte // bitmap follows | none applies
+    System.arraycopy(body, 0, b, 6, body.length)
+    b
   }
 
   private def putU16(b: Array[Byte], i: Int, v: Int): Unit = {
@@ -819,6 +641,8 @@ object Grib2Writer {
   }
   private def putS32(b: Array[Byte], i: Int, v: Long): Unit =
     putU32(b, i, if (v < 0) 0x80000000L | -v else v)
+  private def putFloat(b: Array[Byte], i: Int, v: Double): Unit =
+    putU32(b, i, java.lang.Float.floatToIntBits(v.toFloat) & 0xffffffffL)
   /** Shape-of-earth octets 15-30: shape 6 for the standard sphere, shape 1
     * with a centimetre-scaled custom radius for other spheres, shape 7
     * (custom oblate, metre axes, centimetre-scaled) when a minor axis is

@@ -38,12 +38,7 @@ object GribChunkCodec {
     val data = read(u.dataOffset, u.dataBytes)
     val bitmap =
       if (u.bitmapOffset >= 0) read(u.bitmapOffset, u.bitmapBytes) else null
-    val vals = u match {
-      case f: Grib2.Field => f.decode(data, bitmap)
-      case m: Grib1.Message => m.decode(data, bitmap)
-      case other => throw Grib1.UnsupportedGrib(
-        s"unexpected grib unit ${other.getClass.getName}")
-    }
+    val vals = u.decode(data, bitmap)
     val bb = ByteBuffer.allocate(vals.length * 8).order(ByteOrder.LITTLE_ENDIAN)
     vals.foreach(bb.putDouble)
     bb.array()

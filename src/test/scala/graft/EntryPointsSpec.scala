@@ -11,8 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * JSON string escaper for the artifacts the driver parses, one scan core
   * for the table formats' row keys, kill sets and parquet footers, one
   * walk over a GRIB file's messages, one write core per table format, a
-  * columnar Zarr scan, one Zarr metadata renderer and shard packer, and
-  * one CF decode. */
+  * columnar Zarr scan, one Zarr metadata renderer and shard packer, one
+  * CF decode and one GRIB packing core. */
 class EntryPointsSpec extends AnyFunSuite {
 
   test("no session is built outside GraftSession") {
@@ -139,5 +139,18 @@ class EntryPointsSpec extends AnyFunSuite {
     } yield s"$name: $k"
     assert(offenders.isEmpty,
       s"decode CF attributes through graft.sources.CfDecode: ${offenders.mkString(", ")}")
+  }
+
+  test("GRIB values are masked and scaled only in GribPacking") {
+    // the templates produce or encode their X; the bitmap mask, the
+    // (R + X * 2^E) / 10^D scale and the bit loops live in the core
+    val dir = Paths.get("src/main/scala/graft/sources/grib")
+    val offenders = for {
+      name <- Seq("Grib1.scala", "Grib2.scala", "Grib1Writer.scala", "Grib2Writer.scala")
+      text = Files.readString(dir.resolve(name))
+      t <- Seq("0x80 >> (", "math.pow(2.0,") if text.contains(t)
+    } yield s"$name: $t"
+    assert(offenders.isEmpty,
+      s"mask, scale and bit-pack GRIB values through GribPacking: ${offenders.mkString(", ")}")
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import org.apache.hadoop.conf.Configuration
 
-import graft.sources.grib.{Grib1, GribIndex, GribReader, GribSplitter, Grib1Writer => GW}
+import graft.sources.grib.{Grib1, GribIndex, GribPacking, GribReader, GribSplitter, Grib1Writer => GW}
 
 /** Golden tests for the pure-JVM GRIB1 reader: write edition-1 messages with
   * the fixture writer (simple packing, IBM-float reference value, optional
@@ -76,8 +76,10 @@ class Grib1Spec extends SparkSpec {
   test("bit unpacking handles non-byte-aligned widths") {
     // 12-bit values 0xABC, 0x123: bytes AB C1 23
     val packed = Array(0xab.toByte, 0xc1.toByte, 0x23.toByte)
-    assert(Grib1.unpackBits(packed, 12, 2).toSeq == Seq(0xabcL, 0x123L))
-    assert(Grib1.unpackBits(Array[Byte](0), 0, 3).toSeq == Seq(0L, 0L, 0L))
+    assert(GribPacking.unpack(new GribPacking.BitCursor(packed, 0), 12, 2).toSeq ==
+      Seq(0xabcL, 0x123L))
+    assert(GribPacking.unpack(new GribPacking.BitCursor(Array[Byte](0), 0), 0, 3).toSeq ==
+      Seq(0L, 0L, 0L))
   }
 
   test("message headers parse: PDS/GDS fields, channel metadata") {
