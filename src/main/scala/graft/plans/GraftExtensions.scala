@@ -14,6 +14,8 @@ import graft.functions.{DotProduct, HaversineDistance, SquaredDistance}
   *    naming for WxSql queries ([[XqlRules.withAggNaming]]);
   *  - [[FixedOffsetTruncRule]] (optimizer): `date_trunc` under a
   *    fixed-offset zone, with the NTZ casts around it, as long arithmetic;
+  *  - [[OnePartitionExchangeRule]] (AQE query-stage preparation): no
+  *    gathering or range exchange above a one-partition V2 scan;
   *  - `haversine_km`: the custom codegen scalar [[HaversineDistance]]
   *    available from SQL.
   *
@@ -27,6 +29,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectResolutionRule(_ => TimeBucketRule)
     e.injectResolutionRule(_ => XqlAggNamingRule)
     e.injectOptimizerRule(_ => FixedOffsetTruncRule)
+    e.injectQueryStagePrepRule(_ => OnePartitionExchangeRule)
     e.injectFunction((
       org.apache.spark.sql.catalyst.FunctionIdentifier("haversine_km"),
       new ExpressionInfo(classOf[HaversineDistance].getName, "haversine_km"),

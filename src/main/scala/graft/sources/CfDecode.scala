@@ -9,9 +9,11 @@ import java.nio.{ByteBuffer, ByteOrder}
   * keys are read nowhere else.
   *
   * The mask set is every value of `_FillValue` and of `missing_value`
-  * (each a scalar or a list), the Zarr v2 `fill_value` when the variable
-  * has no `_FillValue` (what xarray's Zarr backend does for v2; a v3
-  * `fill_value` is mandatory and does not mask), and NaN. A stored element
+  * (each a scalar or a list; on a Zarr v3 float array, `_FillValue` may
+  * be a string, see [[CfDecode.zarrV3Float]]), the Zarr v2
+  * `fill_value` when the variable has no `_FillValue` (what xarray's Zarr
+  * backend does for v2; a v3 `fill_value` is mandatory and does not mask),
+  * and NaN. A stored element
   * is compared against the mask set first, on its RAW value; a masked
   * element reads NaN, any other `raw * scale_factor + add_offset`.
   *
@@ -70,6 +72,45 @@ object CfDecode {
     CfDecode(masks.filterNot(_.isNaN).distinct,
       nums(attrs.get("scale_factor")).headOption.getOrElse(1.0),
       nums(attrs.get("add_offset")).headOption.getOrElse(0.0))
+  }
+
+  /** The decoder of Zarr v3 array `name` of dtype code `dt`: a string
+    * `_FillValue` on a numeric array is read by [[zarrV3Float]] (xarray
+    * writes a float array's as base64), then masks like any other. */
+  def ofZarrV3(name: String, dt: String, attrs: Map[String, Any]): CfDecode =
+    of(attrs.get("_FillValue") match {
+      case Some(s: String) if dt != "O" =>
+        attrs.updated("_FillValue", zarrV3Float(name, "_FillValue", dt, s))
+      case _ => attrs
+    })
+
+  /** A number that Zarr v3 array `name` (dtype code `dt`) writes as a JSON
+    * string in `field`: on a float array "NaN", "Infinity", "-Infinity" or
+    * the dtype's hex bit pattern ("0x7fc00000" is a float32 NaN), the forms
+    * the v3 spec gives, or base64 of the little-endian float64, the form
+    * xarray's `FillValueCoder` writes. Any other string is a directed error
+    * that names the array. */
+  def zarrV3Float(name: String, field: String, dt: String, s: String): Double = {
+    import scala.util.Try
+    val width = Map("f2" -> 2, "f4" -> 4, "f8" -> 8).get(dt)
+    def hex = width.filter(n => s.length == 2 + 2 * n && s.startsWith("0x"))
+      .flatMap(_ => Try(java.lang.Long.parseUnsignedLong(s.drop(2), 16)).toOption)
+      .map(b => dt match {
+        case "f2" => halfToDouble(b.toInt)
+        case "f4" => java.lang.Float.intBitsToFloat(b.toInt).toDouble
+        case _ => java.lang.Double.longBitsToDouble(b)
+      })
+    def base64 = Try(java.util.Base64.getDecoder.decode(s)).toOption.filter(_.length == 8)
+      .map(ByteBuffer.wrap(_).order(ByteOrder.LITTLE_ENDIAN).getDouble)
+    width.flatMap(_ => s match {
+      case "NaN" => Some(Double.NaN)
+      case "Infinity" => Some(Double.PositiveInfinity)
+      case "-Infinity" => Some(Double.NegativeInfinity)
+      case _ => hex.orElse(base64)
+    }).getOrElse(throw new IllegalArgumentException(
+      s"zarr v3 array $name: $field \"$s\" on a $dt array (a float takes \"NaN\", " +
+        "\"Infinity\", \"-Infinity\", its 0x bit pattern or base64 of the little-endian " +
+        "float64; any other array a number)"))
   }
 
   /** The `_FillValue` a variable declares: what netCDF-C writes into an

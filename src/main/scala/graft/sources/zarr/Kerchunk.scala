@@ -157,7 +157,7 @@ object Kerchunk {
     }
     // each input's concat axis must be strictly increasing INTERNALLY:
     // the overlap check below compares head/last as min/max, and the
-    // combined axis drives indexRange partition pruning — an unsorted
+    // combined axis drives the scan's index windows — an unsorted
     // foreign axis would silently drop rows, never return wrong ones
     stores.foreach { case (p, st) =>
       val c = st.coords(concatDim)

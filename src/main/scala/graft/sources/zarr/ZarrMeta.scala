@@ -437,14 +437,14 @@ object ZarrMeta {
       // string arrays carry a STRING fill (usually "") — not a number
       fillValue = (j \ "fill_value") match {
         case _ if dt == "O" => None
-        case JString(s) => Some(java.lang.Double.parseDouble(s))
+        case JString(s) => Some(CfDecode.zarrV3Float(name, "fill_value", dt, s))
         case JNull | JNothing => None
         case v => v.extractOpt[Double]
       },
       filters = if (dt == "O") Seq(V2Filter.VlenUtf8) else Nil,
       dims = (j \ "dimension_names").extractOpt[Seq[String]].getOrElse(Nil),
       // a v3 fill_value is mandatory, so xarray does not mask it
-      cf = CfDecode.of(attrMap(attrs)),
+      cf = CfDecode.ofZarrV3(name, dt, attrMap(attrs)),
       timeUnits = graft.sources.CfTime.parse(Some(units).filter(_.nonEmpty),
         (attrs \ "calendar").extractOpt[String]),
       v3DefaultKeys = ckeName == "default",

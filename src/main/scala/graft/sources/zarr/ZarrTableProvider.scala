@@ -36,8 +36,11 @@ import ZarrMeta.{ArrayMeta, Store}
   * the partition descriptors. The read is columnar ([[ZarrColumnarReader]]):
   * each partition decodes its chunks once and fills column vectors over its
   * window, the chunk cut to the pushed coordinate index ranges, in C order.
-  * Spark re-applies the full residual predicate, so pushdown is a pure
-  * pruning optimization, never a correctness dependency.
+  * The index windows ARE the pushed coordinate predicates: a comparison
+  * with a literal of the column's type on a clean (NaN/NaT-free, monotonic)
+  * axis is applied by the window alone and planned with no `Filter`, as
+  * xql's `.sel` applies it. Spark re-applies only the residual: every other
+  * filter, which the window narrows to a superset of its matches.
   */
 class ZarrTableProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "zarr"
@@ -99,93 +102,113 @@ class ZarrTable(path: String) extends Table with SupportsRead {
 class ZarrScanBuilder(store: Store) extends ScanBuilder
     with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
 
-  private var accepted: Array[Filter] = Array.empty
+  private var pushed: Array[Filter] = Array.empty
   private var required: StructType = ZarrTableProvider.schemaOf(store)
 
+  /** Keeps the filters that narrow or are applied by a dim's window, and
+    * hands back as residual every filter the windows do not apply exactly. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    accepted = filters.filter(f => ZarrScan.coordBound(store, f).isDefined)
-    filters // everything stays residual: pruning is an optimization only
+    val w = ZarrScan.windows(store, filters.toSeq)
+    pushed = filters.filter(w.used.contains)
+    filters.filterNot(w.exact.contains)
   }
-  override def pushedFilters(): Array[Filter] = accepted
+  override def pushedFilters(): Array[Filter] = pushed
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
-  override def build(): Scan = new ZarrScan(store, required, accepted)
+  override def build(): Scan = new ZarrScan(store, required, pushed)
 }
 
 object ZarrScan {
-  /** (dim, op, bound-as-double) for a filter this source can prune with. */
-  def coordBound(store: Store, f: Filter): Option[(String, String, Double)] = {
-    def num(v: Any): Option[Double] = v match {
-      case n: Number => Some(n.doubleValue())
-      // keep sub-second precision: truncating to whole seconds would SHRINK
-      // the pruned range for <, <=, = bounds and drop matching rows — the
-      // pruning must stay a pure optimization
-      case t: java.sql.Timestamp => Some(t.getTime / 1000.0 + t.getNanos % 1000000 / 1e9)
-      case i: java.time.Instant =>
-        Some(i.getEpochSecond.toDouble + i.getNano / 1e9)
-      case d: java.time.LocalDateTime =>
-        Some(d.toEpochSecond(java.time.ZoneOffset.UTC).toDouble + d.getNano / 1e9)
-      case _ => None
+  /** Per store dim, the inclusive index window [lo, hi] the filters leave;
+    * the filters that narrowed a window or that a window applies; and of
+    * those, the ones the windows apply exactly. */
+  final case class Windows(ranges: IndexedSeq[(Int, Int)], used: Seq[Filter], exact: Seq[Filter])
+
+  /** A store dim's coordinate as the reader emits it: the stored doubles,
+    * or on a time axis each value's [[graft.sources.CfTime.micros]], NaN
+    * being NaT. */
+  private final class Axis(coord: Array[Double], val time: Boolean) {
+    private val micros = if (time) coord.map(graft.sources.CfTime.micros) else null
+    val missing: Boolean = coord.exists(_.isNaN)
+
+    /** Sign of index `i`'s value minus the bound `b`, in Spark's order
+      * (NaN above every number, -0.0 equal to 0.0). */
+    private def sign(i: Int, b: Any): Int = b match {
+      case m: Long => java.lang.Long.compare(micros(i), m)
+      case d: Double => if (coord(i).isNaN || coord(i) > d) 1 else if (coord(i) < d) -1 else 0
     }
-    val x = f match {
-      case sources.GreaterThan(a, v) => Some((a, ">", v))
-      case sources.GreaterThanOrEqual(a, v) => Some((a, ">=", v))
-      case sources.LessThan(a, v) => Some((a, "<", v))
-      case sources.LessThanOrEqual(a, v) => Some((a, "<=", v))
-      case sources.EqualTo(a, v) => Some((a, "=", v))
-      case _ => None
+
+    /** No NaN or NaT and monotonic, ascending or descending: the indices
+      * whose value satisfies a comparison are then one contiguous run. */
+    val clean: Boolean = !missing && {
+      val steps = (1 until coord.length)
+        .map(i => sign(i, if (time) micros(i - 1) else coord(i - 1))).filter(_ != 0)
+      steps.forall(_ > 0) || steps.forall(_ < 0)
     }
-    x.flatMap { case (a, op, v) =>
-      if (!store.dims.contains(a)) None else num(v).map(b => (a, op, b))
-    }
+
+    /** Whether index `i` satisfies `op` against the bound `b`; NaT
+      * satisfies no comparison. */
+    def sat(i: Int, op: String, b: Any): Boolean =
+      if (time && coord(i).isNaN) false
+      else {
+        val s = sign(i, b)
+        op match {
+          case ">" => s > 0
+          case ">=" => s >= 0
+          case "<" => s < 0
+          case "<=" => s <= 0
+          case "=" => s == 0
+        }
+      }
   }
 
-  /** Inclusive index range [lo, hi] of `coord` values satisfying all bounds
-    * on one dim. Ascending coords are the xarray norm, but DESCENDING axes
-    * are the norm for latitude (north-to-south raster scan order, GRIB
-    * la1 > la2) — both prune; the descending case flips which end each
-    * operator shrinks (the xql slice flip, where.py:109-114). A
-    * non-monotonic axis gets no pruning (the residual filter still
-    * applies, so rows are never wrong — just not skipped). */
-  def indexRange(coord: Array[Double], bounds: Seq[(String, Double)]): (Int, Int) = {
-    var lo = 0
-    var hi = coord.length - 1
-    val ascending = coord.length < 2 || coord(0) <= coord(coord.length - 1)
-    val monotonic = {
-      var i = 1
-      var ok = true
-      while (ok && i < coord.length) {
-        ok = if (ascending) coord(i) >= coord(i - 1) else coord(i) <= coord(i - 1)
-        i += 1
+  /** A comparison's literal as a bound on `axis`, when it is the column's
+    * own type: a non-NaN Double on a double dim, a LocalDateTime in whole
+    * microseconds on a TIMESTAMP_NTZ dim. Any other literal narrows
+    * nothing. */
+  private def bound(axis: Axis, v: Any): Option[Any] = (axis.time, v) match {
+    case (true, t: java.time.LocalDateTime) if t.getNano % 1000 == 0 =>
+      Some(org.apache.spark.sql.catalyst.util.DateTimeUtils.localDateTimeToMicros(t))
+    case (false, d: java.lang.Double) if !d.isNaN => Some(d.doubleValue)
+    case _ => None
+  }
+
+  /** The one place that maps filters to index windows. A comparison on a
+    * dim trims its window from both ends to the first and last index that
+    * satisfy it. The indices between always hold every match; on a clean
+    * axis they are exactly the matches, so a comparison with a literal of
+    * the column's own type is applied exactly, as is `IsNotNull` on an
+    * axis without NaN/NaT. Everything else (other columns, `In`, `Or`,
+    * casts, dirty axes, other literal types) stays residual. */
+  def windows(store: Store, filters: Seq[Filter]): Windows = {
+    val used = Seq.newBuilder[Filter]
+    val exact = Seq.newBuilder[Filter]
+    val ranges = store.dims.toIndexedSeq.map { d =>
+      val axis = new Axis(store.coords(d), store.coordMeta(d).epochSecondsTime)
+      var lo = 0
+      var hi = store.coords(d).length - 1
+      filters.foreach { f =>
+        val cmp = f match {
+          case sources.GreaterThan(`d`, v) => Some((">", v))
+          case sources.GreaterThanOrEqual(`d`, v) => Some((">=", v))
+          case sources.LessThan(`d`, v) => Some(("<", v))
+          case sources.LessThanOrEqual(`d`, v) => Some(("<=", v))
+          case sources.EqualTo(`d`, v) => Some(("=", v))
+          case sources.IsNotNull(`d`) if !axis.missing =>
+            used += f; exact += f
+            None
+          case _ => None
+        }
+        for ((op, v) <- cmp; b <- bound(axis, v)) {
+          while (lo <= hi && !axis.sat(lo, op, b)) lo += 1
+          while (hi >= lo && !axis.sat(hi, op, b)) hi -= 1
+          used += f
+          if (axis.clean) exact += f
+        }
       }
-      ok
+      (lo, hi)
     }
-    if (!monotonic) return (lo, hi)
-    bounds.foreach { case (op, b) =>
-      op match {
-        case ">" =>
-          if (ascending) while (lo <= hi && coord(lo) <= b) lo += 1
-          else while (hi >= lo && coord(hi) <= b) hi -= 1
-        case ">=" =>
-          if (ascending) while (lo <= hi && coord(lo) < b) lo += 1
-          else while (hi >= lo && coord(hi) < b) hi -= 1
-        case "<" =>
-          if (ascending) while (hi >= lo && coord(hi) >= b) hi -= 1
-          else while (lo <= hi && coord(lo) >= b) lo += 1
-        case "<=" =>
-          if (ascending) while (hi >= lo && coord(hi) > b) hi -= 1
-          else while (lo <= hi && coord(lo) > b) lo += 1
-        case "=" =>
-          if (ascending) {
-            while (lo <= hi && coord(lo) < b) lo += 1
-            while (hi >= lo && coord(hi) > b) hi -= 1
-          } else {
-            while (lo <= hi && coord(lo) > b) lo += 1
-            while (hi >= lo && coord(hi) < b) hi -= 1
-          }
-      }
-    }
-    (lo, hi)
+    Windows(ranges, used.result(), exact.result())
   }
 }
 
@@ -200,13 +223,7 @@ class ZarrScan(store: Store, required: StructType, pushed: Array[Filter])
   override def planInputPartitions(): Array[InputPartition] = {
     val shape = store.dataVars.head.shape
     val chunks = store.dataVars.head.chunks
-    // per-dim inclusive index ranges after pushdown
-    val ranges: Seq[(Int, Int)] = store.dims.zipWithIndex.map { case (d, i) =>
-      val bounds = pushed.flatMap(f => ZarrScan.coordBound(store, f))
-        .filter(_._1 == d).map(b => (b._2, b._3)).toSeq
-      if (bounds.isEmpty) (0, shape(i) - 1)
-      else ZarrScan.indexRange(store.coords(d), bounds)
-    }
+    val ranges = ZarrScan.windows(store, pushed.toSeq).ranges
     if (ranges.exists { case (lo, hi) => lo > hi }) return Array.empty
     // chunks overlapping the ranges, cartesian across dims
     val perDimChunks: Seq[Seq[Int]] = ranges.zipWithIndex.map { case ((lo, hi), i) =>

@@ -641,6 +641,58 @@ class ZarrSourceSpec extends SparkSpec {
       Seq(10.5, 11.5, 12.5))
   }
 
+  test("zarr v3 fill values as xarray and the spec write them: base64 _FillValue, hex fill_value") {
+    def store(arrays: (String, String, String, String)*): String = {
+      val dir = java.nio.file.Files.createTempDirectory("zarr3fill").toString + "/s.zarr"
+      def putS(rel: String, s: String): Unit = {
+        val f = new java.io.File(dir, rel)
+        f.getParentFile.mkdirs()
+        java.nio.file.Files.write(f.toPath, s.getBytes("UTF-8"))
+      }
+      putS("zarr.json", """{"zarr_format": 3, "node_type": "group", "attributes": {}}""")
+      (("x", "float64", "\"NaN\"", "") +: arrays).foreach { case (name, dtype, fill, attrs) =>
+        putS(s"$name/zarr.json",
+          s"""{"zarr_format": 3, "node_type": "array", "shape": [4], "data_type": "$dtype",
+             | "chunk_grid": {"name": "regular", "configuration": {"chunk_shape": [2]}},
+             | "chunk_key_encoding": {"name": "default", "configuration": {"separator": "/"}},
+             | "fill_value": $fill, "codecs": [{"name": "bytes", "configuration": {"endian": "little"}}],
+             | "attributes": {$attrs}, "dimension_names": ["x"]}""".stripMargin)
+      }
+      dir
+    }
+    def chunk(dir: String, rel: String, bb: java.nio.ByteBuffer): Unit = {
+      val f = new java.io.File(dir, rel)
+      f.getParentFile.mkdirs()
+      java.nio.file.Files.write(f.toPath, bb.array())
+    }
+    def le(n: Int) = java.nio.ByteBuffer.allocate(n).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    // xarray's FillValueCoder: base64 of struct.pack("<d", -9999.0)
+    val dir = store(
+      ("a", "float32", "\"0x7fc00000\"", "\"_FillValue\": \"AAAAAICHw8A=\""),
+      ("b", "float64", "\"0x4059000000000000\"", ""),
+      ("h", "float16", "\"0x3c00\"", ""))
+    chunk(dir, "x/c/0", le(16).putDouble(0).putDouble(1))
+    chunk(dir, "x/c/1", le(16).putDouble(2).putDouble(3))
+    chunk(dir, "a/c/0", le(8).putFloat(-9999f).putFloat(1.5f))
+    chunk(dir, "b/c/0", le(16).putDouble(1).putDouble(2))
+    // chunk 1 of a, b and h is absent: it reads the fill_value
+    val rows = spark.read.format("zarr").load(dir).orderBy($"x").collect()
+    def col(c: String): Seq[Any] = rows.map(r => r.getAs[Any](c)).toSeq
+    assert(col("a") == Seq(null, 1.5, null, null)) // -9999 masked, NaN fill
+    assert(col("b") == Seq(1.0, 2.0, 100.0, 100.0)) // a v3 fill_value does not mask
+    assert(col("h") == Seq(1.0, 1.0, 1.0, 1.0))
+
+    // any other string fill on a numeric array names the array
+    Seq(("i", "int16", "\"0x0001\"", ""), ("j", "int16", "0", "\"_FillValue\": \"AAAAAICHw8A=\""),
+        ("k", "float32", "\"missing\"", ""), ("l", "float64", "0", "\"_FillValue\": \"AAAA\""))
+      .foreach { arr =>
+        val e = intercept[Exception](spark.read.format("zarr").load(store(arr)).collect())
+        val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+        assert(msg.contains(s"zarr v3 array ${arr._1}:"), msg)
+      }
+  }
+
   test("zarr v3 transpose codec decodes (F-order layout, multi-chunk with edge pad)") {
     val dir = java.nio.file.Files.createTempDirectory("zarr3tr").toString + "/s.zarr"
     def put(rel: String, bytes: Array[Byte]): Unit = {
@@ -809,6 +861,105 @@ class ZarrSourceSpec extends SparkSpec {
     assert(kept.toSeq == Seq(1.0, 2.0))
     val eq = df.filter($"time" === "1970-01-02 00:00:00.5").select($"v").as[Double].collect()
     assert(eq.toSeq == Seq(4.0))
+  }
+
+  test("exact coordinate pushdown: random boxes and points equal the predicate over the store's rows") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    object Plans extends AdaptiveSparkPlanHelper
+    // hourly times a quarter second past the hour, descending latitude;
+    // chunks 5 x 3 x 4 leave ragged edge chunks on every axis
+    val (nt2, ny2, nx2) = (12, 7, 9)
+    val lats = (0 until ny2).map(y => 60.0 - 7.5 * y)
+    val lons = (0 until nx2).map(x => -20.0 + 2.5 * x)
+    def write(name: String, times: Seq[Double], units: String, calendar: Option[String],
+        lat: Seq[Double]): String = {
+      val dir = java.nio.file.Files.createTempDirectory(name).toString + "/s.zarr"
+      ZW.write(dir, Seq(
+        ZW.VarSpec("time", Seq("time"), Seq(nt2), Seq(5), "<f8", times,
+          units = Some(units), calendar = calendar),
+        ZW.VarSpec("latitude", Seq("latitude"), Seq(ny2), Seq(3), "<f8", lat),
+        ZW.VarSpec("longitude", Seq("longitude"), Seq(nx2), Seq(4), "<f8", lons),
+        ZW.VarSpec("v", Seq("time", "latitude", "longitude"), Seq(nt2, ny2, nx2), Seq(5, 3, 4),
+          data = (0 until nt2 * ny2 * nx2).map(i => if (i % 17 == 0) -1.0 else i * 0.5),
+          missingValue = Some(-1.0))))
+      dir
+    }
+    val hourly = (0 until nt2).map(t => 3600.0 * t + 0.25)
+    // (store, the dirty dim whose predicates stay residual)
+    val stores = Seq(
+      write("exact", hourly, "seconds since 2024-01-01", None, lats) -> None,
+      write("nanlat", hourly, "seconds since 2024-01-01", None, lats.updated(3, Double.NaN)) ->
+        Some("latitude"),
+      // 360_day days 58 and 59 are Feb 29 and 30 of 2001: NaT
+      write("nat", (55 until 55 + nt2).map(_.toDouble), "days since 2001-01-01",
+        Some("360_day"), lats) -> Some("time"))
+
+    val r = new scala.util.Random(14)
+    def pick[T](xs: Seq[T]): T = xs(r.nextInt(xs.size))
+    /** On a grid value, between two, or outside the axis. */
+    def numBound(grid: Seq[Double]): Double = {
+      val g = grid.filterNot(_.isNaN).sorted
+      r.nextInt(4) match {
+        case 0 | 1 => pick(g)
+        case 2 => val i = r.nextInt(g.size - 1); (g(i) + g(i + 1)) / 2
+        case _ => pick(Seq(g.head - 1, g.last + 1))
+      }
+    }
+    /** On a grid time or a microsecond to half a second off it. */
+    def timeBound(grid: Seq[java.time.LocalDateTime]): java.time.LocalDateTime =
+      pick(grid).plusNanos(pick(Seq(0L, 0L, 1000L, -1000L, 250000000L, -500000000L)))
+    def cmp(c: Column, bound: () => Any): Column = r.nextInt(6) match {
+      case 0 => c > lit(bound())
+      case 1 => c >= lit(bound())
+      case 2 => c < lit(bound())
+      case 3 => c <= lit(bound())
+      case 4 => c === lit(bound())
+      case _ => c.between(lit(bound()), lit(bound()))
+    }
+
+    stores.foreach { case (path, dirty) =>
+      val df = spark.read.format("zarr").load(path)
+      val rows = df.collect()
+      val local = spark.createDataFrame(rows.toList.asJava, df.schema)
+      val times = rows.flatMap(row => Option(row.getAs[java.time.LocalDateTime]("time"))).distinct.toSeq
+      val latGrid = rows.map(_.getAs[Double]("latitude")).distinct.toSeq
+      (0 until 30).foreach { i =>
+        val point = i % 3 == 0
+        val parts = Seq(
+          Option.when(point || r.nextBoolean())("latitude" ->
+            (if (point) $"latitude" === lit(pick(latGrid.filterNot(_.isNaN)))
+             else cmp($"latitude", () => numBound(latGrid)))),
+          Option.when(point || r.nextBoolean())("longitude" ->
+            (if (point) $"longitude" === lit(pick(lons)) else cmp($"longitude", () => numBound(lons)))),
+          Option.when(r.nextBoolean())("time" -> cmp($"time", () => timeBound(times)))).flatten
+        val pred = parts.map(_._2).reduceOption(_ && _).getOrElse(lit(true))
+        val got = df.where(pred)
+        val ctx = s"${path.split('/').takeRight(2).head} query $i: $pred"
+        assert(got.collect().map(_.toString).sorted.toSeq ==
+          local.where(pred).collect().map(_.toString).sorted.toSeq, ctx)
+        val filtered = Plans.collect(got.queryExecution.executedPlan) { case f: FilterExec => f }
+        assert(filtered.nonEmpty == dirty.exists(d => parts.exists(_._1 == d)), ctx)
+      }
+    }
+
+    // a pruned box with fresh literals compiles no new class: the window
+    // holds the literals, and no generated code does
+    val df = spark.read.format("zarr").load(stores.head._1)
+    val t0 = java.time.LocalDateTime.of(2024, 1, 1, 0, 0, 0, 250000000)
+    def box(k: Int): Array[org.apache.spark.sql.Row] = df.where(
+      $"latitude".between(lats(2) - 0.001 * k, lats(0) + 0.001 * k) &&
+        $"longitude".between(lons(0) - 0.001 * k, lons(3) + 0.001 * k) &&
+        $"time".between(lit(t0.minusNanos(1000L * k)), lit(t0.plusHours(4).plusNanos(1000L * k))))
+      .agg(avg($"v"), max($"v"), count($"v"), count(lit(1))).collect()
+    val warm = box(1)
+    assert(box(2).toSeq == warm.toSeq && warm.head.getLong(3) == 5 * 3 * 4)
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(box(3).toSeq == warm.toSeq)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == before)
   }
 
   test("distributed writer round-trips a long-format frame through the DSv2 reader") {

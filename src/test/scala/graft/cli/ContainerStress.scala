@@ -14,7 +14,7 @@ import graft.sources.TfRecord.FeatureSpec
   *  - Avro OCF: ONE large deflate file, read whole vs block-aligned range
   *    splits — the splittable-read claim measured for equality and time.
   *
-  * Usage: runMain graft.cli.ContainerStress [workRoot] [shards] [rowsPerShard]
+  * Usage: Test/runMain graft.cli.ContainerStress [workRoot] [shards] [rowsPerShard]
   */
 object ContainerStress {
   def main(args: Array[String]): Unit = {

@@ -15,7 +15,7 @@ import graft.sources.zarr.Kerchunk
   *  - the combined refs json stays KBs/MBs;
   *  - a narrow time predicate plans ~window/year of the partitions.
   *
-  * Usage: runMain graft.cli.KerchunkStress [workDir] [days]
+  * Usage: Test/runMain graft.cli.KerchunkStress [workDir] [days]
   * (defaults /tmp/graft-kerchunk-stress, 365).
   */
 object KerchunkStress {

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   *  - embeddings get deterministic per-(copy, element) noise large enough to
   *    decorrelate copies under cosine.
   *
-  * Usage: runMain graft.cli.ScaleStress [baseDir] [workRoot] [factors]
+  * Usage: Test/runMain graft.cli.ScaleStress [baseDir] [workRoot] [factors]
   * (defaults /root/testdata/sf0.1, /tmp/graft-scale, 4,16). Prints one
   * `[stress]` line per (query, scale): min seconds across reps + result rows.
   */

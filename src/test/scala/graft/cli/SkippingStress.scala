@@ -17,7 +17,7 @@ import graft.sources.{ColumnStats, DeltaTable, DeltaWriter, IcebergTable,
   * range) and the whole reason a selective predicate over a 100 TB
   * table reads MB.
   *
-  * Usage: runMain graft.cli.SkippingStress [workRoot] [commits] [rowsPerCommit]
+  * Usage: Test/runMain graft.cli.SkippingStress [workRoot] [commits] [rowsPerCommit]
   */
 object SkippingStress {
   def main(args: Array[String]): Unit = {

@@ -25,7 +25,9 @@ another path is dropped, so the warm-up rebuilds it at `ab.run`.
 Every run's JSON line goes to `--out` (one JSON object per line,
 with its side, seed, order and the per-shape medians the run printed). The
 per-run table, each side's median and quartiles of the end-to-end metrics,
-the per-pair win counts and the per-shape medians are printed at the end.
+the per-pair win counts, and the per-shape medians with their change and
+per-pair win counts (a shape is a latency, so lower wins) are printed at
+the end.
 
 `--control` runs the parent's code on both sides: the change side runs from
 a fresh copy of PARENT_DIR at `CHANGE_DIR.control` instead of CHANGE_DIR.
@@ -190,12 +192,19 @@ def main():
 
     shapes = sorted({k for r in rows for k in r["shapes"]})
     if shapes:
-        print("\n| shape (median of the runs' p50) | parent | change |")
-        print("|---|---|---|")
+        print("\n| shape (median of the runs' p50) | parent | change | change vs parent "
+              "| change better in |")
+        print("|---|---|---|---|---|")
         for k in shapes:
             med = [statistics.median([r["shapes"][k] for r in by[s] if k in r["shapes"]] or
                                      [float("nan")]) for s in ("parent", "change")]
-            print(f"| {k} | {med[0]:.4f} | {med[1]:.4f} |")
+            # a pair counts when both of its runs printed the shape
+            parent = {r["seed"]: r["shapes"][k] for r in by["parent"] if k in r["shapes"]}
+            pairs = [(parent[r["seed"]], r["shapes"][k]) for r in by["change"]
+                     if k in r["shapes"] and r["seed"] in parent]
+            wins = sum(1 for p, c in pairs if c < p)
+            print(f"| {k} | {med[0]:.4f} | {med[1]:.4f} | {100 * (med[1] / med[0] - 1):+.1f} % | "
+                  f"{wins}/{len(pairs)} |")
 
     bad += [f"{r['side']} seed {r['seed']}" for r in rows if not r.get("correct")]
     if bad:
